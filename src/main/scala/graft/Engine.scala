@@ -163,6 +163,50 @@ object Engine {
         graft.functions.expressions.DeflateLen(children(0))))
   }
 
+  /** Capacity of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, stock 100, an LRU keyed on
+    * the generated source and the requesting class loader). The
+    * production path's working set is larger than the stock size: one
+    * `BatchRunner.refreshReporting` compiled 124–126 generated classes
+    * and one schedule slot (`runCustomer` + `runCall`) 107–125, so a
+    * daemon tick uses about 250, plus a few variants per op for the
+    * date literals that codegen inlines. At 100 entries the cache cycled
+    * and every op recompiled every class (Janino: 1.3–2.6 s per refresh,
+    * 0.9–1.4 s per slot, and HotSpot re-warmed each new class). Fixed,
+    * not a knob: it is sized from the measured working set, and an entry
+    * costs only its class's bytecode.
+    *
+    * The builder also drops the whole-stage codegen stage id from
+    * generated class names (`spark.sql.codegen.useIdInClassName`). AQE
+    * numbers stages in the order they are re-planned, which varies with
+    * timing, and the id in the name made each numbering a new class.
+    * Without it a refresh's classes fall from ~123 to ~107 (fixture
+    * warehouse, `CodegenHealthSpec`) and a repeated identical refresh
+    * compiles nothing. The id stays in the plan (`*(6)`) and in a
+    * comment inside the generated source.
+    */
+  val CodegenCacheEntries = 1000
+
+  /** The engine's session builder.
+    *
+    * Which master wins, in order:
+    *  1. an already-running SparkContext — `getOrCreate` reuses it and
+    *     ignores every master setting;
+    *  2. anything the caller sets on the returned builder, such as
+    *     `.master(...)` or `.config(sparkConf)` with `spark.master`
+    *     (builder options apply in call order, after this method's);
+    *  3. the `spark.master` system property (spark-submit `--master`
+    *     sets it): when present, `master` is not set at all;
+    *  4. otherwise `master`, the LOCAL default.
+    * Only the system property is consulted here: a `SparkConf` built
+    * elsewhere and not passed to the builder is never seen, and a stray
+    * `spark.master` property left in a test or host JVM silently
+    * replaces the local default for every session built here.
+    *
+    * The generated-class cache size ([[CodegenCacheEntries]]) is a
+    * static SQL conf: it takes effect only when this builder creates
+    * the JVM's first session, and Spark sizes the cache once per JVM.
+    */
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder = {
     val b = SparkSession.builder()
     // Respect an externally provided master (spark-submit --master sets
@@ -172,6 +216,8 @@ object Engine {
     if (!sys.props.contains("spark.master")) b.master(master)
     b
       .withExtensions(extensions)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", "false")

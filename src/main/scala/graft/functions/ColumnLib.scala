@@ -194,6 +194,21 @@ object ColumnLib {
       val fut = Future(f); () => Await.result(fut, Duration.Inf)
     }
 
+  /** Join every [[fork]] handle, THEN rethrow the first failure in
+    * argument order (later ones ride along as suppressed). Awaiting
+    * handles one by one would unwind on the first failure while a
+    * sibling still runs, so a caller's retry or lock release would race
+    * that sibling's writes. After this returns, calling a handle
+    * returns its value without waiting.
+    */
+  def awaitAll(handles: (() => Any)*): Unit = {
+    val failures = handles.flatMap(h => scala.util.Try(h()).failed.toOption)
+    failures.headOption.foreach { first =>
+      failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+      throw first
+    }
+  }
+
   /** Keep the first row per key under `ordering` (descending-first wins).
     * `ordering` must be a total order within each key group for
     * deterministic output; callers append a unique tiebreaker.

@@ -215,7 +215,7 @@ object TextIndex {
       writePostings(postings, "build", nShards, path, overwrite = true))
     val dF = graft.functions.ColumnLib.fork(docs.sparkSession)(
       writeDoclens(doclens, "build", path, overwrite = true))
-    dF()
+    graft.functions.ColumnLib.awaitAll(cF, dF)
     val counts = cF()
     // nShards rides in the ledger: serving and appends MUST hash with
     // the build's shard count — a mismatch would silently prune live
@@ -255,7 +255,9 @@ object TextIndex {
           overwrite = false))
       val dF = graft.functions.ColumnLib.fork(spark)(
         writeDoclens(doclens, batch, path, overwrite = false))
-      dF()
+      // Both sinks finish before the lock is released, even when one
+      // fails: a retry must not meet a still-running sibling write.
+      graft.functions.ColumnLib.awaitAll(cF, dF)
       val counts = cF()
       // COMMIT POINT: the batch exists once this row is durable.
       writeMetaRow(spark, counts, stats, batch, meta.nShards, path,

@@ -556,11 +556,16 @@ object Upsert {
       updateExprs: Map[String, String]): Unit = {
     val hBak = new org.apache.hadoop.fs.Path(path + ".merge-bak")
     val target = spark.read.parquet(path)
-    val range = source.agg(
+    // The source is read twice, for its partition range and by the
+    // merge. Materialized once, its lineage (for the fact refresh: the
+    // FactStaffDaily joins and aggregations) runs once, and the range
+    // and the merge see the same rows.
+    val src = source.localCheckpoint(eager = true)
+    val range = src.agg(
       min(col(partitionCol)).as("lo"), max(col(partitionCol)).as("hi")).head()
     if (range.isNullAt(0)) return // empty source: nothing to merge
     val prune = col(partitionCol).between(lit(range.get(0)), lit(range.get(1)))
-    val merged = upsert(target.filter(prune), source, keys,
+    val merged = upsert(target.filter(prune), src, keys,
       sourceOrder, updateCond, updateExprs, targetPrune = None)
     // Write-to-temp + per-partition swap (same staging pattern as
     // [[graft.sources.Storage.compact]]): the merge streams from the

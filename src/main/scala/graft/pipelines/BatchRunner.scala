@@ -59,13 +59,15 @@ final class BatchRunner(
         audit.add(tenant, "customer", 0, None, "NOOP"); None
       } else {
         val out = CallioIngest.customerTransform(res.docs, tenant)
-        val rows = Storage.loadAppend(out, p("stg_customer"))
-        val stats = out.agg(max(col("updateTime")),
-          min(col("NgayUpdate")), max(col("NgayUpdate"))).head()
-        val maxUpdate = if (stats.isNullAt(0)) None else Some(stats.getLong(0))
+        // The watermark and the merge window ride the append's own job:
+        // a separate out.agg(...) would re-run parse, dedup and transform.
+        val (rows, stats) = Storage.loadAppendObserving(out, p("stg_customer"),
+          Seq(max(col("updateTime")).as("maxUpdate"),
+            min(col("NgayUpdate")).as("lo"), max(col("NgayUpdate")).as("hi")))
+        val maxUpdate = Option(stats("maxUpdate")).map(_.asInstanceOf[Long])
         val window =
-          if (stats.isNullAt(1) || stats.isNullAt(2)) None
-          else Some((stats.getDate(1), stats.getDate(2)))
+          for (lo <- Option(stats("lo")); hi <- Option(stats("hi")))
+            yield (lo.asInstanceOf[java.sql.Date], hi.asInstanceOf[java.sql.Date])
         audit.add(tenant, "customer", rows, None, "STAGED")
         Some((tenant, rows, maxUpdate, window))
       }
@@ -123,10 +125,13 @@ final class BatchRunner(
       if (res.docs.isEmpty) audit.add(tenant, "call_log", 0, None, "NOOP")
       else {
         val out = CallioIngest.callLogTransform(res.docs, tenant)
-        val rows = Storage.loadAppend(out, p("call_log"),
+        val (rows, stats) = Storage.loadAppendObserving(out, p("call_log"),
+          Seq(max(col("createTime")).as("maxCreate")),
           partitionCol = Some("NgayTao"), clusterBy = Seq("tenant"))
-        val maxCreate = out.agg(max(col("createTime"))).head().getLong(0)
-        checkpoints.advanceCheckpoint("call_log", tenant, maxCreate)
+        // An empty transform output has no watermark: the checkpoint
+        // stays where it was.
+        Option(stats("maxCreate")).foreach(mc =>
+          checkpoints.advanceCheckpoint("call_log", tenant, mc.asInstanceOf[Long]))
         audit.add(tenant, "call_log", rows,
           checkpoints.getCheckpoint("call_log", tenant), "APPEND")
       }

@@ -463,8 +463,11 @@ object PipelineOps {
         // sessions accept jobs from multiple threads; this is the
         // driver-side analog of the fixed-N widening). Routed through
         // the gated fork so the concurrentSubtrees A/B covers it.
-        def par[T](xs: (() => T)*): Seq[T] =
-          xs.map(f => graft.functions.ColumnLib.fork(s)(f())).map(_())
+        def par[T](xs: (() => T)*): Seq[T] = {
+          val hs = xs.map(f => graft.functions.ColumnLib.fork(s)(f()))
+          graft.functions.ColumnLib.awaitAll(hs: _*)
+          hs.map(_())
+        }
         val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
         val e = t(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"), col("label"))

@@ -1684,7 +1684,7 @@ object SimilarityOps {
           "vec_id", "embedding", cents, s"$base/sq8"))
         val exF = fork(s)(decimalRerankTop10(e, e.select("vec_id"))
           .select("vec_id").localCheckpoint(true))
-        bF(); b8F()
+        graft.functions.ColumnLib.awaitAll(bF, b8F, exF)
         val exact = exF()
         def recallRow(method: String, top: DataFrame): DataFrame =
           exact.join(top.select(col("vec_id"), lit(1).as("hit")),
@@ -2847,7 +2847,7 @@ object SimilarityOps {
           .select(col("doc_id"), col("text")), "doc_id", "text", tpath))
         val bV = fork(s)(Similarity.ivfWrite(e, "vec_id", "embedding", cents,
           vpath))
-        bT(); bV()
+        graft.functions.ColumnLib.awaitAll(bT, bV)
         val textTop = TextIndex.searchBM25(s, tpath, terms, k = 20)
         val vecTop = decimalRerankTop10(e,
           Similarity.ivfSearch(s, vpath, "vec_id", "embedding", cents,

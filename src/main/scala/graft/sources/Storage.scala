@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
 
 /** Parquet table storage layer (SURVEY.md §2.1 S9-S11): the engine's
@@ -27,24 +27,48 @@ object Storage {
     */
   def loadAppend(df: DataFrame, path: String,
       partitionCol: Option[String] = None,
-      clusterBy: Seq[String] = Nil): Long = {
-    val obs = org.apache.spark.sql.Observation()
-    val observed = df.observe(obs, count(lit(1)).as("n"))
-    val sorted =
-      if (clusterBy.nonEmpty)
-        observed.sortWithinPartitions(clusterBy.map(col): _*)
-      else observed
-    val w = sorted.write.mode("append")
-    partitionCol.fold(w)(c => w.partitionBy(c)).parquet(path)
-    obs.get("n").asInstanceOf[Long]
-  }
+      clusterBy: Seq[String] = Nil): Long =
+    loadAppendObserving(df, path, Nil, partitionCol, clusterBy)._1
 
-  /** Full overwrite (snapshot semantics). */
-  def loadTruncate(df: DataFrame, path: String): Long = {
-    val n = df.count()
-    df.localCheckpoint(eager = true) // tolerate overwriting our own input
-      .write.mode("overwrite").parquet(path)
-    n
+  /** [[loadAppend]] that also evaluates `stats` — named aggregate
+    * columns over `df`, such as a batch's max timestamp — on the same
+    * write job. Returns the row count and each stat by name (null over
+    * an empty batch, as SQL aggregates are). A caller that ran its own
+    * `df.agg(...)` after the append would re-run the whole upstream
+    * lineage (parse, dedup, transform) a second time.
+    */
+  def loadAppendObserving(df: DataFrame, path: String, stats: Seq[Column],
+      partitionCol: Option[String] = None,
+      clusterBy: Seq[String] = Nil): (Long, Map[String, Any]) =
+    writeObserved(df, stats) { observed =>
+      val sorted =
+        if (clusterBy.nonEmpty)
+          observed.sortWithinPartitions(clusterBy.map(col): _*)
+        else observed
+      val w = sorted.write.mode("append")
+      partitionCol.fold(w)(c => w.partitionBy(c)).parquet(path)
+    }
+
+  /** Full overwrite (snapshot semantics). The input is materialized
+    * first, so a caller may overwrite the table it reads from; the row
+    * count is observed on the write of that materialized copy, so the
+    * input (often a mergeSchema staging read plus a filter) is evaluated
+    * once, not once for a count() and again for the checkpoint.
+    */
+  def loadTruncate(df: DataFrame, path: String): Long =
+    writeObserved(df.localCheckpoint(eager = true), Nil) {
+      _.write.mode("overwrite").parquet(path)
+    }._1
+
+  /** Runs `write` over `df` with a row count and `stats` observed on
+    * the write job itself; returns the count and the stats by name.
+    */
+  private def writeObserved(df: DataFrame, stats: Seq[Column])(
+      write: DataFrame => Unit): (Long, Map[String, Any]) = {
+    val obs = org.apache.spark.sql.Observation()
+    write(df.observe(obs, count(lit(1)).as("n"), stats: _*))
+    val m = obs.get
+    (m("n").asInstanceOf[Long], m - "n")
   }
 
   /** Evolution-aware read: union schema across files. */

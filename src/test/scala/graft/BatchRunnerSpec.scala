@@ -108,4 +108,49 @@ class BatchRunnerSpec extends SparkSpec {
     assert(spark.read.parquet(s"$wh/fact_staff_daily").count() > 0)
     assert(last.contains(boot))
   }
+
+  test("refreshReporting prunes MERGE A to the source's Ngay range (DEVIATIONS.md 14)") {
+    // Calls at 17:00-18:00 UTC on dEnd: NgayTao = dEnd is inside the
+    // window, but the VN7 reporting date Ngay = dEnd + 1 is outside it.
+    val dEnd = java.time.LocalDate.parse("2024-01-12")
+    val t17 = T0 + 2 * 86400000L + 17 * 3600000L
+    val wh = java.nio.file.Files.createTempDirectory("runner_vn7").toString
+    val r = new BatchRunner(spark, new FixtureSources.Paged(t17, 60, version = 1),
+      new FixtureSources.Snapshots, BatchRunner.Config(wh, tenants = Seq("PK"),
+        sliceMs = 1800000L, pageSize = 13))
+    r.bootstrap()
+    r.runCustomer(t17 + 60 * 60000L)
+    r.runCall(t17 + 60 * 60000L)
+    r.runStaffGroup()
+    val late = java.sql.Date.valueOf(dEnd.plusDays(1))
+    def lateRows(fact: org.apache.spark.sql.DataFrame) =
+      fact.filter(col("Ngay") === lit(late))
+        .select("MaNV_id", "TongCuoc").collect()
+        .map(row => row.getString(0) -> row.getLong(1)).toSeq.sorted
+
+    // Engine: the target is pruned to srcA's own Ngay range, which
+    // holds dEnd + 1, so a repeated refresh UPDATES the existing rows.
+    r.refreshReporting(dEnd)
+    r.refreshReporting(dEnd)
+    val perStaff = (0 until 5).map(i => s"u$i" -> 12L)
+    assert(lateRows(spark.read.parquet(s"$wh/fact_staff_daily")) == perStaff)
+
+    // Reference semantics, kept by the in-memory FactStaffDaily.refresh:
+    // MERGE A's target is pruned to [dStart, dEnd], the dEnd + 1 rows
+    // cannot match, and the repeated refresh inserts duplicates.
+    val callLog = spark.read.parquet(s"$wh/call_log")
+    val customer = spark.read.parquet(s"$wh/customer")
+    val group = spark.read.parquet(s"$wh/group").select("group_id", "name")
+    val lo = to_date(lit(dEnd.minusDays(7).toString))
+    val hi = to_date(lit(dEnd.toString))
+    val empty = spark.createDataFrame(
+      java.util.List.of[org.apache.spark.sql.Row](),
+      graft.pipelines.FactStaffDaily.factTemplate)
+    val once = graft.pipelines.FactStaffDaily.refresh(
+      empty, callLog, customer, group, lo, hi).localCheckpoint()
+    val twice = graft.pipelines.FactStaffDaily.refresh(
+      once, callLog, customer, group, lo, hi)
+    assert(lateRows(once) == perStaff)
+    assert(lateRows(twice) == (perStaff ++ perStaff).sorted)
+  }
 }

@@ -296,4 +296,40 @@ class CodegenHealthSpec extends SparkSpec {
     }
     assertNoCodegenFallback(warnings)
   }
+
+  test("a repeated identical reporting refresh compiles no new classes") {
+    // Pins the builder's codegen settings, so reordering Engine.builder
+    // cannot silently drop them: at Spark's stock 100 entries one
+    // refresh's ~110 generated classes cycle the LRU and every op
+    // recompiles; with the stage id in the class name, AQE's
+    // timing-dependent stage numbering mints new variants of a class.
+    val conf = spark.sessionState.conf
+    assert(conf.getConf(
+      org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES) ==
+      Engine.CodegenCacheEntries)
+    assert(!conf.wholeStageUseIdInClassName)
+    val wh = java.nio.file.Files.createTempDirectory("codegen_wh").toString
+    val t0 = 1704844800000L // 2024-01-10T00:00:00Z
+    val r = new graft.pipelines.BatchRunner(spark,
+      new graft.sources.FixtureSources.Paged(t0, 120, version = 1),
+      new graft.sources.FixtureSources.Snapshots,
+      graft.pipelines.BatchRunner.Config(wh, tenants = Seq("PK"),
+        sliceMs = 1800000L, pageSize = 13))
+    r.bootstrap()
+    r.runCustomer(t0 + 120 * 60000L)
+    r.runCall(t0 + 120 * 60000L)
+    r.runStaffGroup()
+    val dEnd = java.time.LocalDate.parse("2024-01-12")
+    // Fixture set-up ends with the fact table created: the refresh that
+    // creates it plans MERGE A differently from every later one.
+    r.refreshReporting(dEnd)
+    // The same refresh twice: the first may compile, the second may not.
+    r.refreshReporting(dEnd)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    r.refreshReporting(dEnd)
+    assert(compiles.getCount - before == 0,
+      s"${compiles.getCount - before} classes recompiled by an identical refresh")
+  }
 }

@@ -119,4 +119,14 @@ class ColumnLibSpec extends SparkSpec {
       "caller's __rn column must survive the dedup")
     assert(out.head().getString(2) == "keep-new")
   }
+
+  test("awaitAll joins a slow forked sibling before rethrowing the first failure") {
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failing = fork[Int](spark)(throw new IllegalStateException("sink failed"))
+    val slow = fork(spark) { Thread.sleep(400); done.set(true); 7 }
+    val e = intercept[IllegalStateException](awaitAll(failing, slow))
+    assert(e.getMessage == "sink failed")
+    assert(done.get, "the sibling must have finished before the failure surfaced")
+    assert(slow() == 7)
+  }
 }

@@ -469,4 +469,47 @@ class TextIndexSpec extends SparkSpec {
       .collect().map(_.getLong(0)).contains(2L),
       "the victim must actually stop serving")
   }
+
+  test("a failing append sink leaves no sibling write running past the writer lock") {
+    val path = tmp("sink_failure")
+    TextIndex.write(corpus, "doc_id", "text", path, nShards = 4)
+    // Inject a failure into the doclens sink only: its root becomes a
+    // plain file, so that write fails on one row per doc while the
+    // postings write (400 tokens per doc) is still running.
+    val doclens = new java.io.File(path + "__doclens")
+    org.apache.commons.io.FileUtils.deleteDirectory(doclens)
+    java.nio.file.Files.writeString(doclens.toPath, "not a directory")
+    val batch = spark.range(100, 1100).select(col("id").as("doc_id"),
+      expr("array_join(transform(sequence(1, 400), " +
+        "x -> concat('w', cast((x * 7 + id) % 20000 AS STRING))), ' ')")
+        .as("words"))
+      .select(col("doc_id"), concat_ws(" ", col("words"), lit("merge")).as("text"))
+    // Every job start and end, stamped by the scheduler.
+    val jobEvents = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobEvents.add(e.time)
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        jobEvents.add(e.time)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val returned = try {
+      intercept[Exception](TextIndex.append(batch, "doc_id", "text", path, "bf"))
+      val t = System.currentTimeMillis()
+      Thread.sleep(2000) // a sibling still running would start or end a job here
+      t
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val late = jobEvents.asScala.count(_ > returned)
+    assert(late == 0,
+      s"$late job events after append returned: a sibling sink outlived the call")
+    assert(!new java.io.File(path + ".merge-lock").exists(), "lock released")
+    // The batch never committed: serving ignores its orphan postings,
+    // and a retry after the repair lands exactly once.
+    assert(TextIndex.searchBM25(spark, path, Seq("merge"), 10)
+      .collect().map(_.getLong(0)).toSet == Set(3L))
+    assert(doclens.delete())
+    TextIndex.append(batch.limit(5), "doc_id", "text", path, "bf")
+    assert(TextIndex.searchBM25(spark, path, Seq("merge"), 10).count() == 6)
+  }
 }
