@@ -50,117 +50,43 @@ object Engine {
     // Whole-operator plan: grouped top-k via bounded heaps
     // (logical node graft.plans.TopKPerGroup → physical TopKPerGroupExec).
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.CosineSimilarity].getName,
-        "cosine_sim"),
-      (children: Seq[Expression]) =>
-        graft.functions.expressions.CosineSimilarity(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("dot_exact"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.DotProductExact].getName,
-        "dot_exact"),
-      (children: Seq[Expression]) =>
-        graft.functions.expressions.DotProductExact(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.MinHashSignature].getName,
-        "minhash_sig"),
-      (children: Seq[Expression]) => {
+    import graft.functions.expressions._
+    // One row per native expression: SQL name, expression class (its
+    // ExpressionInfo), and the builder from call arguments to the node.
+    val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+      ("cosine_sim", classOf[CosineSimilarity],
+        c => CosineSimilarity(c(0), c(1))),
+      ("dot_exact", classOf[DotProductExact],
+        c => DotProductExact(c(0), c(1))),
+      ("minhash_sig", classOf[MinHashSignature], c => {
         val p = litInt("minhash_sig") _
-        graft.functions.expressions.MinHashSignature(
-          children(0), p(children(1), "k"), p(children(2), "n"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("ngram_stats"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.NgramStats].getName,
-        "ngram_stats"),
-      (children: Seq[Expression]) =>
-        graft.functions.expressions.NgramStats(
-          children(0), litInt("ngram_stats")(children(1), "n"))))
-    ext.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.DotProduct].getName,
-        "dot_product"),
-      (children: Seq[Expression]) =>
-        graft.functions.expressions.DotProduct(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("fwht"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.Fwht].getName,
-        "fwht"),
-      (children: Seq[Expression]) =>
-        graft.functions.expressions.Fwht(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.WordShingles].getName,
-        "word_shingles"),
-      (children: Seq[Expression]) =>
-        graft.functions.expressions.WordShingles(
-          children(0), litInt("word_shingles")(children(1), "n"))))
-    ext.injectFunction((
-      FunctionIdentifier("winnow_fp"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.WinnowFingerprints].getName,
-        "winnow_fp"),
-      (children: Seq[Expression]) => {
+        MinHashSignature(c(0), p(c(1), "k"), p(c(2), "n"))
+      }),
+      ("ngram_stats", classOf[NgramStats],
+        c => NgramStats(c(0), litInt("ngram_stats")(c(1), "n"))),
+      ("dot_product", classOf[DotProduct], c => DotProduct(c(0), c(1))),
+      ("fwht", classOf[Fwht], c => Fwht(c(0))),
+      ("word_shingles", classOf[WordShingles],
+        c => WordShingles(c(0), litInt("word_shingles")(c(1), "n"))),
+      ("winnow_fp", classOf[WinnowFingerprints], c => {
         val p = litInt("winnow_fp") _
-        graft.functions.expressions.WinnowFingerprints(
-          children(0), p(children(1), "k"), p(children(2), "w"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("nfc"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.NfcNormalize].getName,
-        "nfc"),
-      (children: Seq[Expression]) =>
-        graft.functions.expressions.NfcNormalize(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.JaroWinkler].getName,
-        "jaro_winkler"),
-      (children: Seq[Expression]) =>
-        graft.functions.expressions.JaroWinkler(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("winnow_fp_pos"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.WinnowFingerprintPositions].getName,
-        "winnow_fp_pos"),
-      (children: Seq[Expression]) => {
+        WinnowFingerprints(c(0), p(c(1), "k"), p(c(2), "w"))
+      }),
+      ("nfc", classOf[NfcNormalize], c => NfcNormalize(c(0))),
+      ("jaro_winkler", classOf[JaroWinkler], c => JaroWinkler(c(0), c(1))),
+      ("winnow_fp_pos", classOf[WinnowFingerprintPositions], c => {
         val p = litInt("winnow_fp_pos") _
-        graft.functions.expressions.WinnowFingerprintPositions(
-          children(0), p(children(1), "k"), p(children(2), "w"))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.SimHashBits].getName,
-        "simhash"),
-      (children: Seq[Expression]) =>
-        graft.functions.expressions.SimHashBits(
-          children(0), litInt("simhash")(children(1), "bits"))))
-    ext.injectFunction((
-      FunctionIdentifier("char_ngram_stats"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.CharNgramStats].getName,
-        "char_ngram_stats"),
-      (children: Seq[Expression]) =>
-        graft.functions.expressions.CharNgramStats(
-          children(0), litInt("char_ngram_stats")(children(1), "n"))))
-    ext.injectFunction((
-      FunctionIdentifier("deflate_len"),
-      new ExpressionInfo(
-        classOf[graft.functions.expressions.DeflateLen].getName,
-        "deflate_len"),
-      (children: Seq[Expression]) =>
-        graft.functions.expressions.DeflateLen(children(0))))
+        WinnowFingerprintPositions(c(0), p(c(1), "k"), p(c(2), "w"))
+      }),
+      ("simhash", classOf[SimHashBits],
+        c => SimHashBits(c(0), litInt("simhash")(c(1), "bits"))),
+      ("char_ngram_stats", classOf[CharNgramStats],
+        c => CharNgramStats(c(0), litInt("char_ngram_stats")(c(1), "n"))),
+      ("deflate_len", classOf[DeflateLen], c => DeflateLen(c(0))))
+    functions.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
   }
 
   /** Capacity of Spark's generated-class cache

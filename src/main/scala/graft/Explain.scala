@@ -4,7 +4,7 @@ package graft
   * Usage: runMain graft.Explain <name> [sfDir] [k=v ...]
   * Trailing k=v args are applied with spark.conf.set before the query
   * is built — lets a gated optimization (e.g.
-  * spark.graft.widenNarrowScans) dump its before/after plans.
+  * spark.graft.pqNarrowCkpt) dump its before/after plans.
   */
 object Explain {
   def main(args: Array[String]): Unit = {

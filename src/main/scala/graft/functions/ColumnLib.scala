@@ -118,58 +118,24 @@ object ColumnLib {
     Iterator.from(0).map(i => if (i == 0) base else s"$base$i")
       .find(n => !df.columns.contains(n)).get
 
-  /** Repartition a NARROW input to the session's shuffle parallelism
-    * before per-row-heavy work (tokenize/shingle/signature pipelines),
-    * and do NOTHING when the input is already wide. A single parquet
-    * row group — the whole bench fixture, or any small ingest batch —
-    * plans as ONE scan task, so every expensive map stage fed straight
-    * off it runs serially no matter how many cores exist; AQE cannot
-    * help (it only splits post-shuffle stages). At production scale a
-    * scan carries ≥ one split per 128 MB and the guard makes this a
-    * no-op (guide §2.5 "input skew: one huge unsplittable file …
-    * repartition immediately after the read").
-    *
-    * DEFAULT OFF. The round-15 A/Bs that landed this (0.75-0.85 at the
-    * two Dedup sites) were taken with the order-BIASED pre-fix AbBench;
-    * the round-16 order-corrected re-run came back 1.13-1.28 — widen
-    * SLOWER on every affected gate (q95 1.18, q184 1.12, q211 1.28,
-    * q212 1.12, q205 1.07): at these input sizes the extra exchange
-    * costs more than the serial map stage it spreads. The knob stays
-    * for deployments ingesting genuinely expensive-per-row work off
-    * single-split files (one gzip batch, say), where the trade can
-    * flip — measure there before enabling.
-    */
-  def widen(df: DataFrame): DataFrame = {
-    if (!df.sparkSession.conf
-        .get("spark.graft.widenNarrowScans", "false").toBoolean) df
-    else {
-      val target = df.sparkSession.sessionState.conf.numShufflePartitions
-      // Planned input parallelism; planning only, no job — but it IS a
-      // full physical-planning pass of the subtree, so call this on
-      // scans/cheap plans only, never on the giant decimal chains
-      // (whose planning cost the r15 round measured). For an already-
-      // MATERIALIZED frame use [[widenMaterialized]], whose guard reads
-      // the actual partition count off the trivial ExistingRDD plan.
-      // Inputs already within 2x of the target gain too little to
-      // justify an exchange.
-      if (df.rdd.getNumPartitions * 2 > target) df
-      else df.repartition(target)
-    }
-  }
-
-  /** [[widen]] for a frame that is ALREADY materialized
-    * (localCheckpoint output): the guard reads the frame's actual
+  /** Repartition a frame that is ALREADY materialized
+    * (localCheckpoint output) to the session's shuffle parallelism,
+    * and do nothing when it is already wide (within 2x of the target).
+    * The guard reads the frame's actual
     * runtime partition count — which planning-time guards cannot know
     * once AQE has coalesced the producing exchange — and the plan
     * walked by `.rdd` is a single ExistingRDD, so the probe is free.
+    * The repartition itself is lazy: it runs as part of the consumer's
+    * job, so only the caller's lineage cut is materialized.
     * AQE coalesces post-shuffle stages BY BYTES; a byte-light but
     * CPU-heavy consumer (posexplode + decimal accumulation) of a small
     * buffer otherwise inherits 1-3 partitions and serializes on one
     * core (guide §2.5 — the skew is in CPU per byte, not in bytes).
     * At production scale the materialized buffer is already wide and
-    * this is a no-op. Deliberately NOT tied to the widenNarrowScans
-    * gate: callers gate their own restructure (so A/Bs stay
-    * independent) and the runtime guard is the scale-safety.
+    * this is a no-op; the runtime guard is the scale-safety.
+    * Unmaterialized scans are deliberately NOT widened: the
+    * order-corrected same-JVM A/B measured a scan-side repartition
+    * 1.07-1.28x slower on every affected gate at these input sizes.
     */
   def widenMaterialized(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sessionState.conf.numShufflePartitions

@@ -319,12 +319,12 @@ object Dedup {
       k: Int, n: Int, bandWidth: Int, nShards: Int, path: String,
       batch: String, overwrite: Boolean): Long = {
     val obs = org.apache.spark.sql.Observation()
-    // Widen a narrow input before the k·n-hash signature stage — it is
-    // the build's hot map work and would otherwise run on the scan's
-    // (possibly single) split; no-op on wide production scans.
-    lshBands(minhashSignatures(graft.functions.ColumnLib.widen(
-          docs.select(col(id), col(body))), id, body, k, n),
-        id, k, bandWidth)
+    // The signature stage runs on the scan's own splits: repartitioning
+    // a narrow (single-split) input first measured 1.07-1.18x SLOWER on
+    // the band-index gates in the order-corrected same-JVM A/B — the
+    // extra exchange costs more than the serial map stage it spreads.
+    lshBands(minhashSignatures(docs.select(col(id), col(body)), id, body,
+        k, n), id, k, bandWidth)
       .withColumn("shard", pmod(xxhash64(col("band_key")), lit(nShards)))
       .withColumn("batch", lit(batch))
       .observe(obs, count(lit(1)).as("n_bands"))
@@ -633,7 +633,7 @@ object Dedup {
     * state). Rounds needed = graph diameter; near-dup clusters are
     * dense and shallow (diameter 2-3 typical), so `maxIter` defaults
     * comfortably above that and the loop exits early on convergence —
-    * checked with a cheap `limit(1)` existence probe, not a full count.
+    * counted by an Observation on each round's checkpoint job.
     * For planet-scale graphs swap in the alternating large-star/
     * small-star formulation; the contract (node → min reachable id)
     * stays the same.
@@ -642,13 +642,9 @@ object Dedup {
     // Convergence detection rides the round's checkpoint job itself
     // (an Observation on the materialization — Dataset.checkpoint runs
     // through withAction, so query-level metrics fire) instead of a
-    // separate join-probe job per round: one job per CC round, not
-    // two. Gate spark.graft.ccFusedConvergence=false restores the
-    // probe for the same-JVM A/B.
-    val fused = pairs.sparkSession.conf
-      .get("spark.graft.ccFusedConvergence", "true").toBoolean
+    // separate join-probe job per round: one job per CC round, not two.
     // Materialize the edge list once: it is referenced by every
-    // iteration's join AND convergence probe, and its lineage is the
+    // iteration's join, and its lineage is the
     // caller's whole candidate-generation pipeline — without the cut,
     // that pipeline would re-execute per action per round.
     val edges = pairs.select(col("id1").as("src"), col("id2").as("dst"))
@@ -663,12 +659,10 @@ object Dedup {
       val nbrMin = edges
         .join(labels.select(col("node").as("src"), col("label")), "src")
         .groupBy(col("dst").as("node")).agg(min(col("label")).as("nbr"))
-      // `__old` (this round's input label) rides along so the fused
-      // path can count changed rows IN the checkpoint job; the probe
-      // path never selects it, so column pruning removes it there and
-      // the plan is unchanged. Every node appears exactly once (left
-      // join from `labels`), so "any row with label <> __old" is
-      // exactly the old probe's "any node whose label changed".
+      // `__old` (this round's input label) rides along so the
+      // checkpoint job can count changed rows. Every node appears
+      // exactly once (left join from `labels`), so "any row with
+      // label <> __old" is exactly "any node whose label changed".
       val propagated = labels.alias("l")
         .join(nbrMin.alias("p"), Seq("node"), "left")
         .select(col("node"),
@@ -688,27 +682,16 @@ object Dedup {
         .select(col("node"),
           least(col("label"), coalesce(col("ll"), col("label"))).as("label"),
           col("__old"))
-      val updated = if (fused) {
-        val obs = org.apache.spark.sql.Observation()
-        val u = jumped
-          .observe(obs, coalesce(sum(when(col("label") =!= col("__old"), 1L)
-            .otherwise(0L)), lit(0L)).as("n_changed"))
-          .select("node", "label")
-          .localCheckpoint(true)
-        converged = obs.get("n_changed").asInstanceOf[Long] == 0L
-        u
-      } else {
-        val u = jumped.select("node", "label").localCheckpoint(true)
-        converged = u.alias("u")
-          .join(labels.alias("l"), "node")
-          .filter(col("u.label") =!= col("l.label"))
-          .limit(1).isEmpty
-        u
-      }
+      val obs = org.apache.spark.sql.Observation()
+      val updated = jumped
+        .observe(obs, coalesce(sum(when(col("label") =!= col("__old"), 1L)
+          .otherwise(0L)), lit(0L)).as("n_changed"))
+        .select("node", "label")
+        .localCheckpoint(true)
+      converged = obs.get("n_changed").asInstanceOf[Long] == 0L
       // The previous round's label buffer has served its last reader
-      // (the pointer-jump hop and, in probe mode, the convergence
-      // probe above) — free it now rather than banking one leaked
-      // buffer per iteration on the ContextCleaner.
+      // (the pointer-jump hop above) — free it now rather than banking
+      // one leaked buffer per iteration on the ContextCleaner.
       release(labels)
       labels = updated
       i += 1
@@ -1302,13 +1285,11 @@ object Dedup {
     require(minTokens >= 2, s"need minTokens >= 2, got $minTokens")
     // (id, 1-based token pos, digest) — feeds the keeper aggregate AND
     // the mark join; checkpointed so the shingle pass runs once. The
-    // corpus-sized one-shot path widens a narrow input before the
-    // shingle+md5 fan-out (same-JVM A/B: 0.85x; the per-BATCH window
-    // index paths stay unwidened — their inputs are small and the
-    // extra exchange measured net slower there).
-    val grams = windowDigests(
-      graft.functions.ColumnLib.widen(docs.select(col(id), col(body))),
-      id, body, minTokens).localCheckpoint(true)
+    // shingle+md5 fan-out runs on the scan's own splits: repartitioning
+    // a narrow input first measured 1.28x SLOWER on q211 in the
+    // order-corrected same-JVM A/B.
+    val grams = windowDigests(docs.select(col(id), col(body)), id, body,
+      minTokens).localCheckpoint(true)
     val keepers = grams.groupBy("dig").agg(count(lit(1)).as("__cnt"),
       min(struct(col(id).as("kid"), col("pos").as("kpos"))).as("__k"))
     val marked = grams.join(keepers, "dig")

@@ -88,8 +88,8 @@ object TextIndex {
     */
   private def tokenize(docs: DataFrame, id: String, body: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    // NOT widened: the same-JVM A/B that landed widen() for the
-    // signature-heavy builds measured the tokenize variant NET SLOWER
+    // Runs on the scan's own splits: a same-JVM A/B of repartitioning
+    // a narrow input first measured the tokenize pass NET SLOWER
     // (q201 +28%, q206 +30%, q212 +40% — the split/size map work is
     // too cheap to amortize the extra exchange; the heavy aggregates
     // below parallelize at their own shuffles).

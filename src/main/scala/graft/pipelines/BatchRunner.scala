@@ -243,25 +243,15 @@ final class BatchRunner(
     val srcA = conformTo(
       FactStaffDaily.mergeASource(callLog, customer, group, lo, hi, tenant),
       FactStaffDaily.factTemplate)
-    val aCols = Seq("Tenant", "Team", "MaNV", "TongCuoc", "SoSDT_Unique",
-      "SoCuoc_NoiMay", "SoCuoc_KhongNoiMay", "TongThoiluongGoi_Giay",
-      "TongRungChuong_Giay", "SoDataNhan", "max_create_ms", "max_assigned_ms")
     Upsert.applyToPartitionedParquet(spark, p("fact_staff_daily"), srcA,
       keys = Seq("Ngay", "MaNV_id"), partitionCol = "Ngay",
-      updateExprs = aCols.map(c => c -> s"s.$c").toMap)
+      updateExprs = FactStaffDaily.mergeAUpdates)
     val srcB = conformTo(
       FactStaffDaily.mergeBSource(callLog, customer, group, lo, hi, tenant),
       FactStaffDaily.factTemplate)
     Upsert.applyToPartitionedParquet(spark, p("fact_staff_daily"), srcB,
       keys = Seq("Ngay", "MaNV_id"), partitionCol = "Ngay",
-      updateExprs = Map(
-        "Tenant" -> s"'$tenant'",
-        "Team" -> "coalesce(t.Team, s.Team)",
-        "MaNV" -> "coalesce(t.MaNV, s.MaNV)",
-        "SoSDT_KetBanZalo" -> "s.SoSDT_KetBanZalo",
-        "SoSDT_CoNhuCau" -> "s.SoSDT_CoNhuCau",
-        "SoSDT_TuChoi" -> "s.SoSDT_TuChoi",
-        "SoSDT_KhongNgheMay" -> "s.SoSDT_KhongNgheMay"))
+      updateExprs = FactStaffDaily.mergeBUpdates(tenant))
   }
 }
 

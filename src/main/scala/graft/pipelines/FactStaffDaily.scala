@@ -216,6 +216,28 @@ object FactStaffDaily {
     StructField("SoSDT_KetBanZalo", LongType), StructField("SoSDT_CoNhuCau", LongType),
     StructField("SoSDT_TuChoi", LongType), StructField("SoSDT_KhongNgheMay", LongType)))
 
+  /** MERGE A's WHEN MATCHED update list: every metric column is
+    * overwritten from the source row. Shared by [[refresh]] and the
+    * physical refresh in `BatchRunner.refreshReporting`.
+    */
+  val mergeAUpdates: Map[String, String] =
+    Seq("Tenant", "Team", "MaNV", "TongCuoc", "SoSDT_Unique",
+      "SoCuoc_NoiMay", "SoCuoc_KhongNoiMay", "TongThoiluongGoi_Giay",
+      "TongRungChuong_Giay", "SoDataNhan", "max_create_ms", "max_assigned_ms")
+      .map(c => c -> s"s.$c").toMap
+
+  /** MERGE B's update list (runner.py:856-863): the four status
+    * counters, with existing Team/MaNV preserved via IFNULL(T.x, S.x).
+    */
+  def mergeBUpdates(tenant: String): Map[String, String] = Map(
+    "Tenant" -> s"'$tenant'",
+    "Team" -> "coalesce(t.Team, s.Team)",
+    "MaNV" -> "coalesce(t.MaNV, s.MaNV)",
+    "SoSDT_KetBanZalo" -> "s.SoSDT_KetBanZalo",
+    "SoSDT_CoNhuCau" -> "s.SoSDT_CoNhuCau",
+    "SoSDT_TuChoi" -> "s.SoSDT_TuChoi",
+    "SoSDT_KhongNgheMay" -> "s.SoSDT_KhongNgheMay")
+
   /** The two sequential MERGEs (runner.py:589-874) against an in-memory
     * target. MERGE A upserts the full metric row; MERGE B updates only
     * the four status counters, preserving existing Team/MaNV via
@@ -225,14 +247,11 @@ object FactStaffDaily {
   def refresh(target: DataFrame, callLog: DataFrame, customer: DataFrame,
       group: DataFrame, dStart: Column, dEnd: Column,
       tenant: String = "PK"): DataFrame = {
-    val aCols = Seq("Tenant", "Team", "MaNV", "TongCuoc", "SoSDT_Unique",
-      "SoCuoc_NoiMay", "SoCuoc_KhongNoiMay", "TongThoiluongGoi_Giay",
-      "TongRungChuong_Giay", "SoDataNhan", "max_create_ms", "max_assigned_ms")
     val srcA = conformTo(
       mergeASource(callLog, customer, group, dStart, dEnd, tenant), factTemplate)
     val afterA = Upsert.upsert(
       conformTo(target, factTemplate), srcA, keys = Seq("Ngay", "MaNV_id"),
-      updateExprs = aCols.map(c => c -> s"s.$c").toMap,
+      updateExprs = mergeAUpdates,
       targetPrune = Some(col("Ngay").between(dStart, dEnd)))
 
     val srcB = conformTo(
@@ -249,13 +268,6 @@ object FactStaffDaily {
     // the reference's range predicate makes such rows insert rather than
     // update an out-of-range target row — observable semantics.)
     Upsert.upsert(afterA, srcB, keys = Seq("Ngay", "MaNV_id"),
-      updateExprs = Map(
-        "Tenant" -> s"'$tenant'",
-        "Team" -> "coalesce(t.Team, s.Team)",
-        "MaNV" -> "coalesce(t.MaNV, s.MaNV)",
-        "SoSDT_KetBanZalo" -> "s.SoSDT_KetBanZalo",
-        "SoSDT_CoNhuCau" -> "s.SoSDT_CoNhuCau",
-        "SoSDT_TuChoi" -> "s.SoSDT_TuChoi",
-        "SoSDT_KhongNgheMay" -> "s.SoSDT_KhongNgheMay"))
+      updateExprs = mergeBUpdates(tenant))
   }
 }

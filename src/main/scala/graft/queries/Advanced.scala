@@ -25,6 +25,27 @@ object Advanced {
       col("event_id"), col("user_id"), col("event_type"), col("value"),
       unix_millis(col("ts")).as("ms"))
 
+  /** The q160/q161 co-purchase graph: an edge (a < b) between two parts
+    * that share at least two orders.
+    */
+  private def copurchaseEdges(s: SparkSession, dir: String): DataFrame = {
+    val items = t(s, dir, "lineitem")
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("i"))
+      .distinct()
+    items.alias("x").join(items.alias("y"),
+        col("x.o") === col("y.o") && col("x.i") < col("y.i"))
+      .groupBy(col("x.i").as("a"), col("y.i").as("b"))
+      .agg(count(lit(1)).as("n")).filter(col("n") >= 2)
+      .select("a", "b")
+  }
+
+  /** DuckDB restatement of [[copurchaseEdges]]: `items`, `ed(a, b)`. */
+  private val copurchaseCte = """items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS i
+                       FROM lineitem),
+        ed AS (SELECT x.i AS a, y.i AS b
+               FROM items x JOIN items y ON x.o = y.o AND x.i < y.i
+               GROUP BY 1, 2 HAVING count(*) >= 2)"""
+
   val defs: Seq[QueryDef] = Seq(
 
     // ---- ROLLUP: hierarchical totals ----------------------------------
@@ -861,24 +882,13 @@ object Advanced {
     // [[graft.operators.Graph.triangleCounts]].
     QueryDef("q160_triangles",
       (s, dir) => {
-        val items = t(s, dir, "lineitem")
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("i"))
-          .distinct()
-        val edges = items.alias("x").join(items.alias("y"),
-            col("x.o") === col("y.o") && col("x.i") < col("y.i"))
-          .groupBy(col("x.i").as("a"), col("y.i").as("b"))
-          .agg(count(lit(1)).as("n")).filter(col("n") >= 2)
-          .select("a", "b")
+        val edges = copurchaseEdges(s, dir)
         graft.operators.Graph.triangleCounts(edges)
           .orderBy(col("n_tri").desc, col("v"))
           .limit(30)
       },
-      Some("""
-        WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS i
-                       FROM lineitem),
-        ed AS (SELECT x.i AS a, y.i AS b
-               FROM items x JOIN items y ON x.o = y.o AND x.i < y.i
-               GROUP BY 1, 2 HAVING count(*) >= 2),
+      Some(s"""
+        WITH $copurchaseCte,
         tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
                 FROM ed e1
                 JOIN ed e2 ON e2.a = e1.b
@@ -898,23 +908,12 @@ object Advanced {
     // [[graft.operators.Graph.labelPropagation]].
     QueryDef("q161_label_prop",
       (s, dir) => {
-        val items = t(s, dir, "lineitem")
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("i"))
-          .distinct()
-        val edges = items.alias("x").join(items.alias("y"),
-            col("x.o") === col("y.o") && col("x.i") < col("y.i"))
-          .groupBy(col("x.i").as("a"), col("y.i").as("b"))
-          .agg(count(lit(1)).as("n")).filter(col("n") >= 2)
-          .select("a", "b")
+        val edges = copurchaseEdges(s, dir)
         graft.operators.Graph.labelPropagation(edges, iters = 2)
           .orderBy("v")
       },
-      Some("""
-        WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS i
-                       FROM lineitem),
-        ed AS (SELECT x.i AS a, y.i AS b
-               FROM items x JOIN items y ON x.o = y.o AND x.i < y.i
-               GROUP BY 1, 2 HAVING count(*) >= 2),
+      Some(s"""
+        WITH $copurchaseCte,
         dir AS (SELECT a AS s, b AS t FROM ed
                 UNION ALL SELECT b, a FROM ed),
         c1 AS (SELECT t AS v, s AS label, count(*) AS n

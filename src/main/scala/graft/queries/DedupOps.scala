@@ -35,29 +35,9 @@ object DedupOps {
     * maxBucket=1000)` over `doc_id < 300`, shared by the q111 and
     * q121 oracles so the candidate sets cannot drift.
     */
-  private val lshCandSql: String = """
-        sig AS (
-          SELECT doc_id,
-            min(substr(md5('0:'||g),1,16)) AS h0, min(substr(md5('1:'||g),1,16)) AS h1,
-            min(substr(md5('2:'||g),1,16)) AS h2, min(substr(md5('3:'||g),1,16)) AS h3
-          FROM (SELECT doc_id,
-                  unnest(list_transform(range(1, len(l)-1),
-                         i -> l[i]||' '||l[i+1]||' '||l[i+2])) AS g
-                FROM (SELECT doc_id, string_split(text,' ') AS l
-                      FROM documents WHERE doc_id < 300))
-          GROUP BY 1),
-        bands AS (
-          SELECT doc_id, 0 AS band_id, md5(h0||h1) AS band_key FROM sig
-          UNION ALL SELECT doc_id, 1, md5(h2||h3) FROM sig),
-        ok AS (SELECT band_id, band_key FROM bands
-               GROUP BY 1, 2 HAVING count(*) <= 1000),
-        cand AS (
-          SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-          FROM bands a
-          JOIN ok o ON a.band_id = o.band_id AND a.band_key = o.band_key
-          JOIN bands b
-            ON a.band_id = b.band_id AND a.band_key = b.band_key
-           AND a.doc_id < b.doc_id)"""
+  private lazy val lshCandSql: String = s"""
+        ${sigSql(" WHERE doc_id < 300")},
+        $bandCandCte"""
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.table(s, dir, "documents")
@@ -76,48 +56,271 @@ object DedupOps {
     }.mkString(" || ")
   }
 
-  /** Shared DuckDB CTE: 4 trigram-shingle minhashes per doc (also the
-    * candidate-pair front of the corpus-build oracle, q55).
+  /** q95/q184's probe: the incoming slice against the persisted band
+    * index at `path`, verified by exact Jaccard >= 0.3.
     */
-  private[queries] val sigCte = """
-    sig AS (
+  private def probeIncoming(s: SparkSession, path: String,
+      existing: DataFrame, incoming: DataFrame): DataFrame =
+    Dedup.incrementalNearDupPairs(s, path, existing, incoming,
+        "doc_id", "text", k = 4, n = 3, bandWidth = 2,
+        maxBucket = 1000, minJaccard = 0.3)
+      .orderBy("new_id", "old_id")
+
+  /** q211/q212's row shape: cleaned text by md5 plus the span stats. */
+  private def substringDedupStats(out: DataFrame): DataFrame =
+    out.select(col("doc_id"),
+        md5(col("text_clean")).as("clean_md5"),
+        col("n_spans").cast("long").as("n_spans"),
+        col("removed_tokens").cast("long").as("removed_tokens"),
+        col("orig_tokens").cast("long").as("orig_tokens"))
+      .orderBy("doc_id")
+
+  /** DuckDB CTE `sig(doc_id, h0..h3)`: 4 trigram-shingle minhashes per
+    * doc ([[Dedup.minhashSignatures]] with k=4, n=3) over the
+    * documents `where` selects.
+    */
+  private def sigSql(where: String): String = s"""sig AS (
       SELECT doc_id,
         min(substr(md5('0:'||g),1,16)) AS h0, min(substr(md5('1:'||g),1,16)) AS h1,
         min(substr(md5('2:'||g),1,16)) AS h2, min(substr(md5('3:'||g),1,16)) AS h3
       FROM (SELECT doc_id,
               unnest(list_transform(range(1, len(l)-1),
                      i -> l[i]||' '||l[i+1]||' '||l[i+2])) AS g
-            FROM (SELECT doc_id, string_split(text,' ') AS l FROM documents))
+            FROM (SELECT doc_id, string_split(text,' ') AS l FROM documents$where))
       GROUP BY 1)"""
+
+  /** [[sigSql]] over the whole corpus (also the candidate-pair front
+    * of the corpus-build oracle, q55).
+    */
+  private[queries] val sigCte = sigSql("")
+
+  /** DuckDB CTE `bands(doc_id, band_id, band_key)`: 2 bands of width 2
+    * over [[sigSql]] ([[Dedup.lshBands]]).
+    */
+  private val bandsCte = """bands AS (
+      SELECT doc_id, 0 AS band_id, md5(h0||h1) AS band_key FROM sig
+      UNION ALL SELECT doc_id, 1, md5(h2||h3) FROM sig)"""
+
+  /** Band keys under the hot-key guard (maxBucket = 1000). */
+  private val okCte = """ok AS (SELECT band_id, band_key FROM bands
+           GROUP BY 1, 2 HAVING count(*) <= 1000)"""
+
+  /** Candidate pairs: docs sharing a guarded band key, id1 < id2. */
+  private val bandPairsSql = """SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
+      FROM bands a
+      JOIN ok o ON a.band_id = o.band_id AND a.band_key = o.band_key
+      JOIN bands b
+        ON a.band_id = b.band_id AND a.band_key = b.band_key
+       AND a.doc_id < b.doc_id"""
+
+  /** [[bandsCte]] + [[okCte]] → `cand(id1, id2)`
+    * ([[Dedup.lshCandidatePairs]]).
+    */
+  private val bandCandCte = s"""$bandsCte,
+    $okCte,
+    cand AS (
+      $bandPairsSql)"""
+
+  /** `edges` + recursive min-label `comp(node, label)` over the pair
+    * CTE `pairs` ([[Dedup.connectedComponents]]); a node's component
+    * is `min(label)`. Needs `WITH RECURSIVE`.
+    */
+  private def compCte(pairs: String): String = s"""edges AS (
+      SELECT id1 AS src, id2 AS dst FROM $pairs
+      UNION ALL SELECT id2, id1 FROM $pairs),
+    comp(node, label) AS (
+      SELECT DISTINCT src, src FROM edges
+      UNION
+      SELECT e.dst, c.label FROM comp c JOIN edges e ON e.src = c.node)"""
 
   /** Shared DuckDB CTE block: LSH bands over [[sigCte]] → candidate
     * pairs → symmetric edges → recursive min-label components (the
     * declarative restatement of [[graft.operators.Dedup.lshCandidatePairs]]
     * + [[graft.operators.Dedup.connectedComponents]]). Needs
-    * `WITH RECURSIVE $sigCte, $componentCte`. Interpolated by the q38
-    * and q55 oracles (the single source of the CTE text — no inline
-    * copies to drift).
+    * `WITH RECURSIVE $sigCte, $componentCte`.
     */
-  private[queries] val componentCte = """
-    bands AS (
-      SELECT doc_id, 0 AS band_id, md5(h0||h1) AS band_key FROM sig
-      UNION ALL SELECT doc_id, 1, md5(h2||h3) FROM sig),
-    ok AS (SELECT band_id, band_key FROM bands
-           GROUP BY 1, 2 HAVING count(*) <= 1000),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-      FROM bands a
-      JOIN ok o ON a.band_id = o.band_id AND a.band_key = o.band_key
-      JOIN bands b
-        ON a.band_id = b.band_id AND a.band_key = b.band_key
-       AND a.doc_id < b.doc_id),
-    edges AS (
-      SELECT id1 AS src, id2 AS dst FROM cand
-      UNION ALL SELECT id2, id1 FROM cand),
-    comp(node, label) AS (
-      SELECT DISTINCT src, src FROM edges
-      UNION
-      SELECT e.dst, c.label FROM comp c JOIN edges e ON e.src = c.node)"""
+  private[queries] val componentCte = s"""$bandCandCte,
+    ${compCte("cand")}"""
+
+  /** The per-node dedup verdict over [[compCte]]: component id and
+    * whether the node is its component's kept (minimum-id) member.
+    */
+  private val keepSql = """SELECT node, min(label) AS component, node = min(label) AS keep
+        FROM comp GROUP BY node ORDER BY node"""
+
+  /** `DISTINCT (doc_id, g)` word-trigram rows of the documents `where`
+    * selects ([[Dedup.ngramJaccardPairs]]'s shingle sets); callers
+    * wrap it as `grams AS (...)`.
+    */
+  private def gramsSql(where: String = ""): String =
+    s"""SELECT DISTINCT doc_id, g FROM (
+            SELECT doc_id,
+              unnest(list_transform(range(1, len(l)-1),
+                     i -> l[i]||' '||l[i+1]||' '||l[i+2])) AS g
+            FROM (SELECT doc_id, string_split(text,' ') AS l FROM documents$where))"""
+
+  /** All-pairs shared-gram counts `(id1, id2, n_inter)` over `grams`;
+    * callers wrap it as `inter AS (...)`.
+    */
+  private val pairInterSql = """SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
+          FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
+          GROUP BY 1, 2"""
+
+  /** `grams` over the documents `where` selects + their `sizes(doc_id,
+    * sz)`.
+    */
+  private def gramSizesCte(where: String = ""): String = s"""grams AS (
+          ${gramsSql(where)}),
+        sizes AS (SELECT doc_id, count(*) AS sz FROM grams GROUP BY 1)"""
+
+  /** [[gramSizesCte]] + all-pairs `inter(id1, id2, n_inter)` (q34,
+    * q128, q158).
+    */
+  private def pairInterCte(where: String = ""): String = s"""${gramSizesCte(where)},
+        inter AS (
+          $pairInterSql)"""
+
+  /** Exact trigram Jaccard of the `cand(a, b)` pairs, cut at 0.3
+    * (q37, q95, q184): grams of every doc, per-doc sizes, the shared
+    * count per candidate pair.
+    */
+  private def candJaccardSql(a: String, b: String): String = s"""${gramSizesCte()},
+        inter AS (
+          SELECT c.$a, c.$b, count(*) AS n_inter
+          FROM cand c
+          JOIN grams g1 ON g1.doc_id = c.$a
+          JOIN grams g2 ON g2.doc_id = c.$b AND g2.g = g1.g
+          GROUP BY 1, 2)
+        SELECT $a, $b,
+               CAST(n_inter AS DOUBLE) / CAST(s1.sz + s2.sz - n_inter AS DOUBLE)
+                 AS jaccard
+        FROM inter
+        JOIN sizes s1 ON s1.doc_id = $a
+        JOIN sizes s2 ON s2.doc_id = $b
+        WHERE CAST(n_inter AS DOUBLE) / CAST(s1.sz + s2.sz - n_inter AS DOUBLE)
+              >= 0.3
+        ORDER BY 1, 2"""
+
+  /** q95/q184's oracle: the incoming `% 5 = 0` slice probed against ONE
+    * flat band set of the `% 5 <> 0` docs, verified by exact Jaccard.
+    */
+  private lazy val incrementalNearDupSql = s"""
+        WITH $sigCte,
+        $bandsCte,
+        newb AS (SELECT * FROM bands WHERE doc_id % 5 = 0),
+        oldb AS (SELECT * FROM bands WHERE doc_id % 5 <> 0),
+        ok AS (SELECT band_id, band_key FROM oldb
+               GROUP BY 1, 2 HAVING count(*) <= 1000),
+        cand AS (
+          SELECT DISTINCT nw.doc_id AS new_id, ob.doc_id AS old_id
+          FROM newb nw
+          JOIN ok o ON nw.band_id = o.band_id AND nw.band_key = o.band_key
+          JOIN oldb ob
+            ON nw.band_id = ob.band_id AND nw.band_key = ob.band_key),
+        ${candJaccardSql("new_id", "old_id")}"""
+
+  /** 16-bit SimHash bits over exploded words `w` (q33/q36), the
+    * restatement of [[Dedup.simhashSignatures]].
+    */
+  private val bits16Sql = (0 until 16).map { j =>
+    s"""CASE WHEN SUM(CASE WHEN substr(md5(w),${j + 1},1) IN
+       |('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END) > 0
+       |THEN '1' ELSE '0' END""".stripMargin.replace("\n", " ")
+  }.mkString(" || ")
+
+  /** Bitwise Hamming distance of two 64-char bitstrings `a`/`b`. */
+  private def hamming64Sql(a: String, b: String): String = (1 to 64).map(i =>
+    s"CASE WHEN substr($a,$i,1) <> substr($b,$i,1) THEN 1 ELSE 0 END")
+    .mkString(" + ")
+
+  /** 64-bit SimHash near-dup candidates `cand(id1, id2, ha, hb)`: 4
+    * bands of 16 bits, pigeonhole-complete for Hamming <= 3
+    * ([[Dedup.simhashNearDupPairs64]]).
+    */
+  private lazy val simhash64CandCte = s"""sig AS (
+          SELECT doc_id, $bits64Sql AS simhash64
+          FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w
+                FROM documents)
+          GROUP BY doc_id),
+        bands AS (
+          SELECT doc_id, simhash64, b AS band_id,
+                 substr(simhash64, b*16+1, 16) AS band_key
+          FROM sig, (SELECT unnest(range(0,4)) AS b)),
+        cand AS (
+          SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2,
+                 a.simhash64 AS ha, b.simhash64 AS hb
+          FROM bands a JOIN bands b
+            ON a.band_id = b.band_id AND a.band_key = b.band_key
+           AND a.doc_id < b.doc_id)"""
+
+  /** Embedding near-dup pairs `d(id1, id2, dot)` within sized sign-LSH
+    * buckets ([[Dedup.embeddingNearDupPairs]]), with the norms `n`.
+    */
+  private def embPairDotCte(bucket: String): String = s"""b AS (SELECT vec_id, $bucket AS bucket FROM embeddings),
+        p AS (SELECT a.vec_id AS id1, c.vec_id AS id2
+              FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id < c.vec_id),
+        ${SimilarityOps.embCte},
+        ${SimilarityOps.normCte("n")},
+        d AS (SELECT p.id1, p.id2,
+                     CAST(SUM(CAST(e1.v*e2.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
+              FROM p JOIN e e1 ON e1.vec_id = p.id1
+                     JOIN e e2 ON e2.vec_id = p.id2 AND e2.pos = e1.pos
+              GROUP BY 1, 2)"""
+
+  /** Token-window exact substring dedup (q211/q212,
+    * [[Dedup.exactSubstringDedup]] with L = 4): window digests, the
+    * corpus-first keeper, gaps-and-islands span fusion, token rebuild.
+    * `note` is SQL commentary placed in the rebuild's CASE; `where`
+    * filters the emitted rows.
+    */
+  private def substringDedupSql(note: String, where: String): String = s"""
+        WITH w AS (SELECT doc_id, text, string_split(text,' ') AS l
+                   FROM documents),
+        g AS (SELECT doc_id, u.pos AS pos, u.dig AS dig FROM (
+                SELECT doc_id, unnest(list_transform(range(1, len(l)-2),
+                  i -> struct_pack(pos := CAST(i AS INT),
+                    dig := md5(array_to_string(
+                      l[CAST(i AS INT):CAST(i+3 AS INT)], ' '))))) AS u
+                FROM w WHERE len(l) >= 4)),
+        k AS (SELECT dig, count(*) AS cnt,
+                     min(doc_id * 1000000 + pos) AS keeper
+              FROM g GROUP BY 1),
+        m AS (SELECT doc_id, pos AS s, pos + 3 AS e
+              FROM g JOIN k USING (dig)
+              WHERE cnt > 1 AND doc_id * 1000000 + pos <> keeper),
+        i AS (SELECT doc_id, s, e,
+                CASE WHEN s <= coalesce(MAX(e) OVER (PARTITION BY doc_id
+                       ORDER BY s, e
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+                     -10) + 1
+                  THEN 0 ELSE 1 END AS brk
+              FROM m),
+        si AS (SELECT doc_id, s, e,
+                 SUM(brk) OVER (PARTITION BY doc_id ORDER BY s, e) AS isl
+               FROM i),
+        sp AS (SELECT doc_id, min(s) AS s, max(e) AS e
+               FROM si GROUP BY doc_id, isl),
+        spl AS (SELECT doc_id,
+                  list(struct_pack(s := s, e := e) ORDER BY s) AS spans,
+                  count(*) AS n_spans,
+                  SUM(e - s + 1) AS removed
+                FROM sp GROUP BY 1),
+        r AS (SELECT w.doc_id,
+                CASE WHEN spl.spans IS NULL THEN w.text$note
+                  ELSE coalesce(array_to_string(
+                    [w.l[ix] for ix in generate_series(1, len(w.l))
+                     if len(list_filter(spl.spans,
+                          q -> q.s <= ix AND ix <= q.e)) = 0], ' '), '')
+                  END AS text_clean,
+                coalesce(spl.n_spans, 0) AS n_spans,
+                coalesce(spl.removed, 0) AS removed_tokens,
+                len(w.l) AS orig_tokens
+              FROM w LEFT JOIN spl USING (doc_id))
+        SELECT doc_id, md5(text_clean) AS clean_md5,
+               CAST(n_spans AS BIGINT) AS n_spans,
+               CAST(removed_tokens AS BIGINT) AS removed_tokens,
+               CAST(orig_tokens AS BIGINT) AS orig_tokens
+        FROM r${where} ORDER BY doc_id"""
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -151,17 +354,9 @@ object DedupOps {
       },
       Some(s"""
         WITH $sigCte,
-        bands AS (
-          SELECT doc_id, 0 AS band_id, md5(h0||h1) AS band_key FROM sig
-          UNION ALL SELECT doc_id, 1, md5(h2||h3) FROM sig),
-        ok AS (SELECT band_id, band_key FROM bands
-               GROUP BY 1, 2 HAVING count(*) <= 1000)
-        SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-        FROM bands a
-        JOIN ok o ON a.band_id = o.band_id AND a.band_key = o.band_key
-        JOIN bands b
-          ON a.band_id = b.band_id AND a.band_key = b.band_key
-         AND a.doc_id < b.doc_id
+        $bandsCte,
+        $okCte
+        $bandPairsSql
         ORDER BY 1, 2""")),
 
     // ---- SimHash: 16-bit signature (explode-side codegen path) ----------
@@ -170,17 +365,10 @@ object DedupOps {
         Dedup.simhashSignatures(docs(s, dir), "doc_id", "text")
           .orderBy("doc_id")
       },
-      Some {
-        val bits = (0 until 16).map { j =>
-          s"""CASE WHEN SUM(CASE WHEN substr(md5(w),${j + 1},1) IN
-             |('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END) > 0
-             |THEN '1' ELSE '0' END""".stripMargin.replace("\n", " ")
-        }.mkString(" || ")
-        s"""
-        SELECT doc_id, $bits AS simhash
+      Some(s"""
+        SELECT doc_id, $bits16Sql AS simhash
         FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents)
-        GROUP BY doc_id ORDER BY doc_id"""
-      }),
+        GROUP BY doc_id ORDER BY doc_id""")),
 
     // ---- SimHash near-dups: nibble-band candidates → exact Hamming ------
     // Capped id range (verification tier, like q34): the synthetic
@@ -195,17 +383,12 @@ object DedupOps {
           .orderBy("id1", "id2")
       },
       Some {
-        val bits = (0 until 16).map { j =>
-          s"""CASE WHEN SUM(CASE WHEN substr(md5(w),${j + 1},1) IN
-             |('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END) > 0
-             |THEN '1' ELSE '0' END""".stripMargin.replace("\n", " ")
-        }.mkString(" || ")
         val hamming = (1 to 16).map(i =>
           s"CASE WHEN substr(a.simhash,$i,1) <> substr(b.simhash,$i,1) THEN 1 ELSE 0 END")
           .mkString(" + ")
         s"""
         WITH sig AS (
-          SELECT doc_id, $bits AS simhash
+          SELECT doc_id, $bits16Sql AS simhash
           FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w
                 FROM documents WHERE doc_id < 200)
           GROUP BY doc_id),
@@ -249,31 +432,12 @@ object DedupOps {
             maxHamming = 3)
           .orderBy("id1", "id2")
       },
-      Some {
-        val hamming = (1 to 64).map(i =>
-          s"CASE WHEN substr(ha,$i,1) <> substr(hb,$i,1) THEN 1 ELSE 0 END")
-          .mkString(" + ")
-        s"""
-        WITH sig AS (
-          SELECT doc_id, $bits64Sql AS simhash64
-          FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w
-                FROM documents)
-          GROUP BY doc_id),
-        bands AS (
-          SELECT doc_id, simhash64, b AS band_id,
-                 substr(simhash64, b*16+1, 16) AS band_key
-          FROM sig, (SELECT unnest(range(0,4)) AS b)),
-        cand AS (
-          SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2,
-                 a.simhash64 AS ha, b.simhash64 AS hb
-          FROM bands a JOIN bands b
-            ON a.band_id = b.band_id AND a.band_key = b.band_key
-           AND a.doc_id < b.doc_id)
+      Some(s"""
+        WITH $simhash64CandCte
         SELECT id1, id2, hamming FROM (
-          SELECT id1, id2, $hamming AS hamming FROM cand)
+          SELECT id1, id2, ${hamming64Sql("ha", "hb")} AS hamming FROM cand)
         WHERE hamming <= 3
-        ORDER BY 1, 2"""
-      }),
+        ORDER BY 1, 2""")),
 
     // ---- 64-bit SimHash end-to-end: pairs → components → keep/drop ------
     // The production-grade signature path CLOSED the way q38 closes
@@ -291,40 +455,14 @@ object DedupOps {
           .withColumn("keep", col("node") === col("component"))
           .orderBy("node")
       },
-      Some {
-        val hamming = (1 to 64).map(i =>
-          s"CASE WHEN substr(ha,$i,1) <> substr(hb,$i,1) THEN 1 ELSE 0 END")
-          .mkString(" + ")
-        s"""
-        WITH RECURSIVE sig AS (
-          SELECT doc_id, $bits64Sql AS simhash64
-          FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w
-                FROM documents)
-          GROUP BY doc_id),
-        bands AS (
-          SELECT doc_id, simhash64, b AS band_id,
-                 substr(simhash64, b*16+1, 16) AS band_key
-          FROM sig, (SELECT unnest(range(0,4)) AS b)),
-        cand AS (
-          SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2,
-                 a.simhash64 AS ha, b.simhash64 AS hb
-          FROM bands a JOIN bands b
-            ON a.band_id = b.band_id AND a.band_key = b.band_key
-           AND a.doc_id < b.doc_id),
+      Some(s"""
+        WITH RECURSIVE $simhash64CandCte,
         pairs AS (
           SELECT id1, id2 FROM (
-            SELECT id1, id2, $hamming AS hamming FROM cand)
+            SELECT id1, id2, ${hamming64Sql("ha", "hb")} AS hamming FROM cand)
           WHERE hamming <= 3),
-        edges AS (
-          SELECT id1 AS src, id2 AS dst FROM pairs
-          UNION ALL SELECT id2, id1 FROM pairs),
-        comp(node, label) AS (
-          SELECT DISTINCT src, src FROM edges
-          UNION
-          SELECT e.dst, c.label FROM comp c JOIN edges e ON e.src = c.node)
-        SELECT node, min(label) AS component, node = min(label) AS keep
-        FROM comp GROUP BY node ORDER BY node"""
-      }),
+        ${compCte("pairs")}
+        $keepSql""")),
 
     // ---- embedding-cosine near-dup: LSH buckets → exact cosine cut ------
     QueryDef("q35_embedding_neardup",
@@ -334,29 +472,14 @@ object DedupOps {
             sizedDedupPairs(s, dir), threshold = 0.15)
           .orderBy("id1", "id2")
       },
-      Some {
-        val bucket = dedupBucketSql("embedding")
-        s"""
-        WITH b AS (SELECT vec_id, $bucket AS bucket FROM embeddings),
-        p AS (SELECT a.vec_id AS id1, c.vec_id AS id2
-              FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id < c.vec_id),
-        e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-                     generate_subscripts(embedding, 1) AS pos
-              FROM embeddings),
-        n AS (SELECT vec_id, CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn
-              FROM e GROUP BY 1),
-        d AS (SELECT p.id1, p.id2,
-                     CAST(SUM(CAST(e1.v*e2.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-              FROM p JOIN e e1 ON e1.vec_id = p.id1
-                     JOIN e e2 ON e2.vec_id = p.id2 AND e2.pos = e1.pos
-              GROUP BY 1, 2)
+      Some(s"""
+        WITH ${embPairDotCte(dedupBucketSql("embedding"))}
         SELECT id1, id2,
                round(dot/(sqrt(n1.nn)*sqrt(n2.nn)), 9) AS cosine
         FROM d JOIN n n1 ON n1.vec_id = id1 JOIN n n2 ON n2.vec_id = id2
         WHERE n1.nn > 0 AND n2.nn > 0
           AND round(dot/(sqrt(n1.nn)*sqrt(n2.nn)), 9) >= 0.15
-        ORDER BY 1, 2"""
-      }),
+        ORDER BY 1, 2""")),
 
     // ---- embedding near-dup GROUPS: pairs → components → keep set -------
     // Closes the embedding dedup path end-to-end the way q61 does for
@@ -375,37 +498,15 @@ object DedupOps {
           .withColumn("keep", col("node") === col("component"))
           .orderBy("node")
       },
-      Some {
-        val bucket = dedupBucketSql("embedding")
-        s"""
-        WITH RECURSIVE b AS (SELECT vec_id, $bucket AS bucket FROM embeddings),
-        p AS (SELECT a.vec_id AS id1, c.vec_id AS id2
-              FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id < c.vec_id),
-        e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-                     generate_subscripts(embedding, 1) AS pos
-              FROM embeddings),
-        n AS (SELECT vec_id, CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn
-              FROM e GROUP BY 1),
-        d AS (SELECT p.id1, p.id2,
-                     CAST(SUM(CAST(e1.v*e2.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-              FROM p JOIN e e1 ON e1.vec_id = p.id1
-                     JOIN e e2 ON e2.vec_id = p.id2 AND e2.pos = e1.pos
-              GROUP BY 1, 2),
+      Some(s"""
+        WITH RECURSIVE ${embPairDotCte(dedupBucketSql("embedding"))},
         pairs AS (SELECT id1, id2
                   FROM d JOIN n n1 ON n1.vec_id = id1
                          JOIN n n2 ON n2.vec_id = id2
                   WHERE n1.nn > 0 AND n2.nn > 0
                     AND round(dot/(sqrt(n1.nn)*sqrt(n2.nn)), 9) >= 0.15),
-        edges AS (
-          SELECT id1 AS src, id2 AS dst FROM pairs
-          UNION ALL SELECT id2, id1 FROM pairs),
-        comp(node, label) AS (
-          SELECT DISTINCT src, src FROM edges
-          UNION
-          SELECT e.dst, c.label FROM comp c JOIN edges e ON e.src = c.node)
-        SELECT node, min(label) AS component, node = min(label) AS keep
-        FROM comp GROUP BY node ORDER BY node"""
-      }),
+        ${compCte("pairs")}
+        $keepSql""")),
 
     // ---- end-to-end near-dup: LSH candidates → exact Jaccard cut --------
     // The production composition (sub-quadratic): Jaccard is computed
@@ -418,38 +519,8 @@ object DedupOps {
       },
       Some(s"""
         WITH $sigCte,
-        bands AS (
-          SELECT doc_id, 0 AS band_id, md5(h0||h1) AS band_key FROM sig
-          UNION ALL SELECT doc_id, 1, md5(h2||h3) FROM sig),
-        ok AS (SELECT band_id, band_key FROM bands
-               GROUP BY 1, 2 HAVING count(*) <= 1000),
-        cand AS (
-          SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-          FROM bands a
-          JOIN ok o ON a.band_id = o.band_id AND a.band_key = o.band_key
-          JOIN bands b
-            ON a.band_id = b.band_id AND a.band_key = b.band_key
-           AND a.doc_id < b.doc_id),
-        grams AS (
-          SELECT DISTINCT doc_id, g FROM (
-            SELECT doc_id,
-              unnest(list_transform(range(1, len(l)-1),
-                     i -> l[i]||' '||l[i+1]||' '||l[i+2])) AS g
-            FROM (SELECT doc_id, string_split(text,' ') AS l FROM documents))),
-        sizes AS (SELECT doc_id, count(*) AS sz FROM grams GROUP BY 1),
-        inter AS (
-          SELECT c.id1, c.id2, count(*) AS n_inter
-          FROM cand c
-          JOIN grams g1 ON g1.doc_id = c.id1
-          JOIN grams g2 ON g2.doc_id = c.id2 AND g2.g = g1.g
-          GROUP BY 1, 2)
-        SELECT id1, id2,
-               CAST(n_inter AS DOUBLE) / CAST(s1.sz + s2.sz - n_inter AS DOUBLE) AS jaccard
-        FROM inter
-        JOIN sizes s1 ON s1.doc_id = id1
-        JOIN sizes s2 ON s2.doc_id = id2
-        WHERE CAST(n_inter AS DOUBLE) / CAST(s1.sz + s2.sz - n_inter AS DOUBLE) >= 0.3
-        ORDER BY 1, 2""")),
+        $bandCandCte,
+        ${candJaccardSql("id1", "id2")}""")),
 
     // ---- near-dup groups: candidates → connected components -------------
     // Pairs become groups; each group's component id IS the canonical
@@ -526,48 +597,9 @@ object DedupOps {
           s"/graft_bandidx_q95_${java.lang.Integer.toHexString(dir.hashCode)}/index"
         Dedup.bandIndexWrite(existing, "doc_id", "text",
           k = 4, n = 3, bandWidth = 2, path)
-        Dedup.incrementalNearDupPairs(s, path, existing, incoming,
-            "doc_id", "text", k = 4, n = 3, bandWidth = 2,
-            maxBucket = 1000, minJaccard = 0.3)
-          .orderBy("new_id", "old_id")
+        probeIncoming(s, path, existing, incoming)
       },
-      Some(s"""
-        WITH $sigCte,
-        bands AS (
-          SELECT doc_id, 0 AS band_id, md5(h0||h1) AS band_key FROM sig
-          UNION ALL SELECT doc_id, 1, md5(h2||h3) FROM sig),
-        newb AS (SELECT * FROM bands WHERE doc_id % 5 = 0),
-        oldb AS (SELECT * FROM bands WHERE doc_id % 5 <> 0),
-        ok AS (SELECT band_id, band_key FROM oldb
-               GROUP BY 1, 2 HAVING count(*) <= 1000),
-        cand AS (
-          SELECT DISTINCT nw.doc_id AS new_id, ob.doc_id AS old_id
-          FROM newb nw
-          JOIN ok o ON nw.band_id = o.band_id AND nw.band_key = o.band_key
-          JOIN oldb ob
-            ON nw.band_id = ob.band_id AND nw.band_key = ob.band_key),
-        grams AS (
-          SELECT DISTINCT doc_id, g FROM (
-            SELECT doc_id,
-              unnest(list_transform(range(1, len(l)-1),
-                     i -> l[i]||' '||l[i+1]||' '||l[i+2])) AS g
-            FROM (SELECT doc_id, string_split(text,' ') AS l FROM documents))),
-        sizes AS (SELECT doc_id, count(*) AS sz FROM grams GROUP BY 1),
-        inter AS (
-          SELECT c.new_id, c.old_id, count(*) AS n_inter
-          FROM cand c
-          JOIN grams g1 ON g1.doc_id = c.new_id
-          JOIN grams g2 ON g2.doc_id = c.old_id AND g2.g = g1.g
-          GROUP BY 1, 2)
-        SELECT new_id, old_id,
-               CAST(n_inter AS DOUBLE) / CAST(s1.sz + s2.sz - n_inter AS DOUBLE)
-                 AS jaccard
-        FROM inter
-        JOIN sizes s1 ON s1.doc_id = new_id
-        JOIN sizes s2 ON s2.doc_id = old_id
-        WHERE CAST(n_inter AS DOUBLE) / CAST(s1.sz + s2.sz - n_inter AS DOUBLE)
-              >= 0.3
-        ORDER BY 1, 2""")),
+      Some(incrementalNearDupSql)),
 
     // ---- band-index ingest: probe-after-append == probe-after-rebuild ---
     // The dedup index gains the same frozen-layout ingest face as the
@@ -593,48 +625,9 @@ object DedupOps {
         Dedup.bandIndexWrite(build, "doc_id", "text",
           k = 4, n = 3, bandWidth = 2, path)
         Dedup.bandIndexAppend(delta, "doc_id", "text", path, "b1")
-        Dedup.incrementalNearDupPairs(s, path, existing, incoming,
-            "doc_id", "text", k = 4, n = 3, bandWidth = 2,
-            maxBucket = 1000, minJaccard = 0.3)
-          .orderBy("new_id", "old_id")
+        probeIncoming(s, path, existing, incoming)
       },
-      Some(s"""
-        WITH $sigCte,
-        bands AS (
-          SELECT doc_id, 0 AS band_id, md5(h0||h1) AS band_key FROM sig
-          UNION ALL SELECT doc_id, 1, md5(h2||h3) FROM sig),
-        newb AS (SELECT * FROM bands WHERE doc_id % 5 = 0),
-        oldb AS (SELECT * FROM bands WHERE doc_id % 5 <> 0),
-        ok AS (SELECT band_id, band_key FROM oldb
-               GROUP BY 1, 2 HAVING count(*) <= 1000),
-        cand AS (
-          SELECT DISTINCT nw.doc_id AS new_id, ob.doc_id AS old_id
-          FROM newb nw
-          JOIN ok o ON nw.band_id = o.band_id AND nw.band_key = o.band_key
-          JOIN oldb ob
-            ON nw.band_id = ob.band_id AND nw.band_key = ob.band_key),
-        grams AS (
-          SELECT DISTINCT doc_id, g FROM (
-            SELECT doc_id,
-              unnest(list_transform(range(1, len(l)-1),
-                     i -> l[i]||' '||l[i+1]||' '||l[i+2])) AS g
-            FROM (SELECT doc_id, string_split(text,' ') AS l FROM documents))),
-        sizes AS (SELECT doc_id, count(*) AS sz FROM grams GROUP BY 1),
-        inter AS (
-          SELECT c.new_id, c.old_id, count(*) AS n_inter
-          FROM cand c
-          JOIN grams g1 ON g1.doc_id = c.new_id
-          JOIN grams g2 ON g2.doc_id = c.old_id AND g2.g = g1.g
-          GROUP BY 1, 2)
-        SELECT new_id, old_id,
-               CAST(n_inter AS DOUBLE) / CAST(s1.sz + s2.sz - n_inter AS DOUBLE)
-                 AS jaccard
-        FROM inter
-        JOIN sizes s1 ON s1.doc_id = new_id
-        JOIN sizes s2 ON s2.doc_id = old_id
-        WHERE CAST(n_inter AS DOUBLE) / CAST(s1.sz + s2.sz - n_inter AS DOUBLE)
-              >= 0.3
-        ORDER BY 1, 2""")),
+      Some(incrementalNearDupSql)),
 
     // ---- leakage-safe split: near-dup clusters never straddle (q185) ----
     // Doc-keyed train/test splitting puts one near-duplicate in train
@@ -799,14 +792,9 @@ object DedupOps {
             "doc_id", "text", n = 3)
           .orderBy("doc_id")
       },
-      Some("""
+      Some(s"""
         WITH grams AS (
-          SELECT DISTINCT doc_id, g FROM (
-            SELECT doc_id,
-              unnest(list_transform(range(1, len(l)-1),
-                     i -> l[i]||' '||l[i+1]||' '||l[i+2])) AS g
-            FROM (SELECT doc_id, string_split(text,' ') AS l
-                  FROM documents WHERE doc_id % 101 <> 0))),
+          ${gramsSql(" WHERE doc_id % 101 <> 0")}),
         bgrams AS (
           SELECT DISTINCT g FROM (
             SELECT unnest(list_transform(range(1, len(l)-1),
@@ -830,19 +818,8 @@ object DedupOps {
             docs(s, dir).filter(col("doc_id") < 80), "doc_id", "text", n = 3)
           .orderBy("id1", "id2")
       },
-      Some("""
-        WITH grams AS (
-          SELECT DISTINCT doc_id, g FROM (
-            SELECT doc_id,
-              unnest(list_transform(range(1, len(l)-1),
-                     i -> l[i]||' '||l[i+1]||' '||l[i+2])) AS g
-            FROM (SELECT doc_id, string_split(text,' ') AS l
-                  FROM documents WHERE doc_id < 80))),
-        sizes AS (SELECT doc_id, count(*) AS sz FROM grams GROUP BY 1),
-        inter AS (
-          SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
-          FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-          GROUP BY 1, 2)
+      Some(s"""
+        WITH ${pairInterCte(" WHERE doc_id < 80")}
         SELECT id1, id2,
                CAST(n_inter AS DOUBLE) / CAST(s1.sz + s2.sz - n_inter AS DOUBLE) AS jaccard
         FROM inter
@@ -863,19 +840,8 @@ object DedupOps {
             docs(s, dir).filter(col("doc_id") < 80), "doc_id", "text", n = 3)
           .orderBy("id1", "id2")
       },
-      Some("""
-        WITH grams AS (
-          SELECT DISTINCT doc_id, g FROM (
-            SELECT doc_id,
-              unnest(list_transform(range(1, len(l)-1),
-                     i -> l[i]||' '||l[i+1]||' '||l[i+2])) AS g
-            FROM (SELECT doc_id, string_split(text,' ') AS l
-                  FROM documents WHERE doc_id < 80))),
-        sizes AS (SELECT doc_id, count(*) AS sz FROM grams GROUP BY 1),
-        inter AS (
-          SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
-          FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-          GROUP BY 1, 2)
+      Some(s"""
+        WITH ${pairInterCte(" WHERE doc_id < 80")}
         SELECT id1, id2, n_inter, s1.sz AS sz1, s2.sz AS sz2,
                CAST(n_inter AS DOUBLE) / CAST(s1.sz AS DOUBLE) AS cont_12,
                CAST(n_inter AS DOUBLE) / CAST(s2.sz AS DOUBLE) AS cont_21
@@ -926,16 +892,7 @@ object DedupOps {
           k = 4, n = 3)
       },
       Some(s"""
-        WITH sig AS (
-          SELECT doc_id,
-            min(substr(md5('0:'||g),1,16)) AS h0, min(substr(md5('1:'||g),1,16)) AS h1,
-            min(substr(md5('2:'||g),1,16)) AS h2, min(substr(md5('3:'||g),1,16)) AS h3
-          FROM (SELECT doc_id,
-                  unnest(list_transform(range(1, len(l)-1),
-                         i -> l[i]||' '||l[i+1]||' '||l[i+2])) AS g
-                FROM (SELECT doc_id, string_split(text,' ') AS l
-                      FROM documents WHERE doc_id < 300))
-          GROUP BY 1),
+        WITH ${sigSql(" WHERE doc_id < 300")},
         pairs AS (
           SELECT a.doc_id AS id1, b.doc_id AS id2,
                  CAST(CASE WHEN a.h0=b.h0 THEN 1 ELSE 0 END
@@ -943,15 +900,9 @@ object DedupOps {
                     + CASE WHEN a.h2=b.h2 THEN 1 ELSE 0 END
                     + CASE WHEN a.h3=b.h3 THEN 1 ELSE 0 END AS BIGINT) AS agree
           FROM sig a JOIN sig b ON a.doc_id < b.doc_id),
-        grams AS (SELECT DISTINCT doc_id, g FROM (
-          SELECT doc_id, unnest(list_transform(range(1, len(l)-1),
-                 i -> l[i]||' '||l[i+1]||' '||l[i+2])) AS g
-          FROM (SELECT doc_id, string_split(text,' ') AS l
-                FROM documents WHERE doc_id < 300))),
+        grams AS (${gramsSql(" WHERE doc_id < 300")}),
         sizes AS (SELECT doc_id, count(*) AS sz FROM grams GROUP BY 1),
-        inter AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
-                  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-                  GROUP BY 1, 2),
+        inter AS ($pairInterSql),
         exact AS (SELECT id1, id2,
                     CAST(n_inter AS DOUBLE) / CAST(s1.sz + s2.sz - n_inter AS DOUBLE) AS jaccard
                   FROM inter
@@ -992,32 +943,21 @@ object DedupOps {
             Dedup.simhashNearDupPairs64(capped, "doc_id", "text", maxHamming = 3)))
           .orderBy("rung")
       },
-      Some {
-        val bits = bits64Sql
-        val hamming = (1 to 64).map(i =>
-          s"CASE WHEN substr(a.s64,$i,1) <> substr(b.s64,$i,1) THEN 1 ELSE 0 END")
-          .mkString(" + ")
-        s"""
+      Some(s"""
         WITH $lshCandSql,
         sig64 AS (
-          SELECT doc_id, $bits AS s64
+          SELECT doc_id, $bits64Sql AS s64
           FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w
                 FROM documents WHERE doc_id < 300)
           GROUP BY doc_id),
         cand2 AS (
           SELECT id1, id2 FROM (
-            SELECT a.doc_id AS id1, b.doc_id AS id2, $hamming AS hamming
+            SELECT a.doc_id AS id1, b.doc_id AS id2, ${hamming64Sql("a.s64", "b.s64")} AS hamming
             FROM sig64 a JOIN sig64 b ON a.doc_id < b.doc_id)
           WHERE hamming <= 3),
-        grams AS (SELECT DISTINCT doc_id, g FROM (
-          SELECT doc_id, unnest(list_transform(range(1, len(l)-1),
-                 i -> l[i]||' '||l[i+1]||' '||l[i+2])) AS g
-          FROM (SELECT doc_id, string_split(text,' ') AS l
-                FROM documents WHERE doc_id < 300))),
+        grams AS (${gramsSql(" WHERE doc_id < 300")}),
         sizes AS (SELECT doc_id, count(*) AS sz FROM grams GROUP BY 1),
-        inter AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
-                  FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-                  GROUP BY 1, 2),
+        inter AS ($pairInterSql),
         truth AS (SELECT id1, id2
                   FROM inter
                   JOIN sizes s1 ON s1.doc_id = id1
@@ -1038,8 +978,7 @@ object DedupOps {
                CAST(floor(CAST(n_hit AS DOUBLE)/CAST(n_cand AS DOUBLE)*1000000.0) AS BIGINT)
                  AS precision_micro
         FROM (SELECT * FROM g1 UNION ALL SELECT * FROM g2)
-        ORDER BY rung"""
-      }),
+        ORDER BY rung""")),
 
     // ---- SemDeDup: cluster-then-prune semantic dedup --------------------
     // The scale recipe for embedding dedup (Abbas et al. 2023): the
@@ -1060,11 +999,8 @@ object DedupOps {
       Some {
         val bucket = dedupBucketSql("m.embedding")
         s"""
-        WITH e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-                          generate_subscripts(embedding, 1) AS pos
-                   FROM embeddings),
-        vn AS (SELECT vec_id, CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn
-               FROM e GROUP BY 1),
+        WITH ${SimilarityOps.embCte},
+        ${SimilarityOps.normCte("vn")},
         b AS (SELECT m.vec_id, $bucket AS cluster
               FROM embeddings m JOIN vn ON vn.vec_id = m.vec_id AND vn.nn > 0),
         c AS (SELECT b.cluster, e.pos,
@@ -1274,19 +1210,8 @@ object DedupOps {
             n = 3, threshold = 0.5)
           .orderBy("id1", "id2")
       },
-      Some("""
-        WITH grams AS (
-          SELECT DISTINCT doc_id, g FROM (
-            SELECT doc_id,
-              unnest(list_transform(range(1, len(l)-1),
-                     i -> l[i]||' '||l[i+1]||' '||l[i+2])) AS g
-            FROM (SELECT doc_id, string_split(text,' ') AS l
-                  FROM documents))),
-        sizes AS (SELECT doc_id, count(*) AS sz FROM grams GROUP BY 1),
-        inter AS (
-          SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS n_inter
-          FROM grams a JOIN grams b ON a.g = b.g AND a.doc_id < b.doc_id
-          GROUP BY 1, 2)
+      Some(s"""
+        WITH ${pairInterCte()}
         SELECT id1, id2, CAST(n_inter AS BIGINT) AS n_inter,
                CAST(n_inter AS DOUBLE) / CAST(s1.sz + s2.sz - n_inter AS DOUBLE)
                  AS jaccard
@@ -1365,64 +1290,13 @@ object DedupOps {
       (s, dir) => {
         Dedup.exactSubstringDedup(docs(s, dir), "doc_id", "text",
             minTokens = 4)
-          .select(col("doc_id"),
-            md5(col("text_clean")).as("clean_md5"),
-            col("n_spans").cast("long").as("n_spans"),
-            col("removed_tokens").cast("long").as("removed_tokens"),
-            col("orig_tokens").cast("long").as("orig_tokens"))
-          .orderBy("doc_id")
+          .transform(substringDedupStats)
       },
-      Some("""
-        WITH w AS (SELECT doc_id, text, string_split(text,' ') AS l
-                   FROM documents),
-        g AS (SELECT doc_id, u.pos AS pos, u.dig AS dig FROM (
-                SELECT doc_id, unnest(list_transform(range(1, len(l)-2),
-                  i -> struct_pack(pos := CAST(i AS INT),
-                    dig := md5(array_to_string(
-                      l[CAST(i AS INT):CAST(i+3 AS INT)], ' '))))) AS u
-                FROM w WHERE len(l) >= 4)),
-        k AS (SELECT dig, count(*) AS cnt,
-                     min(doc_id * 1000000 + pos) AS keeper
-              FROM g GROUP BY 1),
-        m AS (SELECT doc_id, pos AS s, pos + 3 AS e
-              FROM g JOIN k USING (dig)
-              WHERE cnt > 1 AND doc_id * 1000000 + pos <> keeper),
-        i AS (SELECT doc_id, s, e,
-                CASE WHEN s <= coalesce(MAX(e) OVER (PARTITION BY doc_id
-                       ORDER BY s, e
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                     -10) + 1
-                  THEN 0 ELSE 1 END AS brk
-              FROM m),
-        si AS (SELECT doc_id, s, e,
-                 SUM(brk) OVER (PARTITION BY doc_id ORDER BY s, e) AS isl
-               FROM i),
-        sp AS (SELECT doc_id, min(s) AS s, max(e) AS e
-               FROM si GROUP BY doc_id, isl),
-        spl AS (SELECT doc_id,
-                  list(struct_pack(s := s, e := e) ORDER BY s) AS spans,
-                  count(*) AS n_spans,
-                  SUM(e - s + 1) AS removed
-                FROM sp GROUP BY 1),
-        r AS (SELECT w.doc_id,
-                CASE WHEN spl.spans IS NULL THEN w.text
+      Some(substringDedupSql(
+        note = """
                   -- coalesce: array_to_string([]) is NULL in DuckDB,
                   -- but a fully-gutted doc must clean to '' (Spark's
-                  -- array_join of an empty array)
-                  ELSE coalesce(array_to_string(
-                    [w.l[ix] for ix in generate_series(1, len(w.l))
-                     if len(list_filter(spl.spans,
-                          q -> q.s <= ix AND ix <= q.e)) = 0], ' '), '')
-                  END AS text_clean,
-                coalesce(spl.n_spans, 0) AS n_spans,
-                coalesce(spl.removed, 0) AS removed_tokens,
-                len(w.l) AS orig_tokens
-              FROM w LEFT JOIN spl USING (doc_id))
-        SELECT doc_id, md5(text_clean) AS clean_md5,
-               CAST(n_spans AS BIGINT) AS n_spans,
-               CAST(removed_tokens AS BIGINT) AS removed_tokens,
-               CAST(orig_tokens AS BIGINT) AS orig_tokens
-        FROM r ORDER BY doc_id""")),
+                  -- array_join of an empty array)""", where = ""))),
 
     // ---- incremental exact substring dedup (q212) -----------------------
     // q211's window-digest index face (the q184 proof shape for the
@@ -1446,59 +1320,7 @@ object DedupOps {
           "doc_id", "text", path, "b1")
         Dedup.incrementalExactSubstringDedup(s, path,
             all.filter(col("doc_id") >= 450), "doc_id", "text")
-          .select(col("doc_id"),
-            md5(col("text_clean")).as("clean_md5"),
-            col("n_spans").cast("long").as("n_spans"),
-            col("removed_tokens").cast("long").as("removed_tokens"),
-            col("orig_tokens").cast("long").as("orig_tokens"))
-          .orderBy("doc_id")
+          .transform(substringDedupStats)
       },
-      Some("""
-        WITH w AS (SELECT doc_id, text, string_split(text,' ') AS l
-                   FROM documents),
-        g AS (SELECT doc_id, u.pos AS pos, u.dig AS dig FROM (
-                SELECT doc_id, unnest(list_transform(range(1, len(l)-2),
-                  i -> struct_pack(pos := CAST(i AS INT),
-                    dig := md5(array_to_string(
-                      l[CAST(i AS INT):CAST(i+3 AS INT)], ' '))))) AS u
-                FROM w WHERE len(l) >= 4)),
-        k AS (SELECT dig, count(*) AS cnt,
-                     min(doc_id * 1000000 + pos) AS keeper
-              FROM g GROUP BY 1),
-        m AS (SELECT doc_id, pos AS s, pos + 3 AS e
-              FROM g JOIN k USING (dig)
-              WHERE cnt > 1 AND doc_id * 1000000 + pos <> keeper),
-        i AS (SELECT doc_id, s, e,
-                CASE WHEN s <= coalesce(MAX(e) OVER (PARTITION BY doc_id
-                       ORDER BY s, e
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                     -10) + 1
-                  THEN 0 ELSE 1 END AS brk
-              FROM m),
-        si AS (SELECT doc_id, s, e,
-                 SUM(brk) OVER (PARTITION BY doc_id ORDER BY s, e) AS isl
-               FROM i),
-        sp AS (SELECT doc_id, min(s) AS s, max(e) AS e
-               FROM si GROUP BY doc_id, isl),
-        spl AS (SELECT doc_id,
-                  list(struct_pack(s := s, e := e) ORDER BY s) AS spans,
-                  count(*) AS n_spans,
-                  SUM(e - s + 1) AS removed
-                FROM sp GROUP BY 1),
-        r AS (SELECT w.doc_id,
-                CASE WHEN spl.spans IS NULL THEN w.text
-                  ELSE coalesce(array_to_string(
-                    [w.l[ix] for ix in generate_series(1, len(w.l))
-                     if len(list_filter(spl.spans,
-                          q -> q.s <= ix AND ix <= q.e)) = 0], ' '), '')
-                  END AS text_clean,
-                coalesce(spl.n_spans, 0) AS n_spans,
-                coalesce(spl.removed, 0) AS removed_tokens,
-                len(w.l) AS orig_tokens
-              FROM w LEFT JOIN spl USING (doc_id))
-        SELECT doc_id, md5(text_clean) AS clean_md5,
-               CAST(n_spans AS BIGINT) AS n_spans,
-               CAST(removed_tokens AS BIGINT) AS removed_tokens,
-               CAST(orig_tokens AS BIGINT) AS orig_tokens
-        FROM r WHERE doc_id >= 450 ORDER BY doc_id""")))
+      Some(substringDedupSql(note = "", where = " WHERE doc_id >= 450"))))
 }

@@ -76,6 +76,21 @@ object PipelineOps {
            WHEN 4 THEN 'đã có thẻ' WHEN 5 THEN 'khách không tương tác'
            WHEN 6 THEN 'không nghe máy' ELSE 'Bận' END"""
 
+  /** The typed record the q178/q187 quarantine gates parse back. */
+  private val docRowSchema = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("lang", StringType),
+    StructField("n_chars", LongType)))
+
+  /** The quarantine gates' verdict columns: `status`, and the raw line
+    * for quarantined rows only.
+    */
+  private val quarantineStatus = Seq(
+    when(col("quarantined"), lit("quarantined")).otherwise(lit("ok"))
+      .as("status"),
+    when(col("quarantined"), col("line"))
+      .otherwise(lit(null).cast("string")).as("raw"))
+
   val defs: Seq[QueryDef] = Seq(
 
     // ---- P6/P13: customFields cf0 extraction, all fallback branches ----
@@ -323,19 +338,12 @@ object PipelineOps {
           s"/graft_jsonl_q178_${java.lang.Integer.toHexString(dir.hashCode)}"
         docs.select(torn.as("value"))
           .write.mode("overwrite").text(path)
-        val schema = StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("lang", StringType),
-          StructField("n_chars", LongType)))
         val parsed = graft.sources.JsonlSource.parseWithQuarantine(
           s.read.text(path).withColumnRenamed("value", "line"),
-          "line", schema)
+          "line", docRowSchema)
         parsed.select(
-            col("doc_id"), col("lang"), col("n_chars"),
-            when(col("quarantined"), lit("quarantined")).otherwise(lit("ok"))
-              .as("status"),
-            when(col("quarantined"), col("line"))
-              .otherwise(lit(null).cast("string")).as("raw"))
+            Seq(col("doc_id"), col("lang"), col("n_chars")) ++
+              quarantineStatus: _*)
           .orderBy("doc_id", "raw")
       },
       Some("""
@@ -376,25 +384,18 @@ object PipelineOps {
         val path = sys.props("java.io.tmpdir") +
           s"/graft_csv_q187_${java.lang.Integer.toHexString(dir.hashCode)}"
         docs.select(line.as("value")).write.mode("overwrite").text(path)
-        val schema = StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("lang", StringType),
-          StructField("n_chars", LongType)))
         graft.sources.CsvSource.parseWithQuarantine(
             s.read.text(path).withColumnRenamed("value", "line"),
-            "line", schema)
+            "line", docRowSchema)
           // CSV PERMISSIVE keeps the fields that DID coerce on a
           // corrupt row (JSON nulls the whole struct); the contract
           // here is "a quarantined row exposes only its raw line", so
           // the typed fields are masked when quarantined.
           .select(
-            when(!col("quarantined"), col("doc_id")).as("doc_id"),
-            when(!col("quarantined"), col("lang")).as("lang"),
-            when(!col("quarantined"), col("n_chars")).as("n_chars"),
-            when(col("quarantined"), lit("quarantined")).otherwise(lit("ok"))
-              .as("status"),
-            when(col("quarantined"), col("line"))
-              .otherwise(lit(null).cast("string")).as("raw"))
+            Seq(when(!col("quarantined"), col("doc_id")).as("doc_id"),
+              when(!col("quarantined"), col("lang")).as("lang"),
+              when(!col("quarantined"), col("n_chars")).as("n_chars")) ++
+              quarantineStatus: _*)
           .orderBy("doc_id", "raw")
       },
       Some("""
@@ -500,52 +501,32 @@ object PipelineOps {
           () => TextIndex.compact(s, pText),
           () => Dedup.bandIndexCompact(s, pBand),
           () => Similarity.ivfCompact(s, pIvf))
-        if (s.conf.get("spark.graft.fusedGateCounts", "true").toBoolean) {
-          // The post-compact row and leak counts need no more driver
-          // actions at all: fold each artifact's (n_after, n_leaked)
-          // into ONE aggregate over its post-compact bytes — the leak
-          // ids are unique, so a left join marks each index row at
-          // most once and count(hit) ≡ the old semi-join count — and
-          // return the UNION lazily, so the bench's single final
-          // action computes all three scans as sibling stages of one
-          // job instead of six serial driver actions (guide §1.5/§5 —
-          // driver-gap overhead; profiled ~1-2 s of inter-job gaps).
-          def after(artifact: String, p: String, idCol: String,
-              bad: DataFrame, nBefore: Long): DataFrame =
-            s.read.parquet(p)
-              .join(bad.select(col(bad.columns.head).as(idCol),
-                  lit(1).as("__hit")), Seq(idCol), "left")
-              .agg(count(lit(1)).as("n_after"),
-                coalesce(sum(col("__hit")), lit(0)).cast("long")
-                  .as("n_leaked"))
-              .select(lit(artifact).as("artifact"),
-                lit(nBefore).as("n_before"), col("n_after"),
-                col("n_leaked"))
-          after("band_index", pBand, "doc_id", badDocs, before("band_index"))
-            .unionByName(after("text_index", pText, "doc", badDocs,
-              before("text_index")))
-            .unionByName(after("vector_index", pIvf, "vec_id", badVecs,
-              before("vector_index")))
-            .orderBy("artifact")
-        } else {
-          def leak(p: String, idCol: String, bad: DataFrame): Long =
-            s.read.parquet(p)
-              .join(bad.select(col(bad.columns.head).as(idCol)),
-                Seq(idCol), "left_semi")
-              .count()
-          val out = Seq(
-            ("band_index", before("band_index"), rows(pBand),
-              leak(pBand, "doc_id", badDocs)),
-            ("text_index", before("text_index"), rows(pText),
-              leak(pText, "doc", badDocs)),
-            ("vector_index", before("vector_index"), rows(pIvf),
-              leak(pIvf, "vec_id", badVecs)))
-          s.createDataFrame(
-              java.util.List.of(out.map(r => Row(r._1, r._2, r._3, r._4)): _*),
-              StructType.fromDDL(
-                "artifact STRING, n_before LONG, n_after LONG, n_leaked LONG"))
-            .orderBy("artifact")
-        }
+        // The post-compact row and leak counts need no more driver
+        // actions at all: fold each artifact's (n_after, n_leaked)
+        // into ONE aggregate over its post-compact bytes — the leak
+        // ids are unique, so a left join marks each index row at
+        // most once and count(hit) ≡ a left-semi join count — and
+        // return the UNION lazily, so the bench's single final
+        // action computes all three scans as sibling stages of one
+        // job instead of six serial driver actions (guide §1.5/§5 —
+        // driver-gap overhead; profiled ~1-2 s of inter-job gaps).
+        def after(artifact: String, p: String, idCol: String,
+            bad: DataFrame, nBefore: Long): DataFrame =
+          s.read.parquet(p)
+            .join(bad.select(col(bad.columns.head).as(idCol),
+                lit(1).as("__hit")), Seq(idCol), "left")
+            .agg(count(lit(1)).as("n_after"),
+              coalesce(sum(col("__hit")), lit(0)).cast("long")
+                .as("n_leaked"))
+            .select(lit(artifact).as("artifact"),
+              lit(nBefore).as("n_before"), col("n_after"),
+              col("n_leaked"))
+        after("band_index", pBand, "doc_id", badDocs, before("band_index"))
+          .unionByName(after("text_index", pText, "doc", badDocs,
+            before("text_index")))
+          .unionByName(after("vector_index", pIvf, "vec_id", badVecs,
+            before("vector_index")))
+          .orderBy("artifact")
       },
       Some("""
         WITH nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),

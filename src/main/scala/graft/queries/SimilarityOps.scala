@@ -66,10 +66,8 @@ object SimilarityOps {
     * over an optional candidate subset.
     */
   private def exactCosine(vecs: DataFrame): DataFrame = {
-    val e = vecs
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "vf")))
-      .select(col("vec_id"), col("pos"), col("vf").cast(DoubleType).as("v"))
-    val q = e.filter(col("vec_id") === 0).select(col("pos"), col("v").as("qv"))
+    val e = explodeVecs(vecs)
+    val q = queryElems(e)
     val d = e.filter(col("vec_id") =!= 0)
       .join(broadcast(q), "pos")
       .groupBy("vec_id")
@@ -94,11 +92,24 @@ object SimilarityOps {
           9).as("cosine"))
   }
 
+  /** DuckDB CTE `e(vec_id, v, pos)`: every embedding exploded to one
+    * DOUBLE per 1-based position — the element walk `dot_exact` sums
+    * over. Shared with DedupOps' embedding near-dup oracles.
+    */
+  private[queries] val embCte = """e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
+                     generate_subscripts(embedding, 1) AS pos
+              FROM embeddings)"""
+
+  /** DuckDB CTE `$name(vec_id, nn)`: each vector's decimal-exact
+    * squared norm over `e`.
+    */
+  private[queries] def normCte(name: String): String =
+    s"""$name AS (SELECT vec_id, CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn
+              FROM e GROUP BY 1)"""
+
   /** Shared DuckDB CTEs: element-exploded embeddings + query vector. */
-  private val expandCte = """
-    e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-                 generate_subscripts(embedding, 1) AS pos
-          FROM embeddings),
+  private val expandCte = s"""
+    $embCte,
     q AS (SELECT pos, v AS qv FROM e WHERE vec_id = 0),
     nq AS (SELECT CAST(SUM(CAST(qv*qv AS DECIMAL(38,18))) AS DOUBLE) AS nqv FROM q)"""
 
@@ -140,15 +151,19 @@ object SimilarityOps {
     * (q58's three probe sweeps paid it four times). The table is tiny
     * (nlist rows), so the materialization is a small job and every
     * later consumer reads 16 rows instead of re-aggregating the corpus
-    * (guide §1.2 — don't compute things twice). Gate for the same-JVM
-    * A/B: spark.graft.ckptCentroids=false restores the lazy plan.
+    * (guide §1.2 — don't compute things twice).
     */
-  private def labelCentsDecimal(e: DataFrame): DataFrame = {
-    val c = decimalGridCentroids(e, "label")
-    if (e.sparkSession.conf.get("spark.graft.ckptCentroids", "true").toBoolean)
-      c.localCheckpoint(true)
-    else c
-  }
+  private def labelCentsDecimal(e: DataFrame): DataFrame =
+    decimalGridCentroids(e, "label").localCheckpoint(true)
+
+  /** The IVF gates' served top-10: [[Similarity.ivfSearch]] at
+    * nprobe=2 with a 5x double-ranked margin (k=50), re-ranked by
+    * [[decimalRerankTop10]] so the final order is portable.
+    */
+  private def ivfTop10(s: SparkSession, e: DataFrame, path: String,
+      cents: DataFrame, qvec: Seq[Float]): DataFrame =
+    decimalRerankTop10(e, Similarity.ivfSearch(s, path, "vec_id",
+      "embedding", cents, qvec, k = 50, nprobe = 2).select("vec_id"))
 
   /** Portable final ranking shared by the q54/q58/q59 IVF gates: the
     * decimal-exact cosine of each candidate id against vec 0, rounded
@@ -181,19 +196,15 @@ object SimilarityOps {
     * [[Similarity.ivfWrite]]'s assignment. Single-sourced so the
     * three oracles cannot drift.
     */
-  private val ivfAssignCte = """
-    e AS (SELECT vec_id, label, CAST(unnest(embedding) AS DOUBLE) AS v,
-                 generate_subscripts(embedding, 1) AS pos
-          FROM embeddings),
-    cent AS (SELECT label, pos,
-                    CAST(round(CAST(SUM(CAST(v AS DECIMAL(38,18))) AS DOUBLE)
-                      / count(*), 9) AS REAL) AS cf
-             FROM e GROUP BY 1, 2),
-    centd AS (SELECT label, pos, CAST(cf AS DOUBLE) AS c FROM cent),
-    cn AS (SELECT label, CAST(SUM(CAST(c*c AS DECIMAL(38,18))) AS DOUBLE) AS nn
-           FROM centd GROUP BY 1),
-    vn AS (SELECT vec_id, CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn
-           FROM e GROUP BY 1),
+  private lazy val ivfAssignCte = ivfAssignSql("")
+
+  /** [[ivfAssignCte]] with the centroids trained on the `where` subset
+    * (q130's frozen build half).
+    */
+  private def ivfAssignSql(where: String): String = s"""
+    $labelECte,
+    ${labelCentCte(where)},
+    ${normCte("vn")},
     vc AS (SELECT e.vec_id, cd.label,
                   CAST(SUM(CAST(e.v*cd.c AS DECIMAL(38,18))) AS DOUBLE) AS dot
            FROM e JOIN centd cd ON cd.pos = e.pos GROUP BY 1, 2),
@@ -204,6 +215,121 @@ object SimilarityOps {
                                    vc.label) AS rk
                  FROM vc JOIN vn USING (vec_id) JOIN cn USING (label))
                WHERE rk = 1)"""
+
+  /** [[embCte]] carrying each vector's `label`. */
+  private val labelECte = """e AS (SELECT vec_id, label, CAST(unnest(embedding) AS DOUBLE) AS v,
+                 generate_subscripts(embedding, 1) AS pos
+          FROM embeddings)"""
+
+  /** Decimal-grid label centroids over the `where` subset of
+    * `e(vec_id, label, v, pos)` — `cent` (REAL), its double view
+    * `centd(label, pos, c)` and norms `cn(label, nn)`: the
+    * restatement of [[labelCentsDecimal]].
+    */
+  private def labelCentCte(where: String): String = s"""cent AS (SELECT label, pos,
+                    CAST(round(CAST(SUM(CAST(v AS DECIMAL(38,18))) AS DOUBLE)
+                      / count(*), 9) AS REAL) AS cf
+             FROM e$where GROUP BY 1, 2),
+    centd AS (SELECT label, pos, CAST(cf AS DOUBLE) AS c FROM cent),
+    cn AS (SELECT label, CAST(SUM(CAST(c*c AS DECIMAL(38,18))) AS DOUBLE) AS nn
+           FROM centd GROUP BY 1)"""
+
+  /** The probe query (vec 0) `q$sfx(pos, v)` and its norm `qn$sfx`,
+    * plus `pc(label, dot)`: its decimal dot with every label centroid.
+    * The suffix lets the IVF-PQ chain keep `q` for the PQ stage.
+    */
+  private def queryPcCte(sfx: String = ""): String = s"""q$sfx AS (SELECT pos, v FROM e WHERE vec_id = 0),
+    qn$sfx AS (SELECT CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn
+            FROM q$sfx),
+    pc AS (SELECT cd$sfx.label,
+                  CAST(SUM(CAST(cd$sfx.c*q$sfx.v AS DECIMAL(38,18))) AS DOUBLE)
+                    AS dot
+           FROM centd cd$sfx JOIN q$sfx ON q$sfx.pos = cd$sfx.pos GROUP BY 1)"""
+
+  /** [[queryPcCte]] + `probes(label)`: the nprobe=2 labels ranked by
+    * the unrounded centroid cosine — [[Similarity.ivfSearch]]'s probe
+    * selection.
+    */
+  private def probeCte(sfx: String = ""): String = s"""${queryPcCte(sfx)},
+    probes AS (SELECT pc.label FROM pc JOIN cn USING (label), qn$sfx
+               ORDER BY pc.dot/(sqrt(cn.nn)*sqrt(qn$sfx.nn)) DESC, pc.label
+               LIMIT 2)"""
+
+  /** `$name(vec_id, dot)`: the query's decimal dot with every member of
+    * the probed clusters (`extra` narrows the members further).
+    */
+  private def probedDotCte(name: String, extra: String = ""): String =
+    s"""$name AS (SELECT e.vec_id,
+                     CAST(SUM(CAST(e.v*q.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
+              FROM e JOIN q ON q.pos = e.pos
+              WHERE e.vec_id IN (SELECT a.vec_id FROM assign a
+                                 JOIN probes p ON p.label = a.label)$extra
+              GROUP BY 1)"""
+
+  /** The family's portable final ranking over `d(vec_id, dot)`: the
+    * 1e-9-rounded decimal cosine against the query norm `qn`, zero
+    * norms dropped, top-10 with the vec_id tiebreak
+    * ([[decimalRerankTop10]]'s restatement). `extra` appends output
+    * columns.
+    */
+  private def cosTop10Sql(d: String, vn: String = "vn",
+      extra: String = ""): String =
+    s"""SELECT vec_id, round(dot/(sqrt($vn.nn)*sqrt(qn.nn)), 9) AS cosine$extra
+        FROM $d JOIN $vn USING (vec_id), qn
+        WHERE $vn.nn > 0 AND qn.nn > 0
+        ORDER BY round(dot/(sqrt($vn.nn)*sqrt(qn.nn)), 9) DESC, vec_id
+        LIMIT 10"""
+
+  /** The exact full-scan yardstick of the IVF recall gates: `dall`
+    * (the query's dot with every vector) and `sc(vec_id, cosine)`.
+    */
+  private val fullScanCte = """dall AS (SELECT e.vec_id,
+                        CAST(SUM(CAST(e.v*q.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
+                 FROM e JOIN q ON q.pos = e.pos GROUP BY 1),
+        sc AS (SELECT vec_id, round(dot/(sqrt(vn.nn)*sqrt(qn.nn)), 9) AS cosine
+               FROM dall JOIN vn USING (vec_id), qn
+               WHERE vn.nn > 0 AND qn.nn > 0)"""
+
+  /** `$name(vec_id)`: the [[fullScanCte]] top-10 restricted to the
+    * members of the clusters `labels` selects.
+    */
+  private def probedTop10Cte(name: String, labels: String): String =
+    s"""$name AS (SELECT vec_id FROM (
+                  SELECT sc.vec_id,
+                         row_number() OVER (ORDER BY sc.cosine DESC, sc.vec_id) AS rk
+                  FROM sc JOIN assign a ON a.vec_id = sc.vec_id
+                  WHERE a.label IN (SELECT label FROM $labels))
+                WHERE rk <= 10)"""
+
+  /** The batch IVF probe stage (q67/q89, [[Similarity.ivfSearchBatch]]):
+    * the `% 97` queries `qs`, their exploded vectors `qe` and norms
+    * `qn`, and each query's nprobe=2 labels `probes(qid, label)`.
+    */
+  private val batchProbeCte = """qs AS (SELECT vec_id AS qid FROM embeddings WHERE vec_id % 97 = 0),
+        qe AS (SELECT q.qid, e.pos, e.v FROM qs q JOIN e ON e.vec_id = q.qid),
+        qn AS (SELECT qid, CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn
+               FROM qe GROUP BY 1),
+        pc AS (SELECT qe.qid, cd.label,
+                      CAST(SUM(CAST(cd.c*qe.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
+               FROM centd cd JOIN qe ON qe.pos = cd.pos GROUP BY 1, 2),
+        probes AS (SELECT qid, label FROM (
+                     SELECT pc.qid, pc.label,
+                            row_number() OVER (PARTITION BY pc.qid
+                              ORDER BY pc.dot/(sqrt(cn.nn)*sqrt(qn.nn)) DESC,
+                                       pc.label) AS rk
+                     FROM pc JOIN cn USING (label) JOIN qn USING (qid))
+                   WHERE rk <= 2)"""
+
+  /** `cand(qid, vec_id)`: every probed-cluster member but the query. */
+  private val batchCandCte = """cand AS (SELECT p.qid, a.vec_id
+                 FROM probes p JOIN assign a ON a.label = p.label
+                 WHERE a.vec_id <> p.qid)"""
+
+  /** `ex(vec_id)`: the unrestricted [[fullScanCte]] top-10. */
+  private val exTop10Cte = """ex AS (SELECT vec_id FROM (
+                 SELECT vec_id,
+                        row_number() OVER (ORDER BY cosine DESC, vec_id) AS rk
+                 FROM sc) WHERE rk <= 10)"""
 
   /** Shared DuckDB CTE: symmetric per-vector max-abs int8
     * quantization (the declarative restatement of
@@ -222,6 +348,36 @@ object SimilarityOps {
                    CAST(list_max(list_transform(embedding, x -> abs(x)))
                         AS DOUBLE)/127.0 AS sc
                  FROM embeddings))"""
+
+  /** `$name(vec_id, qvec, nrm2)`: each int8 vector's exact squared
+    * norm as a BIGINT (q69/q86/q88/q89 — int products sum exactly).
+    */
+  private def int8NormCte(name: String): String = s"""$name AS (SELECT vec_id, qvec,
+                 CAST(list_sum(list_transform(qvec,
+                   x -> CAST(x AS INTEGER)*CAST(x AS INTEGER))) AS BIGINT) AS nrm2
+               FROM qz)"""
+
+  /** `q0(qv, qnrm2)`: the int8 query vector (vec 0) out of `$n`. */
+  private def int8QueryCte(n: String): String =
+    s"q0 AS (SELECT qvec AS qv, nrm2 AS qnrm2 FROM $n WHERE vec_id = 0)"
+
+  /** Exact int8 dot of `$n.qvec` with the query `q0.qv`. */
+  private def int8DotSql(n: String): String =
+    s"""CAST(list_sum(list_transform($n.qvec, (x, i) ->
+                  CAST(x AS INTEGER)*CAST(q0.qv[i] AS INTEGER))) AS BIGINT)"""
+
+  /** The int8 cosine of `(dot, nrm2, qnrm2)` on the 1e-9 grid: one
+    * divide of identical doubles, so no rerank margin is needed.
+    */
+  private val int8CosSql = """round(CAST(dot AS DOUBLE) /
+                     (sqrt(CAST(nrm2 AS DOUBLE))*sqrt(CAST(qnrm2 AS DOUBLE))), 9)"""
+
+  /** Top-10 by [[int8CosSql]] over `d(vec_id, dot, nrm2, qnrm2)`. */
+  private val int8Top10Sql = s"""SELECT vec_id,
+               $int8CosSql
+                 AS cosine
+        FROM d WHERE nrm2 > 0 AND qnrm2 > 0
+        ORDER BY cosine DESC, vec_id LIMIT 10"""
 
   /** Decimal-grid PQ pipeline shared by q96/q97: m=16 subspaces of 4
     * dims, 4 sign-seeded centroids each (decimal-exact means on the
@@ -333,9 +489,7 @@ object SimilarityOps {
   private def coarseParts(s: SparkSession, dir: String,
       cut: Boolean = false): CoarseParts = {
     val e = emb(s, dir)
-    val ex = e
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "vf")))
-      .select(col("vec_id"), col("pos"), col("vf").cast(DoubleType).as("v"))
+    val ex = explodeVecs(e)
       // q171's consumers (norms, assignment, yardstick, raw AND
       // residual encodings, the probe query) re-derive this
       // scan+explode 5+ times — cut there, not for single-pass gates
@@ -367,7 +521,7 @@ object SimilarityOps {
       // corpus-sized but narrow (2 cols); in q171, candidates,
       // residuals, the coarse term and both MSE paths all join it
       .transform(cutIf(cut))
-    val q = ex.filter(col("vec_id") === 0).select(col("pos"), col("v").as("qv"))
+    val q = queryElems(ex)
     val qn = q.agg(sum((col("qv") * col("qv")).cast(D)).as("qnd"))
       .select(col("qnd").cast(DoubleType).as("qnn"))
     val probes = cd.join(broadcast(q), "pos")
@@ -428,8 +582,7 @@ object SimilarityOps {
     val rp = pqPartsFromVec(resVec, "rvec")
     // Residual ADC partial ⟨q, r̂⟩ scored against the RAW query (the
     // reconstruction lives in residual space, the query does not).
-    val q = parts.ex.filter(col("vec_id") === 0)
-      .select(col("pos"), col("v").as("qv"))
+    val q = queryElems(parts.ex)
     val rsc = rp.codes.join(broadcast(rp.cbd), Seq("sub", "cluster"))
       .select(col("vec_id"), (col("sub") * w + col("lpos")).as("pos"),
         col("cd"))
@@ -454,16 +607,7 @@ object SimilarityOps {
     */
   private lazy val ivfPqCte: String = s"""
     $ivfAssignCte,
-    q2 AS (SELECT pos, v FROM e WHERE vec_id = 0),
-    qn2 AS (SELECT CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn
-            FROM q2),
-    pc AS (SELECT cd2.label,
-                  CAST(SUM(CAST(cd2.c*q2.v AS DECIMAL(38,18))) AS DOUBLE)
-                    AS dot
-           FROM centd cd2 JOIN q2 ON q2.pos = cd2.pos GROUP BY 1),
-    probes AS (SELECT pc.label FROM pc JOIN cn USING (label), qn2
-               ORDER BY pc.dot/(sqrt(cn.nn)*sqrt(qn2.nn)) DESC, pc.label
-               LIMIT 2),
+    ${probeCte("2")},
     $pqCte"""
 
   private def bucketSql(tbl: String): String =
@@ -479,6 +623,156 @@ object SimilarityOps {
   private def hammingLeSql(a: String, b: String, h: Int): String =
     s"""len([__x for __x in generate_series(1, length($a))
          if substr($a,__x,1) <> substr($b,__x,1)]) <= $h"""
+
+  /** DuckDB CTE `b(vec_id, bucket)`: the sized sign-LSH bucket of every
+    * vector ([[Similarity.signLshBuckets]] at target bucket 32).
+    */
+  private val bucketCte = s"""b AS (SELECT vec_id, ${bucketSql("embeddings")} AS bucket
+                   FROM embeddings)"""
+
+  /** The `% 97` batch queries with their buckets, `qs(qid, qbucket)`. */
+  private val bucketQsCte = """qs AS (SELECT vec_id AS qid, bucket AS qbucket FROM b
+               WHERE vec_id % 97 = 0)"""
+
+  /** `$name(qid, vec_id, dot)`: the decimal dot of every `$cand(qid,
+    * vec_id)` pair over `e`.
+    */
+  private def candDotCte(name: String, cand: String): String =
+    s"""$name AS (SELECT c.qid, c.vec_id,
+                     CAST(SUM(CAST(e1.v*e2.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
+              FROM $cand c
+              JOIN e e1 ON e1.vec_id = c.qid
+              JOIN e e2 ON e2.vec_id = c.vec_id AND e2.pos = e1.pos
+              GROUP BY 1, 2)"""
+
+  /** `d($a, $b, dot)`: the decimal dot of every `cand($a, $b)` pair. */
+  private def pairDotCte(a: String, b: String): String =
+    s"""d AS (SELECT cand.$a, cand.$b,
+                     CAST(SUM(CAST(e1.v*e2.v AS DECIMAL(38,18))) AS DOUBLE)
+                       AS dot
+              FROM cand JOIN e e1 ON e1.vec_id = cand.$a
+                        JOIN e e2 ON e2.vec_id = cand.$b
+                                 AND e2.pos = e1.pos
+              GROUP BY 1, 2)"""
+
+  /** The batch top-3 cut over `d(qid, vec_id, dot)` and norms `n`: the
+    * 1e-9-rounded decimal cosine, zero norms dropped, three per query
+    * with the vec_id tiebreak. `qid` names the query-side join column;
+    * `band` filters the cosines before the cut (q123).
+    */
+  private def batchTop3Sql(qid: String, band: String = ""): String =
+    s"""cos AS (SELECT qid, d.vec_id,
+                       round(dot/(sqrt(n1.nn)*sqrt(n2.nn)), 9) AS cosine
+                FROM d JOIN n n1 ON n1.vec_id = $qid
+                       JOIN n n2 ON n2.vec_id = d.vec_id
+                WHERE n1.nn > 0 AND n2.nn > 0),
+        rk AS (SELECT qid, vec_id, cosine,
+                      row_number() OVER (PARTITION BY qid
+                        ORDER BY cosine DESC, vec_id) AS rk
+               FROM cos$band)
+        SELECT qid, vec_id, cosine FROM rk WHERE rk <= 3
+        ORDER BY qid, cosine DESC, vec_id"""
+
+  /** q48/q56/q123's oracle ([[batchBucketedTop3]]): candidates are the
+    * pairs whose buckets satisfy `on`.
+    */
+  private def bucketedTop3Sql(on: String, band: String = ""): String = s"""
+        WITH $bucketCte,
+        $bucketQsCte,
+        cand AS (SELECT q.qid, b.vec_id
+                 FROM b JOIN qs q
+                 ON $on
+                    AND b.vec_id <> q.qid),
+        $embCte,
+        ${normCte("n")},
+        ${candDotCte("d", "cand")},
+        ${batchTop3Sql("d.qid", band)}"""
+
+  /** `$name(vec_id)`: the top-`k` ADC scores of [[pqCte]]'s `pqsc`,
+    * restricted to the probed clusters' members when `probed`.
+    */
+  private def pqTopCte(name: String, k: Int, probed: Boolean = true): String = {
+    val members = if (probed) """
+                   WHERE vec_id IN (SELECT a.vec_id FROM assign a
+                                    JOIN probes p ON p.label = a.label)""" else ""
+    s"""$name AS (SELECT vec_id FROM (
+                   SELECT vec_id, row_number() OVER (
+                     ORDER BY score DESC, vec_id) AS rk
+                   FROM pqsc$members)
+                 WHERE rk <= $k)"""
+  }
+
+  /** `exd(vec_id, dot)`: the exact inner product with the query `q` on
+    * the 1e-9 grid — the PQ gates' yardstick ([[exactDotTop10]]).
+    */
+  private def exdCte(q: String = "q", where: String = ""): String =
+    s"""exd AS (SELECT ex.vec_id,
+                       round(CAST(SUM(CAST(ex.v * q.qv AS DECIMAL(38,18)))
+                             AS DOUBLE), 9) AS dot
+                FROM ex JOIN $q ON q.pos = ex.pos$where GROUP BY 1)"""
+
+  /** `ext(vec_id)`: the [[exdCte]] top-10. */
+  private val extCte = """ext AS (SELECT vec_id FROM (
+                  SELECT vec_id, row_number() OVER (
+                    ORDER BY dot DESC, vec_id) AS rk FROM exd)
+                WHERE rk <= 10)"""
+
+  /** One `(method, hits, total, recall)` row: recall@10 of `$top`
+    * against [[extCte]].
+    */
+  private def recallRowSql(method: String, top: String): String =
+    s"""SELECT '$method' AS method,
+               (SELECT count(*) FROM ext JOIN $top USING (vec_id)) AS hits,
+               (SELECT count(*) FROM ext) AS total,
+               round(CAST((SELECT count(*) FROM ext JOIN $top USING (vec_id))
+                          AS DOUBLE) /
+                     CAST((SELECT count(*) FROM ext) AS DOUBLE), 9) AS recall"""
+
+  /** The probe query of the IVF gates: vec 0's embedding. */
+  private def queryVec(e: DataFrame): Seq[Float] =
+    e.filter(col("vec_id") === 0).select("embedding").head().getSeq[Float](0)
+
+  /** A gate's fixed per-corpus index dir (overwritten, never accumulated). */
+  private def ivfPath(gate: String, dir: String): String =
+    sys.props("java.io.tmpdir") +
+      s"/graft_ivf_${gate}_${java.lang.Integer.toHexString(dir.hashCode)}/index"
+
+  /** One recall row `(label, hits, total, recall)`: the share of
+    * `exact`'s rows (keyed by `keys`) that `approx` also returns,
+    * recall on the 1e-9 grid. The Spark side of every recall gate.
+    */
+  private def recallRow(label: Column, exact: DataFrame, approx: DataFrame,
+      keys: Seq[String] = Seq("vec_id")): DataFrame =
+    exact.join(approx.select(keys.map(col) :+ lit(1).as("hit"): _*),
+        keys, "left")
+      .agg(coalesce(sum(col("hit")), lit(0)).cast(LongType).as("hits"),
+        count(lit(1)).as("total"))
+      .select(label, col("hits"), col("total"),
+        round(col("hits").cast(DoubleType) /
+          col("total").cast(DoubleType), 9).as("recall"))
+
+  /** Embeddings exploded to `(vec_id, pos, v)` with 0-based `pos`. */
+  private def explodeVecs(e: DataFrame): DataFrame =
+    e.select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "vf")))
+      .select(col("vec_id"), col("pos"), col("vf").cast(DoubleType).as("v"))
+
+  /** The probe query's elements `(pos, qv)`: vec 0 out of an exploded
+    * frame.
+    */
+  private def queryElems(ex: DataFrame): DataFrame =
+    ex.filter(col("vec_id") === 0).select(col("pos"), col("v").as("qv"))
+
+  /** The PQ gates' yardstick: the top-10 `vec_id`s of `ex` by exact
+    * decimal inner product with the query `q`, on the 1e-9 grid
+    * ([[exdCte]] + [[extCte]] in DuckDB).
+    */
+  private def exactDotTop10(ex: DataFrame, q: DataFrame): DataFrame =
+    ex.join(broadcast(q), "pos")
+      .groupBy("vec_id")
+      .agg(sum((col("v") * col("qv")).cast(D)).as("sd"))
+      .select(col("vec_id"), round(col("sd").cast(DoubleType), 9).as("dot"))
+      .orderBy(col("dot").desc, col("vec_id"))
+      .limit(10).select("vec_id")
 
   /** Decimal-exact all-pairs batch top-3 (the recall yardstick): every
     * `%97` query scored against every other vector, cut per query on
@@ -728,8 +1022,10 @@ object SimilarityOps {
     // AQE's byte-based coalescing folded the byte-light producing join
     // onto 1-3 partitions: the q171 profile showed the residual ex
     // checkpoint as 1.3 s on ONE task with 31 cores idle — the
-    // downstream explode+decimal work is CPU-heavy per byte. At
-    // production scale the buffer is already wide → no-op.
+    // downstream explode+decimal work is CPU-heavy per byte. The
+    // repartition is lazy (it runs inside the consumers' jobs), so
+    // only the lineage cut is materialized here. At production scale
+    // the buffer is already wide → no-op.
     // Old path (gate false, kept for the same-JVM A/B): checkpoint the
     // exploded frame and derive codes from the raw input.
     val src =
@@ -853,25 +1149,14 @@ object SimilarityOps {
           .orderBy("vec_id")
       },
       Some(s"""
-        WITH b AS (SELECT vec_id, ${bucketSql("embeddings")} AS bucket
-                   FROM embeddings),
-        e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-                     generate_subscripts(embedding, 1) AS pos
-              FROM embeddings),
-        n AS (SELECT vec_id,
-                     CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn
-              FROM e GROUP BY 1),
+        WITH $bucketCte,
+        $embCte,
+        ${normCte("n")},
         cand AS (SELECT c.vec_id AS cid, be.vec_id AS bid
                  FROM b c JOIN b be
                    ON be.bucket = c.bucket AND be.vec_id % 10 = 0
                  WHERE c.vec_id % 10 <> 0),
-        d AS (SELECT cand.cid, cand.bid,
-                     CAST(SUM(CAST(e1.v*e2.v AS DECIMAL(38,18))) AS DOUBLE)
-                       AS dot
-              FROM cand JOIN e e1 ON e1.vec_id = cand.cid
-                        JOIN e e2 ON e2.vec_id = cand.bid
-                                 AND e2.pos = e1.pos
-              GROUP BY 1, 2),
+        ${pairDotCte("cid", "bid")},
         cos AS (SELECT cid, round(dot/(sqrt(n1.nn)*sqrt(n2.nn)), 9) AS cosine
                 FROM d JOIN n n1 ON n1.vec_id = cid
                        JOIN n n2 ON n2.vec_id = bid
@@ -900,8 +1185,7 @@ object SimilarityOps {
           .limit(10)
       },
       Some(s"""
-        WITH b AS (SELECT vec_id, ${bucketSql("embeddings")} AS bucket
-                   FROM embeddings),
+        WITH $bucketCte,
         qb AS (SELECT bucket AS qbk FROM b WHERE vec_id = 0),
         cand AS (SELECT b.vec_id FROM b, qb WHERE b.bucket = qb.qbk),
         $expandCte,
@@ -948,12 +1232,9 @@ object SimilarityOps {
     QueryDef("q47_batch_ann",
       (s, dir) => batchExactTop3(s, dir)
         .orderBy(col("qid"), col("cosine").desc, col("vec_id")),
-      Some("""
-        WITH e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-                          generate_subscripts(embedding, 1) AS pos
-                   FROM embeddings),
-        n AS (SELECT vec_id, CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn
-              FROM e GROUP BY 1),
+      Some(s"""
+        WITH $embCte,
+        ${normCte("n")},
         qs AS (SELECT vec_id AS qid FROM embeddings WHERE vec_id % 97 = 0),
         d AS (SELECT q.qid, e2.vec_id,
                      CAST(SUM(CAST(e1.v*e2.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
@@ -961,17 +1242,7 @@ object SimilarityOps {
               JOIN e e1 ON e1.vec_id = q.qid
               JOIN e e2 ON e2.pos = e1.pos AND e2.vec_id <> q.qid
               GROUP BY 1, 2),
-        cos AS (SELECT qid, d.vec_id,
-                       round(dot/(sqrt(n1.nn)*sqrt(n2.nn)), 9) AS cosine
-                FROM d JOIN n n1 ON n1.vec_id = qid
-                       JOIN n n2 ON n2.vec_id = d.vec_id
-                WHERE n1.nn > 0 AND n2.nn > 0),
-        rk AS (SELECT qid, vec_id, cosine,
-                      row_number() OVER (PARTITION BY qid
-                        ORDER BY cosine DESC, vec_id) AS rk
-               FROM cos)
-        SELECT qid, vec_id, cosine FROM rk WHERE rk <= 3
-        ORDER BY qid, cosine DESC, vec_id""")),
+        ${batchTop3Sql("qid")}""")),
 
     // ---- batch ANN, bucketed (the production retrieval shape) -----------
     // Same query set and ranking contract as q47, but candidates come
@@ -988,36 +1259,7 @@ object SimilarityOps {
     QueryDef("q48_batch_ann_bucketed",
       (s, dir) => batchBucketedTop3(s, dir, probeHamming = 0)
         .orderBy(col("qid"), col("cosine").desc, col("vec_id")),
-      Some(s"""
-        WITH b AS (SELECT vec_id, ${bucketSql("embeddings")} AS bucket
-                   FROM embeddings),
-        qs AS (SELECT vec_id AS qid, bucket AS qbucket FROM b
-               WHERE vec_id % 97 = 0),
-        cand AS (SELECT q.qid, b.vec_id
-                 FROM b JOIN qs q
-                 ON b.bucket = q.qbucket AND b.vec_id <> q.qid),
-        e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-                     generate_subscripts(embedding, 1) AS pos
-              FROM embeddings),
-        n AS (SELECT vec_id, CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn
-              FROM e GROUP BY 1),
-        d AS (SELECT c.qid, c.vec_id,
-                     CAST(SUM(CAST(e1.v*e2.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-              FROM cand c
-              JOIN e e1 ON e1.vec_id = c.qid
-              JOIN e e2 ON e2.vec_id = c.vec_id AND e2.pos = e1.pos
-              GROUP BY 1, 2),
-        cos AS (SELECT qid, d.vec_id,
-                       round(dot/(sqrt(n1.nn)*sqrt(n2.nn)), 9) AS cosine
-                FROM d JOIN n n1 ON n1.vec_id = d.qid
-                       JOIN n n2 ON n2.vec_id = d.vec_id
-                WHERE n1.nn > 0 AND n2.nn > 0),
-        rk AS (SELECT qid, vec_id, cosine,
-                      row_number() OVER (PARTITION BY qid
-                        ORDER BY cosine DESC, vec_id) AS rk
-               FROM cos)
-        SELECT qid, vec_id, cosine FROM rk WHERE rk <= 3
-        ORDER BY qid, cosine DESC, vec_id""")),
+      Some(bucketedTop3Sql("b.bucket = q.qbucket"))),
 
     // ---- hard-negative mining for retrieval training (q123) -------------
     // The contrastive-training recipe: per query, the top candidates
@@ -1031,37 +1273,8 @@ object SimilarityOps {
       (s, dir) => batchBucketedTop3(s, dir, probeHamming = 1,
           band = Some((0.2, 0.9)))
         .orderBy(col("qid"), col("cosine").desc, col("vec_id")),
-      Some(s"""
-        WITH b AS (SELECT vec_id, ${bucketSql("embeddings")} AS bucket
-                   FROM embeddings),
-        qs AS (SELECT vec_id AS qid, bucket AS qbucket FROM b
-               WHERE vec_id % 97 = 0),
-        cand AS (SELECT q.qid, b.vec_id
-                 FROM b JOIN qs q
-                 ON ${hammingLeSql("b.bucket", "q.qbucket", 1)}
-                    AND b.vec_id <> q.qid),
-        e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-                     generate_subscripts(embedding, 1) AS pos
-              FROM embeddings),
-        n AS (SELECT vec_id, CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn
-              FROM e GROUP BY 1),
-        d AS (SELECT c.qid, c.vec_id,
-                     CAST(SUM(CAST(e1.v*e2.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-              FROM cand c
-              JOIN e e1 ON e1.vec_id = c.qid
-              JOIN e e2 ON e2.vec_id = c.vec_id AND e2.pos = e1.pos
-              GROUP BY 1, 2),
-        cos AS (SELECT qid, d.vec_id,
-                       round(dot/(sqrt(n1.nn)*sqrt(n2.nn)), 9) AS cosine
-                FROM d JOIN n n1 ON n1.vec_id = d.qid
-                       JOIN n n2 ON n2.vec_id = d.vec_id
-                WHERE n1.nn > 0 AND n2.nn > 0),
-        rk AS (SELECT qid, vec_id, cosine,
-                      row_number() OVER (PARTITION BY qid
-                        ORDER BY cosine DESC, vec_id) AS rk
-               FROM cos WHERE cosine >= 0.2 AND cosine <= 0.9)
-        SELECT qid, vec_id, cosine FROM rk WHERE rk <= 3
-        ORDER BY qid, cosine DESC, vec_id""")),
+      Some(bucketedTop3Sql(hammingLeSql("b.bucket", "q.qbucket", 1),
+        band = " WHERE cosine >= 0.2 AND cosine <= 0.9"))),
 
     // ---- batch ANN, multi-probe (the recall knob) -----------------------
     // q48 with probeHamming = 1: each query also probes the 4 buckets
@@ -1076,37 +1289,7 @@ object SimilarityOps {
     QueryDef("q56_batch_ann_multiprobe",
       (s, dir) => batchBucketedTop3(s, dir, probeHamming = 1)
         .orderBy(col("qid"), col("cosine").desc, col("vec_id")),
-      Some(s"""
-        WITH b AS (SELECT vec_id, ${bucketSql("embeddings")} AS bucket
-                   FROM embeddings),
-        qs AS (SELECT vec_id AS qid, bucket AS qbucket FROM b
-               WHERE vec_id % 97 = 0),
-        cand AS (SELECT q.qid, b.vec_id
-                 FROM b JOIN qs q
-                 ON ${hammingLeSql("b.bucket", "q.qbucket", 1)}
-                    AND b.vec_id <> q.qid),
-        e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-                     generate_subscripts(embedding, 1) AS pos
-              FROM embeddings),
-        n AS (SELECT vec_id, CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn
-              FROM e GROUP BY 1),
-        d AS (SELECT c.qid, c.vec_id,
-                     CAST(SUM(CAST(e1.v*e2.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-              FROM cand c
-              JOIN e e1 ON e1.vec_id = c.qid
-              JOIN e e2 ON e2.vec_id = c.vec_id AND e2.pos = e1.pos
-              GROUP BY 1, 2),
-        cos AS (SELECT qid, d.vec_id,
-                       round(dot/(sqrt(n1.nn)*sqrt(n2.nn)), 9) AS cosine
-                FROM d JOIN n n1 ON n1.vec_id = d.qid
-                       JOIN n n2 ON n2.vec_id = d.vec_id
-                WHERE n1.nn > 0 AND n2.nn > 0),
-        rk AS (SELECT qid, vec_id, cosine,
-                      row_number() OVER (PARTITION BY qid
-                        ORDER BY cosine DESC, vec_id) AS rk
-               FROM cos)
-        SELECT qid, vec_id, cosine FROM rk WHERE rk <= 3
-        ORDER BY qid, cosine DESC, vec_id""")),
+      Some(bucketedTop3Sql(hammingLeSql("b.bucket", "q.qbucket", 1)))),
 
     // ---- ANN recall gate: approximate paths measured against exact ------
     // The number every ANN deployment actually monitors: recall@3 of
@@ -1126,27 +1309,33 @@ object SimilarityOps {
         val exact = batchExactTop3(s, dir).select("qid", "vec_id")
           .localCheckpoint(true)
         def stats(method: String, approx: DataFrame): DataFrame =
-          exact.join(approx.select(col("qid"), col("vec_id"),
-              lit(1).as("hit")), Seq("qid", "vec_id"), "left")
-            .agg(coalesce(sum(col("hit")), lit(0)).cast(LongType).as("hits"),
-              count(lit(1)).as("total"))
-            .select(lit(method).as("method"), col("hits"), col("total"),
-              round(col("hits").cast(DoubleType) /
-                col("total").cast(DoubleType), 9).as("recall"))
+          recallRow(lit(method).as("method"), exact, approx,
+            Seq("qid", "vec_id"))
         stats("bucketed_h0", batchBucketedTop3(s, dir, probeHamming = 0))
           .union(stats("multiprobe_h1", batchBucketedTop3(s, dir, probeHamming = 1)))
           .orderBy("method")
       },
-      Some(s"""
-        WITH e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-                          generate_subscripts(embedding, 1) AS pos
-                   FROM embeddings),
-        n AS (SELECT vec_id, CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn
-              FROM e GROUP BY 1),
-        b AS (SELECT vec_id, ${bucketSql("embeddings")} AS bucket
-              FROM embeddings),
-        qs AS (SELECT vec_id AS qid, bucket AS qbucket FROM b
-               WHERE vec_id % 97 = 0),
+      Some {
+        // per probe width h: candidates, their dots, the top-3 cut
+        def cand(h: Int) = s"""cand$h AS (SELECT q.qid, b.vec_id FROM b JOIN qs q
+                  ON ${hammingLeSql("b.bucket", "q.qbucket", h)}
+                     AND b.vec_id <> q.qid)"""
+        def top3(h: Int) = s"""ap$h AS (SELECT qid, vec_id FROM (
+                  SELECT qid, d$h.vec_id,
+                         row_number() OVER (PARTITION BY qid
+                           ORDER BY round(dot/(sqrt(n1.nn)*sqrt(n2.nn)), 9) DESC,
+                                    d$h.vec_id) AS rk
+                  FROM d$h JOIN n n1 ON n1.vec_id = d$h.qid
+                          JOIN n n2 ON n2.vec_id = d$h.vec_id
+                  WHERE n1.nn > 0 AND n2.nn > 0) WHERE rk <= 3)"""
+        val hs = Seq(0, 1)
+        val probed = hs.map(cand) ++ hs.map(h => candDotCte(s"d$h", s"cand$h")) ++
+          hs.map(top3)
+        s"""
+        WITH $embCte,
+        ${normCte("n")},
+        $bucketCte,
+        $bucketQsCte,
         dx AS (SELECT q.qid, e2.vec_id,
                       CAST(SUM(CAST(e1.v*e2.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
                FROM qs q
@@ -1163,40 +1352,7 @@ object SimilarityOps {
                         row_number() OVER (PARTITION BY qid
                           ORDER BY cosine DESC, vec_id) AS rk
                  FROM cosx) WHERE rk <= 3),
-        cand0 AS (SELECT q.qid, b.vec_id FROM b JOIN qs q
-                  ON ${hammingLeSql("b.bucket", "q.qbucket", 0)}
-                     AND b.vec_id <> q.qid),
-        cand1 AS (SELECT q.qid, b.vec_id FROM b JOIN qs q
-                  ON ${hammingLeSql("b.bucket", "q.qbucket", 1)}
-                     AND b.vec_id <> q.qid),
-        d0 AS (SELECT c.qid, c.vec_id,
-                      CAST(SUM(CAST(e1.v*e2.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-               FROM cand0 c
-               JOIN e e1 ON e1.vec_id = c.qid
-               JOIN e e2 ON e2.vec_id = c.vec_id AND e2.pos = e1.pos
-               GROUP BY 1, 2),
-        d1 AS (SELECT c.qid, c.vec_id,
-                      CAST(SUM(CAST(e1.v*e2.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-               FROM cand1 c
-               JOIN e e1 ON e1.vec_id = c.qid
-               JOIN e e2 ON e2.vec_id = c.vec_id AND e2.pos = e1.pos
-               GROUP BY 1, 2),
-        ap0 AS (SELECT qid, vec_id FROM (
-                  SELECT qid, d0.vec_id,
-                         row_number() OVER (PARTITION BY qid
-                           ORDER BY round(dot/(sqrt(n1.nn)*sqrt(n2.nn)), 9) DESC,
-                                    d0.vec_id) AS rk
-                  FROM d0 JOIN n n1 ON n1.vec_id = d0.qid
-                          JOIN n n2 ON n2.vec_id = d0.vec_id
-                  WHERE n1.nn > 0 AND n2.nn > 0) WHERE rk <= 3),
-        ap1 AS (SELECT qid, vec_id FROM (
-                  SELECT qid, d1.vec_id,
-                         row_number() OVER (PARTITION BY qid
-                           ORDER BY round(dot/(sqrt(n1.nn)*sqrt(n2.nn)), 9) DESC,
-                                    d1.vec_id) AS rk
-                  FROM d1 JOIN n n1 ON n1.vec_id = d1.qid
-                          JOIN n n2 ON n2.vec_id = d1.vec_id
-                  WHERE n1.nn > 0 AND n2.nn > 0) WHERE rk <= 3),
+        ${probed.mkString(",\n        ")},
         raw AS (
           SELECT 'bucketed_h0' AS method,
                  (SELECT count(*) FROM ap0 a JOIN ex
@@ -1209,7 +1365,8 @@ object SimilarityOps {
                  (SELECT count(*) FROM ex))
         SELECT method, hits, total,
                round(CAST(hits AS DOUBLE) / CAST(total AS DOUBLE), 9) AS recall
-        FROM raw ORDER BY method""")),
+        FROM raw ORDER BY method"""
+      }),
 
     // ---- IVF end-to-end: build partitioned index, probe-limited search --
     // Exercises the REAL operators (ivfWrite: nearest-centroid assign +
@@ -1229,36 +1386,16 @@ object SimilarityOps {
       (s, dir) => {
         val e = embNarrow(s, dir)
         val cents = labelCentsDecimal(e)
-        val qvec = e.filter(col("vec_id") === 0)
-          .select("embedding").head().getSeq[Float](0)
-        val path = sys.props("java.io.tmpdir") +
-          s"/graft_ivf_q54_${java.lang.Integer.toHexString(dir.hashCode)}/index"
+        val qvec = queryVec(e)
+        val path = ivfPath("q54", dir)
         Similarity.ivfWrite(e, "vec_id", "embedding", cents, path)
-        val hits = Similarity.ivfSearch(s, path, "vec_id", "embedding",
-          cents, qvec, k = 50, nprobe = 2)
-        decimalRerankTop10(e, hits.select("vec_id"))
+        ivfTop10(s, e, path, cents, qvec)
       },
       Some(s"""
         WITH $ivfAssignCte,
-        q AS (SELECT pos, v FROM e WHERE vec_id = 0),
-        qn AS (SELECT CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn FROM q),
-        pc AS (SELECT cd.label,
-                      CAST(SUM(CAST(cd.c*q.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-               FROM centd cd JOIN q ON q.pos = cd.pos GROUP BY 1),
-        probes AS (SELECT pc.label FROM pc JOIN cn USING (label), qn
-                   ORDER BY pc.dot/(sqrt(cn.nn)*sqrt(qn.nn)) DESC, pc.label
-                   LIMIT 2),
-        d AS (SELECT e.vec_id,
-                     CAST(SUM(CAST(e.v*q.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-              FROM e JOIN q ON q.pos = e.pos
-              WHERE e.vec_id IN (SELECT a.vec_id FROM assign a
-                                 JOIN probes p ON p.label = a.label)
-              GROUP BY 1)
-        SELECT vec_id, round(dot/(sqrt(vn.nn)*sqrt(qn.nn)), 9) AS cosine
-        FROM d JOIN vn USING (vec_id), qn
-        WHERE vn.nn > 0 AND qn.nn > 0
-        ORDER BY round(dot/(sqrt(vn.nn)*sqrt(qn.nn)), 9) DESC, vec_id
-        LIMIT 10""")),
+        ${probeCte()},
+        ${probedDotCte("d")}
+        ${cosTop10Sql("d")}""")),
 
     // ---- IVF recall gate: the nprobe sweep measured against exact -------
     // q57's discipline applied to the IVF path: recall@10 of the REAL
@@ -1276,10 +1413,8 @@ object SimilarityOps {
       (s, dir) => {
         val e = emb(s, dir)
         val cents = labelCentsDecimal(e)
-        val qvec = e.filter(col("vec_id") === 0)
-          .select("embedding").head().getSeq[Float](0)
-        val path = sys.props("java.io.tmpdir") +
-          s"/graft_ivf_q58_${java.lang.Integer.toHexString(dir.hashCode)}/index"
+        val qvec = queryVec(e)
+        val path = ivfPath("q58", dir)
         // Build from the BARE scan: assignNearest is map-side float
         // work ending in a cluster repartition, so the fixture
         // widening in e would shuffle twice for nothing (measured
@@ -1298,58 +1433,26 @@ object SimilarityOps {
         def stats(nprobe: Int): DataFrame = {
           val probed = Similarity.ivfSearch(s, path, "vec_id", "embedding",
             cents, qvec, k = 50, nprobe = nprobe)
-          exact.join(
-              decimalRerankTop10(e, probed.select("vec_id"))
-                .select(col("vec_id"), lit(1).as("hit")),
-              Seq("vec_id"), "left")
-            .agg(coalesce(sum(col("hit")), lit(0)).cast(LongType).as("hits"),
-              count(lit(1)).as("total"))
-            .select(lit(nprobe).as("nprobe"), col("hits"), col("total"),
-              round(col("hits").cast(DoubleType) /
-                col("total").cast(DoubleType), 9).as("recall"))
+          recallRow(lit(nprobe).as("nprobe"), exact,
+            decimalRerankTop10(e, probed.select("vec_id")))
         }
         stats(1).union(stats(2)).union(stats(4)).orderBy("nprobe")
       },
-      Some(s"""
+      Some {
+        def ap(n: Int) = probedTop10Cte(s"ap$n", s"pr WHERE prk <= $n")
+        s"""
         WITH $ivfAssignCte,
-        q AS (SELECT pos, v FROM e WHERE vec_id = 0),
-        qn AS (SELECT CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn FROM q),
-        pc AS (SELECT cd.label,
-                      CAST(SUM(CAST(cd.c*q.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-               FROM centd cd JOIN q ON q.pos = cd.pos GROUP BY 1),
+        ${queryPcCte()},
         pr AS (SELECT pc.label,
                       row_number() OVER (
                         ORDER BY pc.dot/(sqrt(cn.nn)*sqrt(qn.nn)) DESC,
                                  pc.label) AS prk
                FROM pc JOIN cn USING (label), qn),
-        dall AS (SELECT e.vec_id,
-                        CAST(SUM(CAST(e.v*q.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-                 FROM e JOIN q ON q.pos = e.pos GROUP BY 1),
-        sc AS (SELECT vec_id, round(dot/(sqrt(vn.nn)*sqrt(qn.nn)), 9) AS cosine
-               FROM dall JOIN vn USING (vec_id), qn
-               WHERE vn.nn > 0 AND qn.nn > 0),
-        ex AS (SELECT vec_id FROM (
-                 SELECT vec_id,
-                        row_number() OVER (ORDER BY cosine DESC, vec_id) AS rk
-                 FROM sc) WHERE rk <= 10),
-        ap1 AS (SELECT vec_id FROM (
-                  SELECT sc.vec_id,
-                         row_number() OVER (ORDER BY sc.cosine DESC, sc.vec_id) AS rk
-                  FROM sc JOIN assign a ON a.vec_id = sc.vec_id
-                  WHERE a.label IN (SELECT label FROM pr WHERE prk <= 1))
-                WHERE rk <= 10),
-        ap2 AS (SELECT vec_id FROM (
-                  SELECT sc.vec_id,
-                         row_number() OVER (ORDER BY sc.cosine DESC, sc.vec_id) AS rk
-                  FROM sc JOIN assign a ON a.vec_id = sc.vec_id
-                  WHERE a.label IN (SELECT label FROM pr WHERE prk <= 2))
-                WHERE rk <= 10),
-        ap4 AS (SELECT vec_id FROM (
-                  SELECT sc.vec_id,
-                         row_number() OVER (ORDER BY sc.cosine DESC, sc.vec_id) AS rk
-                  FROM sc JOIN assign a ON a.vec_id = sc.vec_id
-                  WHERE a.label IN (SELECT label FROM pr WHERE prk <= 4))
-                WHERE rk <= 10),
+        $fullScanCte,
+        $exTop10Cte,
+        ${ap(1)},
+        ${ap(2)},
+        ${ap(4)},
         raw AS (
           SELECT 1 AS nprobe,
                  (SELECT count(*) FROM ap1 JOIN ex USING (vec_id)) AS hits,
@@ -1362,7 +1465,8 @@ object SimilarityOps {
                  (SELECT count(*) FROM ex))
         SELECT nprobe, hits, total,
                round(CAST(hits AS DOUBLE) / CAST(total AS DOUBLE), 9) AS recall
-        FROM raw ORDER BY nprobe""")),
+        FROM raw ORDER BY nprobe"""
+      }),
 
     // ---- learned coarse quantizer: k-means-trained IVF ------------------
     // The missing piece between q54 (IVF from label means) and a real
@@ -1421,22 +1525,15 @@ object SimilarityOps {
         // to pay for; reverted.)
         val learned = cent(assign(cent(assign(cent(seed)))))
           .localCheckpoint(true)
-        val qvec = e.filter(col("vec_id") === 0)
-          .select("embedding").head().getSeq[Float](0)
-        val path = sys.props("java.io.tmpdir") +
-          s"/graft_ivf_q59_${java.lang.Integer.toHexString(dir.hashCode)}/index"
+        val qvec = queryVec(e)
+        val path = ivfPath("q59", dir)
         Similarity.ivfWrite(e.select("vec_id", "embedding"), "vec_id",
           "embedding", learned, path)
-        val hits = Similarity.ivfSearch(s, path, "vec_id", "embedding",
-          learned, qvec, k = 50, nprobe = 2)
-        decimalRerankTop10(e, hits.select("vec_id"))
+        ivfTop10(s, e, path, learned, qvec)
       },
       Some(s"""
-        WITH e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-                          generate_subscripts(embedding, 1) AS pos
-                   FROM embeddings),
-        vn AS (SELECT vec_id, CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn
-               FROM e GROUP BY 1),
+        WITH $embCte,
+        ${normCte("vn")},
         seed AS (SELECT vec_id,
                    'b' || ${Similarity.scaledBucketSql("embeddings",
                      "embeddings.embedding", targetBucketSize = 128)}
@@ -1462,11 +1559,7 @@ object SimilarityOps {
               WHERE e.vec_id IN (SELECT s3.vec_id FROM s3
                                  JOIN probes USING (cluster))
               GROUP BY 1)
-        SELECT vec_id, round(dot/(sqrt(vn.nn)*sqrt(qn.nn)), 9) AS cosine
-        FROM d JOIN vn USING (vec_id), qn
-        WHERE vn.nn > 0 AND qn.nn > 0
-        ORDER BY round(dot/(sqrt(vn.nn)*sqrt(qn.nn)), 9) DESC, vec_id
-        LIMIT 10""")),
+        ${cosTop10Sql("d")}""")),
 
     // ---- batch IVF search: the multi-query production shape -------------
     // q54 serves ONE query (driver-ranked probes, partition-pruned
@@ -1485,8 +1578,7 @@ object SimilarityOps {
         def dot(a: Column, b: Column) = call_function("dot_exact", a, b)
         val e = embNarrow(s, dir)
         val cents = labelCentsDecimal(e)
-        val path = sys.props("java.io.tmpdir") +
-          s"/graft_ivf_q67_${java.lang.Integer.toHexString(dir.hashCode)}/index"
+        val path = ivfPath("q67", dir)
         Similarity.ivfWrite(e, "vec_id", "embedding", cents, path)
         val qs = e.filter(col("vec_id") % 97 === 0)
           .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -1508,23 +1600,8 @@ object SimilarityOps {
       },
       Some(s"""
         WITH $ivfAssignCte,
-        qs AS (SELECT vec_id AS qid FROM embeddings WHERE vec_id % 97 = 0),
-        qe AS (SELECT q.qid, e.pos, e.v FROM qs q JOIN e ON e.vec_id = q.qid),
-        qn AS (SELECT qid, CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn
-               FROM qe GROUP BY 1),
-        pc AS (SELECT qe.qid, cd.label,
-                      CAST(SUM(CAST(cd.c*qe.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-               FROM centd cd JOIN qe ON qe.pos = cd.pos GROUP BY 1, 2),
-        probes AS (SELECT qid, label FROM (
-                     SELECT pc.qid, pc.label,
-                            row_number() OVER (PARTITION BY pc.qid
-                              ORDER BY pc.dot/(sqrt(cn.nn)*sqrt(qn.nn)) DESC,
-                                       pc.label) AS rk
-                     FROM pc JOIN cn USING (label) JOIN qn USING (qid))
-                   WHERE rk <= 2),
-        cand AS (SELECT p.qid, a.vec_id
-                 FROM probes p JOIN assign a ON a.label = p.label
-                 WHERE a.vec_id <> p.qid),
+        $batchProbeCte,
+        $batchCandCte,
         d AS (SELECT c.qid, c.vec_id,
                      CAST(SUM(CAST(e2.v*qe.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
               FROM cand c JOIN e e2 ON e2.vec_id = c.vec_id
@@ -1607,12 +1684,10 @@ object SimilarityOps {
       (s, dir) => {
         val e = embNarrow(s, dir)
         val cents = labelCentsDecimal(e)
-        val path = sys.props("java.io.tmpdir") +
-          s"/graft_ivf_q86_${java.lang.Integer.toHexString(dir.hashCode)}/index"
+        val path = ivfPath("q86", dir)
         Similarity.ivfWriteSq8(e.select("vec_id", "embedding"),
           "vec_id", "embedding", cents, path)
-        val qvec = e.filter(col("vec_id") === 0)
-          .select("embedding").head().getSeq[Float](0)
+        val qvec = queryVec(e)
         Similarity.ivfSearchSq8(s, path, "vec_id", cents, qvec,
             k = 11, nprobe = 2)
           .filter(col("vec_id") =!= 0)
@@ -1621,34 +1696,18 @@ object SimilarityOps {
       },
       Some(s"""
         WITH $ivfAssignCte,
-        q AS (SELECT pos, v FROM e WHERE vec_id = 0),
-        qn AS (SELECT CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn FROM q),
-        pc AS (SELECT cd.label,
-                      CAST(SUM(CAST(cd.c*q.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-               FROM centd cd JOIN q ON q.pos = cd.pos GROUP BY 1),
-        probes AS (SELECT pc.label FROM pc JOIN cn USING (label), qn
-                   ORDER BY pc.dot/(sqrt(cn.nn)*sqrt(qn.nn)) DESC, pc.label
-                   LIMIT 2),
+        ${probeCte()},
         $int8Cte,
-        n8 AS (SELECT vec_id, qvec,
-                 CAST(list_sum(list_transform(qvec,
-                   x -> CAST(x AS INTEGER)*CAST(x AS INTEGER))) AS BIGINT) AS nrm2
-               FROM qz),
-        q0 AS (SELECT qvec AS qv, nrm2 AS qnrm2 FROM n8 WHERE vec_id = 0),
+        ${int8NormCte("n8")},
+        ${int8QueryCte("n8")},
         d AS (SELECT n8.vec_id,
-                CAST(list_sum(list_transform(n8.qvec, (x, i) ->
-                  CAST(x AS INTEGER)*CAST(q0.qv[i] AS INTEGER))) AS BIGINT) AS dot,
+                ${int8DotSql("n8")} AS dot,
                 n8.nrm2, q0.qnrm2
               FROM n8, q0
               WHERE n8.vec_id <> 0
                 AND n8.vec_id IN (SELECT a.vec_id FROM assign a
                                   JOIN probes p ON p.label = a.label))
-        SELECT vec_id,
-               round(CAST(dot AS DOUBLE) /
-                     (sqrt(CAST(nrm2 AS DOUBLE))*sqrt(CAST(qnrm2 AS DOUBLE))), 9)
-                 AS cosine
-        FROM d WHERE nrm2 > 0 AND qnrm2 > 0
-        ORDER BY cosine DESC, vec_id LIMIT 10""")),
+        $int8Top10Sql""")),
 
     // ---- SQ8 recall gate (q88) ------------------------------------------
     // q58 measures recall through PROBE TRUNCATION; this gate measures
@@ -1668,8 +1727,7 @@ object SimilarityOps {
       (s, dir) => {
         val e = emb(s, dir)
         val cents = labelCentsDecimal(e)
-        val qvec = e.filter(col("vec_id") === 0)
-          .select("embedding").head().getSeq[Float](0)
+        val qvec = queryVec(e)
         val base = sys.props("java.io.tmpdir") +
           s"/graft_ivf_q88_${java.lang.Integer.toHexString(dir.hashCode)}"
         // Both builds read the BARE scan (q58's rationale); the
@@ -1686,59 +1744,27 @@ object SimilarityOps {
           .select("vec_id").localCheckpoint(true))
         graft.functions.ColumnLib.awaitAll(bF, b8F, exF)
         val exact = exF()
-        def recallRow(method: String, top: DataFrame): DataFrame =
-          exact.join(top.select(col("vec_id"), lit(1).as("hit")),
-              Seq("vec_id"), "left")
-            .agg(coalesce(sum(col("hit")), lit(0)).cast(LongType).as("hits"),
-              count(lit(1)).as("total"))
-            .select(lit(method).as("method"), col("hits"), col("total"),
-              round(col("hits").cast(DoubleType) /
-                col("total").cast(DoubleType), 9).as("recall"))
-        val floatTop = decimalRerankTop10(e,
-          Similarity.ivfSearch(s, s"$base/float", "vec_id", "embedding",
-            cents, qvec, k = 50, nprobe = 2).select("vec_id"))
+        def recall(method: String, top: DataFrame): DataFrame =
+          recallRow(lit(method).as("method"), exact, top)
+        val floatTop = ivfTop10(s, e, s"$base/float", cents, qvec)
           .select("vec_id")
         val sq8Top = Similarity.ivfSearchSq8(s, s"$base/sq8", "vec_id",
           cents, qvec, k = 10, nprobe = 2).select("vec_id")
-        recallRow("ivf_float", floatTop)
-          .union(recallRow("ivf_sq8", sq8Top))
+        recall("ivf_float", floatTop)
+          .union(recall("ivf_sq8", sq8Top))
           .orderBy("method")
       },
       Some(s"""
         WITH $ivfAssignCte,
-        q AS (SELECT pos, v FROM e WHERE vec_id = 0),
-        qn AS (SELECT CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn FROM q),
-        pc AS (SELECT cd.label,
-                      CAST(SUM(CAST(cd.c*q.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-               FROM centd cd JOIN q ON q.pos = cd.pos GROUP BY 1),
-        probes AS (SELECT pc.label FROM pc JOIN cn USING (label), qn
-                   ORDER BY pc.dot/(sqrt(cn.nn)*sqrt(qn.nn)) DESC, pc.label
-                   LIMIT 2),
-        dall AS (SELECT e.vec_id,
-                        CAST(SUM(CAST(e.v*q.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-                 FROM e JOIN q ON q.pos = e.pos GROUP BY 1),
-        sc AS (SELECT vec_id, round(dot/(sqrt(vn.nn)*sqrt(qn.nn)), 9) AS cosine
-               FROM dall JOIN vn USING (vec_id), qn
-               WHERE vn.nn > 0 AND qn.nn > 0),
-        ex AS (SELECT vec_id FROM (
-                 SELECT vec_id,
-                        row_number() OVER (ORDER BY cosine DESC, vec_id) AS rk
-                 FROM sc) WHERE rk <= 10),
-        apf AS (SELECT vec_id FROM (
-                  SELECT sc.vec_id,
-                         row_number() OVER (ORDER BY sc.cosine DESC, sc.vec_id) AS rk
-                  FROM sc JOIN assign a ON a.vec_id = sc.vec_id
-                  WHERE a.label IN (SELECT label FROM probes))
-                WHERE rk <= 10),
+        ${probeCte()},
+        $fullScanCte,
+        $exTop10Cte,
+        ${probedTop10Cte("apf", "probes")},
         $int8Cte,
-        n8 AS (SELECT vec_id, qvec,
-                 CAST(list_sum(list_transform(qvec,
-                   x -> CAST(x AS INTEGER)*CAST(x AS INTEGER))) AS BIGINT) AS nrm2
-               FROM qz),
-        q0 AS (SELECT qvec AS qv, nrm2 AS qnrm2 FROM n8 WHERE vec_id = 0),
+        ${int8NormCte("n8")},
+        ${int8QueryCte("n8")},
         d8 AS (SELECT n8.vec_id,
-                 CAST(list_sum(list_transform(n8.qvec, (x, i) ->
-                   CAST(x AS INTEGER)*CAST(q0.qv[i] AS INTEGER))) AS BIGINT) AS dot,
+                 ${int8DotSql("n8")} AS dot,
                  n8.nrm2, q0.qnrm2
                FROM n8, q0
                WHERE n8.vec_id IN (SELECT a.vec_id FROM assign a
@@ -1746,9 +1772,7 @@ object SimilarityOps {
         sq8t AS (SELECT vec_id FROM (
                    SELECT vec_id,
                           row_number() OVER (ORDER BY
-                            round(CAST(dot AS DOUBLE) /
-                              (sqrt(CAST(nrm2 AS DOUBLE))*sqrt(CAST(qnrm2 AS DOUBLE))),
-                              9) DESC, vec_id) AS rk
+                            $int8CosSql DESC, vec_id) AS rk
                    FROM d8 WHERE nrm2 > 0 AND qnrm2 > 0)
                  WHERE rk <= 10),
         raw AS (
@@ -1779,8 +1803,7 @@ object SimilarityOps {
       (s, dir) => {
         val e = emb(s, dir)
         val cents = labelCentsDecimal(e)
-        val path = sys.props("java.io.tmpdir") +
-          s"/graft_ivf_q89_${java.lang.Integer.toHexString(dir.hashCode)}/index"
+        val path = ivfPath("q89", dir)
         Similarity.ivfWriteSq8(e.select("vec_id", "embedding"),
           "vec_id", "embedding", cents, path)
         val qs = e.filter(col("vec_id") % 97 === 0)
@@ -1791,28 +1814,10 @@ object SimilarityOps {
       },
       Some(s"""
         WITH $ivfAssignCte,
-        qs AS (SELECT vec_id AS qid FROM embeddings WHERE vec_id % 97 = 0),
-        qe AS (SELECT q.qid, e.pos, e.v FROM qs q JOIN e ON e.vec_id = q.qid),
-        qn AS (SELECT qid, CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn
-               FROM qe GROUP BY 1),
-        pc AS (SELECT qe.qid, cd.label,
-                      CAST(SUM(CAST(cd.c*qe.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-               FROM centd cd JOIN qe ON qe.pos = cd.pos GROUP BY 1, 2),
-        probes AS (SELECT qid, label FROM (
-                     SELECT pc.qid, pc.label,
-                            row_number() OVER (PARTITION BY pc.qid
-                              ORDER BY pc.dot/(sqrt(cn.nn)*sqrt(qn.nn)) DESC,
-                                       pc.label) AS rk
-                     FROM pc JOIN cn USING (label) JOIN qn USING (qid))
-                   WHERE rk <= 2),
+        $batchProbeCte,
         $int8Cte,
-        n8 AS (SELECT vec_id, qvec,
-                 CAST(list_sum(list_transform(qvec,
-                   x -> CAST(x AS INTEGER)*CAST(x AS INTEGER))) AS BIGINT) AS nrm2
-               FROM qz),
-        cand AS (SELECT p.qid, a.vec_id
-                 FROM probes p JOIN assign a ON a.label = p.label
-                 WHERE a.vec_id <> p.qid),
+        ${int8NormCte("n8")},
+        $batchCandCte,
         d8 AS (SELECT c.qid, c.vec_id,
                  CAST(list_sum(list_transform(nv.qvec, (x, i) ->
                    CAST(x AS INTEGER)*CAST(nq.qvec[i] AS INTEGER))) AS BIGINT) AS dot,
@@ -1822,13 +1827,9 @@ object SimilarityOps {
                JOIN n8 nq ON nq.vec_id = c.qid)
         SELECT qid, vec_id, cosine FROM (
           SELECT qid, vec_id,
-                 round(CAST(dot AS DOUBLE) /
-                   (sqrt(CAST(nrm2 AS DOUBLE))*sqrt(CAST(qnrm2 AS DOUBLE))),
-                   9) AS cosine,
+                 $int8CosSql AS cosine,
                  row_number() OVER (PARTITION BY qid
-                   ORDER BY round(CAST(dot AS DOUBLE) /
-                     (sqrt(CAST(nrm2 AS DOUBLE))*sqrt(CAST(qnrm2 AS DOUBLE))),
-                     9) DESC, vec_id) AS rk
+                   ORDER BY $int8CosSql DESC, vec_id) AS rk
           FROM d8 WHERE nrm2 > 0 AND qnrm2 > 0)
         WHERE rk <= 5
         ORDER BY qid, cosine DESC, vec_id""")),
@@ -1883,44 +1884,17 @@ object SimilarityOps {
           .orderBy(col("score").desc, col("vec_id"))
           .limit(10).select("vec_id")
         val e = emb(s, dir)
-        val ex = e
-          .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "vf")))
-          .select(col("vec_id"), col("pos"), col("vf").cast(DoubleType).as("v"))
-        val q = ex.filter(col("vec_id") === 0)
-          .select(col("pos"), col("v").as("qv"))
-        val exactTop = ex.join(broadcast(q), "pos")
-          .groupBy("vec_id")
-          .agg(sum((col("v") * col("qv")).cast(D)).as("sd"))
-          .select(col("vec_id"), round(col("sd").cast(DoubleType), 9).as("dot"))
-          .orderBy(col("dot").desc, col("vec_id"))
-          .limit(10).select("vec_id")
-        exactTop.join(adcTop.withColumn("hit", lit(1)), Seq("vec_id"), "left")
-          .agg(coalesce(sum(col("hit")), lit(0)).cast(LongType).as("hits"),
-            count(lit(1)).as("total"))
-          .select(lit("pq_adc").as("method"), col("hits"), col("total"),
-            round(col("hits").cast(DoubleType) /
-              col("total").cast(DoubleType), 9).as("recall"))
+        val ex = explodeVecs(e)
+        val q = queryElems(ex)
+        val exactTop = exactDotTop10(ex, q)
+        recallRow(lit("pq_adc").as("method"), exactTop, adcTop)
       },
       Some(s"""
         WITH $pqCte,
-        adct AS (SELECT vec_id FROM (
-                   SELECT vec_id, row_number() OVER (
-                     ORDER BY score DESC, vec_id) AS rk FROM pqsc)
-                 WHERE rk <= 10),
-        exd AS (SELECT ex.vec_id,
-                       round(CAST(SUM(CAST(ex.v * q.qv AS DECIMAL(38,18)))
-                             AS DOUBLE), 9) AS dot
-                FROM ex JOIN q ON q.pos = ex.pos GROUP BY 1),
-        ext AS (SELECT vec_id FROM (
-                  SELECT vec_id, row_number() OVER (
-                    ORDER BY dot DESC, vec_id) AS rk FROM exd)
-                WHERE rk <= 10)
-        SELECT 'pq_adc' AS method,
-               (SELECT count(*) FROM ext JOIN adct USING (vec_id)) AS hits,
-               (SELECT count(*) FROM ext) AS total,
-               round(CAST((SELECT count(*) FROM ext JOIN adct USING (vec_id))
-                          AS DOUBLE) /
-                     CAST((SELECT count(*) FROM ext) AS DOUBLE), 9) AS recall""")),
+        ${pqTopCte("adct", 10, probed = false)},
+        ${exdCte()},
+        $extCte
+        ${recallRowSql("pq_adc", "adct")}""")),
 
     // ---- IVF-PQ: coarse routing + PQ codes in probed clusters (q99) -----
     // The full FAISS composition: the coarse quantizer (label-centroid
@@ -1955,47 +1929,17 @@ object SimilarityOps {
       (s, dir) => {
         val top = ivfPqTop10(s, dir).select("vec_id")
         val e = emb(s, dir)
-        val ex = e
-          .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "vf")))
-          .select(col("vec_id"), col("pos"), col("vf").cast(DoubleType).as("v"))
-        val q = ex.filter(col("vec_id") === 0)
-          .select(col("pos"), col("v").as("qv"))
-        val exactTop = ex.join(broadcast(q), "pos")
-          .groupBy("vec_id")
-          .agg(sum((col("v") * col("qv")).cast(D)).as("sd"))
-          .select(col("vec_id"), round(col("sd").cast(DoubleType), 9).as("dot"))
-          .orderBy(col("dot").desc, col("vec_id"))
-          .limit(10).select("vec_id")
-        exactTop.join(top.withColumn("hit", lit(1)), Seq("vec_id"), "left")
-          .agg(coalesce(sum(col("hit")), lit(0)).cast(LongType).as("hits"),
-            count(lit(1)).as("total"))
-          .select(lit("ivf_pq").as("method"), col("hits"), col("total"),
-            round(col("hits").cast(DoubleType) /
-              col("total").cast(DoubleType), 9).as("recall"))
+        val ex = explodeVecs(e)
+        val q = queryElems(ex)
+        val exactTop = exactDotTop10(ex, q)
+        recallRow(lit("ivf_pq").as("method"), exactTop, top)
       },
       Some(s"""
         WITH $ivfPqCte,
-        adct AS (SELECT vec_id FROM (
-                   SELECT vec_id, row_number() OVER (
-                     ORDER BY score DESC, vec_id) AS rk
-                   FROM pqsc
-                   WHERE vec_id IN (SELECT a.vec_id FROM assign a
-                                    JOIN probes p ON p.label = a.label))
-                 WHERE rk <= 10),
-        exd AS (SELECT ex.vec_id,
-                       round(CAST(SUM(CAST(ex.v * q.qv AS DECIMAL(38,18)))
-                             AS DOUBLE), 9) AS dot
-                FROM ex JOIN q ON q.pos = ex.pos GROUP BY 1),
-        ext AS (SELECT vec_id FROM (
-                  SELECT vec_id, row_number() OVER (
-                    ORDER BY dot DESC, vec_id) AS rk FROM exd)
-                WHERE rk <= 10)
-        SELECT 'ivf_pq' AS method,
-               (SELECT count(*) FROM ext JOIN adct USING (vec_id)) AS hits,
-               (SELECT count(*) FROM ext) AS total,
-               round(CAST((SELECT count(*) FROM ext JOIN adct USING (vec_id))
-                          AS DOUBLE) /
-                     CAST((SELECT count(*) FROM ext) AS DOUBLE), 9) AS recall""")),
+        ${pqTopCte("adct", 10)},
+        ${exdCte()},
+        $extCte
+        ${recallRowSql("ivf_pq", "adct")}""")),
 
     // ---- two-stage IVF-PQ serving: ADC shortlist + exact re-rank (q108) --
     // The production IVF-PQ recipe: quantized ADC scores are cheap but
@@ -2011,23 +1955,14 @@ object SimilarityOps {
     QueryDef("q108_adc_rerank",
       (s, dir) => {
         val e = emb(s, dir)
-        val ex = e
-          .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "vf")))
-          .select(col("vec_id"), col("pos"), col("vf").cast(DoubleType).as("v"))
-        val q = ex.filter(col("vec_id") === 0)
-          .select(col("pos"), col("v").as("qv"))
+        val ex = explodeVecs(e)
+        val q = queryElems(ex)
         // Yardstick: the corpus-wide exact top-10 — independent of the
         // whole ADC chain, so its blocking materialization runs
         // CONCURRENTLY with the PQ training below (guide §2.6; the
         // q171/q205 posture).
         val exF = graft.functions.ColumnLib.fork(s)(
-          ex.join(broadcast(q), "pos")
-            .groupBy("vec_id")
-            .agg(sum((col("v") * col("qv")).cast(D)).as("sd"))
-            .select(col("vec_id"),
-              round(col("sd").cast(DoubleType), 9).as("dot"))
-            .orderBy(col("dot").desc, col("vec_id"))
-            .limit(10).select("vec_id").localCheckpoint(true))
+          exactDotTop10(ex, q).localCheckpoint(true))
         // Stage 1: ADC shortlist k' = 4k from the probed clusters
         // (k' rows; read twice below — once for the ADC-only cut,
         // once as the re-rank candidate set).
@@ -2037,69 +1972,30 @@ object SimilarityOps {
         val adcTop = short.orderBy(col("score").desc, col("vec_id"))
           .limit(10).select("vec_id")
         // Stage 2: exact decimal dots for the shortlist ONLY.
-        val rrTop = ex
-          .join(broadcast(short.select("vec_id")), Seq("vec_id"), "left_semi")
-          .join(broadcast(q), "pos")
-          .groupBy("vec_id")
-          .agg(sum((col("v") * col("qv")).cast(D)).as("sd"))
-          .select(col("vec_id"), round(col("sd").cast(DoubleType), 9).as("dot"))
-          .orderBy(col("dot").desc, col("vec_id"))
-          .limit(10).select("vec_id")
+        val rrTop = exactDotTop10(
+          ex.join(broadcast(short.select("vec_id")), Seq("vec_id"), "left_semi"),
+          q)
         val exactTop = exF()
-        def recallRow(method: String, top: DataFrame): DataFrame =
-          exactTop.join(top.withColumn("hit", lit(1)), Seq("vec_id"), "left")
-            .agg(coalesce(sum(col("hit")), lit(0)).cast(LongType).as("hits"),
-              count(lit(1)).as("total"))
-            .select(lit(method).as("method"), col("hits"), col("total"),
-              round(col("hits").cast(DoubleType) /
-                col("total").cast(DoubleType), 9).as("recall"))
-        recallRow("adc_only", adcTop)
-          .unionByName(recallRow("adc_rerank", rrTop))
+        recallRow(lit("adc_only").as("method"), exactTop, adcTop)
+          .unionByName(recallRow(lit("adc_rerank").as("method"), exactTop,
+            rrTop))
           .orderBy("method")
       },
       Some(s"""
         WITH $ivfPqCte,
-        shortl AS (SELECT vec_id FROM (
-                     SELECT vec_id, row_number() OVER (
-                       ORDER BY score DESC, vec_id) AS rk
-                     FROM pqsc
-                     WHERE vec_id IN (SELECT a.vec_id FROM assign a
-                                      JOIN probes p ON p.label = a.label))
-                   WHERE rk <= 40),
-        adct AS (SELECT vec_id FROM (
-                   SELECT vec_id, row_number() OVER (
-                     ORDER BY score DESC, vec_id) AS rk
-                   FROM pqsc
-                   WHERE vec_id IN (SELECT a.vec_id FROM assign a
-                                    JOIN probes p ON p.label = a.label))
-                 WHERE rk <= 10),
-        exd AS (SELECT ex.vec_id,
-                       round(CAST(SUM(CAST(ex.v * q.qv AS DECIMAL(38,18)))
-                             AS DOUBLE), 9) AS dot
-                FROM ex JOIN q ON q.pos = ex.pos GROUP BY 1),
+        ${pqTopCte("shortl", 40)},
+        ${pqTopCte("adct", 10)},
+        ${exdCte()},
         rrt AS (SELECT vec_id FROM (
                   SELECT exd.vec_id, row_number() OVER (
                     ORDER BY exd.dot DESC, exd.vec_id) AS rk
                   FROM exd JOIN shortl USING (vec_id))
                 WHERE rk <= 10),
-        ext AS (SELECT vec_id FROM (
-                  SELECT vec_id, row_number() OVER (
-                    ORDER BY dot DESC, vec_id) AS rk FROM exd)
-                WHERE rk <= 10)
+        $extCte
         SELECT method, hits, total, recall FROM (
-          SELECT 'adc_only' AS method,
-                 (SELECT count(*) FROM ext JOIN adct USING (vec_id)) AS hits,
-                 (SELECT count(*) FROM ext) AS total,
-                 round(CAST((SELECT count(*) FROM ext
-                             JOIN adct USING (vec_id)) AS DOUBLE) /
-                       CAST((SELECT count(*) FROM ext) AS DOUBLE), 9) AS recall
+          ${recallRowSql("adc_only", "adct")}
           UNION ALL
-          SELECT 'adc_rerank' AS method,
-                 (SELECT count(*) FROM ext JOIN rrt USING (vec_id)) AS hits,
-                 (SELECT count(*) FROM ext) AS total,
-                 round(CAST((SELECT count(*) FROM ext
-                             JOIN rrt USING (vec_id)) AS DOUBLE) /
-                       CAST((SELECT count(*) FROM ext) AS DOUBLE), 9) AS recall)
+          ${recallRowSql("adc_rerank", "rrt")})
         ORDER BY method""")),
 
     // ---- incremental IVF ingest ----------------------------------------
@@ -2122,60 +2018,24 @@ object SimilarityOps {
         val build = e.filter(col("vec_id") % 2 === 0)
         val delta = e.filter(col("vec_id") % 2 === 1)
         val cents = decimalGridCentroids(build, "label").localCheckpoint(true)
-        val path = sys.props("java.io.tmpdir") +
-          s"/graft_ivf_q130_${java.lang.Integer.toHexString(dir.hashCode)}/index"
+        val path = ivfPath("q130", dir)
         Similarity.ivfWrite(build.select("vec_id", "embedding"), "vec_id",
           "embedding", cents, path)
         Similarity.ivfAppend(delta.select("vec_id", "embedding"), "vec_id",
           "embedding", cents, path, "delta")
-        val qvec = e.filter(col("vec_id") === 0)
-          .select("embedding").head().getSeq[Float](0)
-        val hits = Similarity.ivfSearch(s, path, "vec_id", "embedding",
-          cents, qvec, k = 50, nprobe = 2)
-        decimalRerankTop10(e, hits.select("vec_id"))
+        val qvec = queryVec(e)
+        ivfTop10(s, e, path, cents, qvec)
       },
-      Some("""
-        WITH e AS (SELECT vec_id, label, CAST(unnest(embedding) AS DOUBLE) AS v,
-                          generate_subscripts(embedding, 1) AS pos
-                   FROM embeddings),
-        cent AS (SELECT label, pos,
-                        CAST(round(CAST(SUM(CAST(v AS DECIMAL(38,18))) AS DOUBLE)
-                          / count(*), 9) AS REAL) AS cf
-                 FROM e WHERE vec_id % 2 = 0 GROUP BY 1, 2),
-        centd AS (SELECT label, pos, CAST(cf AS DOUBLE) AS c FROM cent),
-        cn AS (SELECT label, CAST(SUM(CAST(c*c AS DECIMAL(38,18))) AS DOUBLE) AS nn
-               FROM centd GROUP BY 1),
-        vn AS (SELECT vec_id, CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn
-               FROM e GROUP BY 1),
-        vc AS (SELECT e.vec_id, cd.label,
-                      CAST(SUM(CAST(e.v*cd.c AS DECIMAL(38,18))) AS DOUBLE) AS dot
-               FROM e JOIN centd cd ON cd.pos = e.pos GROUP BY 1, 2),
-        assign AS (SELECT vec_id, label FROM (
-                     SELECT vc.vec_id, vc.label,
-                            row_number() OVER (PARTITION BY vc.vec_id
-                              ORDER BY vc.dot/(sqrt(vn.nn)*sqrt(cn.nn)) DESC,
-                                       vc.label) AS rk
-                     FROM vc JOIN vn USING (vec_id) JOIN cn USING (label))
-                   WHERE rk = 1),
-        q AS (SELECT pos, v FROM e WHERE vec_id = 0),
-        qn AS (SELECT CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn FROM q),
-        pc AS (SELECT cd.label,
-                      CAST(SUM(CAST(cd.c*q.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-               FROM centd cd JOIN q ON q.pos = cd.pos GROUP BY 1),
-        probes AS (SELECT pc.label FROM pc JOIN cn USING (label), qn
-                   ORDER BY pc.dot/(sqrt(cn.nn)*sqrt(qn.nn)) DESC, pc.label
-                   LIMIT 2),
+      Some(s"""
+        WITH ${ivfAssignSql(" WHERE vec_id % 2 = 0")},
+        ${probeCte()},
         d AS (SELECT e.vec_id,
                      CAST(SUM(CAST(e.v*q.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
               FROM e JOIN q ON q.pos = e.pos
               WHERE e.vec_id IN (SELECT a.vec_id FROM assign a
                                  JOIN probes USING (label))
               GROUP BY 1)
-        SELECT vec_id, round(dot/(sqrt(vn.nn)*sqrt(qn.nn)), 9) AS cosine
-        FROM d JOIN vn USING (vec_id), qn
-        WHERE vn.nn > 0 AND qn.nn > 0
-        ORDER BY round(dot/(sqrt(vn.nn)*sqrt(qn.nn)), 9) DESC, vec_id
-        LIMIT 10""")),
+        ${cosTop10Sql("d")}""")),
 
     // What appending cannot give is adaptation: frozen centroids fit a
     // drifted batch worse and worse, and recall decays SILENTLY unless
@@ -2227,18 +2087,10 @@ object SimilarityOps {
             round(col("__bm") - col("mean_sim"), 9).as("drift"))
           .orderBy("batch")
       },
-      Some("""
-        WITH e AS (SELECT vec_id, label, CAST(unnest(embedding) AS DOUBLE) AS v,
-                          generate_subscripts(embedding, 1) AS pos
-                   FROM embeddings),
+      Some(s"""
+        WITH $labelECte,
         dims AS (SELECT vec_id, len(embedding) AS nd FROM embeddings),
-        cent AS (SELECT label, pos,
-                        CAST(round(CAST(SUM(CAST(v AS DECIMAL(38,18))) AS DOUBLE)
-                          / count(*), 9) AS REAL) AS cf
-                 FROM e WHERE vec_id % 2 = 0 GROUP BY 1, 2),
-        centd AS (SELECT label, pos, CAST(cf AS DOUBLE) AS c FROM cent),
-        cn AS (SELECT label, CAST(SUM(CAST(c*c AS DECIMAL(38,18))) AS DOUBLE) AS nn
-               FROM centd GROUP BY 1),
+        ${labelCentCte(" WHERE vec_id % 2 = 0")},
         b AS (SELECT 'build' AS batch, vec_id, pos, v FROM e WHERE vec_id % 2 = 0
               UNION ALL
               SELECT 'b1', vec_id, pos, v FROM e WHERE vec_id % 2 = 1
@@ -2294,22 +2146,13 @@ object SimilarityOps {
       },
       Some(s"""
         WITH $int8Cte,
-        n AS (SELECT vec_id, qvec,
-                CAST(list_sum(list_transform(qvec,
-                  x -> CAST(x AS INTEGER)*CAST(x AS INTEGER))) AS BIGINT) AS nrm2
-              FROM qz),
-        q0 AS (SELECT qvec AS qv, nrm2 AS qnrm2 FROM n WHERE vec_id = 0),
+        ${int8NormCte("n")},
+        ${int8QueryCte("n")},
         d AS (SELECT n.vec_id,
-                CAST(list_sum(list_transform(n.qvec, (x, i) ->
-                  CAST(x AS INTEGER)*CAST(q0.qv[i] AS INTEGER))) AS BIGINT) AS dot,
+                ${int8DotSql("n")} AS dot,
                 n.nrm2, q0.qnrm2
               FROM n, q0 WHERE n.vec_id <> 0)
-        SELECT vec_id,
-               round(CAST(dot AS DOUBLE) /
-                     (sqrt(CAST(nrm2 AS DOUBLE))*sqrt(CAST(qnrm2 AS DOUBLE))), 9)
-                 AS cosine
-        FROM d WHERE nrm2 > 0 AND qnrm2 > 0
-        ORDER BY cosine DESC, vec_id LIMIT 10""")),
+        $int8Top10Sql""")),
 
     // ---- Johnson–Lindenstrauss random projection (q169) -----------------
     // Deterministic ±1 Rademacher projection 64 → 8 dims — the
@@ -2385,31 +2228,19 @@ object SimilarityOps {
             .localCheckpoint(true)) // shared by yardstick + both variants
         val resF = fork(s)(pqResidualParts(s, dir, parts))
         val candidates = candidatesF()
-        val q = parts.ex.filter(col("vec_id") === 0)
-          .select(col("pos"), col("v").as("qv"))
+        val q = queryElems(parts.ex)
         // Yardstick: exact top-10 WITHIN the probed candidates — both
         // variants see the same probe truncation, so the number
         // isolates quantization fidelity (what residual encoding
         // changes) from coarse-probe loss (what it cannot change).
-        val exactTop = parts.ex
-          .join(candidates, Seq("vec_id"), "left_semi")
-          .join(broadcast(q), "pos")
-          .groupBy("vec_id")
-          .agg(sum((col("v") * col("qv")).cast(D)).as("sd"))
-          .select(col("vec_id"), round(col("sd").cast(DoubleType), 9).as("dot"))
-          .orderBy(col("dot").desc, col("vec_id"))
-          .limit(10).select("vec_id")
+        val exactTop = exactDotTop10(
+            parts.ex.join(candidates, Seq("vec_id"), "left_semi"), q)
           .localCheckpoint(true) // read by both recall rows
         def recallOf(method: String, scores: DataFrame): DataFrame = {
           val top = scores.join(candidates, Seq("vec_id"), "left_semi")
             .orderBy(col("score").desc, col("vec_id"))
             .limit(10).select("vec_id")
-          exactTop.join(top.withColumn("hit", lit(1)), Seq("vec_id"), "left")
-            .agg(coalesce(sum(col("hit")), lit(0)).cast(LongType).as("hits"),
-              count(lit(1)).as("total"))
-            .select(lit(method).as("method"), col("hits"), col("total"),
-              round(col("hits").cast(DoubleType) /
-                col("total").cast(DoubleType), 9).as("recall"))
+          recallRow(lit(method).as("method"), exactTop, top)
         }
         val raw = rawF()
         val res = resF()
@@ -2434,13 +2265,7 @@ object SimilarityOps {
       },
       Some(s"""
         WITH $ivfPqCte,
-        adct AS (SELECT vec_id FROM (
-                   SELECT vec_id, row_number() OVER (
-                     ORDER BY score DESC, vec_id) AS rk
-                   FROM pqsc
-                   WHERE vec_id IN (SELECT a.vec_id FROM assign a
-                                    JOIN probes p ON p.label = a.label))
-                 WHERE rk <= 10),
+        ${pqTopCte("adct", 10)},
         exr AS (SELECT ex.vec_id, ex.pos, ex.v - cd.c AS r,
                        CAST(floor(ex.pos / 4) AS INT) AS sub,
                        ex.pos - CAST(floor(ex.pos / 4) AS INT) * 4 AS lpos
@@ -2497,17 +2322,10 @@ object SimilarityOps {
                    WHERE rsc.vec_id IN (SELECT a.vec_id FROM assign a
                                         JOIN probes p ON p.label = a.label))
                  WHERE rk <= 10),
-        exd AS (SELECT ex.vec_id,
-                       round(CAST(SUM(CAST(ex.v * q.qv AS DECIMAL(38,18)))
-                             AS DOUBLE), 9) AS dot
-                FROM ex JOIN q ON q.pos = ex.pos
+        ${exdCte(where = """
                 WHERE ex.vec_id IN (SELECT a.vec_id FROM assign a
-                                    JOIN probes p ON p.label = a.label)
-                GROUP BY 1),
-        ext AS (SELECT vec_id FROM (
-                  SELECT vec_id, row_number() OVER (
-                    ORDER BY dot DESC, vec_id) AS rk FROM exd)
-                WHERE rk <= 10),
+                                    JOIN probes p ON p.label = a.label)""")},
+        $extCte,
         rawe AS (SELECT asn.vec_id,
                         SUM(CAST(asn.d2 AS DECIMAL(38,18))) AS e2
                  FROM codes JOIN asn
@@ -2527,22 +2345,10 @@ object SimilarityOps {
                    CAST(count(*) AS DOUBLE) * 1000000.0) AS BIGINT)
                    AS mse_micro FROM rese)
         SELECT * FROM (
-          SELECT 'ivf_pq_raw' AS method,
-                 (SELECT count(*) FROM ext JOIN adct USING (vec_id)) AS hits,
-                 (SELECT count(*) FROM ext) AS total,
-                 round(CAST((SELECT count(*) FROM ext
-                             JOIN adct USING (vec_id)) AS DOUBLE) /
-                       CAST((SELECT count(*) FROM ext) AS DOUBLE), 9)
-                   AS recall,
+          ${recallRowSql("ivf_pq_raw", "adct")},
                  (SELECT mse_micro FROM rawm) AS mse_micro
           UNION ALL
-          SELECT 'ivf_pq_residual' AS method,
-                 (SELECT count(*) FROM ext JOIN rtop USING (vec_id)) AS hits,
-                 (SELECT count(*) FROM ext) AS total,
-                 round(CAST((SELECT count(*) FROM ext
-                             JOIN rtop USING (vec_id)) AS DOUBLE) /
-                       CAST((SELECT count(*) FROM ext) AS DOUBLE), 9)
-                   AS recall,
+          ${recallRowSql("ivf_pq_residual", "rtop")},
                  (SELECT mse_micro FROM resm) AS mse_micro)
         ORDER BY method""")),
 
@@ -2568,51 +2374,29 @@ object SimilarityOps {
       (s, dir) => {
         val e = embNarrow(s, dir)
         val cents = labelCentsDecimal(e)
-        val qvec = e.filter(col("vec_id") === 0)
-          .select("embedding").head().getSeq[Float](0)
-        val path = sys.props("java.io.tmpdir") +
-          s"/graft_ivf_q183_${java.lang.Integer.toHexString(dir.hashCode)}/index"
+        val qvec = queryVec(e)
+        val path = ivfPath("q183", dir)
         Similarity.ivfWrite(e, "vec_id", "embedding", cents, path,
           metaCols = Seq("label"))
         val exact = decimalRerankTop10(e,
             e.filter(col("label") === 3).select("vec_id"))
           .select("vec_id").localCheckpoint(true) // read by both recall rows
-        def recallRow(method: String, top: DataFrame): DataFrame =
-          exact.join(top.select(col("vec_id"), lit(1).as("hit")),
-              Seq("vec_id"), "left")
-            .agg(coalesce(sum(col("hit")), lit(0)).cast(LongType).as("hits"),
-              count(lit(1)).as("total"))
-            .select(lit(method).as("method"), col("hits"), col("total"),
-              round(col("hits").cast(DoubleType) /
-                col("total").cast(DoubleType), 9).as("recall"))
+        def recall(method: String, top: DataFrame): DataFrame =
+          recallRow(lit(method).as("method"), exact, top)
         val pre = Similarity.ivfSearchFiltered(s, path, "vec_id",
           "embedding", cents, qvec, k = 50, nprobe = 2,
           predicate = col("label") === 3)
-        val post = Similarity.ivfSearch(s, path, "vec_id", "embedding",
-          cents, qvec, k = 50, nprobe = 2)
-        val postTop = decimalRerankTop10(e, post.select("vec_id"))
+        val postTop = ivfTop10(s, e, path, cents, qvec)
           .join(e.select(col("vec_id"), col("label")), "vec_id")
           .filter(col("label") === 3)
-        recallRow("prefilter", decimalRerankTop10(e, pre.select("vec_id")))
-          .union(recallRow("postfilter", postTop))
+        recall("prefilter", decimalRerankTop10(e, pre.select("vec_id")))
+          .union(recall("postfilter", postTop))
           .orderBy("method")
       },
       Some(s"""
         WITH $ivfAssignCte,
-        q AS (SELECT pos, v FROM e WHERE vec_id = 0),
-        qn AS (SELECT CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn FROM q),
-        pc AS (SELECT cd.label,
-                      CAST(SUM(CAST(cd.c*q.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-               FROM centd cd JOIN q ON q.pos = cd.pos GROUP BY 1),
-        probes AS (SELECT pc.label FROM pc JOIN cn USING (label), qn
-                   ORDER BY pc.dot/(sqrt(cn.nn)*sqrt(qn.nn)) DESC, pc.label
-                   LIMIT 2),
-        dall AS (SELECT e.vec_id,
-                        CAST(SUM(CAST(e.v*q.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-                 FROM e JOIN q ON q.pos = e.pos GROUP BY 1),
-        sc AS (SELECT vec_id, round(dot/(sqrt(vn.nn)*sqrt(qn.nn)), 9) AS cosine
-               FROM dall JOIN vn USING (vec_id), qn
-               WHERE vn.nn > 0 AND qn.nn > 0),
+        ${probeCte()},
+        $fullScanCte,
         lb AS (SELECT vec_id, label AS lbl FROM embeddings),
         ex AS (SELECT vec_id FROM (
                  SELECT sc.vec_id,
@@ -2699,12 +2483,7 @@ object SimilarityOps {
         val rotF = fork(s)(pqPartsFromVec(
           Similarity.srhtRotate(e, "vec_id", "embedding", "srht7"), "rotated"))
         val raw = rawF()
-        val exF = fork(s)(raw.ex.join(broadcast(raw.q), "pos")
-          .groupBy("vec_id")
-          .agg(sum((col("v") * col("qv")).cast(D)).as("sd"))
-          .select(col("vec_id"), round(col("sd").cast(DoubleType), 9).as("dot"))
-          .orderBy(col("dot").desc, col("vec_id"))
-          .limit(10).select("vec_id")
+        val exF = fork(s)(exactDotTop10(raw.ex, raw.q)
           .localCheckpoint(true)) // read by both recall rows
         val rot = rotF()
         val exactTop = exF()
@@ -2718,13 +2497,7 @@ object SimilarityOps {
             .select(floor(col("se2").cast(DoubleType) /
                 col("nv").cast(DoubleType) * lit(1000000.0))
               .cast(LongType).as("mse_micro"))
-          exactTop.join(top.withColumn("hit", lit(1)), Seq("vec_id"), "left")
-            .agg(coalesce(sum(col("hit")), lit(0)).cast(LongType).as("hits"),
-              count(lit(1)).as("total"))
-            .select(lit(method).as("method"), col("hits"), col("total"),
-              round(col("hits").cast(DoubleType) /
-                col("total").cast(DoubleType), 9).as("recall"))
-            .crossJoin(mse)
+          recallRow(lit(method).as("method"), exactTop, top).crossJoin(mse)
         }
         gateRow("pq_raw", raw).unionByName(gateRow("pq_srht", rot))
           .orderBy("method")
@@ -2741,22 +2514,10 @@ object SimilarityOps {
                FROM embeddings),
         ${pqChainSql("ex", "raw")},
         ${pqChainSql("rote", "rot")},
-        exd AS (SELECT ex.vec_id,
-                       round(CAST(SUM(CAST(ex.v * q.qv AS DECIMAL(38,18)))
-                             AS DOUBLE), 9) AS dot
-                FROM ex JOIN rawq q ON q.pos = ex.pos GROUP BY 1),
-        ext AS (SELECT vec_id FROM (
-                  SELECT vec_id, row_number() OVER (
-                    ORDER BY dot DESC, vec_id) AS rk FROM exd)
-                WHERE rk <= 10)
+        ${exdCte(q = "rawq q")},
+        $extCte
         SELECT * FROM (
-          SELECT 'pq_raw' AS method,
-                 (SELECT count(*) FROM ext JOIN rawtop USING (vec_id)) AS hits,
-                 (SELECT count(*) FROM ext) AS total,
-                 round(CAST((SELECT count(*) FROM ext
-                             JOIN rawtop USING (vec_id)) AS DOUBLE) /
-                       CAST((SELECT count(*) FROM ext) AS DOUBLE), 9)
-                   AS recall,
+          ${recallRowSql("pq_raw", "rawtop")},
                  (SELECT mse_micro FROM rawmse) AS mse_micro
           UNION ALL
           SELECT 'pq_srht',
@@ -2783,39 +2544,18 @@ object SimilarityOps {
       (s, dir) => {
         val e = embNarrow(s, dir)
         val cents = labelCentsDecimal(e)
-        val qvec = e.filter(col("vec_id") === 0)
-          .select("embedding").head().getSeq[Float](0)
-        val path = sys.props("java.io.tmpdir") +
-          s"/graft_ivf_q202_${java.lang.Integer.toHexString(dir.hashCode)}/index"
+        val qvec = queryVec(e)
+        val path = ivfPath("q202", dir)
         Similarity.ivfWrite(e, "vec_id", "embedding", cents, path)
         Similarity.ivfDelete(s, path,
           e.filter(col("vec_id") % 5 === 4).select("vec_id"), "gdpr1")
-        val hits = Similarity.ivfSearch(s, path, "vec_id", "embedding",
-          cents, qvec, k = 50, nprobe = 2)
-        decimalRerankTop10(e, hits.select("vec_id"))
+        ivfTop10(s, e, path, cents, qvec)
       },
       Some(s"""
         WITH $ivfAssignCte,
-        q AS (SELECT pos, v FROM e WHERE vec_id = 0),
-        qn AS (SELECT CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn FROM q),
-        pc AS (SELECT cd.label,
-                      CAST(SUM(CAST(cd.c*q.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-               FROM centd cd JOIN q ON q.pos = cd.pos GROUP BY 1),
-        probes AS (SELECT pc.label FROM pc JOIN cn USING (label), qn
-                   ORDER BY pc.dot/(sqrt(cn.nn)*sqrt(qn.nn)) DESC, pc.label
-                   LIMIT 2),
-        d AS (SELECT e.vec_id,
-                     CAST(SUM(CAST(e.v*q.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-              FROM e JOIN q ON q.pos = e.pos
-              WHERE e.vec_id IN (SELECT a.vec_id FROM assign a
-                                 JOIN probes p ON p.label = a.label)
-                AND e.vec_id % 5 <> 4
-              GROUP BY 1)
-        SELECT vec_id, round(dot/(sqrt(vn.nn)*sqrt(qn.nn)), 9) AS cosine
-        FROM d JOIN vn USING (vec_id), qn
-        WHERE vn.nn > 0 AND qn.nn > 0
-        ORDER BY round(dot/(sqrt(vn.nn)*sqrt(qn.nn)), 9) DESC, vec_id
-        LIMIT 10""")),
+        ${probeCte()},
+        ${probedDotCte("d", extra = "\n                AND e.vec_id % 5 <> 4")}
+        ${cosTop10Sql("d")}""")),
 
     // ---- hybrid retrieval: BM25 + dense, reciprocal-rank fusion (q206) ---
     // The serving shape of a modern retrieval stack: a sparse list
@@ -2836,10 +2576,8 @@ object SimilarityOps {
           s"/graft_tidx_q206_${java.lang.Integer.toHexString(dir.hashCode)}/index"
         val e = emb(s, dir)
         val cents = labelCentsDecimal(e)
-        val qvec = e.filter(col("vec_id") === 0)
-          .select("embedding").head().getSeq[Float](0)
-        val vpath = sys.props("java.io.tmpdir") +
-          s"/graft_ivf_q206_${java.lang.Integer.toHexString(dir.hashCode)}/index"
+        val qvec = queryVec(e)
+        val vpath = ivfPath("q206", dir)
         // The two index builds are independent (own paths) and each
         // underfills the cluster — submit their jobs concurrently
         // (routed through the gated fork so the A/B covers it).
@@ -2849,9 +2587,7 @@ object SimilarityOps {
           vpath))
         graft.functions.ColumnLib.awaitAll(bT, bV)
         val textTop = TextIndex.searchBM25(s, tpath, terms, k = 20)
-        val vecTop = decimalRerankTop10(e,
-          Similarity.ivfSearch(s, vpath, "vec_id", "embedding", cents,
-            qvec, k = 50, nprobe = 2).select("vec_id"))
+        val vecTop = ivfTop10(s, e, vpath, cents, qvec)
         Retrieval.rrfFuse(Seq(
             Retrieval.rankOf(textTop, "doc",
               Seq(col("bm25").desc, col("doc").asc)),
@@ -2861,58 +2597,11 @@ object SimilarityOps {
       },
       Some(s"""
         WITH $ivfAssignCte,
-        q AS (SELECT pos, v FROM e WHERE vec_id = 0),
-        qn AS (SELECT CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn FROM q),
-        pc AS (SELECT cd.label,
-                      CAST(SUM(CAST(cd.c*q.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-               FROM centd cd JOIN q ON q.pos = cd.pos GROUP BY 1),
-        probes AS (SELECT pc.label FROM pc JOIN cn USING (label), qn
-                   ORDER BY pc.dot/(sqrt(cn.nn)*sqrt(qn.nn)) DESC, pc.label
-                   LIMIT 2),
-        dd AS (SELECT e.vec_id,
-                      CAST(SUM(CAST(e.v*q.v AS DECIMAL(38,18))) AS DOUBLE) AS dot
-               FROM e JOIN q ON q.pos = e.pos
-               WHERE e.vec_id IN (SELECT a.vec_id FROM assign a
-                                  JOIN probes p ON p.label = a.label)
-               GROUP BY 1),
-        vtop AS (SELECT vec_id,
-                        round(dot/(sqrt(vn.nn)*sqrt(qn.nn)), 9) AS cosine
-                 FROM dd JOIN vn USING (vec_id), qn
-                 WHERE vn.nn > 0 AND qn.nn > 0
-                 ORDER BY round(dot/(sqrt(vn.nn)*sqrt(qn.nn)), 9) DESC, vec_id
-                 LIMIT 10),
-        tbase AS (SELECT doc_id, len(string_split(text,' ')) AS dl,
-                         len(list_filter(string_split(text,' '),
-                           x -> x = 'spark')) AS tf_spark,
-                         len(list_filter(string_split(text,' '),
-                           x -> x = 'merge')) AS tf_merge
-                  FROM documents),
-        tc AS (SELECT count(*) AS n_docs, SUM(dl) AS sum_dl,
-                      SUM(CASE WHEN tf_spark > 0 THEN 1 ELSE 0 END)
-                        AS df_spark,
-                      SUM(CASE WHEN tf_merge > 0 THEN 1 ELSE 0 END)
-                        AS df_merge
-               FROM tbase),
-        ttop AS (SELECT doc_id,
-               round(CAST(
-                 CAST(round(CASE WHEN tf_spark > 0 THEN
-                   round(ln((CAST(n_docs AS DOUBLE) - df_spark + 0.5)
-                            / (df_spark + 0.5) + 1.0), 9)
-                     * (CAST(tf_spark AS DOUBLE) * 2.2)
-                     / (CAST(tf_spark AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-                        CAST(dl AS DOUBLE) / (CAST(sum_dl AS DOUBLE) / n_docs)))
-                   ELSE 0 END, 9) AS DECIMAL(38,18))
-                 + CAST(round(CASE WHEN tf_merge > 0 THEN
-                   round(ln((CAST(n_docs AS DOUBLE) - df_merge + 0.5)
-                            / (df_merge + 0.5) + 1.0), 9)
-                     * (CAST(tf_merge AS DOUBLE) * 2.2)
-                     / (CAST(tf_merge AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-                        CAST(dl AS DOUBLE) / (CAST(sum_dl AS DOUBLE) / n_docs)))
-                   ELSE 0 END, 9) AS DECIMAL(38,18))
-               AS DOUBLE), 6) AS bm25
-          FROM tbase, tc
-          WHERE tf_spark > 0 OR tf_merge > 0
-          ORDER BY bm25 DESC, doc_id LIMIT 20),
+        ${probeCte()},
+        ${probedDotCte("dd")},
+        vtop AS (${cosTop10Sql("dd")}),
+        ${TextOps.bm25StatsCte(Seq("spark", "merge"), base = "tbase", c = "tc")},
+        ttop AS (${TextOps.bm25TopSql(Seq("spark", "merge"), 20, "tbase", "tc")}),
         tr AS (SELECT doc_id AS id, row_number() OVER (
                  ORDER BY bm25 DESC, doc_id) AS r FROM ttop),
         vr AS (SELECT vec_id AS id, row_number() OVER (
@@ -3095,25 +2784,14 @@ object SimilarityOps {
           .orderBy("s_id")
       },
       Some(s"""
-        WITH b AS (SELECT vec_id, ${bucketSql("embeddings")} AS bucket
-                   FROM embeddings),
-        e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-                     generate_subscripts(embedding, 1) AS pos
-              FROM embeddings),
-        n AS (SELECT vec_id,
-                     CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn
-              FROM e GROUP BY 1),
+        WITH $bucketCte,
+        $embCte,
+        ${normCte("n")},
         cand AS (SELECT sb.vec_id AS s_id, tb.vec_id AS t_id
                  FROM b sb JOIN b tb
                    ON tb.bucket = sb.bucket AND tb.vec_id % 2 = 1
                  WHERE sb.vec_id % 2 = 0),
-        d AS (SELECT cand.s_id, cand.t_id,
-                     CAST(SUM(CAST(e1.v*e2.v AS DECIMAL(38,18))) AS DOUBLE)
-                       AS dot
-              FROM cand JOIN e e1 ON e1.vec_id = cand.s_id
-                        JOIN e e2 ON e2.vec_id = cand.t_id
-                                 AND e2.pos = e1.pos
-              GROUP BY 1, 2),
+        ${pairDotCte("s_id", "t_id")},
         cosv AS (SELECT s_id, t_id,
                         round(dot/(sqrt(n1.nn)*sqrt(n2.nn)), 9) AS cosv
                  FROM d JOIN n n1 ON n1.vec_id = s_id
@@ -3165,10 +2843,8 @@ object SimilarityOps {
       (s, dir) => {
         val e = embNarrow(s, dir)
         val cents = labelCentsDecimal(e)
-        val qvec = e.filter(col("vec_id") === 0)
-          .select("embedding").head().getSeq[Float](0)
-        val path = sys.props("java.io.tmpdir") +
-          s"/graft_ivf_q214_${java.lang.Integer.toHexString(dir.hashCode)}/index"
+        val qvec = queryVec(e)
+        val path = ivfPath("q214", dir)
         Similarity.ivfWrite(e, "vec_id", "embedding", cents, path)
         val newCents = Similarity.ivfSplitCluster(s, path, "vec_id",
           "embedding", cents, 0, 100, 101, steps = 2)
@@ -3180,25 +2856,20 @@ object SimilarityOps {
         decimalRerankTop10(e, hits.select("vec_id"))
           .withColumn("n_clusters", lit(nClusters))
       },
-      Some(s"""
-        WITH e AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-                          generate_subscripts(embedding, 1) AS pos
-                   FROM embeddings),
+      Some {
+        val nClusters = """,
+               (SELECT COUNT(DISTINCT label) + 1 FROM embeddings)
+                 AS n_clusters"""
+        s"""
+        WITH $embCte,
         q AS (SELECT pos, v AS qv FROM e WHERE vec_id = 0),
         qn AS (SELECT CAST(SUM(CAST(qv*qv AS DECIMAL(38,18))) AS DOUBLE) AS nn
                FROM q),
-        n AS (SELECT vec_id,
-                     CAST(SUM(CAST(v*v AS DECIMAL(38,18))) AS DOUBLE) AS nn
-              FROM e GROUP BY 1),
+        ${normCte("n")},
         d AS (SELECT e.vec_id,
                      CAST(SUM(CAST(e.v*q.qv AS DECIMAL(38,18))) AS DOUBLE)
                        AS dot
               FROM e JOIN q USING (pos) GROUP BY 1)
-        SELECT vec_id, round(dot/(sqrt(n.nn)*sqrt(qn.nn)), 9) AS cosine,
-               (SELECT COUNT(DISTINCT label) + 1 FROM embeddings)
-                 AS n_clusters
-        FROM d JOIN n USING (vec_id), qn
-        WHERE n.nn > 0 AND qn.nn > 0
-        ORDER BY round(dot/(sqrt(n.nn)*sqrt(qn.nn)), 9) DESC, vec_id
-        LIMIT 10""")))
+        ${cosTop10Sql("d", vn = "n", extra = nClusters)}"""
+      }))
 }

@@ -20,6 +20,232 @@ object TextOps {
   private val codeWords = Seq("spark", "hash", "vector", "query")
   private val bizWords = Seq("customer", "order", "value", "line")
 
+  /** The three-term BM25 query shared by q136 and its index-served
+    * twins (q168, q201).
+    */
+  private val bm25Terms = Seq("spark", "query", "merge")
+
+  /** Brute-scan BM25 (k1 = 1.2, b = 0.75, idf snapped to the 1e-9 grid
+    * first, so both engines round identical doubles) of every document
+    * for `terms`: one `tf_<i>` column per term plus the unrounded
+    * `bm25` sum. The scan-side scorer of q136 and the q215 eval;
+    * restated in DuckDB by [[bm25StatsCte]] + [[bm25TermSql]].
+    */
+  private def bm25Scan(s: SparkSession, dir: String,
+      terms: Seq[String]): DataFrame = {
+    val ws = words(col("text"))
+    val base = docs(s, dir).select(
+      (col("doc_id") +:
+        size(ws).cast("long").as("dl") +:
+        terms.zipWithIndex.map { case (t, i) =>
+          size(filter(ws, x => x === lit(t))).cast("long").as(s"tf_$i")
+        }): _*)
+    val aggCols = count(lit(1)).cast("long").as("n_docs") +:
+      sum(col("dl")).cast("long").as("sum_dl") +:
+      terms.indices.map(i =>
+        sum(when(col(s"tf_$i") > 0, 1L).otherwise(0L)).as(s"df_$i"))
+    val consts = base.agg(aggCols.head, aggCols.tail: _*)
+    base.crossJoin(broadcast(consts))
+      .withColumn("avgdl",
+        col("sum_dl").cast("double") / col("n_docs").cast("double"))
+      .withColumn("bm25", terms.indices.map { i =>
+        val tf = col(s"tf_$i").cast("double")
+        val idf = round(log(
+          (col("n_docs").cast("double") - col(s"df_$i") + 0.5) /
+            (col(s"df_$i") + 0.5) + 1.0), 9)
+        idf * (tf * lit(2.2)) /
+          (tf + lit(1.2) * (lit(0.25) +
+            lit(0.75) * col("dl").cast("double") / col("avgdl")))
+      }.reduce(_ + _))
+  }
+
+  /** DuckDB CTEs `base(doc_id, dl, tf_<term>...)` over `documents`
+    * (optionally filtered by `where`) and `c(n_docs, sum_dl,
+    * df_<term>...)`: the corpus statistics every BM25 oracle scores
+    * against. Shared with SimilarityOps' hybrid-retrieval oracle.
+    */
+  private[queries] def bm25StatsCte(terms: Seq[String], where: String = "",
+      base: String = "base", c: String = "c"): String = {
+    val tfs = terms.map(t => s"""len(list_filter(string_split(text,' '),
+                               x -> x = '$t')) AS tf_$t""")
+    val dfs = terms.map(t => s"SUM(CASE WHEN tf_$t > 0 THEN 1 ELSE 0 END) AS df_$t")
+    s"""$base AS (SELECT doc_id, len(string_split(text,' ')) AS dl,
+                             ${tfs.mkString(",\n                             ")}
+                      FROM documents$where),
+        $c AS (SELECT count(*) AS n_docs, SUM(dl) AS sum_dl,
+                     ${dfs.mkString(",\n                     ")}
+              FROM $base)"""
+  }
+
+  /** One term's BM25 contribution over the [[bm25StatsCte]] columns
+    * suffixed `sfx` — the SQL twin of [[bm25Scan]]'s per-term tree.
+    */
+  private def bm25TermSql(sfx: String): String =
+    s"""round(ln((CAST(n_docs AS DOUBLE) - df_$sfx + 0.5)
+                          / (df_$sfx + 0.5) + 1.0), 9)
+                   * (CAST(tf_$sfx AS DOUBLE) * 2.2)
+                   / (CAST(tf_$sfx AS DOUBLE) + 1.2 * (0.25 + 0.75 *
+                      CAST(dl AS DOUBLE) / (CAST(sum_dl AS DOUBLE) / n_docs)))"""
+
+  /** Index-served BM25 top-`k` restated over [[bm25StatsCte]]: each
+    * term's contribution snapped to the 1e-9 grid and summed in
+    * DECIMAL (the index's posting-order-free accumulation), rounded to
+    * 6 places. Disjunctive serving scores only matched terms (`CASE`
+    * guard) and keeps docs matching ANY term; conjunctive keeps docs
+    * matching EVERY term, so no guard is needed.
+    */
+  private[queries] def bm25TopSql(terms: Seq[String], k: Int,
+      base: String = "base", c: String = "c",
+      conjunctive: Boolean = false): String = {
+    val snapped = terms.map { t =>
+      if (conjunctive) s"CAST(round( ${bm25TermSql(t)} , 9) AS DECIMAL(38,18))"
+      else s"""CAST(round(CASE WHEN tf_$t > 0 THEN ${bm25TermSql(t)}
+                   ELSE 0 END, 9) AS DECIMAL(38,18))"""
+    }
+    val matched = terms.map(t => s"tf_$t > 0")
+      .mkString(if (conjunctive) " AND " else " OR ")
+    s"""SELECT doc_id,
+               round(CAST(
+                 ${snapped.mkString("\n                 + ")}
+               AS DOUBLE), 6) AS bm25
+        FROM $base, $c
+        WHERE $matched
+        ORDER BY bm25 DESC, doc_id LIMIT $k"""
+  }
+
+  /** The q215/q216 eval query set: three 3-term queries. */
+  private val evalQueries =
+    Seq("spark query merge", "join hash scan", "stream window batch")
+
+  /** DuckDB restatement of the retrieval eval (scan-served BM25 top-10,
+    * whole-corpus ideal, integer rank discounts): q215's oracle, and
+    * q216's, whose gate asserts index-served metrics equal it.
+    */
+  private val retrievalEvalSql: String = {
+    def block(q: String): String = {
+      val terms = q.split(' ').toSeq
+      val tfCols = terms.zipWithIndex.map { case (t, i) =>
+        s"len(list_filter(string_split(text,' '), x -> x = '$t')) AS tf_$i"
+      }.mkString(", ")
+      val dfCols = terms.indices.map(i =>
+        s"CAST(SUM(CASE WHEN tf_$i > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_$i")
+        .mkString(", ")
+      val bm25 = terms.indices.map(i => bm25TermSql(i.toString))
+        .mkString(" + ")
+      val grade = terms.indices.map(i =>
+        s"(CASE WHEN tf_$i > 0 THEN 1 ELSE 0 END)").mkString(" + ")
+      s"""(
+      WITH base AS (SELECT doc_id, len(string_split(text,' ')) AS dl,
+                           $tfCols
+                    FROM documents),
+      c AS (SELECT count(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS sum_dl, $dfCols
+            FROM base),
+      g AS (SELECT doc_id, $bm25 AS bm25,
+                   CAST($grade AS BIGINT) AS grade
+            FROM base, c),
+      top AS (SELECT doc_id, grade,
+                     row_number() OVER (ORDER BY bm25 DESC, doc_id)
+                       AS rnk
+              FROM g ORDER BY bm25 DESC, doc_id LIMIT 10),
+      ideal AS (SELECT grade,
+                       row_number() OVER (ORDER BY grade DESC, doc_id)
+                         AS rnk
+                FROM g ORDER BY grade DESC, doc_id LIMIT 10),
+      idcg AS (SELECT CAST(SUM(grade * (27720 // (rnk + 1))) AS BIGINT)
+                 AS idcg_scaled FROM ideal),
+      m AS (SELECT CAST(SUM(CASE WHEN grade > 0 THEN 1 ELSE 0 END) AS BIGINT)
+                     AS p10_hits,
+                   COALESCE(27720 // MIN(CASE WHEN grade > 0
+                     THEN rnk END), 0) AS mrr_scaled,
+                   CAST(SUM(grade * (27720 // (rnk + 1))) AS BIGINT) AS dcg_scaled
+            FROM top)
+      SELECT '$q' AS query, CAST(p10_hits AS BIGINT) AS p10_hits,
+             CAST(mrr_scaled AS BIGINT) AS mrr_scaled,
+             CAST(dcg_scaled AS BIGINT) AS dcg_scaled,
+             CAST(idcg_scaled AS BIGINT) AS idcg_scaled,
+             CASE WHEN idcg_scaled > 0
+               THEN CAST(floor(CAST(dcg_scaled AS DOUBLE) * 1000000.0
+                 / CAST(idcg_scaled AS DOUBLE)) AS BIGINT)
+               ELSE 0 END AS ndcg_micro
+      FROM m, idcg)"""
+    }
+    evalQueries.map(block).mkString(" UNION ALL ") + " ORDER BY query"
+  }
+
+  /** P@10, MRR@10 and nDCG@10 of one query from its served top-10
+    * `(doc_id, bm25, grade)` and the whole-corpus grades (the ideal
+    * ranking). All metric arithmetic is integer: rank discounts are
+    * 27720/(r+1) (27720 = lcm(1..11), so every discount is exact),
+    * DCG/IDCG are integer sums, and the ratio is one double division of
+    * exact integers. Shared by q215 (scan-served) and q216
+    * (index-served), so the two gates grade identically.
+    */
+  private def retrievalEvalRow(q: String, top10: DataFrame,
+      graded: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val top = top10
+      .withColumn("rank", row_number().over(
+        Window.orderBy(col("bm25").desc, col("doc_id"))))
+      .withColumn("w", floor(lit(27720) / (col("rank") + 1)).cast("long"))
+    val ideal = graded
+      .orderBy(col("grade").desc, col("doc_id")).limit(10)
+      .withColumn("rank", row_number().over(
+        Window.orderBy(col("grade").desc, col("doc_id"))))
+      .agg(sum(col("grade") *
+        floor(lit(27720) / (col("rank") + 1)).cast("long"))
+        .as("idcg_scaled"))
+    top.agg(
+        sum(when(col("grade") > 0, 1L).otherwise(0L)).as("p10_hits"),
+        coalesce(floor(lit(27720) /
+          min(when(col("grade") > 0, col("rank")))).cast("long"),
+          lit(0L)).as("mrr_scaled"),
+        sum(col("grade") * col("w")).as("dcg_scaled"))
+      .crossJoin(ideal)
+      .select(lit(q).as("query"), col("p10_hits"), col("mrr_scaled"),
+        col("dcg_scaled"), col("idcg_scaled"),
+        when(col("idcg_scaled") > 0,
+          floor(col("dcg_scaled").cast("double") * 1000000.0 /
+            col("idcg_scaled").cast("double")).cast("long"))
+          .otherwise(0L).as("ndcg_micro"))
+  }
+
+  /** q44/q84's oracle: one cumulative per-source token window, the
+    * sequence id is the 2048-token budget bucket of each doc's start.
+    */
+  private val packSql = """
+        SELECT source, doc_id, n_tokens,
+               CAST(floor((end_offset - n_tokens) / 2048) AS BIGINT) AS seq_id
+        FROM (SELECT source, doc_id,
+                     len(string_split(text,' ')) AS n_tokens,
+                     SUM(len(string_split(text,' '))) OVER (
+                       PARTITION BY source ORDER BY doc_id
+                       ROWS UNBOUNDED PRECEDING) AS end_offset
+              FROM documents)
+        ORDER BY source, doc_id"""
+
+  /** Equi-depth decile binning of a `score` column (q142, q203): the
+    * nine cuts are percentile_disc order statistics (the value at rank
+    * ceil(p·n)), broadcast back as one row, and `bin` is the first cut
+    * at or above the score (10 above the last). Values tied across a
+    * cut all land in the lower bin.
+    */
+  private def decileBins(df: DataFrame): DataFrame = {
+    val cutCols = (1 to 9).map(k => expr(
+      s"percentile_disc(0.${k}) WITHIN GROUP (ORDER BY score)").as(s"c$k"))
+    val cuts = df.agg(cutCols.head, cutCols.tail: _*)
+    val bin = (1 to 9).foldRight(lit(10): Column)((k, rest) =>
+      when(col("score") <= col(s"c$k"), k).otherwise(rest))
+    df.crossJoin(broadcast(cuts)).withColumn("bin", bin.cast("long"))
+  }
+
+  /** DuckDB restatement of [[decileBins]]: the cut row over
+    * `r(score, rn, n)` and the bin CASE arms over `c1..c9`.
+    */
+  private val decileCutsSql = (1 to 9).map(k =>
+    s"max(CASE WHEN rn <= ceil(n * 0.$k) THEN score END) AS c$k").mkString(", ")
+  private val decileBinSql =
+    (1 to 9).map(k => s"WHEN score <= c$k THEN $k").mkString(" ")
+
   /** Per-doc unigram-LM scores (doc_id, n_tokens, avg_nll) — the q64
     * chain, single-sourced so q119's buckets score with the IDENTICAL
     * model: train a unigram LM on the q24 train split, score every doc
@@ -30,8 +256,7 @@ object TextOps {
     * scanned exactly twice.
     */
   private def unigramNll(s: SparkSession, dir: String): DataFrame = {
-    val d = graft.operators.Sampling.hashSplit(docs(s, dir), "doc_id",
-      "exp1", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
+    val d = exp1Split(docs(s, dir))
     val toks = d.select(col("doc_id"), col("split"),
       explode(words(col("text"))).as("token"))
     val vocab = toks.filter(col("split") === "train")
@@ -57,17 +282,30 @@ object TextOps {
           (col("n_tokens").cast("double") * lit(1e6)), 9).as("avg_nll"))
   }
 
+  /** The q24 'exp1' 80/10/10 train/val/test split
+    * ([[graft.operators.Sampling.hashSplit]]) that the LM, classifier
+    * and corpus-build gates train and evaluate on.
+    */
+  private def exp1Split(df: DataFrame): DataFrame =
+    graft.operators.Sampling.hashSplit(df, "doc_id", "exp1",
+      Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
+
+  /** DuckDB restatement of [[exp1Split]]'s bucket: 4-hex md5-prefix
+    * thresholds, 0.8 → round(.8*65536) = 0xcccd, 0.9 → 0xe666.
+    */
+  private val exp1SplitSql = """CASE WHEN substr(md5('exp1:'||CAST(doc_id AS VARCHAR)),1,4) < 'cccd'
+                THEN 'train'
+              WHEN substr(md5('exp1:'||CAST(doc_id AS VARCHAR)),1,4) < 'e666'
+                THEN 'val'
+              ELSE 'test' END"""
+
   /** DuckDB CTE chain ending in `nll(doc_id, n_tokens, avg_nll)` — the
     * declarative restatement of [[unigramNll]], shared by the q64 and
     * q119 oracles.
     */
-  private val unigramNllSql: String = """
+  private val unigramNllSql: String = s"""
         d AS (SELECT doc_id, text,
-                     CASE WHEN substr(md5('exp1:'||CAST(doc_id AS VARCHAR)),1,4) < 'cccd'
-                            THEN 'train'
-                          WHEN substr(md5('exp1:'||CAST(doc_id AS VARCHAR)),1,4) < 'e666'
-                            THEN 'val'
-                          ELSE 'test' END AS split
+                     $exp1SplitSql AS split
               FROM documents),
         toks AS (SELECT doc_id, split, unnest(string_split(text,' ')) AS token
                  FROM d),
@@ -134,7 +372,7 @@ object TextOps {
     val losers = comps.filter(col("node") =!= col("component"))
       .select(col("node").as("doc_id")).localCheckpoint(true)
     graft.operators.Dedup.release(comps)
-    val sig = graft.operators.Sampling.hashSplit(
+    val sig = exp1Split(
       d.join(losers, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("source"), col("lang"),
           ngramStats(col("text"), 2).as("__st"),
@@ -142,8 +380,7 @@ object TextOps {
         .select(col("doc_id"), col("source"), col("lang"),
           col("__st").getField("n_tokens").as("n_words"),
           col("n_stop"),
-          col("__st").getField("n_distinct").as("n_distinct")),
-      "doc_id", "exp1", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
+          col("__st").getField("n_distinct").as("n_distinct")))
     val keep = col("n_words") >= 20 &&
       (col("n_stop").cast("double") / col("n_words").cast("double")) < 0.3 &&
       (lit(1.0) - col("n_distinct").cast("double") /
@@ -166,9 +403,7 @@ object TextOps {
     */
   private def nbScored(s: SparkSession, dir: String): DataFrame = {
     val lbl = col("source").isin("src1", "src2", "src3")
-    val d = graft.operators.Sampling.hashSplit(
-        docs(s, dir), "doc_id", "exp1",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
+    val d = exp1Split(docs(s, dir))
       .select(col("doc_id"), col("split"), lbl.as("y"), col("text"))
     val toks = d.select(col("doc_id"), col("split"), col("y"),
       explode(words(col("text"))).as("token"))
@@ -206,14 +441,10 @@ object TextOps {
   /** q140's oracle chain through per-doc scores — shared verbatim by
     * the q140 and q203 oracles (ends in `d`, `sc`, `pri`).
     */
-  private val nbScoreCte = """
+  private val nbScoreCte = s"""
         d AS (SELECT doc_id, text,
                           source IN ('src1','src2','src3') AS y,
-                          CASE WHEN substr(md5('exp1:'||CAST(doc_id AS VARCHAR)),1,4) < 'cccd'
-                                 THEN 'train'
-                               WHEN substr(md5('exp1:'||CAST(doc_id AS VARCHAR)),1,4) < 'e666'
-                                 THEN 'val'
-                               ELSE 'test' END AS split
+                          $exp1SplitSql AS split
                    FROM documents),
         toks AS (SELECT doc_id, split, y,
                         unnest(string_split(text,' ')) AS token
@@ -845,8 +1076,7 @@ object TextOps {
         // a different double — the interpolation weights must be the
         // same bits in both engines.
         val (lam, lamC) = (lit(0.7), lit(0.3))
-        val d = graft.operators.Sampling.hashSplit(docs(s, dir), "doc_id",
-          "exp1", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
+        val d = exp1Split(docs(s, dir))
         def bigrams(src: DataFrame): DataFrame = src
           .select(col("doc_id"), explode(
             call_function("word_shingles", words(col("text")), lit(2))).as("g"))
@@ -886,13 +1116,9 @@ object TextOps {
               (col("n_bigrams").cast("double") * lit(1e6)), 9).as("avg_nll"))
           .orderBy("doc_id")
       },
-      Some("""
+      Some(s"""
         WITH d AS (SELECT doc_id, text,
-                     CASE WHEN substr(md5('exp1:'||CAST(doc_id AS VARCHAR)),1,4) < 'cccd'
-                            THEN 'train'
-                          WHEN substr(md5('exp1:'||CAST(doc_id AS VARCHAR)),1,4) < 'e666'
-                            THEN 'val'
-                          ELSE 'test' END AS split
+                     $exp1SplitSql AS split
                    FROM documents),
         bg AS (SELECT doc_id, split, l[i] AS w1, l[i+1] AS w2
                FROM (SELECT doc_id, split, l,
@@ -1067,16 +1293,7 @@ object TextOps {
             floor((col("end_offset") - col("n_tokens")) / budget).as("seq_id"))
           .orderBy("source", "doc_id")
       },
-      Some("""
-        SELECT source, doc_id, n_tokens,
-               CAST(floor((end_offset - n_tokens) / 2048) AS BIGINT) AS seq_id
-        FROM (SELECT source, doc_id,
-                     len(string_split(text,' ')) AS n_tokens,
-                     SUM(len(string_split(text,' '))) OVER (
-                       PARTITION BY source ORDER BY doc_id
-                       ROWS UNBOUNDED PRECEDING) AS end_offset
-              FROM documents)
-        ORDER BY source, doc_id""")),
+      Some(packSql)),
 
     // ---- scale-out packing: the two-pass offsets q44's notes promise ----
     // Identical semantics to q44 (the oracle is the same SQL), computed
@@ -1095,16 +1312,7 @@ object TextOps {
             floor((col("end_offset") - col("n_tokens")) / budget).as("seq_id"))
           .orderBy("source", "doc_id")
       },
-      Some("""
-        SELECT source, doc_id, n_tokens,
-               CAST(floor((end_offset - n_tokens) / 2048) AS BIGINT) AS seq_id
-        FROM (SELECT source, doc_id,
-                     len(string_split(text,' ')) AS n_tokens,
-                     SUM(len(string_split(text,' '))) OVER (
-                       PARTITION BY source ORDER BY doc_id
-                       ROWS UNBOUNDED PRECEDING) AS end_offset
-              FROM documents)
-        ORDER BY source, doc_id""")),
+      Some(packSql)),
 
     // ---- context-window slicing: per-window occupancy (q93) --------------
     // The step AFTER packing: the per-source token stream is cut into
@@ -1521,11 +1729,7 @@ object TextOps {
             AND doc_id NOT IN (SELECT node FROM losers)),
         sp AS (SELECT doc_id, source,
                       len(string_split(text,' ')) AS n_tokens,
-                      CASE WHEN substr(md5('exp1:'||CAST(doc_id AS VARCHAR)),1,4) < 'cccd'
-                             THEN 'train'
-                           WHEN substr(md5('exp1:'||CAST(doc_id AS VARCHAR)),1,4) < 'e666'
-                             THEN 'val'
-                           ELSE 'test' END AS split
+                      $exp1SplitSql AS split
                FROM kept),
         packed AS (SELECT split, source, doc_id, n_tokens,
                           CAST(floor((SUM(n_tokens) OVER (
@@ -1543,23 +1747,18 @@ object TextOps {
     // task retry. 0.8 → round(.8*65536) = 0xcccd, 0.9 → 0xe666.
     QueryDef("q24_hash_split",
       (s, dir) => {
-        graft.operators.Sampling.hashSplit(docs(s, dir), "doc_id", "exp1",
-            Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
+        exp1Split(docs(s, dir))
           .groupBy("split")
           .agg(count(lit(1)).as("n_docs"),
             graft.functions.ColumnLib.exactSum(
               length(col("text")).cast("double")).as("n_chars"))
           .orderBy("split")
       },
-      Some("""
+      Some(s"""
         SELECT split, count(*) AS n_docs,
                CAST(SUM(CAST(length(text) AS DECIMAL(38,6))) AS DOUBLE) AS n_chars
         FROM (SELECT text,
-                CASE WHEN substr(md5('exp1:'||CAST(doc_id AS VARCHAR)),1,4) < 'cccd'
-                       THEN 'train'
-                     WHEN substr(md5('exp1:'||CAST(doc_id AS VARCHAR)),1,4) < 'e666'
-                       THEN 'val'
-                     ELSE 'test' END AS split
+                $exp1SplitSql AS split
               FROM documents)
         GROUP BY split ORDER BY split""")),
 
@@ -1961,65 +2160,15 @@ object TextOps {
     // both engines round identical doubles (q63's discipline).
     QueryDef("q136_bm25",
       (s, dir) => {
-        val terms = Seq("spark", "query", "merge")
-        val ws = words(col("text"))
-        val base = docs(s, dir).select(
-          (col("doc_id") +:
-            size(ws).cast("long").as("dl") +:
-            terms.map(t =>
-              size(filter(ws, x => x === lit(t))).cast("long").as(s"tf_$t"))): _*)
-        val aggCols = count(lit(1)).cast("long").as("n_docs") +:
-          sum(col("dl")).cast("long").as("sum_dl") +:
-          terms.map(t =>
-            sum(when(col(s"tf_$t") > 0, 1L).otherwise(0L)).as(s"df_$t"))
-        val consts = base.agg(aggCols.head, aggCols.tail: _*)
-        val scored = base.crossJoin(broadcast(consts))
-          .withColumn("avgdl",
-            col("sum_dl").cast("double") / col("n_docs").cast("double"))
-        val contrib = terms.map { t =>
-          val tf = col(s"tf_$t").cast("double")
-          val idf = round(log(
-            (col("n_docs").cast("double") - col(s"df_$t") + 0.5) /
-              (col(s"df_$t") + 0.5) + 1.0), 9)
-          idf * (tf * lit(2.2)) /
-            (tf + lit(1.2) * (lit(0.25) +
-              lit(0.75) * col("dl").cast("double") / col("avgdl")))
-        }
-        scored.select(col("doc_id"),
-            round(contrib.reduce(_ + _), 6).as("bm25"))
+        bm25Scan(s, dir, bm25Terms)
+          .select(col("doc_id"), round(col("bm25"), 6).as("bm25"))
           .orderBy(col("bm25").desc, col("doc_id")).limit(25)
       },
-      Some("""
-        WITH base AS (SELECT doc_id, len(string_split(text,' ')) AS dl,
-                             len(list_filter(string_split(text,' '),
-                               x -> x = 'spark')) AS tf_spark,
-                             len(list_filter(string_split(text,' '),
-                               x -> x = 'query')) AS tf_query,
-                             len(list_filter(string_split(text,' '),
-                               x -> x = 'merge')) AS tf_merge
-                      FROM documents),
-        c AS (SELECT count(*) AS n_docs, SUM(dl) AS sum_dl,
-                     SUM(CASE WHEN tf_spark > 0 THEN 1 ELSE 0 END) AS df_spark,
-                     SUM(CASE WHEN tf_query > 0 THEN 1 ELSE 0 END) AS df_query,
-                     SUM(CASE WHEN tf_merge > 0 THEN 1 ELSE 0 END) AS df_merge
-              FROM base)
+      Some(s"""
+        WITH ${bm25StatsCte(bm25Terms)}
         SELECT doc_id,
                round(
-                 round(ln((CAST(n_docs AS DOUBLE) - df_spark + 0.5)
-                          / (df_spark + 0.5) + 1.0), 9)
-                   * (CAST(tf_spark AS DOUBLE) * 2.2)
-                   / (CAST(tf_spark AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-                      CAST(dl AS DOUBLE) / (CAST(sum_dl AS DOUBLE) / n_docs)))
-                 + round(ln((CAST(n_docs AS DOUBLE) - df_query + 0.5)
-                          / (df_query + 0.5) + 1.0), 9)
-                   * (CAST(tf_query AS DOUBLE) * 2.2)
-                   / (CAST(tf_query AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-                      CAST(dl AS DOUBLE) / (CAST(sum_dl AS DOUBLE) / n_docs)))
-                 + round(ln((CAST(n_docs AS DOUBLE) - df_merge + 0.5)
-                          / (df_merge + 0.5) + 1.0), 9)
-                   * (CAST(tf_merge AS DOUBLE) * 2.2)
-                   / (CAST(tf_merge AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-                      CAST(dl AS DOUBLE) / (CAST(sum_dl AS DOUBLE) / n_docs))),
+                 ${bm25Terms.map(bm25TermSql).mkString("\n                 + ")},
                  6) AS bm25
         FROM base, c
         ORDER BY bm25 DESC, doc_id LIMIT 25""")),
@@ -2053,54 +2202,15 @@ object TextOps {
     // Operator: [[graft.operators.TextIndex]].
     QueryDef("q168_inverted_index",
       (s, dir) => {
-        val terms = Seq("spark", "query", "merge")
         val path = sys.props("java.io.tmpdir") +
           s"/graft_tidx_q168_${java.lang.Integer.toHexString(dir.hashCode)}/index"
         graft.operators.TextIndex.write(docs(s, dir), "doc_id", "text", path)
-        graft.operators.TextIndex.searchBM25(s, path, terms, k = 25)
+        graft.operators.TextIndex.searchBM25(s, path, bm25Terms, k = 25)
           .select(col("doc").as("doc_id"), col("bm25"))
       },
-      Some("""
-        WITH base AS (SELECT doc_id, len(string_split(text,' ')) AS dl,
-                             len(list_filter(string_split(text,' '),
-                               x -> x = 'spark')) AS tf_spark,
-                             len(list_filter(string_split(text,' '),
-                               x -> x = 'query')) AS tf_query,
-                             len(list_filter(string_split(text,' '),
-                               x -> x = 'merge')) AS tf_merge
-                      FROM documents),
-        c AS (SELECT count(*) AS n_docs, SUM(dl) AS sum_dl,
-                     SUM(CASE WHEN tf_spark > 0 THEN 1 ELSE 0 END) AS df_spark,
-                     SUM(CASE WHEN tf_query > 0 THEN 1 ELSE 0 END) AS df_query,
-                     SUM(CASE WHEN tf_merge > 0 THEN 1 ELSE 0 END) AS df_merge
-              FROM base)
-        SELECT doc_id,
-               round(CAST(
-                 CAST(round(CASE WHEN tf_spark > 0 THEN
-                   round(ln((CAST(n_docs AS DOUBLE) - df_spark + 0.5)
-                            / (df_spark + 0.5) + 1.0), 9)
-                     * (CAST(tf_spark AS DOUBLE) * 2.2)
-                     / (CAST(tf_spark AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-                        CAST(dl AS DOUBLE) / (CAST(sum_dl AS DOUBLE) / n_docs)))
-                   ELSE 0 END, 9) AS DECIMAL(38,18))
-                 + CAST(round(CASE WHEN tf_query > 0 THEN
-                   round(ln((CAST(n_docs AS DOUBLE) - df_query + 0.5)
-                            / (df_query + 0.5) + 1.0), 9)
-                     * (CAST(tf_query AS DOUBLE) * 2.2)
-                     / (CAST(tf_query AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-                        CAST(dl AS DOUBLE) / (CAST(sum_dl AS DOUBLE) / n_docs)))
-                   ELSE 0 END, 9) AS DECIMAL(38,18))
-                 + CAST(round(CASE WHEN tf_merge > 0 THEN
-                   round(ln((CAST(n_docs AS DOUBLE) - df_merge + 0.5)
-                            / (df_merge + 0.5) + 1.0), 9)
-                     * (CAST(tf_merge AS DOUBLE) * 2.2)
-                     / (CAST(tf_merge AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-                        CAST(dl AS DOUBLE) / (CAST(sum_dl AS DOUBLE) / n_docs)))
-                   ELSE 0 END, 9) AS DECIMAL(38,18))
-               AS DOUBLE), 6) AS bm25
-        FROM base, c
-        WHERE tf_spark > 0 OR tf_query > 0 OR tf_merge > 0
-        ORDER BY bm25 DESC, doc_id LIMIT 25""")),
+      Some(s"""
+        WITH ${bm25StatsCte(bm25Terms)}
+        ${bm25TopSql(bm25Terms, 25)}""")),
 
     // ---- conjunctive BM25 serving (q192) --------------------------------
     // q168's index serving with AND semantics: only documents
@@ -2119,37 +2229,9 @@ object TextOps {
         graft.operators.TextIndex.searchBM25All(s, path, terms, k = 25)
           .select(col("doc").as("doc_id"), col("bm25"))
       },
-      Some("""
-        WITH base AS (SELECT doc_id, len(string_split(text,' ')) AS dl,
-                             len(list_filter(string_split(text,' '),
-                               x -> x = 'spark')) AS tf_spark,
-                             len(list_filter(string_split(text,' '),
-                               x -> x = 'merge')) AS tf_merge
-                      FROM documents),
-        c AS (SELECT count(*) AS n_docs, SUM(dl) AS sum_dl,
-                     SUM(CASE WHEN tf_spark > 0 THEN 1 ELSE 0 END) AS df_spark,
-                     SUM(CASE WHEN tf_merge > 0 THEN 1 ELSE 0 END) AS df_merge
-              FROM base)
-        SELECT doc_id,
-               round(CAST(
-                 CAST(round(
-                   round(ln((CAST(n_docs AS DOUBLE) - df_spark + 0.5)
-                            / (df_spark + 0.5) + 1.0), 9)
-                     * (CAST(tf_spark AS DOUBLE) * 2.2)
-                     / (CAST(tf_spark AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-                        CAST(dl AS DOUBLE) / (CAST(sum_dl AS DOUBLE) / n_docs)))
-                   , 9) AS DECIMAL(38,18))
-                 + CAST(round(
-                   round(ln((CAST(n_docs AS DOUBLE) - df_merge + 0.5)
-                            / (df_merge + 0.5) + 1.0), 9)
-                     * (CAST(tf_merge AS DOUBLE) * 2.2)
-                     / (CAST(tf_merge AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-                        CAST(dl AS DOUBLE) / (CAST(sum_dl AS DOUBLE) / n_docs)))
-                   , 9) AS DECIMAL(38,18))
-               AS DOUBLE), 6) AS bm25
-        FROM base, c
-        WHERE tf_spark > 0 AND tf_merge > 0
-        ORDER BY bm25 DESC, doc_id LIMIT 25""")),
+      Some(s"""
+        WITH ${bm25StatsCte(Seq("spark", "merge"))}
+        ${bm25TopSql(Seq("spark", "merge"), 25, conjunctive = true)}""")),
 
     // ---- index erasure: tombstone delete ≡ rebuild-without (q201) --------
     // The right-to-be-forgotten story carried into SERVING state
@@ -2163,58 +2245,18 @@ object TextOps {
     // rewrites a shard); compaction removes the bytes later.
     QueryDef("q201_index_erasure",
       (s, dir) => {
-        val terms = Seq("spark", "query", "merge")
         val path = sys.props("java.io.tmpdir") +
           s"/graft_tidx_q201_${java.lang.Integer.toHexString(dir.hashCode)}/index"
         val d = docs(s, dir)
         graft.operators.TextIndex.write(d, "doc_id", "text", path)
         graft.operators.TextIndex.delete(s, path,
           d.filter(col("doc_id") % 7 === 0).select("doc_id"), "gdpr1")
-        graft.operators.TextIndex.searchBM25(s, path, terms, k = 25)
+        graft.operators.TextIndex.searchBM25(s, path, bm25Terms, k = 25)
           .select(col("doc").as("doc_id"), col("bm25"))
       },
-      Some("""
-        WITH base AS (SELECT doc_id, len(string_split(text,' ')) AS dl,
-                             len(list_filter(string_split(text,' '),
-                               x -> x = 'spark')) AS tf_spark,
-                             len(list_filter(string_split(text,' '),
-                               x -> x = 'query')) AS tf_query,
-                             len(list_filter(string_split(text,' '),
-                               x -> x = 'merge')) AS tf_merge
-                      FROM documents
-                      WHERE doc_id % 7 <> 0),
-        c AS (SELECT count(*) AS n_docs, SUM(dl) AS sum_dl,
-                     SUM(CASE WHEN tf_spark > 0 THEN 1 ELSE 0 END) AS df_spark,
-                     SUM(CASE WHEN tf_query > 0 THEN 1 ELSE 0 END) AS df_query,
-                     SUM(CASE WHEN tf_merge > 0 THEN 1 ELSE 0 END) AS df_merge
-              FROM base)
-        SELECT doc_id,
-               round(CAST(
-                 CAST(round(CASE WHEN tf_spark > 0 THEN
-                   round(ln((CAST(n_docs AS DOUBLE) - df_spark + 0.5)
-                            / (df_spark + 0.5) + 1.0), 9)
-                     * (CAST(tf_spark AS DOUBLE) * 2.2)
-                     / (CAST(tf_spark AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-                        CAST(dl AS DOUBLE) / (CAST(sum_dl AS DOUBLE) / n_docs)))
-                   ELSE 0 END, 9) AS DECIMAL(38,18))
-                 + CAST(round(CASE WHEN tf_query > 0 THEN
-                   round(ln((CAST(n_docs AS DOUBLE) - df_query + 0.5)
-                            / (df_query + 0.5) + 1.0), 9)
-                     * (CAST(tf_query AS DOUBLE) * 2.2)
-                     / (CAST(tf_query AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-                        CAST(dl AS DOUBLE) / (CAST(sum_dl AS DOUBLE) / n_docs)))
-                   ELSE 0 END, 9) AS DECIMAL(38,18))
-                 + CAST(round(CASE WHEN tf_merge > 0 THEN
-                   round(ln((CAST(n_docs AS DOUBLE) - df_merge + 0.5)
-                            / (df_merge + 0.5) + 1.0), 9)
-                     * (CAST(tf_merge AS DOUBLE) * 2.2)
-                     / (CAST(tf_merge AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-                        CAST(dl AS DOUBLE) / (CAST(sum_dl AS DOUBLE) / n_docs)))
-                   ELSE 0 END, 9) AS DECIMAL(38,18))
-               AS DOUBLE), 6) AS bm25
-        FROM base, c
-        WHERE tf_spark > 0 OR tf_query > 0 OR tf_merge > 0
-        ORDER BY bm25 DESC, doc_id LIMIT 25""")),
+      Some(s"""
+        WITH ${bm25StatsCte(bm25Terms, where = " WHERE doc_id % 7 <> 0")}
+        ${bm25TopSql(bm25Terms, 25)}""")),
 
     QueryDef("q140_nb_classifier",
       (s, dir) => {
@@ -2255,13 +2297,7 @@ object TextOps {
       (s, dir) => {
         val t = nbScored(s, dir).filter(col("split") === "test")
           .select(col("doc_id"), col("y"), col("score_fp").as("score"))
-        val cutCols = (1 to 9).map(k => expr(
-          s"percentile_disc(0.${k}) WITHIN GROUP (ORDER BY score)").as(s"c$k"))
-        val cuts = t.agg(cutCols.head, cutCols.tail: _*)
-        val bin = (1 to 9).foldRight(lit(10): Column)((k, rest) =>
-          when(col("score") <= col(s"c$k"), k).otherwise(rest))
-        t.crossJoin(broadcast(cuts))
-          .withColumn("bin", bin.cast("long"))
+        decileBins(t)
           .groupBy("bin")
           .agg(count(lit(1)).as("n"),
             sum(when(col("y"), 1L).otherwise(0L)).as("n_pos"),
@@ -2272,13 +2308,7 @@ object TextOps {
             col("lo_fp"), col("hi_fp"))
           .orderBy("bin")
       },
-      Some {
-        val cutsSelect = (1 to 9).map(k =>
-          s"max(CASE WHEN rn <= ceil(n * 0.$k) THEN score END) AS c$k")
-          .mkString(", ")
-        val binCase = (1 to 9).map(k =>
-          s"WHEN score <= c$k THEN $k").mkString(" ")
-        s"""
+      Some(s"""
         WITH $nbScoreCte,
         t AS (SELECT d.doc_id, d.y,
                      coalesce(sc.dot_fp, 0) + pri.prior_fp AS score
@@ -2287,8 +2317,8 @@ object TextOps {
         r AS (SELECT score, row_number() OVER (ORDER BY score) AS rn,
                      count(*) OVER () AS n
               FROM t),
-        cuts AS (SELECT $cutsSelect FROM r),
-        binned AS (SELECT t.y, t.score, CASE $binCase ELSE 10 END AS bin
+        cuts AS (SELECT $decileCutsSql FROM r),
+        binned AS (SELECT t.y, t.score, CASE $decileBinSql ELSE 10 END AS bin
                    FROM t, cuts)
         SELECT CAST(bin AS BIGINT) AS bin, CAST(count(*) AS BIGINT) AS n,
                CAST(SUM(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
@@ -2296,8 +2326,7 @@ object TextOps {
                      CAST(count(*) AS DOUBLE), 9) AS pos_rate,
                CAST(min(score) AS BIGINT) AS lo_fp,
                CAST(max(score) AS BIGINT) AS hi_fp
-        FROM binned GROUP BY 1 ORDER BY 1"""
-      }),
+        FROM binned GROUP BY 1 ORDER BY 1""")),
 
     // ---- stable vocabulary: frozen ids + append-only growth (q204) -------
     // The id-assignment artifact a tokenizer pipeline freezes
@@ -2476,36 +2505,23 @@ object TextOps {
       (s, dir) => {
         val base = docs(s, dir)
           .select(col("doc_id"), length(col("text")).cast("long").as("score"))
-        val cutCols = (1 to 9).map(k => expr(
-          s"percentile_disc(0.${k}) WITHIN GROUP (ORDER BY score)").as(s"c$k"))
-        val cuts = base.agg(cutCols.head, cutCols.tail: _*)
-        val bin = (1 to 9).foldRight(lit(10): Column)((k, rest) =>
-          when(col("score") <= col(s"c$k"), k).otherwise(rest))
-        base.crossJoin(broadcast(cuts))
-          .withColumn("bin", bin.cast("long"))
+        decileBins(base)
           .groupBy("bin")
           .agg(count(lit(1)).as("n"), min(col("score")).as("lo"),
             max(col("score")).as("hi"))
           .orderBy("bin")
       },
-      Some {
-        val cutsSelect = (1 to 9).map(k =>
-          s"max(CASE WHEN rn <= ceil(n * 0.$k) THEN score END) AS c$k")
-          .mkString(", ")
-        val binCase = (1 to 9).map(k =>
-          s"WHEN score <= c$k THEN $k").mkString(" ")
-        s"""
+      Some(s"""
         WITH b AS (SELECT doc_id, len(text) AS score FROM documents),
         r AS (SELECT score, row_number() OVER (ORDER BY score) AS rn,
                      count(*) OVER () AS n
               FROM b),
-        cuts AS (SELECT $cutsSelect FROM r),
-        binned AS (SELECT score, CASE $binCase ELSE 10 END AS bin
+        cuts AS (SELECT $decileCutsSql FROM r),
+        binned AS (SELECT score, CASE $decileBinSql ELSE 10 END AS bin
                    FROM b, cuts)
         SELECT CAST(bin AS BIGINT) AS bin, CAST(count(*) AS BIGINT) AS n,
                CAST(min(score) AS BIGINT) AS lo, CAST(max(score) AS BIGINT) AS hi
-        FROM binned GROUP BY 1 ORDER BY 1"""
-      }),
+        FROM binned GROUP BY 1 ORDER BY 1""")),
 
     // ---- per-group z-score normalization (q143) -------------------------
     // The feature-scaling transform (normalize a metric within its
@@ -3020,128 +3036,23 @@ object TextOps {
     // the portability lesson of q180/q213 applied to eval metrics.
     QueryDef("q215_retrieval_eval",
       (s, dir) => {
-        val queries = Seq(
-          "spark query merge", "join hash scan", "stream window batch")
         // The three per-query eval subtrees are independent and each
         // contains a blocking grade-table cut — build them concurrently
         // (guide §2.6; the q171/q205 posture, gated fork).
-        val perQuery = queries.map { q => graft.functions.ColumnLib.fork(s) {
+        val perQuery = evalQueries.map { q => graft.functions.ColumnLib.fork(s) {
           val terms = q.split(' ').toSeq
-          val ws = words(col("text"))
-          val base = docs(s, dir).select(
-            (col("doc_id") +:
-              size(ws).cast("long").as("dl") +:
-              terms.zipWithIndex.map { case (t, i) =>
-                size(filter(ws, x => x === lit(t))).cast("long").as(s"tf_$i")
-              }): _*)
-          val aggCols = count(lit(1)).cast("long").as("n_docs") +:
-            sum(col("dl")).cast("long").as("sum_dl") +:
-            terms.indices.map(i =>
-              sum(when(col(s"tf_$i") > 0, 1L).otherwise(0L)).as(s"df_$i"))
-          val consts = base.agg(aggCols.head, aggCols.tail: _*)
-          val graded = base.crossJoin(broadcast(consts))
-            .withColumn("avgdl",
-              col("sum_dl").cast("double") / col("n_docs").cast("double"))
-            .withColumn("bm25", terms.indices.map { i =>
-              val tf = col(s"tf_$i").cast("double")
-              val idf = round(log(
-                (col("n_docs").cast("double") - col(s"df_$i") + 0.5) /
-                  (col(s"df_$i") + 0.5) + 1.0), 9)
-              idf * (tf * lit(2.2)) /
-                (tf + lit(1.2) * (lit(0.25) +
-                  lit(0.75) * col("dl").cast("double") / col("avgdl")))
-            }.reduce(_ + _))
+          val graded = bm25Scan(s, dir, terms)
             .withColumn("grade", terms.indices.map(i =>
               when(col(s"tf_$i") > 0, 1L).otherwise(0L)).reduce(_ + _))
             .select("doc_id", "bm25", "grade")
             .localCheckpoint(true) // retrieved top-10 AND ideal read it
-          val top = graded
-            .orderBy(col("bm25").desc, col("doc_id")).limit(10)
-            .withColumn("rank", row_number().over(
-              org.apache.spark.sql.expressions.Window
-                .orderBy(col("bm25").desc, col("doc_id"))))
-            .withColumn("w", floor(lit(27720) / (col("rank") + 1))
-              .cast("long"))
-          val ideal = graded
-            .orderBy(col("grade").desc, col("doc_id")).limit(10)
-            .withColumn("rank", row_number().over(
-              org.apache.spark.sql.expressions.Window
-                .orderBy(col("grade").desc, col("doc_id"))))
-            .agg(sum(col("grade") *
-              floor(lit(27720) / (col("rank") + 1)).cast("long"))
-              .as("idcg_scaled"))
-          top.agg(
-              sum(when(col("grade") > 0, 1L).otherwise(0L)).as("p10_hits"),
-              coalesce(floor(lit(27720) /
-                min(when(col("grade") > 0, col("rank")))).cast("long"),
-                lit(0L)).as("mrr_scaled"),
-              sum(col("grade") * col("w")).as("dcg_scaled"))
-            .crossJoin(ideal)
-            .select(lit(q).as("query"), col("p10_hits"), col("mrr_scaled"),
-              col("dcg_scaled"), col("idcg_scaled"),
-              when(col("idcg_scaled") > 0,
-                floor(col("dcg_scaled").cast("double") * 1000000.0 /
-                  col("idcg_scaled").cast("double")).cast("long"))
-                .otherwise(0L).as("ndcg_micro"))
+          retrievalEvalRow(q,
+            graded.orderBy(col("bm25").desc, col("doc_id")).limit(10),
+            graded)
         } }.map(_())
         perQuery.reduce(_ unionByName _).orderBy("query")
       },
-      Some {
-        def block(q: String): String = {
-          val terms = q.split(' ').toSeq
-          val tfCols = terms.zipWithIndex.map { case (t, i) =>
-            s"len(list_filter(string_split(text,' '), x -> x = '$t')) AS tf_$i"
-          }.mkString(", ")
-          val dfCols = terms.indices.map(i =>
-            s"CAST(SUM(CASE WHEN tf_$i > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_$i")
-            .mkString(", ")
-          val bm25 = terms.indices.map(i =>
-            s"""round(ln((CAST(n_docs AS DOUBLE) - df_$i + 0.5)
-                 / (df_$i + 0.5) + 1.0), 9)
-               * (CAST(tf_$i AS DOUBLE) * 2.2)
-               / (CAST(tf_$i AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-                  CAST(dl AS DOUBLE) / (CAST(sum_dl AS DOUBLE) / n_docs)))""")
-            .mkString(" + ")
-          val grade = terms.indices.map(i =>
-            s"(CASE WHEN tf_$i > 0 THEN 1 ELSE 0 END)").mkString(" + ")
-          s"""(
-          WITH base AS (SELECT doc_id, len(string_split(text,' ')) AS dl,
-                               $tfCols
-                        FROM documents),
-          c AS (SELECT count(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS sum_dl, $dfCols
-                FROM base),
-          g AS (SELECT doc_id, $bm25 AS bm25,
-                       CAST($grade AS BIGINT) AS grade
-                FROM base, c),
-          top AS (SELECT doc_id, grade,
-                         row_number() OVER (ORDER BY bm25 DESC, doc_id)
-                           AS rnk
-                  FROM g ORDER BY bm25 DESC, doc_id LIMIT 10),
-          ideal AS (SELECT grade,
-                           row_number() OVER (ORDER BY grade DESC, doc_id)
-                             AS rnk
-                    FROM g ORDER BY grade DESC, doc_id LIMIT 10),
-          idcg AS (SELECT CAST(SUM(grade * (27720 // (rnk + 1))) AS BIGINT)
-                     AS idcg_scaled FROM ideal),
-          m AS (SELECT CAST(SUM(CASE WHEN grade > 0 THEN 1 ELSE 0 END) AS BIGINT)
-                         AS p10_hits,
-                       COALESCE(27720 // MIN(CASE WHEN grade > 0
-                         THEN rnk END), 0) AS mrr_scaled,
-                       CAST(SUM(grade * (27720 // (rnk + 1))) AS BIGINT) AS dcg_scaled
-                FROM top)
-          SELECT '$q' AS query, CAST(p10_hits AS BIGINT) AS p10_hits,
-                 CAST(mrr_scaled AS BIGINT) AS mrr_scaled,
-                 CAST(dcg_scaled AS BIGINT) AS dcg_scaled,
-                 CAST(idcg_scaled AS BIGINT) AS idcg_scaled,
-                 CASE WHEN idcg_scaled > 0
-                   THEN CAST(floor(CAST(dcg_scaled AS DOUBLE) * 1000000.0
-                     / CAST(idcg_scaled AS DOUBLE)) AS BIGINT)
-                   ELSE 0 END AS ndcg_micro
-          FROM m, idcg)"""
-        }
-        Seq("spark query merge", "join hash scan", "stream window batch")
-          .map(block).mkString(" UNION ALL ") + " ORDER BY query"
-      }),
+      Some(retrievalEvalSql)),
 
     // ---- retrieval eval SERVED THROUGH THE INDEX (q216) ------------------
     // q215 scores its three queries by a brute corpus scan; a real
@@ -3161,15 +3072,13 @@ object TextOps {
     // the ideal — eval bookkeeping, not the serving path.
     QueryDef("q216_retrieval_eval_served",
       (s, dir) => {
-        val queries = Seq(
-          "spark query merge", "join hash scan", "stream window batch")
         val path = sys.props("java.io.tmpdir") +
           s"/graft_tidx_q216_${java.lang.Integer.toHexString(dir.hashCode)}/index"
         graft.operators.TextIndex.write(docs(s, dir), "doc_id", "text", path)
         // The three per-query eval subtrees are independent and each
         // contains a blocking grade-table cut — build them concurrently
         // (guide §2.6; the q171/q205 posture, gated fork).
-        val perQuery = queries.map { q => graft.functions.ColumnLib.fork(s) {
+        val perQuery = evalQueries.map { q => graft.functions.ColumnLib.fork(s) {
           val terms = q.split(' ').toSeq
           val served = graft.operators.TextIndex
             .searchBM25(s, path, terms, k = 10)
@@ -3180,93 +3089,10 @@ object TextOps {
               when(size(filter(ws, x => x === lit(t))) > 0, 1L)
                 .otherwise(0L)).reduce(_ + _).as("grade"))
             .localCheckpoint(true) // served top-10 grading AND the ideal
-          val top = served.join(graded, "doc_id")
-            .withColumn("rank", row_number().over(
-              org.apache.spark.sql.expressions.Window
-                .orderBy(col("bm25").desc, col("doc_id"))))
-            .withColumn("w", floor(lit(27720) / (col("rank") + 1))
-              .cast("long"))
-          val ideal = graded
-            .orderBy(col("grade").desc, col("doc_id")).limit(10)
-            .withColumn("rank", row_number().over(
-              org.apache.spark.sql.expressions.Window
-                .orderBy(col("grade").desc, col("doc_id"))))
-            .agg(sum(col("grade") *
-              floor(lit(27720) / (col("rank") + 1)).cast("long"))
-              .as("idcg_scaled"))
-          top.agg(
-              sum(when(col("grade") > 0, 1L).otherwise(0L)).as("p10_hits"),
-              coalesce(floor(lit(27720) /
-                min(when(col("grade") > 0, col("rank")))).cast("long"),
-                lit(0L)).as("mrr_scaled"),
-              sum(col("grade") * col("w")).as("dcg_scaled"))
-            .crossJoin(ideal)
-            .select(lit(q).as("query"), col("p10_hits"), col("mrr_scaled"),
-              col("dcg_scaled"), col("idcg_scaled"),
-              when(col("idcg_scaled") > 0,
-                floor(col("dcg_scaled").cast("double") * 1000000.0 /
-                  col("idcg_scaled").cast("double")).cast("long"))
-                .otherwise(0L).as("ndcg_micro"))
+          retrievalEvalRow(q, served.join(graded, "doc_id"), graded)
         } }.map(_())
         perQuery.reduce(_ unionByName _).orderBy("query")
       },
-      Some {
-        // q215's scan-side oracle, verbatim: parity with the serving
-        // path is exactly what this gate asserts.
-        def block(q: String): String = {
-          val terms = q.split(' ').toSeq
-          val tfCols = terms.zipWithIndex.map { case (t, i) =>
-            s"len(list_filter(string_split(text,' '), x -> x = '$t')) AS tf_$i"
-          }.mkString(", ")
-          val dfCols = terms.indices.map(i =>
-            s"CAST(SUM(CASE WHEN tf_$i > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_$i")
-            .mkString(", ")
-          val bm25 = terms.indices.map(i =>
-            s"""round(ln((CAST(n_docs AS DOUBLE) - df_$i + 0.5)
-                 / (df_$i + 0.5) + 1.0), 9)
-               * (CAST(tf_$i AS DOUBLE) * 2.2)
-               / (CAST(tf_$i AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-                  CAST(dl AS DOUBLE) / (CAST(sum_dl AS DOUBLE) / n_docs)))""")
-            .mkString(" + ")
-          val grade = terms.indices.map(i =>
-            s"(CASE WHEN tf_$i > 0 THEN 1 ELSE 0 END)").mkString(" + ")
-          s"""(
-          WITH base AS (SELECT doc_id, len(string_split(text,' ')) AS dl,
-                               $tfCols
-                        FROM documents),
-          c AS (SELECT count(*) AS n_docs, CAST(SUM(dl) AS BIGINT) AS sum_dl, $dfCols
-                FROM base),
-          g AS (SELECT doc_id, $bm25 AS bm25,
-                       CAST($grade AS BIGINT) AS grade
-                FROM base, c),
-          top AS (SELECT doc_id, grade,
-                         row_number() OVER (ORDER BY bm25 DESC, doc_id)
-                           AS rnk
-                  FROM g ORDER BY bm25 DESC, doc_id LIMIT 10),
-          ideal AS (SELECT grade,
-                           row_number() OVER (ORDER BY grade DESC, doc_id)
-                             AS rnk
-                    FROM g ORDER BY grade DESC, doc_id LIMIT 10),
-          idcg AS (SELECT CAST(SUM(grade * (27720 // (rnk + 1))) AS BIGINT)
-                     AS idcg_scaled FROM ideal),
-          m AS (SELECT CAST(SUM(CASE WHEN grade > 0 THEN 1 ELSE 0 END) AS BIGINT)
-                         AS p10_hits,
-                       COALESCE(27720 // MIN(CASE WHEN grade > 0
-                         THEN rnk END), 0) AS mrr_scaled,
-                       CAST(SUM(grade * (27720 // (rnk + 1))) AS BIGINT) AS dcg_scaled
-                FROM top)
-          SELECT '$q' AS query, CAST(p10_hits AS BIGINT) AS p10_hits,
-                 CAST(mrr_scaled AS BIGINT) AS mrr_scaled,
-                 CAST(dcg_scaled AS BIGINT) AS dcg_scaled,
-                 CAST(idcg_scaled AS BIGINT) AS idcg_scaled,
-                 CASE WHEN idcg_scaled > 0
-                   THEN CAST(floor(CAST(dcg_scaled AS DOUBLE) * 1000000.0
-                     / CAST(idcg_scaled AS DOUBLE)) AS BIGINT)
-                   ELSE 0 END AS ndcg_micro
-          FROM m, idcg)"""
-        }
-        Seq("spark query merge", "join hash scan", "stream window batch")
-          .map(block).mkString(" UNION ALL ") + " ORDER BY query"
-      }))
+      Some(retrievalEvalSql)))
 
 }

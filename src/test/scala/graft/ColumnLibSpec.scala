@@ -79,25 +79,6 @@ class ColumnLibSpec extends SparkSpec {
     assert(s1 == s2)
   }
 
-  test("widen widens a narrow input, no-ops on wide, honors the gate") {
-    val target = spark.sessionState.conf.numShufflePartitions
-    val narrow = df("v BIGINT", (1 to 64).map(i => Row(Long.box(i))): _*)
-      .coalesce(1)
-    // Default OFF since round 16 (the order-corrected A/B rejected the
-    // widen-by-default posture): a bare call passes through.
-    assert(widen(narrow) eq narrow, "widen must be a no-op by default")
-    spark.conf.set("spark.graft.widenNarrowScans", "true")
-    try {
-      assert(widen(narrow).rdd.getNumPartitions == target,
-        "a 1-partition input must widen to the session parallelism")
-      val wide = df("v BIGINT", (1 to 64).map(i => Row(Long.box(i))): _*)
-        .repartition(target)
-      assert(widen(wide) eq wide, "an already-wide input must pass through")
-      // Row preservation: widening must never change the row multiset.
-      assert(rowSet(widen(narrow)) == rowSet(narrow))
-    } finally spark.conf.unset("spark.graft.widenNarrowScans")
-  }
-
   test("widenMaterialized spreads a 1-partition checkpoint, no-ops on wide") {
     val target = spark.sessionState.conf.numShufflePartitions
     val narrow = df("v BIGINT", (1 to 64).map(i => Row(Long.box(i))): _*)

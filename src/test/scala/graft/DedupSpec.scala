@@ -381,24 +381,19 @@ class DedupSpec extends SparkSpec {
     assert(comp.size == 10)
   }
 
-  test("connectedComponents: fused convergence detection matches the probe path") {
+  test("connectedComponents: fused convergence labels a path plus a triangle by component minimum") {
     // Path graph (worst case for round count) plus a triangle: the
-    // fused path (Observation on the checkpoint job) must converge in
-    // the same rounds to the same labels as the join-probe path.
+    // convergence count (an Observation on each round's checkpoint job)
+    // must not stop the loop before every node carries its component's
+    // minimum id.
     val pairs = df("id1 BIGINT, id2 BIGINT",
       ((0L until 9L).map(i => Row(Long.box(i), Long.box(i + 1))) :+
         Row(Long.box(30), Long.box(31)) :+ Row(Long.box(31), Long.box(32)) :+
         Row(Long.box(30), Long.box(32))): _*)
-    val fused = Dedup.connectedComponents(pairs)
+    val comp = Dedup.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    spark.conf.set("spark.graft.ccFusedConvergence", "false")
-    try {
-      val probed = Dedup.connectedComponents(pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(fused == probed,
-        "fused and probe convergence must produce identical components")
-    } finally spark.conf.set("spark.graft.ccFusedConvergence", "true")
-    assert(fused.values.toSet == Set(0L, 30L))
+    assert(comp == (0L to 9L).map(_ -> 0L).toMap ++
+      Seq(30L, 31L, 32L).map(_ -> 30L))
   }
 
   test("lshCandidatePairs: repeated input ids never emit self-pairs") {
