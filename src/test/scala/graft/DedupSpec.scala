@@ -381,18 +381,31 @@ class DedupSpec extends SparkSpec {
     assert(comp.size == 10)
   }
 
-  test("connectedComponents: fused convergence labels a path plus a triangle by component minimum") {
+  test("connectedComponents: fused convergence detection matches the probe path") {
     // Path graph (worst case for round count) plus a triangle: the
     // convergence count (an Observation on each round's checkpoint job)
     // must not stop the loop before every node carries its component's
-    // minimum id.
+    // minimum id. The probe is a plain local label propagation over the
+    // same edges, run to a fixed point.
+    val edges = ((0L until 9L).map(i => i -> (i + 1))) ++
+      Seq(30L -> 31L, 31L -> 32L, 30L -> 32L)
     val pairs = df("id1 BIGINT, id2 BIGINT",
-      ((0L until 9L).map(i => Row(Long.box(i), Long.box(i + 1))) :+
-        Row(Long.box(30), Long.box(31)) :+ Row(Long.box(31), Long.box(32)) :+
-        Row(Long.box(30), Long.box(32))): _*)
-    val comp = Dedup.connectedComponents(pairs)
+      edges.map { case (a, b) => Row(Long.box(a), Long.box(b)) }: _*)
+    val fused = Dedup.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(comp == (0L to 9L).map(_ -> 0L).toMap ++
+    var probed = edges.flatMap { case (a, b) => Seq(a -> a, b -> b) }.toMap
+    var changed = true
+    while (changed) {
+      val next = edges.foldLeft(probed) { case (m, (a, b)) =>
+        val lo = math.min(m(a), m(b))
+        m.updated(a, lo).updated(b, lo)
+      }
+      changed = next != probed
+      probed = next
+    }
+    assert(fused == probed,
+      "fused convergence and the probe must produce identical components")
+    assert(fused == (0L to 9L).map(_ -> 0L).toMap ++
       Seq(30L, 31L, 32L).map(_ -> 30L))
   }
 
