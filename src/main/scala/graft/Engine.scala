@@ -9,20 +9,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Engine {
 
-  /** Engine defaults, applied on top of any master/cores choice.
-    *
-    *  - non-ANSI: the reference's SAFE_CAST / pandas-coercion semantics
-    *    (reference runner.py:171, api.py:109-127) are permissive.
-    *  - AQE on: runtime coalescing + skew-join splitting is the 100 TB
-    *    answer to skewed keys (SURVEY.md §4).
-    *  - dynamic partition overwrite: the MERGE rewrite path
-    *    ([[operators.Upsert.applyToPartitionedParquet]]) must replace only
-    *    the partitions it touched.
-    *  - nanosAsLong: the fixture `events` table carries parquet
-    *    TIMESTAMP(NANOS), which Spark's reader otherwise rejects
-    *    (PARQUET_TYPE_ILLEGAL); we read the raw int64 and convert in
-    *    [[Tables.table]].
-    */
   /** Engine extensions: native codegen'd expressions registered as SQL
     * functions (callable via `call_function` / `expr` / plain SQL).
     */
@@ -113,7 +99,20 @@ object Engine {
     */
   val CodegenCacheEntries = 1000
 
-  /** The engine's session builder.
+  /** The engine's session builder. Engine defaults, applied on top of
+    * any master/cores choice:
+    *
+    *  - non-ANSI: the reference's SAFE_CAST / pandas-coercion semantics
+    *    (reference runner.py:171, api.py:109-127) are permissive.
+    *  - AQE on: runtime coalescing + skew-join splitting is the 100 TB
+    *    answer to skewed keys (SURVEY.md §4).
+    *  - dynamic partition overwrite: the MERGE rewrite path
+    *    ([[operators.Upsert.applyToPartitionedParquet]]) must replace only
+    *    the partitions it touched.
+    *  - nanosAsLong: the fixture `events` table carries parquet
+    *    TIMESTAMP(NANOS), which Spark's reader otherwise rejects
+    *    (PARQUET_TYPE_ILLEGAL); we read the raw int64 and convert in
+    *    [[Tables.table]].
     *
     * Which master wins, in order:
     *  1. an already-running SparkContext — `getOrCreate` reuses it and
@@ -148,28 +147,14 @@ object Engine {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing floor, stock default. Round-15 swept 1m→1k:
-      // order-corrected same-JVM A/Bs showed NO reproducible net win
-      // (heavy gates ~0.95, cheap tail ~1.1-1.6 at small floors, full
-      // suite 1.00) — the apparent early wins were run-order warmth
-      // bias (OPTIMIZATION_r15.md "Measurement honesty"). The knob
-      // stays: a deploy whose post-shuffle stages are byte-light but
-      // CPU-dense (decimal over posexplode) can lower it per workload.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1m"))
+      // AQE coalescing floor, stock: smaller floors measured no net win
+      // in order-corrected A/Bs (OPTIMIZATION_r15.md "Measurement honesty").
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      // Output committer algorithm, stock default (v1). Round-15
-      // A/B'd v2 (task-commit renames, no serial job-commit merge):
-      // the naive same-JVM A/B said 0.87, the order-REVERSED A/B said
-      // v1 0.78 — i.e. whatever ran second won, and the order-corrected
-      // A/B landed at 1.09. No proven win at 16-32 dirs/write, so the
-      // safer v1 stays; the knob remains for deploys with hundreds of
-      // partition dirs per write, where v2's parallel task-commit
-      // renames do matter (this engine tolerates v2's weaker
-      // job-failure atomicity — index writes commit via ledger rows,
-      // compacts via rewriteInPlace's directory swap).
+      // Output committer v1, stock: v2 measured 1.09x slower order-corrected
+      // (OPTIMIZATION_r15.md), and v1 keeps job-failure atomicity.
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        sys.env.getOrElse("SPARK_GRAFT_COMMITTER_ALGO", "1"))
+        "1")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Managed-table warehouse (bucketed tables) outside the repo; a
       // cluster deployment overrides this to its real warehouse path.

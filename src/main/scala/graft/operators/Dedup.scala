@@ -263,57 +263,15 @@ object Dedup {
   // build/append/compact lifecycle and crash contract as the vector
   // ([[Similarity.ivfAppend]]) and text ([[TextIndex.append]]) indexes.
 
-  private val bandMetaSchema =
-    "batch STRING, n_bands LONG, n_shards INT, k INT, n INT, band_width INT"
-
-  private case class BandMeta(k: Int, n: Int, bandWidth: Int, nShards: Int,
-    batches: Set[String])
-
-  /** Ledger of a persisted band index: freezes the SIGNATURE GEOMETRY
-    * (k, n, bandWidth — a probe or append hashed with different
-    * parameters would silently produce garbage candidates) and the
-    * shard modulus, plus one row per committed batch (the
-    * [[graft.operators.TextIndex]] commit protocol). One row per
-    * batch — bounded, broadcast-sized.
+  /** The ledger freezes the SIGNATURE GEOMETRY (k, n, band_width) and
+    * the shard modulus: a probe or append hashed with other values
+    * would silently produce garbage candidates.
     */
-  private def readBandMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): BandMeta = {
-    val rows =
-      try spark.read.parquet(s"${path}__meta").collect()
-      catch { case e: org.apache.spark.sql.AnalysisException =>
-        // A band index from before the ledgered layout (flat rows, no
-        // __meta) cannot be probed or appended: its signature geometry
-        // (k, n, bandWidth) is not recoverable from bare band rows and
-        // guessing it would silently produce garbage candidates. Fail
-        // with the migration instruction instead of a bare
-        // path-not-found.
-        throw new IllegalStateException(
-          s"band index at $path has no __meta ledger — it predates the " +
-            "ledgered layout (or is not a band index). Rebuild it with " +
-            "bandIndexWrite over the corpus; geometry cannot be inferred.",
-          e)
-      }
-    require(rows.nonEmpty, s"empty band-index ledger at ${path}__meta")
-    def one(i: Int, name: String): Int = {
-      val vs = rows.map(_.getInt(i)).distinct
-      require(vs.length == 1,
-        s"corrupt band-index meta: inconsistent $name ${vs.mkString("/")}")
-      vs.head
-    }
-    BandMeta(one(3, "k"), one(4, "n"), one(5, "band_width"),
-      one(2, "n_shards"), rows.map(_.getString(0)).toSet)
-  }
-
-  private def writeBandMetaRow(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: String, nBands: Long, nShards: Int, k: Int,
-      n: Int, bandWidth: Int, overwrite: Boolean): Unit =
-    spark.createDataFrame(
-        java.util.List.of(org.apache.spark.sql.Row(
-          batch, nBands, nShards, k, n, bandWidth)),
-        org.apache.spark.sql.types.StructType.fromDDL(bandMetaSchema))
-      .coalesce(1)
-      .write.mode(if (overwrite) "overwrite" else "append")
-      .parquet(s"${path}__meta")
+  private def bandIndex(path: String) = IndexCommit.Index("band-index",
+    path, "batch STRING, n_bands LONG, n_shards INT, k INT, n INT, " +
+      "band_width INT", Seq(path -> "shard=*/"))(
+    frozen = Seq("n_shards", "k", "n", "band_width"),
+    rebuildWith = Some("bandIndexWrite over the corpus"))
 
   private def writeBandRows(docs: DataFrame, id: String, body: String,
       k: Int, n: Int, bandWidth: Int, nShards: Int, path: String,
@@ -342,16 +300,10 @@ object Dedup {
       nShards: Int = 16): Unit = {
     require(nShards >= 1, s"need nShards >= 1, got $nShards")
     require(k % bandWidth == 0, s"bandWidth must divide k ($bandWidth / $k)")
-    // A rebuild is a fresh index: stale tombstones from the previous
-    // index at this path must not shadow re-used ids.
-    val pTomb = new org.apache.hadoop.fs.Path(s"${path}__tombstones")
-    val fs = pTomb.getFileSystem(
-      docs.sparkSession.sessionState.newHadoopConf())
-    if (fs.exists(pTomb)) fs.delete(pTomb, true)
-    val nBands = writeBandRows(docs, id, body, k, n, bandWidth, nShards,
-      path, "build", overwrite = true)
-    writeBandMetaRow(docs.sparkSession, path, "build", nBands, nShards,
-      k, n, bandWidth, overwrite = true)
+    IndexCommit.build(docs.sparkSession, bandIndex(path)) {
+      Seq[Any](writeBandRows(docs, id, body, k, n, bandWidth, nShards, path,
+        "build", overwrite = true), nShards, k, n, bandWidth)
+    }
   }
 
   /** Append a document batch's bands into an existing index — the
@@ -367,17 +319,10 @@ object Dedup {
     */
   def bandIndexAppend(docs: DataFrame, id: String, body: String,
       path: String, batch: String): Unit =
-    Upsert.withWriterLock(docs.sparkSession, path) {
-      IndexCommit.requireSaneBatchId(batch)
-      val spark = docs.sparkSession
-      val meta = readBandMeta(spark, path)
-      IndexCommit.requireNotCommitted(batch, meta.batches, s"${path}__meta")
-      IndexCommit.dropOrphanDirs(spark, path, s"shard=*/batch=$batch")
-      val nBands = writeBandRows(docs, id, body, meta.k, meta.n,
-        meta.bandWidth, meta.nShards, path, batch, overwrite = false)
-      // COMMIT POINT: the batch exists once this row is durable.
-      writeBandMetaRow(spark, path, batch, nBands, meta.nShards,
-        meta.k, meta.n, meta.bandWidth, overwrite = false)
+    IndexCommit.append(docs.sparkSession, bandIndex(path), batch) { m =>
+      Seq[Any](writeBandRows(docs, id, body, m("k"), m("n"), m("band_width"),
+        m("n_shards"), path, batch, overwrite = false),
+        m("n_shards"), m("k"), m("n"), m("band_width"))
     }
 
   /** Distinct ids with at least one COMMITTED band in the index — the
@@ -388,14 +333,13 @@ object Dedup {
     */
   def bandIndexedIds(spark: org.apache.spark.sql.SparkSession,
       path: String, id: String): DataFrame =
-    spark.read.parquet(path)
-      .filter(col("batch").cast("string")
-        .isin(readBandMeta(spark, path).batches.toSeq: _*))
+    IndexCommit.committedRows(spark, path,
+      IndexCommit.readLedger(spark, bandIndex(path)).committed)
       .select(col(id)).distinct()
 
   /** Tombstone-delete doc ids from a band index — the erasure face of
     * the dedup-candidate artifact ([[graft.operators.TextIndex.delete]]'s
-    * protocol, third of the three index families): erased documents
+    * protocol, [[IndexCommit.delete]]): erased documents
     * must stop surfacing as near-dup candidates the moment the delete
     * commits. Ids land batch-partitioned in a `__tombstones` sidecar;
     * the `del:<batch>` ledger row is the COMMIT POINT (geometry
@@ -408,41 +352,10 @@ object Dedup {
     */
   def bandIndexDelete(spark: org.apache.spark.sql.SparkSession,
       path: String, ids: DataFrame, batch: String): Unit =
-    Upsert.withWriterLock(spark, path) {
-      IndexCommit.requireSaneBatchId(batch)
-      val meta = readBandMeta(spark, path)
-      IndexCommit.requireNotCommitted(s"del:$batch", meta.batches,
-        s"${path}__meta")
-      IndexCommit.dropOrphanDirs(spark, s"${path}__tombstones",
-        s"batch=$batch")
-      ids.select(col(ids.columns.head).as("__id")).distinct()
-        .withColumn("batch", lit(batch)).coalesce(1)
-        .write.mode("append").partitionBy("batch")
-        .parquet(s"${path}__tombstones")
-      // COMMIT POINT: the ledger row makes the tombstones visible.
-      writeBandMetaRow(spark, path, s"del:$batch", 0L, meta.nShards,
-        meta.k, meta.n, meta.bandWidth, overwrite = false)
+    IndexCommit.delete(spark, bandIndex(path), batch) { m =>
+      (ids.select(col(ids.columns.head).as("__id")).distinct(),
+        Seq[Any](0L, m("n_shards"), m("k"), m("n"), m("band_width")))
     }
-
-  /** Ids of COMMITTED delete batches; None when nothing is tombstoned
-    * on disk (no delete ever ran, or compact already folded them).
-    */
-  private def bandTombstones(spark: org.apache.spark.sql.SparkSession,
-      path: String, meta: BandMeta): Option[DataFrame] = {
-    val committedDels = meta.batches.collect {
-      case b if b.startsWith("del:") => b.stripPrefix("del:")
-    }
-    val pTomb = new org.apache.hadoop.fs.Path(s"${path}__tombstones")
-    val fs = pTomb.getFileSystem(spark.sessionState.newHadoopConf())
-    val hasDirs = fs.exists(pTomb) && {
-      val g = fs.globStatus(new org.apache.hadoop.fs.Path(pTomb, "batch=*"))
-      g != null && g.nonEmpty
-    }
-    if (committedDels.isEmpty || !hasDirs) None
-    else Some(spark.read.parquet(s"${path}__tombstones")
-      .filter(col("batch").cast("string").isin(committedDels.toSeq: _*))
-      .select(col("__id")))
-  }
 
   /** Compact an append-heavy band index: fold COMMITTED batches into
     * one file per shard under `batch=build`, dropping orphan bands
@@ -456,24 +369,7 @@ object Dedup {
     */
   def bandIndexCompact(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit =
-    Upsert.withWriterLock(spark, path) {
-      val meta = readBandMeta(spark, path)
-      val tomb = bandTombstones(spark, path, meta)
-        .map(_.localCheckpoint(true)) // read by the fold inside the swap
-      graft.sources.Storage.rewriteInPlace(spark, path) { tmp =>
-        val live = spark.read.parquet(path)
-          .filter(col("batch").cast("string").isin(meta.batches.toSeq: _*))
-        tomb.foldLeft(live)((d, t) =>
-            d.join(t, d(d.columns.head) === t("__id"), "left_anti"))
-          .withColumn("batch", lit("build"))
-          .repartition(col("shard"))
-          .write.mode("overwrite").partitionBy("shard", "batch")
-          .option("maxRecordsPerFile", 5000000L).parquet(tmp)
-      }
-      val pTomb = new org.apache.hadoop.fs.Path(s"${path}__tombstones")
-      val fs = pTomb.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(pTomb)) fs.delete(pTomb, true)
-    }
+    IndexCommit.compact(spark, bandIndex(path), "shard")
 
   /** Incremental near-dup detection — the daily-ingest posture: find
     * incoming docs that near-duplicate the EXISTING corpus without
@@ -504,20 +400,20 @@ object Dedup {
     // produce garbage candidates, so a mismatch is a loud error, and
     // only LEDGER-COMMITTED batches are probed (a torn append is
     // invisible — the index-family commit contract).
-    val meta = readBandMeta(spark, indexPath)
-    require(meta.k == k && meta.n == n && meta.bandWidth == bandWidth,
+    val ix = bandIndex(indexPath)
+    val meta = IndexCommit.readLedger(spark, ix)
+    require(meta("k") == k && meta("n") == n && meta("band_width") == bandWidth,
       s"probe geometry (k=$k, n=$n, bandWidth=$bandWidth) disagrees with " +
-        s"the index ledger (k=${meta.k}, n=${meta.n}, " +
-        s"bandWidth=${meta.bandWidth}) at ${indexPath}__meta")
+        s"the index ledger (k=${meta("k")}, n=${meta("n")}, " +
+        s"bandWidth=${meta("band_width")}) at ${ix.ledger}")
     val newBands = lshBands(
       minhashSignatures(incoming.select(col(id), col(body)), id, body, k, n),
       id, k, bandWidth)
-    val idx0 = spark.read.parquet(indexPath)
-      .filter(col("batch").cast("string").isin(meta.batches.toSeq: _*))
     // Tombstoned docs must not surface as candidates (the erasure
     // contract): anti-join committed tombstones before probing.
-    val idx = bandTombstones(spark, indexPath, meta)
-      .foldLeft(idx0)((d, t) => d.join(t, d(id) === t("__id"), "left_anti"))
+    val idx = IndexCommit.minusTombstones(
+        IndexCommit.committedRows(spark, indexPath, meta.committed), id,
+        IndexCommit.tombstones(spark, ix, meta.committed))
       .select(col(id), col("band_id"), col("band_key"))
     // The guard counts EXISTING docs per key (the index is the side
     // that can have accreted a boilerplate bucket over many ingests);
@@ -1361,48 +1257,14 @@ object Dedup {
           .otherwise(size(toks)).as("orig_tokens"))
   }
 
-  private val windowMetaSchema =
-    "batch STRING, n_windows LONG, n_shards INT, min_tokens INT"
-
-  private case class WindowMeta(minTokens: Int, nShards: Int,
-    batches: Set[String])
-
-  /** Ledger of a persisted window-digest index: freezes the WINDOW
-    * GEOMETRY (`min_tokens` — a probe hashed with a different width
-    * would silently miss every duplicate) and the shard modulus, plus
-    * one row per committed batch (the [[TextIndex]] commit protocol).
+  /** The ledger freezes the WINDOW GEOMETRY (`min_tokens`: a probe
+    * hashed with another width would silently miss every duplicate)
+    * and the shard modulus.
     */
-  private def readWindowMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String): WindowMeta = {
-    val rows =
-      try spark.read.parquet(s"${path}__meta").collect()
-      catch { case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalStateException(
-          s"window index at $path has no __meta ledger (or is not a " +
-            "window index). Rebuild it with windowIndexWrite; geometry " +
-            "cannot be inferred.", e)
-      }
-    require(rows.nonEmpty, s"empty window-index ledger at ${path}__meta")
-    def one(i: Int, name: String): Int = {
-      val vs = rows.map(_.getInt(i)).distinct
-      require(vs.length == 1,
-        s"corrupt window-index meta: inconsistent $name ${vs.mkString("/")}")
-      vs.head
-    }
-    WindowMeta(one(3, "min_tokens"), one(2, "n_shards"),
-      rows.map(_.getString(0)).toSet)
-  }
-
-  private def writeWindowMetaRow(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: String, nWindows: Long, nShards: Int,
-      minTokens: Int, overwrite: Boolean): Unit =
-    spark.createDataFrame(
-        java.util.List.of(org.apache.spark.sql.Row(
-          batch, nWindows, nShards, minTokens)),
-        org.apache.spark.sql.types.StructType.fromDDL(windowMetaSchema))
-      .coalesce(1)
-      .write.mode(if (overwrite) "overwrite" else "append")
-      .parquet(s"${path}__meta")
+  private def windowIndex(path: String) = IndexCommit.Index("window-index",
+    path, "batch STRING, n_windows LONG, n_shards INT, min_tokens INT",
+    Seq(path -> "shard=*/"))(frozen = Seq("n_shards", "min_tokens"),
+    rebuildWith = Some("windowIndexWrite"))
 
   private def writeWindowRows(docs: DataFrame, id: String, body: String,
       minTokens: Int, nShards: Int, path: String, batch: String,
@@ -1435,10 +1297,10 @@ object Dedup {
       minTokens: Int, path: String, nShards: Int = 16): Unit = {
     require(nShards >= 1, s"need nShards >= 1, got $nShards")
     require(minTokens >= 2, s"need minTokens >= 2, got $minTokens")
-    val n = writeWindowRows(docs, id, body, minTokens, nShards, path,
-      "build", overwrite = true)
-    writeWindowMetaRow(docs.sparkSession, path, "build", n, nShards,
-      minTokens, overwrite = true)
+    IndexCommit.build(docs.sparkSession, windowIndex(path)) {
+      Seq[Any](writeWindowRows(docs, id, body, minTokens, nShards, path,
+        "build", overwrite = true), nShards, minTokens)
+    }
   }
 
   /** Append a batch's window digests — frozen geometry from the
@@ -1447,16 +1309,9 @@ object Dedup {
     */
   def windowIndexAppend(docs: DataFrame, id: String, body: String,
       path: String, batch: String): Unit =
-    Upsert.withWriterLock(docs.sparkSession, path) {
-      IndexCommit.requireSaneBatchId(batch)
-      val spark = docs.sparkSession
-      val meta = readWindowMeta(spark, path)
-      IndexCommit.requireNotCommitted(batch, meta.batches, s"${path}__meta")
-      IndexCommit.dropOrphanDirs(spark, path, s"shard=*/batch=$batch")
-      val n = writeWindowRows(docs, id, body, meta.minTokens, meta.nShards,
-        path, batch, overwrite = false)
-      writeWindowMetaRow(spark, path, batch, n, meta.nShards,
-        meta.minTokens, overwrite = false)
+    IndexCommit.append(docs.sparkSession, windowIndex(path), batch) { m =>
+      Seq[Any](writeWindowRows(docs, id, body, m("min_tokens"), m("n_shards"),
+        path, batch, overwrite = false), m("n_shards"), m("min_tokens"))
     }
 
   /** Compact an append-heavy window index: fold COMMITTED batches into
@@ -1472,18 +1327,8 @@ object Dedup {
     */
   def windowIndexCompact(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit =
-    Upsert.withWriterLock(spark, path) {
-      val meta = readWindowMeta(spark, path)
-      graft.sources.Storage.rewriteInPlace(spark, path) { tmp =>
-        spark.read.parquet(path)
-          .filter(col("batch").cast("string").isin(meta.batches.toSeq: _*))
-          .select(col("dig"), col("shard")).distinct()
-          .withColumn("batch", lit("build"))
-          .repartition(col("shard"))
-          .write.mode("overwrite").partitionBy("shard", "batch")
-          .option("maxRecordsPerFile", 5000000L).parquet(tmp)
-      }
-    }
+    IndexCommit.compact(spark, windowIndex(path), "shard",
+      shape = _.select(col("dig"), col("shard")).distinct())
 
   /** Exact substring dedup of an INCOMING batch against the indexed
     * corpus + itself — byte-identical to running
@@ -1500,8 +1345,9 @@ object Dedup {
   def incrementalExactSubstringDedup(
       spark: org.apache.spark.sql.SparkSession, path: String,
       incoming: DataFrame, id: String, body: String): DataFrame = {
-    val meta = readWindowMeta(spark, path)
-    val inc = windowDigests(incoming, id, body, meta.minTokens)
+    val meta = IndexCommit.readLedger(spark, windowIndex(path))
+    val minTokens = meta("min_tokens")
+    val inc = windowDigests(incoming, id, body, minTokens)
       .localCheckpoint(true) // probe join AND self-dup aggregate
     // Probe read pruned to the shards the incoming digests hash into —
     // a bounded collect (≤ n_shards values, the TextIndex bucket-list
@@ -1510,11 +1356,10 @@ object Dedup {
     // one columnar scan of the 16-byte digest column. Growing n_shards
     // with the corpus keeps the probed fraction small at scale.
     val probeShards = inc
-      .select(pmod(xxhash64(col("dig")), lit(meta.nShards)).as("s"))
+      .select(pmod(xxhash64(col("dig")), lit(meta("n_shards"))).as("s"))
       .distinct().collect().map(r => Long.box(r.getLong(0))).toSeq
-    val idx = spark.read.parquet(path)
-      .filter(col("shard").isin(probeShards: _*) &&
-        col("batch").cast("string").isin(meta.batches.toSeq: _*))
+    val idx = IndexCommit.committedRows(spark, path, meta.committed)
+      .filter(col("shard").isin(probeShards: _*))
       .select(col("dig"))
     val corpusHit = inc.join(idx, Seq("dig"), "left_semi")
       .select(col(id), col("pos"))
@@ -1526,7 +1371,7 @@ object Dedup {
       .select(col(id), col("pos"))
     val marked = corpusHit.unionByName(selfDup).distinct()
       .select(col(id), col("pos").as("s"),
-        (col("pos") + lit(meta.minTokens - 1)).as("e"))
+        (col("pos") + lit(minTokens - 1)).as("e"))
     exciseTokenSpans(incoming, id, body, marked)
   }
 
@@ -1620,35 +1465,16 @@ object Dedup {
     * directly for verification). Join is on the shingle value — a string
     * key shuffle with uniform distribution.
     */
-  def ngramJaccardPairs(docs: DataFrame, id: String, body: String, n: Int): DataFrame = {
-    val grams = explodedShingles(docs, id, body, n)
-      .select(col(id), col("__g").as("g")).distinct()
-    val sizes = grams.groupBy(col(id)).agg(count(lit(1)).as("sz"))
-    val a = grams.alias("ga")
-    val b = grams.alias("gb")
-    val inter = a.join(b,
-        col("ga.g") === col("gb.g") && col(s"ga.$id") < col(s"gb.$id"))
-      .groupBy(col(s"ga.$id").as("id1"), col(s"gb.$id").as("id2"))
-      .agg(count(lit(1)).as("n_inter"))
-    val s1 = sizes.select(col(id).as("id1"), col("sz").as("sz1"))
-    val s2 = sizes.select(col(id).as("id2"), col("sz").as("sz2"))
-    inter.join(s1, "id1").join(s2, "id2")
+  def ngramJaccardPairs(docs: DataFrame, id: String, body: String, n: Int): DataFrame =
+    gramOverlap(docs, id, body, n)
       .select(col("id1"), col("id2"),
         (col("n_inter").cast("double") /
           (col("sz1") + col("sz2") - col("n_inter")).cast("double")).as("jaccard"))
-  }
 
-  /** Asymmetric n-gram containment for id pairs (id1 < id2):
-    * C(a→b) = |Sa ∩ Sb| / |Sa|, both directions, plus the raw set
-    * sizes. The sub-document-duplication detector Jaccard structurally
-    * misses: a short doc fully embedded in a long one has
-    * containment(short→long) = 1.0 while Jaccard ≈ |short|/|long| ≈ 0,
-    * so a Jaccard threshold never fires. Same physical shape as
-    * [[ngramJaccardPairs]] (distinct shingles → self-join on gram →
-    * size join); at corpus scale both run on LSH candidate pairs, not
-    * all pairs.
+  /** (id1 < id2, n_inter, sz1, sz2) over distinct shingle sets: a
+    * self-join on the gram, then the per-doc set sizes.
     */
-  def ngramContainmentPairs(docs: DataFrame, id: String, body: String,
+  private def gramOverlap(docs: DataFrame, id: String, body: String,
       n: Int): DataFrame = {
     val grams = explodedShingles(docs, id, body, n)
       .select(col(id), col("__g").as("g")).distinct()
@@ -1662,12 +1488,26 @@ object Dedup {
     val s1 = sizes.select(col(id).as("id1"), col("sz").as("sz1"))
     val s2 = sizes.select(col(id).as("id2"), col("sz").as("sz2"))
     inter.join(s1, "id1").join(s2, "id2")
+  }
+
+  /** Asymmetric n-gram containment for id pairs (id1 < id2):
+    * C(a→b) = |Sa ∩ Sb| / |Sa|, both directions, plus the raw set
+    * sizes. The sub-document-duplication detector Jaccard structurally
+    * misses: a short doc fully embedded in a long one has
+    * containment(short→long) = 1.0 while Jaccard ≈ |short|/|long| ≈ 0,
+    * so a Jaccard threshold never fires. Same physical shape as
+    * [[ngramJaccardPairs]] (distinct shingles → self-join on gram →
+    * size join); at corpus scale both run on LSH candidate pairs, not
+    * all pairs.
+    */
+  def ngramContainmentPairs(docs: DataFrame, id: String, body: String,
+      n: Int): DataFrame =
+    gramOverlap(docs, id, body, n)
       .select(col("id1"), col("id2"), col("n_inter"), col("sz1"), col("sz2"),
         (col("n_inter").cast("double") / col("sz1").cast("double"))
           .as("cont_12"),
         (col("n_inter").cast("double") / col("sz2").cast("double"))
           .as("cont_21"))
-  }
 
   /** Cross-source content-overlap matrix: for every source pair
     * (src1 < src2), how many distinct word `n`-gram shingles the two

@@ -340,22 +340,9 @@ object Similarity {
     */
   def ivfWrite(vecs: DataFrame, idCol: String, vecCol: String,
       centroidDf: DataFrame, path: String,
-      metaCols: Seq[String] = Nil): Unit = {
-    dropStats(vecs.sparkSession, path)
-    assignNearest(vecs, idCol, vecCol, centroidDf)
-      .select((Seq(col(idCol), col(vecCol)) ++ metaCols.map(col) :+
-        col("cluster")): _*)
-      .withColumn("batch", lit("build"))
-      // Co-locate each cluster before the partitioned write: without
-      // this every shuffle partition can emit a file per cluster
-      // (partitions x clusters small files — the classic partitionBy
-      // explosion); with it the layout is one file per cluster. For
-      // clusters too large for a single writer task, add a salt column
-      // to the repartition to widen writers per cluster.
-      .repartition(col("cluster"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("cluster", "batch").parquet(path)
-  }
+      metaCols: Seq[String] = Nil): Unit =
+    ivfIngest(vecs, idCol, vecCol, centroidDf, path, None,
+      floatRows(idCol, vecCol, metaCols))
 
   /** Symmetric per-vector max-abs int8 quantization: adds `qvec`
     * (array<tinyint>, q_i = round(v_i * 127 / maxabs)) and `scale`
@@ -423,12 +410,7 @@ object Similarity {
     require(!queries.columns.contains("cluster") &&
       !queries.columns.contains("centroid"),
       "queries frame already has a 'cluster' or 'centroid' column; rename it first")
-    val csimC = graft.functions.ColumnLib.freeColumn(queries, "__csim")
-    val probes0 = TopK.perGroup(
-      queries.crossJoin(broadcast(centroidDf))
-        .withColumn(csimC, cosineNative(col(qvecCol), col("centroid"))),
-      Seq(qidCol), Seq(col(csimC).desc_nulls_last, col("cluster").asc),
-      nprobe)
+    val probes0 = queryProbes(queries, qidCol, qvecCol, centroidDf, nprobe)
       .select(col(qidCol), col(qvecCol), col("cluster"))
     val probes = if (broadcastProbes) broadcast(probes0) else probes0
     val scored = readLive(spark, path, idCol)
@@ -457,6 +439,22 @@ object Similarity {
       .collect().map(_.get(0))
   }
 
+  /** [[probeClusters]] for a query BATCH, in the plan: each query row
+    * joined to its nprobe nearest centroids under the same total order
+    * — a broadcast of the (tiny) centroid table and a bounded-heap
+    * top-nprobe per query, no driver collect. Keeps the query columns
+    * plus the centroid frame's.
+    */
+  private def queryProbes(queries: DataFrame, qidCol: String,
+      qvecCol: String, centroidDf: DataFrame, nprobe: Int): DataFrame = {
+    val csimC = graft.functions.ColumnLib.freeColumn(queries, "__csim")
+    TopK.perGroup(
+      queries.crossJoin(broadcast(centroidDf))
+        .withColumn(csimC, cosineNative(col(qvecCol), col("centroid"))),
+      Seq(qidCol), Seq(col(csimC).desc_nulls_last, col("cluster").asc),
+      nprobe)
+  }
+
   /** IVF-SQ8 build: the cluster-partitioned IVF layout with int8
     * payloads — routing stays on the float centroids (same assignment
     * as [[ivfWrite]], so SQ8 and float indexes agree on placement),
@@ -466,19 +464,9 @@ object Similarity {
     * keeps a 100 TB index inside the page cache.
     */
   def ivfWriteSq8(vecs: DataFrame, idCol: String, vecCol: String,
-      centroidDf: DataFrame, path: String): Unit = {
-    dropStats(vecs.sparkSession, path)
-    quantizeInt8(assignNearest(vecs, idCol, vecCol, centroidDf), vecCol)
-      // The int8 self-norm is a pure function of the stored qvec;
-      // computing it once at build time turns every search's
-      // O(dim) per-candidate fold into a single long read.
-      .select(col(idCol), col("qvec"), col("scale"),
-        int8SelfNorm(col("qvec")).as("nrm2"), col("cluster"))
-      .withColumn("batch", lit("build"))
-      .repartition(col("cluster"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("cluster", "batch").parquet(path)
-  }
+      centroidDf: DataFrame, path: String): Unit =
+    ivfIngest(vecs, idCol, vecCol, centroidDf, path, None,
+      sq8Rows(idCol, vecCol))
 
   /** Batch search over an SQ8 index: [[ivfSearchBatch]]'s distributed
     * shape (bounded-heap probe selection per query, one equality join
@@ -502,17 +490,12 @@ object Similarity {
     require(Seq("cluster", "centroid", "nrm2")
         .forall(c => !queries.columns.contains(c)),
       "queries frame already has a 'cluster', 'centroid' or 'nrm2' column; rename it first")
-    val csimC = graft.functions.ColumnLib.freeColumn(queries, "__csim")
     val qqC = graft.functions.ColumnLib.freeColumn(queries, "__qq")
     val qn2C = graft.functions.ColumnLib.freeColumn(queries, "__qn2")
     val qz = quantizeInt8(queries.select(col(qidCol), col(qvecCol)), qvecCol)
       .select(col(qidCol), col(qvecCol),
         col("qvec").as(qqC), int8SelfNorm(col("qvec")).as(qn2C))
-    val probes0 = TopK.perGroup(
-      qz.crossJoin(broadcast(centroidDf))
-        .withColumn(csimC, cosineNative(col(qvecCol), col("centroid"))),
-      Seq(qidCol), Seq(col(csimC).desc_nulls_last, col("cluster").asc),
-      nprobe)
+    val probes0 = queryProbes(qz, qidCol, qvecCol, centroidDf, nprobe)
       .select(col(qidCol), col(qqC), col(qn2C), col("cluster"))
     val probes = if (broadcastProbes) broadcast(probes0) else probes0
     val idot = aggregate(
@@ -748,23 +731,14 @@ object Similarity {
     * the most compact rung of the index family (float 256 B → SQ8
     * 64 B → PQ ~4 B per 64-dim vector). Coarse assignment is shared
     * with [[ivfWrite]]/[[ivfWriteSq8]] (same [[assignNearest]]), so all
-    * three layouts route identically; the PQ codebook rides along from
+    * four layouts route identically; the PQ codebook rides along from
     * [[pqEncode]].
     */
   def ivfWritePq(vecs: DataFrame, idCol: String, vecCol: String,
       centroidDf: DataFrame, codebook: DataFrame, m: Int, subDim: Int,
-      path: String): Unit = {
-    dropStats(vecs.sparkSession, path)
-    pqEncode(vecs, idCol, vecCol, codebook, m, subDim)
-      .join(assignNearest(vecs, idCol, vecCol, centroidDf)
-        .select(col(idCol), col("cluster").as("__coarse")), idCol)
-      .withColumnRenamed("cluster", "code")
-      .withColumnRenamed("__coarse", "cluster")
-      .withColumn("batch", lit("build"))
-      .repartition(col("cluster"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("cluster", "batch").parquet(path)
-  }
+      path: String): Unit =
+    ivfIngest(vecs, idCol, vecCol, centroidDf, path, None,
+      pqRows(idCol, vecCol, codebook, m, subDim))
 
   /** Probe-limited search over a persisted PQ-code index: rank coarse
     * probes on the driver ([[ivfSearch]]'s contract), read ONLY the
@@ -806,12 +780,7 @@ object Similarity {
     require(Seq("cluster", "centroid", "sub", "code", "__t")
         .forall(c => !queries.columns.contains(c)),
       "queries frame collides with the index working columns; rename first")
-    val csimC = graft.functions.ColumnLib.freeColumn(queries, "__csim")
-    val probes0 = TopK.perGroup(
-      queries.crossJoin(broadcast(centroidDf))
-        .withColumn(csimC, cosineNative(col(qvecCol), col("centroid"))),
-      Seq(qidCol), Seq(col(csimC).desc_nulls_last, col("cluster").asc),
-      nprobe)
+    val probes0 = queryProbes(queries, qidCol, qvecCol, centroidDf, nprobe)
       .select(col(qidCol), col(qvecCol), col("cluster"))
     val qsub = (cb: Column) =>
       slice(col(qvecCol), col("sub") * size(cb) + lit(1), size(cb))
@@ -875,7 +844,7 @@ object Similarity {
   // rows appended into the cluster-partitioned layout. Because routing
   // depends only on the frozen centroids, search-after-append is
   // IDENTICAL to search-after-full-rebuild over the same rows
-  // (SimilaritySpec pins it for all three layouts) — no index
+  // (SimilaritySpec pins it for all four layouts) — no index
   // invalidation, no re-encode of old data.
   //
   // What appending CANNOT give is adaptation: if the data distribution
@@ -891,59 +860,115 @@ object Similarity {
 
   private val obsSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
-  private def statsSchema = "batch STRING, n LONG, mean_sim DOUBLE, min_sim DOUBLE"
-
-  /** One stats row per written batch, from the observed aggregates of
-    * the write itself. `overwrite` only for a fresh build.
+  /** The ledgered layout of every IVF index ([[IndexCommit]]): the
+    * `_stats` drift ledger is the commit ledger, one row
+    * `(batch, n, mean_sim, min_sim)` per committed batch. The build
+    * commits by its own overwrite, so `build` is committed whether or
+    * not [[ivfRecordBuildStats]] recorded its baseline row.
     */
-  private def writeStatsRow(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: String, row: Map[String, Any],
-      overwrite: Boolean): Unit = {
-    import org.apache.spark.sql.Row
-    val df = spark.createDataFrame(
-      java.util.List.of(Row(batch,
-        row("n").asInstanceOf[Long],
-        Option(row("mean_sim")).map(_.asInstanceOf[Double]).orNull,
-        Option(row("min_sim")).map(_.asInstanceOf[Double]).orNull)),
-      org.apache.spark.sql.types.StructType.fromDDL(statsSchema))
-    df.coalesce(1).write.mode(if (overwrite) "overwrite" else "append")
-      .parquet(path + "_stats")
-  }
+  private def ivfIndex(path: String) = IndexCommit.Index("vector index",
+    path, "batch STRING, n LONG, mean_sim DOUBLE, min_sim DOUBLE",
+    Seq(path -> "cluster=*/"))(ledger = path + "_stats",
+    tombstones = path + "_tombstones", implicitBuild = true)
 
   /** Attaches the tightness observation to an assigned frame and
-    * returns (observedFrame, completion) where `completion` writes the
-    * sidecar row once the caller's write action has run.
+    * returns (observedFrame, row) where `row` reads the batch's ledger
+    * row once the caller's write action has run.
     */
-  private def observeTightness(assigned: DataFrame, path: String,
-      batch: String, overwrite: Boolean): (DataFrame, () => Unit) = {
+  private def observeTightness(
+      assigned: DataFrame): (DataFrame, () => Seq[Any]) = {
     val obs = org.apache.spark.sql.Observation(
       s"ivf_ingest_${obsSeq.incrementAndGet()}")
     val observed = assigned.observe(obs,
       count(lit(1)).as("n"),
       avg(col("sim")).as("mean_sim"),
       min(col("sim")).as("min_sim"))
-    (observed, () => writeStatsRow(assigned.sparkSession, path, batch,
-      obs.get, overwrite))
+    (observed, () => { val m = obs.get; Seq(m("n"), m("mean_sim"), m("min_sim")) })
   }
 
-  /** "build" plus every batch the `_stats` ledger has a row for. The
-    * build's vectors are committed by the build itself (its write is a
-    * full overwrite, not an append), so it is committed whether or not
-    * [[ivfRecordBuildStats]] recorded its baseline row; appended
-    * batches are committed by their ledger row ([[ivfAppend]]'s commit
-    * point).
+  /** An IVF payload layout: renders a batch — its input vectors and
+    * their [[assignNearest]] frame — into the index's physical rows,
+    * `cluster` last. The four layouts share routing, so they share
+    * every write, append, split and compact; only these differ.
     */
-  private def committedBatches(spark: org.apache.spark.sql.SparkSession,
-      path: String): Set[String] = {
-    val stats = new org.apache.hadoop.fs.Path(path + "_stats")
-    val fs = stats.getFileSystem(spark.sessionState.newHadoopConf())
-    val ledger =
-      if (fs.exists(stats))
-        spark.read.parquet(path + "_stats")
-          .select(col("batch")).collect().map(_.getString(0)).toSet
-      else Set.empty[String]
-    ledger + "build"
+  private type Layout = (DataFrame, DataFrame) => DataFrame
+
+  private def floatRows(idCol: String, vecCol: String,
+      metaCols: Seq[String] = Nil): Layout = (_, assigned) =>
+    assigned.select((Seq(col(idCol), col(vecCol)) ++ metaCols.map(col) :+
+      col("cluster")): _*)
+
+  // The int8 self-norm is a pure function of the stored qvec; computing
+  // it once at write time turns every search's O(dim) per-candidate
+  // fold into a single long read.
+  private def sq8Rows(idCol: String, vecCol: String): Layout =
+    (_, assigned) => quantizeInt8(assigned, vecCol)
+      .select(col(idCol), col("qvec"), col("scale"),
+        int8SelfNorm(col("qvec")).as("nrm2"), col("cluster"))
+
+  /** PQ codes of the raw vectors (`code` = the codebook cluster) routed
+    * by the assignment. Encoders read the raw rows and JOIN the
+    * assignment, so an observed assignment appears once in the plan
+    * (its metrics row is the commit payload).
+    */
+  private def pqRows(idCol: String, vecCol: String, codebook: DataFrame,
+      m: Int, subDim: Int): Layout = (vecs, assigned) =>
+    routed(pqEncode(vecs, idCol, vecCol, codebook, m, subDim), assigned,
+      idCol)
+
+  /** PQ codes of each vector's residual against its own coarse
+    * centroid — the same [[assignNearest]] routing, recomputed inside
+    * [[residualVectors]]; the stored cluster comes from `assigned`.
+    */
+  private def pqResidualRows(idCol: String, vecCol: String,
+      centroidDf: DataFrame, codebook: DataFrame, m: Int,
+      subDim: Int): Layout = (vecs, assigned) =>
+    routed(pqEncode(residualVectors(vecs, idCol, vecCol, centroidDf), idCol,
+      "residual", codebook, m, subDim), assigned, idCol)
+
+  private def routed(codes: DataFrame, assigned: DataFrame,
+      idCol: String): DataFrame =
+    codes.withColumnRenamed("cluster", "code")
+      .join(assigned.select(col(idCol), col("cluster")), idCol)
+
+  /** The one IVF write: assign → encode → `(cluster, batch)` write. A
+    * build (`batch` None) resets the ledger and tombstones and
+    * overwrites the index; an append commits under the
+    * [[IndexCommit.append]] protocol with its assignment tightness as
+    * the ledger row, observed on the write itself (zero extra scan).
+    */
+  private def ivfIngest(vecs: DataFrame, idCol: String, vecCol: String,
+      centroidDf: DataFrame, path: String, batch: Option[String],
+      layout: Layout): Unit = {
+    val spark = vecs.sparkSession
+    val assigned = assignNearest(vecs, idCol, vecCol, centroidDf)
+    batch match {
+      case None =>
+        IndexCommit.reset(spark, ivfIndex(path))
+        writeClusters(layout(vecs, assigned), path, "build", overwrite = true)
+      case Some(b) =>
+        IndexCommit.append(spark, ivfIndex(path), b) { _ =>
+          val (observed, row) = observeTightness(assigned)
+          writeClusters(layout(vecs, observed), path, b, overwrite = false)
+          row()
+        }
+    }
   }
+
+  /** Co-locate each cluster before the partitioned write: without this
+    * every shuffle partition can emit a file per cluster (partitions x
+    * clusters small files — the classic partitionBy explosion); with it
+    * the layout is one file per cluster. For clusters too large for a
+    * single writer task, add a salt column to the repartition to widen
+    * writers per cluster. `static`: a rebuild is a snapshot.
+    */
+  private def writeClusters(rows: DataFrame, path: String, batch: String,
+      overwrite: Boolean): Unit =
+    rows.withColumn("batch", lit(batch))
+      .repartition(col("cluster"))
+      .write.mode(if (overwrite) "overwrite" else "append")
+      .option("partitionOverwriteMode", "static")
+      .partitionBy("cluster", "batch").parquet(path)
 
   /** Distinct ids whose vectors belong to a COMMITTED batch — the
     * "already indexed" face a streaming ingest diffs its arrivals
@@ -952,51 +977,13 @@ object Similarity {
     * torn appends are excluded ON PURPOSE: a torn batch must be
     * re-ingested whole (replace-by-batch deletes its orphan dirs), so
     * counting its ids as "indexed" would make the replay skip them and
-    * the prologue's orphan delete would then destroy the only copy.
+    * the retry's orphan delete would then destroy the only copy.
     */
   def ivfIndexedIds(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String): DataFrame =
-    spark.read.parquet(path)
-      .filter(col("batch").cast("string")
-        .isin(committedBatches(spark, path).toSeq: _*))
+    IndexCommit.committedRows(spark, path,
+      IndexCommit.readLedger(spark, ivfIndex(path)).committed)
       .select(col(idCol)).distinct()
-
-  /** Shared append prologue — the crash/retry contract of every
-    * `ivfAppend*` face ([[graft.operators.TextIndex.append]]'s
-    * protocol): the batch's `_stats` ledger row is the COMMIT POINT,
-    * so a batch id already in the ledger is rejected loudly
-    * (exactly-once per id), and a RETRY of a batch that died before
-    * its ledger write first deletes the orphan `batch=<id>` partition
-    * directories (replace-by-batch — re-running a failed append can
-    * never duplicate a vector). What stays weaker than the text
-    * index: a torn append's vectors are VISIBLE to searches early
-    * (search does not filter on batch — the rows are real vectors,
-    * merely uncommitted, and nothing double-counts), and
-    * [[ivfCompact]] garbage-collects them if the batch is never
-    * retried.
-    */
-  private def appendPrologue(spark: org.apache.spark.sql.SparkSession,
-      path: String, batch: String): Unit = {
-    IndexCommit.requireSaneBatchId(batch)
-    IndexCommit.requireNotCommitted(batch, committedBatches(spark, path),
-      s"${path}_stats")
-    IndexCommit.dropOrphanDirs(spark, path, s"cluster=*/batch=$batch")
-  }
-
-  /** A fresh build resets the ledger: stale batch rows from a previous
-    * index at the same path would otherwise block their ids forever
-    * and corrupt the drift baseline.
-    */
-  private def dropStats(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val stats = new org.apache.hadoop.fs.Path(path + "_stats")
-    val fs = stats.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(stats)) fs.delete(stats, true)
-    // A rebuild is a fresh index: stale tombstones from the previous
-    // index at this path must not shadow re-used ids.
-    val tomb = new org.apache.hadoop.fs.Path(path + "_tombstones")
-    if (fs.exists(tomb)) fs.delete(tomb, true)
-  }
 
   /** Append a new embedding batch into an existing [[ivfWrite]] float
     * index: assign to the FROZEN centroids (the exact [[assignNearest]]
@@ -1005,22 +992,24 @@ object Similarity {
     * tightness under `batch` in the `_stats` sidecar. O(|batch|) work:
     * one broadcast-join scan of the new rows + one cluster-local
     * shuffle — the existing index is never read or rewritten.
-    * Crash/retry contract: see [[appendPrologue]] (ledger row = commit
-    * point, replace-by-batch retry, exactly-once per id, writer lock).
+    *
+    * Crash/retry contract of every `ivfAppend*` face — the
+    * [[IndexCommit.append]] protocol ([[TextIndex.append]]'s): the
+    * batch's `_stats` ledger row is the COMMIT POINT, a batch id
+    * already in the ledger is rejected loudly (exactly-once per id),
+    * and a RETRY of a batch that died before its ledger write first
+    * deletes the orphan `batch=<id>` partition directories
+    * (replace-by-batch — re-running a failed append can never
+    * duplicate a vector). What stays weaker than the text index: a
+    * torn append's vectors are VISIBLE to searches early (search does
+    * not filter on batch — the rows are real vectors, merely
+    * uncommitted, and nothing double-counts), and [[ivfCompact]]
+    * garbage-collects them if the batch is never retried.
     */
   def ivfAppend(vecs: DataFrame, idCol: String, vecCol: String,
       centroidDf: DataFrame, path: String, batch: String): Unit =
-    Upsert.withWriterLock(vecs.sparkSession, path) {
-      appendPrologue(vecs.sparkSession, path, batch)
-      val (observed, done) = observeTightness(
-        assignNearest(vecs, idCol, vecCol, centroidDf), path, batch,
-        overwrite = false)
-      observed.select(col(idCol), col(vecCol), col("cluster"))
-        .withColumn("batch", lit(batch))
-        .repartition(col("cluster"))
-        .write.mode("append").partitionBy("cluster", "batch").parquet(path)
-      done()
-    }
+    ivfIngest(vecs, idCol, vecCol, centroidDf, path, Some(batch),
+      floatRows(idCol, vecCol))
 
   /** [[ivfAppend]] for the SQ8 layout: same frozen-centroid routing,
     * int8 payload ([[quantizeInt8]] + hoisted self-norm, exactly the
@@ -1028,19 +1017,8 @@ object Similarity {
     */
   def ivfAppendSq8(vecs: DataFrame, idCol: String, vecCol: String,
       centroidDf: DataFrame, path: String, batch: String): Unit =
-    Upsert.withWriterLock(vecs.sparkSession, path) {
-      appendPrologue(vecs.sparkSession, path, batch)
-      val (observed, done) = observeTightness(
-        assignNearest(vecs, idCol, vecCol, centroidDf), path, batch,
-        overwrite = false)
-      quantizeInt8(observed, vecCol)
-        .select(col(idCol), col("qvec"), col("scale"),
-          int8SelfNorm(col("qvec")).as("nrm2"), col("cluster"))
-        .withColumn("batch", lit(batch))
-        .repartition(col("cluster"))
-        .write.mode("append").partitionBy("cluster", "batch").parquet(path)
-      done()
-    }
+    ivfIngest(vecs, idCol, vecCol, centroidDf, path, Some(batch),
+      sq8Rows(idCol, vecCol))
 
   /** [[ivfAppend]] for the PQ-code layout: frozen coarse centroids AND
     * frozen codebook — new vectors are encoded with the build-time
@@ -1051,20 +1029,8 @@ object Similarity {
   def ivfAppendPq(vecs: DataFrame, idCol: String, vecCol: String,
       centroidDf: DataFrame, codebook: DataFrame, m: Int, subDim: Int,
       path: String, batch: String): Unit =
-    Upsert.withWriterLock(vecs.sparkSession, path) {
-      appendPrologue(vecs.sparkSession, path, batch)
-      val (observed, done) = observeTightness(
-        assignNearest(vecs, idCol, vecCol, centroidDf), path, batch,
-        overwrite = false)
-      pqEncode(vecs, idCol, vecCol, codebook, m, subDim)
-        .join(observed.select(col(idCol), col("cluster").as("__coarse")), idCol)
-        .withColumnRenamed("cluster", "code")
-        .withColumnRenamed("__coarse", "cluster")
-        .withColumn("batch", lit(batch))
-        .repartition(col("cluster"))
-        .write.mode("append").partitionBy("cluster", "batch").parquet(path)
-      done()
-    }
+    ivfIngest(vecs, idCol, vecCol, centroidDf, path, Some(batch),
+      pqRows(idCol, vecCol, codebook, m, subDim))
 
   /** [[ivfAppend]] for the RESIDUAL-encoded PQ layout
     * ([[ivfWritePqResidual]] — the FAISS production recipe), closing
@@ -1081,136 +1047,68 @@ object Similarity {
   def ivfAppendPqResidual(vecs: DataFrame, idCol: String, vecCol: String,
       centroidDf: DataFrame, codebook: DataFrame, m: Int, subDim: Int,
       path: String, batch: String): Unit =
-    Upsert.withWriterLock(vecs.sparkSession, path) {
-      appendPrologue(vecs.sparkSession, path, batch)
-      val (observed, done) = observeTightness(
-        assignNearest(vecs, idCol, vecCol, centroidDf), path, batch,
-        overwrite = false)
-      val res = residualVectors(vecs, idCol, vecCol, centroidDf)
-      pqEncode(res, idCol, "residual", codebook, m, subDim)
-        .withColumnRenamed("cluster", "code")
-        // the cluster column comes from the OBSERVED assignment so the
-        // batch's stats row materializes inside this write (same
-        // determinism: residualVectors uses the same assignNearest)
-        .join(observed.select(col(idCol), col("cluster")), idCol)
-        .withColumn("batch", lit(batch))
-        .repartition(col("cluster"))
-        .write.mode("append").partitionBy("cluster", "batch").parquet(path)
-      done()
-    }
+    ivfIngest(vecs, idCol, vecCol, centroidDf, path, Some(batch),
+      pqResidualRows(idCol, vecCol, centroidDf, codebook, m, subDim))
 
   /** Compact an append-heavy vector index (any of the four layouts —
     * they share the cluster-partitioned parquet shape): every
     * `ivfAppend*` leaves one file per touched cluster per batch, and
-    * probe cost at scale is file-count-dominated. Same discipline as
-    * [[graft.operators.TextIndex.compact]]: COMMITTED batches fold
-    * into a single `batch=build` layout (one file per cluster) under
-    * the writer lock; rows are byte-identical afterwards except the
-    * batch label, which no search reads, so search results cannot
-    * change (SimilaritySpec pins it). Orphan vectors from appends that
-    * died before their ledger commit are DROPPED — compaction is the
-    * index's garbage collector, and a dropped batch id can still be
-    * retried afterwards (its dirs are gone, its ledger row never
-    * existed). The `_stats` ledger itself is untouched: unlike the
-    * text index's meta, nothing in serving derives from it — it is
-    * pure drift diagnostics, and keeping the rows preserves both the
-    * history and the exactly-once guard on committed ids.
+    * probe cost at scale is file-count-dominated. The
+    * [[IndexCommit.compact]] fold ([[graft.operators.TextIndex.compact]]'s
+    * discipline): COMMITTED batches minus tombstoned ids fold into a
+    * single `batch=build` layout (one file per cluster) under the
+    * writer lock; rows are byte-identical afterwards except the batch
+    * label, which no search reads, so search results cannot change
+    * (SimilaritySpec pins it). Orphan vectors from appends that died
+    * before their ledger commit are DROPPED — compaction is the index's
+    * garbage collector, and a dropped batch id can still be retried
+    * afterwards (its dirs are gone, its ledger row never existed). The
+    * `_stats` ledger itself is untouched: unlike the text index's meta,
+    * nothing in serving derives from it — it is pure drift diagnostics,
+    * and keeping the rows preserves both the history and the
+    * exactly-once guard on committed ids.
     */
   def ivfCompact(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit =
-    graft.operators.Upsert.withWriterLock(spark, path) {
-      val committed = committedBatches(spark, path)
-      val tomb = ivfTombstones(spark, path)
-        .map(_.localCheckpoint(true)) // read by the fold inside the swap
-      graft.sources.Storage.rewriteInPlace(spark, path) { tmp =>
-        val live = graft.sources.Storage.read(spark, path)
-          .filter(col("batch").cast("string").isin(committed.toSeq: _*))
-        tomb.foldLeft(live)((d, t) =>
-            d.join(t, d(d.columns.head) === t("__id"), "left_anti"))
-          .withColumn("batch", lit("build"))
-          .repartition(col("cluster"))
-          .write.mode("overwrite").partitionBy("cluster", "batch")
-          .option("maxRecordsPerFile", 5000000L).parquet(tmp)
-      }
-      // Post-swap: tombstoned vectors are physically gone, drop the
-      // sidecar (the del: ledger rows stay — exactly-once history). A
-      // crash before this line leaves stale tombstones — harmless.
-      val pTomb = new org.apache.hadoop.fs.Path(path + "_tombstones")
-      val fs = pTomb.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(pTomb)) fs.delete(pTomb, true)
-    }
+    IndexCommit.compact(spark, ivfIndex(path), "cluster", mergeSchema = true)
 
   /** Tombstone-delete ids from an IVF-family index — the erasure face
     * ([[graft.operators.TextIndex.delete]]'s protocol, simpler here
     * because IVF scoring is pure geometry: no corpus constant needs a
     * correction, erasure is exactly "these ids never rank"). Works on
-    * ALL THREE layouts (float/SQ8/PQ): deletion is by id, the payload
-    * is irrelevant. Ids land batch-partitioned in a `_tombstones`
-    * sidecar; the `del:<batch>` ledger row is the COMMIT POINT (torn
-    * deletes invisible, retries replace-by-batch, committed ids
-    * exactly-once); every search path anti-joins committed tombstones;
-    * [[ivfCompact]] removes the bytes and clears the sidecar. An
-    * erased id stays erased even if re-appended before the next
-    * compact — erased identities are treated as retired, the
+    * ALL FOUR layouts: deletion is by id, the payload is irrelevant.
+    * Ids land batch-partitioned in a `_tombstones` sidecar; the
+    * `del:<batch>` ledger row is the COMMIT POINT (torn deletes
+    * invisible, retries replace-by-batch, committed ids exactly-once;
+    * [[IndexCommit.delete]]); every search path anti-joins committed
+    * tombstones; [[ivfCompact]] removes the bytes and clears the
+    * sidecar. An erased id stays erased even if re-appended before the
+    * next compact — erased identities are treated as retired, the
     * [[TextIndex.delete]] contract.
     *
     * O(|ids|): the index is never read, let alone rewritten.
     */
   def ivfDelete(spark: org.apache.spark.sql.SparkSession, path: String,
       ids: DataFrame, batch: String): Unit =
-    Upsert.withWriterLock(spark, path) {
-      IndexCommit.requireSaneBatchId(batch)
-      IndexCommit.requireNotCommitted(s"del:$batch",
-        committedBatches(spark, path), s"${path}_stats")
-      IndexCommit.dropOrphanDirs(spark, path + "_tombstones",
-        s"batch=$batch")
+    IndexCommit.delete(spark, ivfIndex(path), batch) { _ =>
       val t = ids.select(col(ids.columns.head).as("__id")).distinct()
         .localCheckpoint(true) // counted AND written
-      val n = t.count()
-      t.withColumn("batch", lit(batch)).coalesce(1)
-        .write.mode("append").partitionBy("batch")
-        .parquet(path + "_tombstones")
-      // COMMIT POINT: the ledger row makes the tombstones visible.
-      writeStatsRow(spark, path, s"del:$batch",
-        Map("n" -> n, "mean_sim" -> null, "min_sim" -> null),
-        overwrite = false)
+      (t, Seq(t.count(), null, null))
     }
-
-  /** Ids of COMMITTED delete batches; None when nothing is tombstoned
-    * on disk (no delete ever ran, or compact already folded them).
-    */
-  private def ivfTombstones(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[DataFrame] = {
-    // Sidecar presence first — one FS metadata call, no Spark job. The
-    // common case (no delete ever ran) must cost a search NOTHING: the
-    // ledger read below launches a collect job, and probe-heavy gates
-    // call search several times (measured +0.5-1.5 s per gate when
-    // this ordering was ledger-first).
-    val pTomb = new org.apache.hadoop.fs.Path(path + "_tombstones")
-    val fs = pTomb.getFileSystem(spark.sessionState.newHadoopConf())
-    val hasDirs = fs.exists(pTomb) && {
-      val g = fs.globStatus(new org.apache.hadoop.fs.Path(pTomb, "batch=*"))
-      g != null && g.nonEmpty
-    }
-    if (!hasDirs) return None
-    val committedDels = committedBatches(spark, path).collect {
-      case b if b.startsWith("del:") => b.stripPrefix("del:")
-    }
-    if (committedDels.isEmpty) None
-    else Some(spark.read.parquet(path + "_tombstones")
-      .filter(col("batch").cast("string").isin(committedDels.toSeq: _*))
-      .select(col("__id")))
-  }
 
   /** Index rows minus committed tombstones — every search path reads
     * the index through this (deleted ids must never rank, whatever
-    * the layout). When no tombstones exist the plan is the bare scan.
+    * the layout). When no tombstone sidecar exists the plan is the
+    * bare scan and no ledger is read: probe-heavy gates call search
+    * several times (measured +0.5-1.5 s per gate when the ledger read
+    * came first).
     */
   private def readLive(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String): DataFrame = {
-    val base = spark.read.parquet(path)
-    ivfTombstones(spark, path).fold(base)(t =>
-      base.join(t, base(idCol) === t("__id"), "left_anti"))
+    val ix = ivfIndex(path)
+    IndexCommit.minusTombstones(spark.read.parquet(path), idCol,
+      IndexCommit.tombstones(spark, ix,
+        IndexCommit.readLedger(spark, ix).committed))
   }
 
   /** Record the BUILD's own tightness baseline for an index written by
@@ -1222,16 +1120,12 @@ object Similarity {
     */
   def ivfRecordBuildStats(vecs: DataFrame, idCol: String, vecCol: String,
       centroidDf: DataFrame, path: String): Unit = {
-    val assigned = assignNearest(vecs, idCol, vecCol, centroidDf)
-    val row = assigned.agg(
+    val row = assignNearest(vecs, idCol, vecCol, centroidDf).agg(
       count(lit(1)).as("n"),
       avg(col("sim")).as("mean_sim"),
       min(col("sim")).as("min_sim")).head()
-    writeStatsRow(vecs.sparkSession, path, "build", Map(
-      "n" -> row.getLong(0),
-      "mean_sim" -> (if (row.isNullAt(1)) null else row.getDouble(1)),
-      "min_sim" -> (if (row.isNullAt(2)) null else row.getDouble(2))),
-      overwrite = true)
+    IndexCommit.writeRow(vecs.sparkSession, ivfIndex(path), "build",
+      row.toSeq, overwrite = true)
   }
 
   /** The drift ledger: one row per recorded batch with `drift` =
@@ -1245,7 +1139,7 @@ object Similarity {
     // them — [[ivfDelete]] records null sims), not ingest batches;
     // they'd show as null-drift noise in the ledger a re-train
     // trigger reads.
-    val s = spark.read.parquet(path + "_stats")
+    val s = spark.read.parquet(ivfIndex(path).ledger)
       .filter(!col("batch").startsWith("del:"))
     val base = s.filter(col("batch") === "build")
       .select(col("mean_sim").as("__build_mean"))
@@ -1284,18 +1178,9 @@ object Similarity {
     */
   def ivfWritePqResidual(vecs: DataFrame, idCol: String, vecCol: String,
       centroidDf: DataFrame, codebook: DataFrame, m: Int, subDim: Int,
-      path: String): Unit = {
-    dropStats(vecs.sparkSession, path)
-    val res = residualVectors(vecs, idCol, vecCol, centroidDf)
-      .localCheckpoint(true) // encode + coarse routing read it once each
-    pqEncode(res, idCol, "residual", codebook, m, subDim)
-      .withColumnRenamed("cluster", "code")
-      .join(res.select(col(idCol), col("cluster")), idCol)
-      .withColumn("batch", lit("build"))
-      .repartition(col("cluster"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("cluster", "batch").parquet(path)
-  }
+      path: String): Unit =
+    ivfIngest(vecs, idCol, vecCol, centroidDf, path, None,
+      pqResidualRows(idCol, vecCol, centroidDf, codebook, m, subDim))
 
   /** Probe-limited search over a residual-encoded PQ index:
     * score = ⟨q, c⟩ + ⟨q, r̂⟩ — the coarse term is EXACT per probe
@@ -1423,29 +1308,8 @@ object Similarity {
     */
   def srhtRotate(vecs: DataFrame, idCol: String, vecCol: String,
       salt: String): DataFrame = {
-    val dRows = vecs.select(size(col(vecCol)).as("__d"))
-      .filter(col("__d").isNotNull).limit(1).collect()
-    require(dRows.nonEmpty,
-      "srhtRotate: input has no non-null vectors to infer the dimension from")
-    val d = dRows(0).getInt(0)
-    require(d >= 2 && (d & (d - 1)) == 0,
-      s"srhtRotate needs a power-of-two dimension >= 2, got $d")
-    // D's diagonal, driver-computed once and inlined as a literal:
-    // +1 iff the first hex nibble of md5("salt:i") is even — the q169
-    // sign-matrix family, so the oracle regenerates it in SQL.
-    val signLit = array(Array.tabulate(d) { i =>
-      val b0 = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$salt:$i".getBytes(java.nio.charset.StandardCharsets.UTF_8))(0)
-      lit(if (((b0 >> 4) & 0x1) == 0) 1.0 else -1.0)
-    }: _*)
-    val checked = vecs
-      .withColumn(vecCol,
-        when(col(vecCol).isNull || size(col(vecCol)) === d, col(vecCol))
-          .otherwise(raise_error(concat(
-            lit(s"srhtRotate: expected $d-dim vector, got "),
-            size(col(vecCol)).cast("string"), lit(" at "),
-            col(idCol).cast("string")))))
-    val sqrtD = math.sqrt(d.toDouble)
+    val (checked, signLit, sqrtD) = srhtInput(vecs, idCol, vecCol, salt,
+      "srhtRotate", "input has no non-null vectors")
     checked.select(col(idCol),
       transform(
         call_function("fwht", transform(col(vecCol),
@@ -1464,13 +1328,32 @@ object Similarity {
     */
   def srhtRotateInverse(vecs: DataFrame, idCol: String, vecCol: String,
       salt: String): DataFrame = {
+    val (checked, signLit, sqrtD) = srhtInput(vecs, idCol, vecCol, salt,
+      "srhtRotateInverse", "no non-null vectors")
+    checked.select(col(idCol),
+      transform(
+        call_function("fwht",
+          transform(col(vecCol), x => x.cast("double"))),
+        (y, i) => round(y * element_at(signLit, i + 1) / lit(sqrtD), 9))
+        .as("restored"))
+  }
+
+  /** Shared SRHT prelude: infer the power-of-two dimension d from the
+    * first non-null vector (one bounded collect), fail loudly in the
+    * plan on a wrong-length vector, and return (checked vectors, D's
+    * diagonal as a literal, √d). D: +1 iff the first hex nibble of
+    * md5("salt:i") is even — the q169 sign-matrix family, so the oracle
+    * regenerates it in SQL.
+    */
+  private def srhtInput(vecs: DataFrame, idCol: String, vecCol: String,
+      salt: String, face: String, empty: String): (DataFrame, Column, Double) = {
     val dRows = vecs.select(size(col(vecCol)).as("__d"))
       .filter(col("__d").isNotNull).limit(1).collect()
     require(dRows.nonEmpty,
-      "srhtRotateInverse: no non-null vectors to infer the dimension from")
+      s"$face: $empty to infer the dimension from")
     val d = dRows(0).getInt(0)
     require(d >= 2 && (d & (d - 1)) == 0,
-      s"srhtRotateInverse needs a power-of-two dimension >= 2, got $d")
+      s"$face needs a power-of-two dimension >= 2, got $d")
     val signLit = array(Array.tabulate(d) { i =>
       val b0 = java.security.MessageDigest.getInstance("MD5")
         .digest(s"$salt:$i".getBytes(java.nio.charset.StandardCharsets.UTF_8))(0)
@@ -1480,16 +1363,10 @@ object Similarity {
       .withColumn(vecCol,
         when(col(vecCol).isNull || size(col(vecCol)) === d, col(vecCol))
           .otherwise(raise_error(concat(
-            lit(s"srhtRotateInverse: expected $d-dim vector, got "),
+            lit(s"$face: expected $d-dim vector, got "),
             size(col(vecCol)).cast("string"), lit(" at "),
             col(idCol).cast("string")))))
-    val sqrtD = math.sqrt(d.toDouble)
-    checked.select(col(idCol),
-      transform(
-        call_function("fwht",
-          transform(col(vecCol), x => x.cast("double"))),
-        (y, i) => round(y * element_at(signLit, i + 1) / lit(sqrtD), 9))
-        .as("restored"))
+    (checked, signLit, math.sqrt(d.toDouble))
   }
 
   /** Split ONE hot cluster of a float IVF index in place — the
@@ -1511,99 +1388,34 @@ object Similarity {
     * `newIdA`/`newIdB`, centroids = the float means of each side's
     * actual members), which the caller must use for subsequent probes —
     * centroids are caller-owned, the ivfWrite/ivfSearch contract.
-    * Float layout here; the SQ8/PQ layouts split via the re-read-
-    * float-source path ([[ivfSplitClusterSq8]]/[[ivfSplitClusterPq]] —
-    * 2-means needs raw vectors, quantized payloads cannot seed it).
-    * Tombstoned ids are dropped during the rewrite (a split doubles as
-    * a cluster-local compact, mirroring [[ivfCompact]]).
+    * Float layout here; the quantized layouts split through the same
+    * protocol with members re-read from the float source
+    * ([[ivfSplitClusterSq8]]/[[ivfSplitClusterPq]]/
+    * [[ivfSplitClusterPqResidual]] — 2-means needs raw vectors,
+    * quantized payloads cannot seed it). Tombstoned ids are dropped
+    * during the rewrite (a split doubles as a cluster-local compact,
+    * mirroring [[ivfCompact]]).
     *
     * Crash contract (the DEVIATIONS §11 protocol with the CLUSTER as
-    * the replacement unit): new dirs are written under
-    * `batch=split-<c>-<a>-<b>` first, the ledger row is the commit
-    * point, the source dir is deleted after. A crash before the commit
-    * leaves orphan new dirs (GC'd by retry or [[ivfCompact]], source
-    * intact); a crash between commit and source delete leaves BOTH
-    * copies briefly visible — the same torn-visibility window
-    * [[appendPrologue]] documents for appends — and a REPLAY of the
-    * same split is the recovery: it finishes the source delete and
-    * returns the updated centroids (idempotent, the streaming-sink
-    * convention). The returned means can differ at ulp level between
+    * the replacement unit, [[IndexCommit.replace]]): new dirs are
+    * written under `batch=split-<c>-<a>-<b>` first, the ledger row is
+    * the commit point, the source dir is deleted after. A crash before
+    * the commit leaves orphan new dirs (GC'd by retry or
+    * [[ivfCompact]], source intact); a crash between commit and source
+    * delete leaves BOTH copies briefly visible — the same
+    * torn-visibility window [[ivfAppend]] documents for appends — and a
+    * REPLAY of the same split is the recovery: it finishes the source
+    * delete and returns the updated centroids (idempotent, the
+    * streaming-sink convention). The returned means can differ at ulp level between
     * a fresh run and a replay (float avg over shuffle order); IVF
     * probe selection tolerates ulp wiggle by construction.
     */
   def ivfSplitCluster(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String, vecCol: String, centroidDf: DataFrame,
       cluster: Any, newIdA: Any, newIdB: Any, steps: Int = 3): DataFrame =
-    Upsert.withWriterLock(spark, path) {
-      val tag = s"split-$cluster-$newIdA-$newIdB"
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      IndexCommit.requireSaneBatchId(tag)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      val srcDir = new org.apache.hadoop.fs.Path(path, s"cluster=$cluster")
-      def updatedCents(two: DataFrame): DataFrame =
-        centroidDf.filter(!(col("cluster") <=> lit(cluster)))
-          .unionByName(two)
-      def memberMeans(assigned: DataFrame): DataFrame =
-        centroids(assigned.select(col("cluster"), col(vecCol)),
-          "cluster", vecCol)
-      if (committedBatches(spark, path).contains(tag)) {
-        // Replay after a crash in the commit→delete window: finish the
-        // source delete, rebuild the two centroids from the committed
-        // members. Idempotent — never an error.
-        if (fs.exists(srcDir)) fs.delete(srcDir, true)
-        updatedCents(memberMeans(
-          spark.read.parquet(path)
-            .filter(col("batch").cast("string") === tag)))
-      } else {
-      IndexCommit.dropOrphanDirs(spark, path, s"cluster=*/batch=$tag")
-      val rows = readLive(spark, path, idCol)
-        .filter(col("cluster") <=> lit(cluster))
-        .select(col(idCol), col(vecCol))
-        .localCheckpoint(true) // seeds + Lloyd steps + the write read it
-      val n = rows.count()
-      require(n >= 2, s"cluster $cluster has $n live rows — nothing to split")
-      // Deterministic 2-seed: the min-id vector and the vector LEAST
-      // similar to it (one bounded pass each, never pairwise).
-      val aRow = rows.orderBy(col(idCol)).limit(1).collect()(0)
-      val aVec = aRow.getSeq[Float](1)
-      val bRow = rows.filter(col(idCol) =!= lit(aRow.get(0)))
-        .orderBy(cosineNative(col(vecCol), array(aVec.map(lit): _*))
-          .asc_nulls_last, col(idCol))
-        .limit(1).collect()(0)
-      val cSchema = StructType(Seq(
-        StructField("cluster", centroidDf.schema("cluster").dataType),
-        StructField("centroid", ArrayType(FloatType))))
-      var two = spark.createDataFrame(java.util.List.of(
-        org.apache.spark.sql.Row(newIdA, aVec),
-        org.apache.spark.sql.Row(newIdB, bRow.getSeq[Float](1))), cSchema)
-      for (_ <- 1 to steps) {
-        val next = kmeansStep(rows, idCol, vecCol, two).localCheckpoint(true)
-        // A step that empties one side would degenerate the split —
-        // keep the last 2-sided iterate instead.
-        if (next.count() == 2) two = next
-        // Heartbeat: at 100 TB a hot cluster's Lloyd steps are long
-        // Spark jobs, and a split that outruns the fixed lock lease
-        // invites takeover mid-rewrite. Renewing at every stage
-        // boundary bounds lease staleness to ONE stage; if a single
-        // stage can exceed the lease, size -Dgraft.lockLeaseMs to the
-        // longest stage (see [[Upsert.renewWriterLease]]).
-        Upsert.renewWriterLease(spark, path)
-      }
-      val assigned = assignNearest(rows, idCol, vecCol, two)
-        .localCheckpoint(true) // written AND averaged for the result
-      Upsert.renewWriterLease(spark, path) // fresh lease for the rewrite
-      val (observed, commit) = observeTightness(assigned, path, tag,
-        overwrite = false)
-      observed.select(col(idCol), col(vecCol), col("cluster"))
-        .withColumn("batch", lit(tag))
-        .repartition(col("cluster"))
-        .write.mode("append").partitionBy("cluster", "batch").parquet(path)
-      commit() // the ledger row: the split is now durable
-      if (fs.exists(srcDir)) fs.delete(srcDir, true)
-      updatedCents(memberMeans(assigned))
-      }
-    }
+    splitCluster(spark, path, idCol, vecCol, centroidDf, None, cluster,
+      newIdA, newIdB, steps)((rows, observed, _) =>
+      floatRows(idCol, vecCol)(rows, observed))
 
   /** One advised split: `cluster` holds `rows` live vectors against a
     * corpus median of `medianRows`; split it into `newIdA`/`newIdB`
@@ -1690,7 +1502,7 @@ object Similarity {
     // Drift verdict from the ledger (absent when the build never
     // recorded its baseline or nothing was appended — then there is
     // simply no drift evidence).
-    val statsP = new org.apache.hadoop.fs.Path(path + "_stats")
+    val statsP = new org.apache.hadoop.fs.Path(ivfIndex(path).ledger)
     val sfs = statsP.getFileSystem(spark.sessionState.newHadoopConf())
     val maxDrift =
       if (!sfs.exists(statsP)) None
@@ -1730,82 +1542,88 @@ object Similarity {
         conv(sp.newIdA), conv(sp.newIdB), steps))
   }
 
-  /** Shared core of the QUANTIZED-layout splits ([[ivfSplitClusterSq8]]
-    * / [[ivfSplitClusterPq]]): the float split's exact protocol
-    * (claim-locked, batch-dir + ledger-row commit, replay-idempotent,
-    * doubles as a cluster-local compact) with the 2-means running on
-    * vectors RE-READ FROM THE FLOAT SOURCE — the documented posture for
-    * splitting an index that stores only quantized payloads (the
-    * [[ivfSplitCluster]] scaladoc's "re-read-float-source path"). The
-    * caller's `floatSource` must cover every live member id (checked
+  /** The one split protocol ([[IndexCommit.replace]] with the CLUSTER as
+    * the replacement unit): claim-locked, the children written under
+    * `batch=split-<c>-<a>-<b>`, the ledger row as the commit point, the
+    * source dir retired after, and a replay of a committed split
+    * finishing that retirement idempotently. The split doubles as a
+    * cluster-local compact (tombstoned ids are dropped).
+    *
+    * The faces differ only in how they get member vectors and how
+    * `payload` renders (member rows, observed assignment, child
+    * centroids) into the layout's rows. With `floatSource` None (the
+    * float layout) members are the index rows themselves. Quantized
+    * payloads cannot seed a 2-means, so their members are RE-READ FROM
+    * THE FLOAT SOURCE, which must cover every live member id (checked
     * loudly — a partial source would silently drop vectors) and carry
-    * one row per id. `payload` renders (member float rows, observed
-    * assignment, new centroids) into the layout's physical rows; the
-    * OBSERVED frame must appear exactly once in the rendered plan (its
-    * metrics row is the commit payload), so encoders read the raw
-    * member rows and join the assignment — [[ivfAppendPq]]'s shape.
+    * one row per id; their child centroids are pinned before the write
+    * so a payload that encodes against them (residual PQ) references
+    * EXACTLY the centroids returned. The OBSERVED frame must appear
+    * exactly once in the rendered plan (its metrics row is the commit
+    * payload), so encoders read the raw member rows and join the
+    * assignment.
     */
-  private def splitClusterFromSource(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      idCol: String, vecCol: String, centroidDf: DataFrame,
-      floatSource: DataFrame, cluster: Any, newIdA: Any, newIdB: Any,
-      steps: Int,
-      payload: (DataFrame, DataFrame, DataFrame) => DataFrame): DataFrame =
-    Upsert.withWriterLock(spark, path) {
-      val tag = s"split-$cluster-$newIdA-$newIdB"
-        .replaceAll("[^A-Za-z0-9._-]", "_")
-      IndexCommit.requireSaneBatchId(tag)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      val srcDir = new org.apache.hadoop.fs.Path(path, s"cluster=$cluster")
-      val src = floatSource.select(col(idCol), col(vecCol))
-      def updatedCents(two: DataFrame): DataFrame =
-        centroidDf.filter(!(col("cluster") <=> lit(cluster)))
-          .unionByName(two)
-      def sourceMeans(members: DataFrame): DataFrame =
-        centroids(members.select(col(idCol), col("cluster")).distinct()
-          .join(src, idCol).select(col("cluster"), col(vecCol)),
-          "cluster", vecCol)
-      if (committedBatches(spark, path).contains(tag)) {
-        // Replay after a crash in the commit→delete window: finish the
-        // source delete, rebuild the two centroids from the committed
-        // members' SOURCE vectors (the index rows are codes). Coverage
-        // is checked HERE TOO: a partial source would silently rebuild
-        // the child centroids from a subset — the same defect the
-        // first-run path aborts on loudly.
-        if (fs.exists(srcDir)) fs.delete(srcDir, true)
-        val members = spark.read.parquet(path)
-          .filter(col("batch").cast("string") === tag)
-          .select(col(idCol), col("cluster")).distinct()
+  private def splitCluster(spark: org.apache.spark.sql.SparkSession,
+      path: String, idCol: String, vecCol: String, centroidDf: DataFrame,
+      floatSource: Option[DataFrame], cluster: Any, newIdA: Any,
+      newIdB: Any, steps: Int)(
+      payload: (DataFrame, DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val tag = s"split-$cluster-$newIdA-$newIdB"
+      .replaceAll("[^A-Za-z0-9._-]", "_")
+    val srcDir = new org.apache.hadoop.fs.Path(path, s"cluster=$cluster")
+    def retireSource(): Unit = {
+      val fs = srcDir.getFileSystem(spark.sessionState.newHadoopConf())
+      if (fs.exists(srcDir)) fs.delete(srcDir, true)
+    }
+    val src = floatSource.map(_.select(col(idCol), col(vecCol)))
+    def updatedCents(two: DataFrame): DataFrame =
+      centroidDf.filter(!(col("cluster") <=> lit(cluster)))
+        .unionByName(two)
+    def means(members: DataFrame): DataFrame =
+      centroids(members.select(col("cluster"), col(vecCol)), "cluster", vecCol)
+    def requireCovered(ids: DataFrame, what: Long => String): Unit =
+      src.foreach { s =>
+        val missing = ids.join(s, Seq(idCol), "left_anti").count()
+        require(missing == 0, what(missing))
+      }
+    IndexCommit.replace(spark, ivfIndex(path), tag) { _ =>
+      // Replay after a crash in the commit→retire window: finish the
+      // retirement, rebuild the two centroids from the committed
+      // members (their SOURCE vectors when the index rows are codes —
+      // coverage checked here too: a partial source would silently
+      // rebuild the child centroids from a subset).
+      retireSource()
+      val committed = IndexCommit.committedRows(spark, path, Set(tag))
+      updatedCents(src.fold(means(committed)) { s =>
+        val members = committed.select(col(idCol), col("cluster")).distinct()
           .localCheckpoint(true) // coverage check AND the means join
-        val missing = members.join(src, Seq(idCol), "left_anti").count()
-        require(missing == 0,
-          s"$missing committed members of split batch $tag are absent " +
-            "from the float source — aborting replay (child centroids " +
-            "would be rebuilt from a subset)")
-        updatedCents(sourceMeans(members))
-      } else {
-      IndexCommit.dropOrphanDirs(spark, path, s"cluster=*/batch=$tag")
-      val liveIds = readLive(spark, path, idCol)
+        requireCovered(members, n => s"$n committed members of split " +
+          s"batch $tag are absent from the float source — aborting replay " +
+          "(child centroids would be rebuilt from a subset)")
+        means(members.join(s, idCol))
+      })
+    } { _ =>
+      val live = readLive(spark, path, idCol)
         .filter(col("cluster") <=> lit(cluster))
-        .select(col(idCol)).distinct()
-        .localCheckpoint(true) // coverage check + the member join
-      val missing = liveIds.join(src, Seq(idCol), "left_anti").count()
-      require(missing == 0,
-        s"$missing live members of cluster $cluster are absent from the " +
-          "float source — aborting split (rewriting without them would " +
-          "drop vectors)")
-      val rows = src.join(liveIds, Seq(idCol), "left_semi")
-        .localCheckpoint(true) // seeds + Lloyd steps + the write read it
+      val rows = src.fold(live.select(col(idCol), col(vecCol))) { s =>
+        val liveIds = live.select(col(idCol)).distinct()
+          .localCheckpoint(true) // coverage check + the member join
+        requireCovered(liveIds, n => s"$n live members of cluster $cluster " +
+          "are absent from the float source — aborting split (rewriting " +
+          "without them would drop vectors)")
+        s.join(liveIds, Seq(idCol), "left_semi")
+      }.localCheckpoint(true) // seeds + Lloyd steps + the write read it
       val n = rows.count()
       require(n >= 2, s"cluster $cluster has $n live rows — nothing to split")
       // One row per id, checked on the CLUSTER-BOUNDED member frame (an
       // O(corpus) distinct on the raw source would defeat the
       // O(cluster) split): duplicate source rows would silently write
       // duplicate index rows.
-      require(rows.select(col(idCol)).distinct().count() == n,
+      require(src.isEmpty || rows.select(col(idCol)).distinct().count() == n,
         s"float source carries duplicate ids for cluster $cluster members " +
           "— deduplicate it (one row per id) before splitting")
+      // Deterministic 2-seed: the min-id vector and the vector LEAST
+      // similar to it (one bounded pass each, never pairwise).
       val aRow = rows.orderBy(col(idCol)).limit(1).collect()(0)
       val aVec = aRow.getSeq[Float](1)
       val bRow = rows.filter(col(idCol) =!= lit(aRow.get(0)))
@@ -1820,34 +1638,35 @@ object Similarity {
         org.apache.spark.sql.Row(newIdB, bRow.getSeq[Float](1))), cSchema)
       for (_ <- 1 to steps) {
         val next = kmeansStep(rows, idCol, vecCol, two).localCheckpoint(true)
+        // A step that empties one side would degenerate the split —
+        // keep the last 2-sided iterate instead.
         if (next.count() == 2) two = next
-        Upsert.renewWriterLease(spark, path) // stage-boundary heartbeat
+        // Heartbeat: at 100 TB a hot cluster's Lloyd steps are long
+        // Spark jobs, and a split that outruns the fixed lock lease
+        // invites takeover mid-rewrite. Renewing at every stage
+        // boundary bounds lease staleness to ONE stage; if a single
+        // stage can exceed the lease, size -Dgraft.lockLeaseMs to the
+        // longest stage (see [[Upsert.renewWriterLease]]).
+        Upsert.renewWriterLease(spark, path)
       }
       val assigned = assignNearest(rows, idCol, vecCol, two)
         .localCheckpoint(true) // written AND averaged for the result
-      Upsert.renewWriterLease(spark, path)
-      // The centroids the RETURNED frame will hold — the member means
-      // under the final assignment, computed BEFORE the write so a
-      // payload whose encoding references its cluster's centroid
-      // (residual PQ) can reference EXACTLY these: the serving path's
-      // coarse term comes from the caller-held frame, so encoding
-      // against any other reference (e.g. the last Lloyd iterate, which
-      // equals the means only at convergence) would leave a per-cluster
-      // bias ⟨q, mean(c) − iterate(c)⟩ in every served score.
-      val finalCents = centroids(
-        assigned.select(col("cluster"), col(vecCol)), "cluster", vecCol)
-        .localCheckpoint(true) // payload AND the returned frame
-      val (observed, commit) = observeTightness(assigned, path, tag,
+      Upsert.renewWriterLease(spark, path) // fresh lease for the rewrite
+      // The member means under the final assignment: the RETURNED
+      // centroids. The serving path's coarse term comes from the
+      // caller-held frame, so a payload encoding against any other
+      // reference (e.g. the last Lloyd iterate, which equals the means
+      // only at convergence) would leave a per-cluster bias
+      // ⟨q, mean(c) − iterate(c)⟩ in every served score.
+      val finalCents =
+        if (src.isEmpty) means(assigned)
+        else means(assigned).localCheckpoint(true) // payload AND the result
+      val (observed, row) = observeTightness(assigned)
+      writeClusters(payload(rows, observed, finalCents), path, tag,
         overwrite = false)
-      payload(rows, observed, finalCents)
-        .withColumn("batch", lit(tag))
-        .repartition(col("cluster"))
-        .write.mode("append").partitionBy("cluster", "batch").parquet(path)
-      commit() // the ledger row: the split is now durable
-      if (fs.exists(srcDir)) fs.delete(srcDir, true)
-      updatedCents(finalCents)
-      }
+      (row(), () => { retireSource(); updatedCents(finalCents) })
     }
+  }
 
   /** [[ivfSplitCluster]] for the SQ8 layout: members' float vectors are
     * re-read from `floatSource` (the corpus the index was built from —
@@ -1860,11 +1679,9 @@ object Similarity {
       path: String, idCol: String, vecCol: String, centroidDf: DataFrame,
       floatSource: DataFrame, cluster: Any, newIdA: Any, newIdB: Any,
       steps: Int = 3): DataFrame =
-    splitClusterFromSource(spark, path, idCol, vecCol, centroidDf,
-      floatSource, cluster, newIdA, newIdB, steps,
-      (_, observed, _) => quantizeInt8(observed, vecCol)
-        .select(col(idCol), col("qvec"), col("scale"),
-          int8SelfNorm(col("qvec")).as("nrm2"), col("cluster")))
+    splitCluster(spark, path, idCol, vecCol, centroidDf, Some(floatSource),
+      cluster, newIdA, newIdB, steps)((rows, observed, _) =>
+      sq8Rows(idCol, vecCol)(rows, observed))
 
   /** [[ivfSplitCluster]] for the PQ-code layout: float vectors re-read
     * from `floatSource`, codes re-emitted with the FROZEN build
@@ -1876,13 +1693,9 @@ object Similarity {
       path: String, idCol: String, vecCol: String, centroidDf: DataFrame,
       floatSource: DataFrame, codebook: DataFrame, m: Int, subDim: Int,
       cluster: Any, newIdA: Any, newIdB: Any, steps: Int = 3): DataFrame =
-    splitClusterFromSource(spark, path, idCol, vecCol, centroidDf,
-      floatSource, cluster, newIdA, newIdB, steps,
-      (rows, observed, _) => pqEncode(rows, idCol, vecCol,
-          codebook, m, subDim)
-        .withColumnRenamed("cluster", "code")
-        .join(observed.select(col(idCol), col("cluster")), idCol)
-        .select(col(idCol), col("sub"), col("code"), col("cluster")))
+    splitCluster(spark, path, idCol, vecCol, centroidDf, Some(floatSource),
+      cluster, newIdA, newIdB, steps)((rows, observed, _) =>
+      pqRows(idCol, vecCol, codebook, m, subDim)(rows, observed))
 
   /** [[ivfSplitCluster]] for the RESIDUAL-encoded PQ layout, completing
     * the four-layout split ladder (float/SQ8/PQ/residual-PQ — every
@@ -1900,9 +1713,8 @@ object Similarity {
       path: String, idCol: String, vecCol: String, centroidDf: DataFrame,
       floatSource: DataFrame, codebook: DataFrame, m: Int, subDim: Int,
       cluster: Any, newIdA: Any, newIdB: Any, steps: Int = 3): DataFrame =
-    splitClusterFromSource(spark, path, idCol, vecCol, centroidDf,
-      floatSource, cluster, newIdA, newIdB, steps,
-      (rows, observed, finalCents) => {
+    splitCluster(spark, path, idCol, vecCol, centroidDf, Some(floatSource),
+      cluster, newIdA, newIdB, steps)((_, observed, finalCents) => {
         // Residuals against the centroids the RETURNED frame holds (see
         // the finalCents note in the core): the row's storage cluster
         // and its residual reference MUST be the same centroid the
@@ -1920,10 +1732,8 @@ object Similarity {
               (a, b) => (a.cast("double") - b.cast("double")).cast("float"))
               .as("residual"))
           .localCheckpoint(true)
-        pqEncode(res, idCol, "residual", codebook, m, subDim)
-          .withColumnRenamed("cluster", "code")
-          .join(res.select(col(idCol), col("cluster")), idCol)
-          .select(col(idCol), col("sub"), col("code"), col("cluster"))
+        routed(pqEncode(res, idCol, "residual", codebook, m, subDim), res,
+          idCol)
       })
 
   /** Margin-criterion bitext mining (Artetxe & Schwenk 2019, the

@@ -27,7 +27,8 @@ import org.apache.spark.sql.functions._
   * n_tokens, n_shards)`, the [[Similarity.ivfStats]] convention —
   * and serving sums them; no read-modify-write on any sidecar.
   *
-  * Atomicity: the LEDGER ROW IS THE COMMIT POINT. Serving reads only
+  * Atomicity ([[IndexCommit]]'s protocol, shared by every ledgered
+  * index): the LEDGER ROW IS THE COMMIT POINT. Serving reads only
   * postings whose `batch` appears in the ledger, so a crash between
   * the posting write and the ledger write leaves an orphan batch that
   * is INVISIBLE — never half-counted. Because `batch` is a partition
@@ -59,12 +60,14 @@ object TextIndex {
   val K1 = 1.2
   val B = 0.75
 
-  private val metaSchema =
+  /** The ledgered layout ([[IndexCommit]]): a batch's postings and
+    * its doclens rows are both replaced on retry.
+    */
+  private def index(path: String) = IndexCommit.Index("index", path,
     "batch STRING, n_docs LONG, sum_dl LONG, n_postings LONG, " +
-      "n_tokens LONG, n_shards INT"
-
-  // Batch-commit protocol rules live in [[IndexCommit]] — shared with
-  // the vector and band indexes so the three families cannot drift.
+      "n_tokens LONG, n_shards INT",
+    Seq(path -> "shard=*/", doclenPath(path) -> "dbucket=*/"))(
+    tombCol = "doc", frozen = Seq("n_shards"))
 
   /** Doc-hash bucket count of the `__doclens` sidecar layout — part of
     * the ON-DISK contract (readers prune `dbucket` partitions computed
@@ -120,10 +123,10 @@ object TextIndex {
     * ≤ DocLenBuckets/nShards × batches partition dirs.
     */
   private[graft] def doclensCover(spark: SparkSession, path: String): Boolean =
-    doclensCover(spark, path, readMeta(spark, path))
+    doclensCover(spark, path, IndexCommit.readLedger(spark, index(path)))
 
   private def doclensCover(spark: SparkSession, path: String,
-      meta: Meta): Boolean = {
+      meta: IndexCommit.Ledger): Boolean = {
     val dlp = new org.apache.hadoop.fs.Path(doclenPath(path))
     val fs = dlp.getFileSystem(spark.sessionState.newHadoopConf())
     def batchDirs(root: String, pattern: String): Set[String] = {
@@ -136,7 +139,7 @@ object TextIndex {
     fs.exists(dlp) && {
       val have = batchDirs(doclenPath(path), "dbucket=*/batch=*")
       val served = batchDirs(path, "shard=*/batch=*")
-        .intersect(meta.batches.filterNot(_.startsWith("del:")))
+        .intersect(meta.committed.filterNot(_.startsWith("del:")))
       served.subsetOf(have)
     }
   }
@@ -157,23 +160,14 @@ object TextIndex {
       .option("partitionOverwriteMode", "static")
       .partitionBy("dbucket", "batch").parquet(doclenPath(path))
 
-  private def metaRow(spark: SparkSession, batch: String, nDocs: Long,
-      sumDl: Long, nPostings: Long, nTokens: Long, nShards: Int): DataFrame =
-    spark.createDataFrame(
-      java.util.List.of(org.apache.spark.sql.Row(
-        batch, nDocs, sumDl, nPostings, nTokens, nShards)),
-      org.apache.spark.sql.types.StructType.fromDDL(metaSchema))
-
-  private def writeMetaRow(spark: SparkSession, counts: (Long, Long),
-      batchStats: DataFrame, batch: String, nShards: Int, path: String,
-      overwrite: Boolean): Unit = {
+  /** A batch's ledger row after `batch`: its doc stats and the
+    * observed posting counts.
+    */
+  private def ledgerRow(counts: (Long, Long), batchStats: DataFrame,
+      nShards: Int): Seq[Any] = {
     val b = batchStats.head()
-    metaRow(spark, batch,
-      b.getLong(0), if (b.isNullAt(1)) 0L else b.getLong(1),
+    Seq[Any](b.getLong(0), if (b.isNullAt(1)) 0L else b.getLong(1),
       counts._1, counts._2, nShards)
-      .coalesce(1)
-      .write.mode(if (overwrite) "overwrite" else "append")
-      .parquet(s"${path}__meta")
   }
 
   /** Shard write; returns (n_postings, n_tokens) observed ON the write
@@ -207,21 +201,30 @@ object TextIndex {
   def write(docs: DataFrame, id: String, body: String, path: String,
       nShards: Int = 16): Unit = {
     require(nShards >= 1, s"need nShards >= 1, got $nShards")
-    val (postings, doclens, stats) = tokenize(docs, id, body)
-    // The postings and doclen sidecar writes are independent sinks over
-    // the shared tokenize stream — overlap them (guide §2.6, gated
-    // fork); the ledger row stays LAST (it is the commit point).
-    val cF = graft.functions.ColumnLib.fork(docs.sparkSession)(
-      writePostings(postings, "build", nShards, path, overwrite = true))
-    val dF = graft.functions.ColumnLib.fork(docs.sparkSession)(
-      writeDoclens(doclens, "build", path, overwrite = true))
-    graft.functions.ColumnLib.awaitAll(cF, dF)
-    val counts = cF()
     // nShards rides in the ledger: serving and appends MUST hash with
     // the build's shard count — a mismatch would silently prune live
-    // postings. A rebuild overwrites the ledger = resets the baseline.
-    writeMetaRow(docs.sparkSession, counts, stats, "build", nShards, path,
-      overwrite = true)
+    // postings. A rebuild resets the ledger = resets the baseline.
+    IndexCommit.build(docs.sparkSession, index(path)) {
+      writeBatch(docs, id, body, path, "build", nShards, overwrite = true)
+    }
+  }
+
+  /** Tokenize once, then the postings and doclen sidecar writes as
+    * independent sinks over the shared stream, overlapped (guide §2.6,
+    * gated fork). Both finish before this returns, even when one fails:
+    * the ledger row stays LAST, and a retry must not meet a still-running
+    * sibling write.
+    */
+  private def writeBatch(docs: DataFrame, id: String, body: String,
+      path: String, batch: String, nShards: Int,
+      overwrite: Boolean): Seq[Any] = {
+    val (postings, doclens, stats) = tokenize(docs, id, body)
+    val cF = graft.functions.ColumnLib.fork(docs.sparkSession)(
+      writePostings(postings, batch, nShards, path, overwrite))
+    val dF = graft.functions.ColumnLib.fork(docs.sparkSession)(
+      writeDoclens(doclens, batch, path, overwrite))
+    graft.functions.ColumnLib.awaitAll(cF, dF)
+    ledgerRow(cF(), stats, nShards)
   }
 
   /** Append a document batch into an existing index — the frozen-layout
@@ -240,27 +243,8 @@ object TextIndex {
     */
   def append(docs: DataFrame, id: String, body: String, path: String,
       batch: String): Unit =
-    Upsert.withWriterLock(docs.sparkSession, path) {
-      IndexCommit.requireSaneBatchId(batch)
-      val spark = docs.sparkSession
-      val meta = readMeta(spark, path)
-      IndexCommit.requireNotCommitted(batch, meta.batches, s"${path}__meta")
-      IndexCommit.dropOrphanDirs(spark, path, s"shard=*/batch=$batch")
-      IndexCommit.dropOrphanDirs(spark, doclenPath(path),
-        s"dbucket=*/batch=$batch")
-      val (postings, doclens, stats) = tokenize(docs, id, body)
-      // Independent sinks, overlapped as in [[write]]; ledger row last.
-      val cF = graft.functions.ColumnLib.fork(spark)(
-        writePostings(postings, batch, meta.nShards, path,
-          overwrite = false))
-      val dF = graft.functions.ColumnLib.fork(spark)(
-        writeDoclens(doclens, batch, path, overwrite = false))
-      // Both sinks finish before the lock is released, even when one
-      // fails: a retry must not meet a still-running sibling write.
-      graft.functions.ColumnLib.awaitAll(cF, dF)
-      val counts = cF()
-      // COMMIT POINT: the batch exists once this row is durable.
-      writeMetaRow(spark, counts, stats, batch, meta.nShards, path,
+    IndexCommit.append(docs.sparkSession, index(path), batch) { meta =>
+      writeBatch(docs, id, body, path, batch, meta("n_shards"),
         overwrite = false)
     }
 
@@ -288,12 +272,7 @@ object TextIndex {
     */
   def delete(spark: SparkSession, path: String, docIds: DataFrame,
       batch: String): Unit =
-    Upsert.withWriterLock(spark, path) {
-      IndexCommit.requireSaneBatchId(batch)
-      val meta = readMeta(spark, path)
-      IndexCommit.requireNotCommitted(s"del:$batch", meta.batches,
-        s"${path}__meta")
-      IndexCommit.dropOrphanDirs(spark, tombPath(path), s"batch=$batch")
+    IndexCommit.delete(spark, index(path), batch) { meta =>
       val cover = doclensCover(spark, path, meta)
       // Caller-supplied ids are cast to the INDEXED doc type before any
       // hashing or joining: xxhash64 is type-sensitive (an int 7 and a
@@ -305,11 +284,10 @@ object TextIndex {
       val indexedDocType =
         (if (cover) spark.read.parquet(doclenPath(path))
          else committedPostings(spark, path, meta)).schema("doc").dataType
-      val fresh = committedTombstones(spark, path, meta)
-        .foldLeft(docIds
+      val fresh = IndexCommit.minusTombstones(docIds
           .select(col(docIds.columns.head).cast(indexedDocType).as("doc"))
-          .distinct())(
-          (ids, tomb) => ids.join(tomb, Seq("doc"), "left_anti"))
+          .distinct(), "doc",
+          IndexCommit.tombstones(spark, index(path), meta.committed))
         .localCheckpoint(true) // bucket collect AND the victim semi-join
       // Victim stats (doc, dl) from the doc-keyed `__doclens` sidecar:
       // the victims' hash buckets prune the read to
@@ -325,8 +303,7 @@ object TextIndex {
       val victims = (if (cover) {
         val buckets = fresh.select(dbucket(col("doc")).as("b")).distinct()
           .collect().map(r => Long.box(r.getLong(0))).toSeq
-        spark.read.parquet(doclenPath(path))
-          .filter(col("batch").cast("string").isin(meta.batches.toSeq: _*))
+        IndexCommit.committedRows(spark, doclenPath(path), meta.committed)
           .filter(col("dbucket").isin(buckets: _*))
           .join(fresh, Seq("doc"), "left_semi")
           .select(col("doc"), col("dl")).distinct()
@@ -338,15 +315,9 @@ object TextIndex {
       val st = victims.agg(
         count(lit(1)).as("d"),
         coalesce(sum(col("dl")), lit(0L)).as("dl")).head()
-      victims.select(col("doc"))
-        .withColumn("batch", lit(batch))
-        .coalesce(1)
-        .write.mode("append").option("partitionOverwriteMode", "static")
-        .partitionBy("batch").parquet(tombPath(path))
-      // COMMIT POINT: the negative row makes the tombstones visible.
-      metaRow(spark, s"del:$batch", -st.getLong(0), -st.getLong(1),
-        0L, 0L, meta.nShards)
-        .coalesce(1).write.mode("append").parquet(s"${path}__meta")
+      // The negative row that commits the tombstones.
+      (victims.select(col("doc")),
+        Seq[Any](-st.getLong(0), -st.getLong(1), 0L, 0L, meta("n_shards")))
     }
 
   /** Distinct doc ids whose postings belong to a COMMITTED batch — the
@@ -358,46 +329,15 @@ object TextIndex {
     * erased identities are retired, a replay must not re-ingest them.
     */
   def indexedIds(spark: SparkSession, path: String): DataFrame = {
-    val meta = readMeta(spark, path)
+    val meta = IndexCommit.readLedger(spark, index(path))
     // One row per doc from the doclens sidecar beats one per posting;
     // pre-sidecar (or partially covered) indexes fall back to the
     // postings scan.
     if (doclensCover(spark, path, meta))
-      spark.read.parquet(doclenPath(path))
-        .filter(col("batch").cast("string").isin(meta.batches.toSeq: _*))
+      IndexCommit.committedRows(spark, doclenPath(path), meta.committed)
         .select(col("doc")).distinct()
     else
       committedPostings(spark, path, meta).select(col("doc")).distinct()
-  }
-
-  private def tombPath(path: String): String = s"${path}__tombstones"
-
-  /** Doc ids of COMMITTED delete batches (ledger row `del:<batch>`
-    * exists); an un-committed tombstone dir is invisible, mirroring
-    * [[committedPostings]]. None when no delete ever committed, so
-    * callers skip the anti-join entirely (and no empty-frame schema
-    * has to guess the doc id type).
-    */
-  private def committedTombstones(spark: SparkSession, path: String,
-      meta: Meta): Option[DataFrame] = {
-    val committedDels = meta.batches.collect {
-      case b if b.startsWith("del:") => b.stripPrefix("del:")
-    }
-    // The ledger keeps del rows FOREVER (they are what hold the sums
-    // right and the exactly-once guard), but the sidecar is dropped by
-    // compact once the postings are physically gone — and a delete of
-    // only-absent ids writes no files at all. Gate on what is actually
-    // on disk, not on the ledger.
-    val pTomb = new org.apache.hadoop.fs.Path(tombPath(path))
-    val fs = pTomb.getFileSystem(spark.sessionState.newHadoopConf())
-    val hasDirs = fs.exists(pTomb) && {
-      val g = fs.globStatus(new org.apache.hadoop.fs.Path(pTomb, "batch=*"))
-      g != null && g.nonEmpty
-    }
-    if (committedDels.isEmpty || !hasDirs) None
-    else Some(spark.read.parquet(tombPath(path))
-      .filter(col("batch").cast("string").isin(committedDels.toSeq: _*))
-      .select(col("doc")))
   }
 
   /** Compact an append-heavy index: every [[append]] leaves one file
@@ -423,68 +363,20 @@ object TextIndex {
     * rewrite streams from the original files into the swap.
     */
   def compact(spark: SparkSession, path: String): Unit =
-    Upsert.withWriterLock(spark, path) {
-      val meta = readMeta(spark, path)
-      val tomb = committedTombstones(spark, path, meta)
-        .map(_.localCheckpoint(true)) // read by BOTH folds inside the swaps
-      graft.sources.Storage.rewriteInPlace(spark, path) { tmp =>
-        tomb.foldLeft(committedPostings(spark, path, meta))(
-            (p, t) => p.join(t, Seq("doc"), "left_anti"))
-          .withColumn("batch", lit("build"))
-          .repartition(col("shard"))
-          .write.mode("overwrite").partitionBy("shard", "batch").parquet(tmp)
-      }
-      // The doclens sidecar folds the same way (committed batches minus
-      // tombstoned docs → batch=build), in its own swap AFTER the
-      // postings swap: a crash between them leaves extra committed-
-      // batch doclens dirs, which the batch filter keeps serving
-      // correctly, and the next compact folds.
-      val dlp = new org.apache.hadoop.fs.Path(doclenPath(path))
-      val fs = dlp.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(dlp))
-        graft.sources.Storage.rewriteInPlace(spark, doclenPath(path)) { tmp =>
-          val live = spark.read.parquet(doclenPath(path))
-            .filter(col("batch").cast("string").isin(meta.batches.toSeq: _*))
-          tomb.foldLeft(live)((d, t) => d.join(t, Seq("doc"), "left_anti"))
-            .withColumn("batch", lit("build"))
-            .repartition(col("dbucket"))
-            .write.mode("overwrite").partitionBy("dbucket", "batch")
-            .parquet(tmp)
-        }
-      // Post-swap: tombstoned postings are gone, drop the sidecar. A
-      // crash before this line leaves stale tombstones — harmless
-      // (anti-join of absent docs), cleared by the next compact.
-      val pTomb = new org.apache.hadoop.fs.Path(tombPath(path))
-      if (fs.exists(pTomb)) fs.delete(pTomb, true)
-    }
-
-  private case class Meta(nDocs: Long, sumDl: Long, nShards: Int,
-    batches: Set[String])
-
-  /** Ledger totals + the committed-batch set. One row per batch —
-    * bounded, broadcast-sized.
-    */
-  private def readMeta(spark: SparkSession, path: String): Meta = {
-    val rows = spark.read.parquet(s"${path}__meta")
-      .select(col("batch"), col("n_docs"), col("sum_dl"), col("n_shards"))
-      .collect()
-    require(rows.nonEmpty, s"empty index ledger at ${path}__meta")
-    val shards = rows.map(_.getInt(3)).distinct
-    require(shards.length == 1,
-      s"corrupt index meta: inconsistent n_shards ${shards.mkString("/")}")
-    Meta(rows.map(_.getLong(1)).sum, rows.map(_.getLong(2)).sum,
-      shards.head, rows.map(_.getString(0)).toSet)
-  }
+    // The doclens sidecar folds the same way (committed batches minus
+    // tombstoned docs → batch=build), in its own swap AFTER the
+    // postings swap: a crash between them leaves extra committed-batch
+    // doclens dirs, which the batch filter keeps serving correctly, and
+    // the next compact folds.
+    IndexCommit.compact(spark, index(path), "shard", idCol = Some("doc"),
+      sidecars = Seq(doclenPath(path) -> "dbucket"))
 
   /** Postings restricted to ledger-committed batches — the only rows
-    * that EXIST as far as the index contract is concerned. `batch` is
-    * a partition directory, so the filter is partition pruning: orphan
-    * batch dirs are never even listed into the scan.
+    * that EXIST as far as the index contract is concerned.
     */
   private def committedPostings(spark: SparkSession, path: String,
-      meta: Meta): DataFrame =
-    spark.read.parquet(path)
-      .filter(col("batch").cast("string").isin(meta.batches.toSeq: _*))
+      meta: IndexCommit.Ledger): DataFrame =
+    IndexCommit.committedRows(spark, path, meta.committed)
 
   /** Per-batch ledger with `avgdl_drift` = batch mean doc length −
     * build mean doc length (the quantity BM25's b-normalization is
@@ -492,7 +384,7 @@ object TextIndex {
     * indexed tokens. The ledger is one row per batch — broadcast.
     */
   def indexStats(spark: SparkSession, path: String): DataFrame = {
-    val s = spark.read.parquet(s"${path}__meta")
+    val s = spark.read.parquet(index(path).ledger)
       .withColumn("avgdl",
         col("sum_dl").cast("double") / col("n_docs").cast("double"))
     val base = s.filter(col("batch") === "build")
@@ -541,15 +433,15 @@ object TextIndex {
     // Corpus constants and the shard modulus come from the index's OWN
     // ledger — taking nShards as a parameter again would let a
     // build/search mismatch silently prune live postings.
-    val meta = readMeta(spark, path)
-    val nDocs = meta.nDocs.toDouble
-    val avgdl = meta.sumDl.toDouble / nDocs
+    val meta = IndexCommit.readLedger(spark, index(path))
+    val nDocs = meta.sum("n_docs").toDouble
+    val avgdl = meta.sum("sum_dl").toDouble / nDocs
     // Shard ids computed with the SAME expression the build used, on a
     // tiny in-memory frame — no hand-rolled reimplementation of
     // xxhash64 to drift out of sync.
     val shards = spark.createDataFrame(
         terms.map(Tuple1(_))).toDF("token")
-      .select(pmod(xxhash64(col("token")), lit(meta.nShards)).as("shard"))
+      .select(pmod(xxhash64(col("token")), lit(meta("n_shards"))).as("shard"))
       .distinct().collect().map(_.getLong(0))
     val probed = committedPostings(spark, path, meta)
       .filter(col("shard").isin(shards.toIndexedSeq: _*) &&
@@ -558,8 +450,8 @@ object TextIndex {
     // candidate set and every df/idf constant then match a rebuild
     // without them (nDocs/avgdl already exclude them via the ledger's
     // negative delete rows).
-    val posts = committedTombstones(spark, path, meta)
-      .foldLeft(probed)((p, t) => p.join(t, Seq("doc"), "left_anti"))
+    val posts = IndexCommit.minusTombstones(probed, "doc",
+        IndexCommit.tombstones(spark, index(path), meta.committed))
       // Live df: every posting of a probed term is in the probed rows,
       // so this token-keyed count IS the current document frequency —
       // exact across any append history, stale-proof by construction.

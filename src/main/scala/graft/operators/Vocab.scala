@@ -12,9 +12,9 @@ import org.apache.spark.sql.types.StructType
   *
   * Layout: `(token, id)` parquet rows partitioned by `batch` (build
   * writes `batch=build`), plus a `__meta` ledger row per batch
-  * `(batch, n_tokens, max_id)` — the fourth artifact family on the
-  * [[IndexCommit]] protocol (text postings, vector clusters, LSH
-  * bands, now ids): the ledger row is the COMMIT POINT, a torn append
+  * `(batch, n_tokens, max_id)` — one of the five artifact families on
+  * the [[IndexCommit]] protocol (text postings, vector clusters, LSH
+  * bands, window digests, ids): the ledger row is the COMMIT POINT, a torn append
   * is invisible, a retry replaces the failed batch's dirs, a
   * committed batch id is exactly-once, and the writer lock excludes
   * concurrent assignment (two uncoordinated appends would mint
@@ -31,21 +31,22 @@ import org.apache.spark.sql.types.StructType
   */
 object Vocab {
 
-  private val metaSchema = "batch STRING, n_tokens LONG, max_id LONG"
+  private def index(path: String) = IndexCommit.Index("vocab", path,
+    "batch STRING, n_tokens LONG, max_id LONG", Seq(path -> ""))()
 
   /** (token, id) from a token-occurrence stream (one row per
     * occurrence; counting is internal). Overwrites any existing vocab
     * at `path` and resets the ledger.
     */
-  def build(toks: DataFrame, tokenCol: String, path: String): Unit = {
-    val spark = toks.sparkSession
-    val ids = assignIds(counts(toks, tokenCol), startId = 0L)
-      .localCheckpoint(true) // write + the max-id aggregate
-    ids.withColumn("batch", lit("build"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("batch").parquet(path)
-    writeMetaRow(spark, path, "build", ids, overwrite = true)
-  }
+  def build(toks: DataFrame, tokenCol: String, path: String): Unit =
+    IndexCommit.build(toks.sparkSession, index(path)) {
+      val ids = assignIds(counts(toks, tokenCol), startId = 0L)
+        .localCheckpoint(true) // write + the max-id aggregate
+      ids.withColumn("batch", lit("build"))
+        .write.mode("overwrite").option("partitionOverwriteMode", "static")
+        .partitionBy("batch").parquet(path)
+      ledgerRow(ids)
+    }
 
   /** Mint ids for the batch's NEW tokens only (anti-join against the
     * committed vocab), starting at maxId+1. O(batch + one vocab
@@ -54,27 +55,24 @@ object Vocab {
     */
   def append(toks: DataFrame, tokenCol: String, path: String,
       batch: String): Unit =
-    Upsert.withWriterLock(toks.sparkSession, path) {
-      val spark = toks.sparkSession
-      IndexCommit.requireSaneBatchId(batch)
-      val meta = readMeta(spark, path)
-      IndexCommit.requireNotCommitted(batch, meta.batches, s"${path}__meta")
-      IndexCommit.dropOrphanDirs(spark, path, s"batch=$batch")
-      val existing = committedRows(spark, path, meta).select("token")
+    IndexCommit.append(toks.sparkSession, index(path), batch) { ledger =>
+      val existing = IndexCommit.committedRows(toks.sparkSession, path,
+        ledger.committed).select("token")
       val fresh = counts(toks, tokenCol)
         .join(existing, Seq("token"), "left_anti")
-      val ids = assignIds(fresh, startId = meta.maxId + 1)
+      val ids = assignIds(fresh, startId = maxId(ledger) + 1)
         .localCheckpoint(true) // write + the max-id aggregate
       ids.withColumn("batch", lit(batch))
         .write.mode("append").option("partitionOverwriteMode", "static")
         .partitionBy("batch").parquet(path)
-      // COMMIT POINT: the batch's ids exist once this row is durable.
-      writeMetaRow(spark, path, batch, ids, overwrite = false)
+      ledgerRow(ids)
     }
 
   /** The committed vocabulary: (token, id), torn appends invisible. */
   def read(spark: SparkSession, path: String): DataFrame =
-    committedRows(spark, path, readMeta(spark, path)).select("token", "id")
+    IndexCommit.committedRows(spark, path,
+      IndexCommit.readLedger(spark, index(path)).committed)
+      .select("token", "id")
 
   /** Map a token column to its stable id (left join: out-of-vocabulary
     * tokens get a null id — the caller decides between dropping and
@@ -105,28 +103,13 @@ object Vocab {
       }, schema)
   }
 
-  private final case class Meta(maxId: Long, batches: Set[String])
+  private def maxId(ledger: IndexCommit.Ledger): Long =
+    ledger.rows.map(_.getAs[Long]("max_id")).max
 
-  private def readMeta(spark: SparkSession, path: String): Meta = {
-    val rows = spark.read.parquet(s"${path}__meta").collect()
-    require(rows.nonEmpty, s"empty vocab ledger at ${path}__meta")
-    Meta(rows.map(_.getLong(2)).max, rows.map(_.getString(0)).toSet)
-  }
-
-  private def committedRows(spark: SparkSession, path: String,
-      meta: Meta): DataFrame =
-    spark.read.parquet(path)
-      .filter(col("batch").cast("string").isin(meta.batches.toSeq: _*))
-
-  private def writeMetaRow(spark: SparkSession, path: String, batch: String,
-      ids: DataFrame, overwrite: Boolean): Unit = {
+  /** The batch's ledger row: (n_tokens, max_id), max_id −1 when empty. */
+  private def ledgerRow(ids: DataFrame): Seq[Any] = {
     val st = ids.agg(count(lit(1)).as("n"),
       coalesce(max(col("id")), lit(-1L)).as("mx")).head()
-    spark.createDataFrame(
-        java.util.List.of(Row(batch, st.getLong(0), st.getLong(1))),
-        StructType.fromDDL(metaSchema))
-      .coalesce(1)
-      .write.mode(if (overwrite) "overwrite" else "append")
-      .parquet(s"${path}__meta")
+    Seq(st.getLong(0), st.getLong(1))
   }
 }

@@ -446,8 +446,9 @@ object PipelineOps {
 
     // ---- forget pipeline end-to-end across every index family (q205) -----
     // The GDPR capstone, composing the erasure faces the round built:
-    // build ALL THREE serving artifacts (BM25 postings, LSH band index,
-    // IVF vector index), tombstone-delete the forget set from each
+    // build the three tombstoning serving artifacts (BM25 postings, LSH
+    // band index, IVF vector index), tombstone-delete the forget set
+    // from each through the one IndexCommit delete protocol
     // (q201/q202 and bandIndexDelete), compact, then MEASURE the
     // leftovers — n_leaked is counted by scanning the real post-compact
     // bytes for erased ids, and the oracle states the contract (exact
@@ -472,9 +473,13 @@ object PipelineOps {
         val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
         val e = t(s, dir, "embeddings")
           .select(col("vec_id"), col("embedding"), col("label"))
+        // Distinct: the leak scans' left joins mark each index row at
+        // most once only if the forget set has no repeated id.
         val badDocs = d.filter(col("doc_id") % 9 === 3).select("doc_id")
+          .distinct()
           .localCheckpoint(true) // two deletes + two leak scans read it
         val badVecs = e.filter(col("vec_id") % 9 === 3).select("vec_id")
+          .distinct()
           .localCheckpoint(true) // delete + leak scan read it
         val base = sys.props("java.io.tmpdir") +
           s"/graft_forget_q205_${java.lang.Integer.toHexString(dir.hashCode)}"
@@ -504,7 +509,7 @@ object PipelineOps {
         // The post-compact row and leak counts need no more driver
         // actions at all: fold each artifact's (n_after, n_leaked)
         // into ONE aggregate over its post-compact bytes — the leak
-        // ids are unique, so a left join marks each index row at
+        // ids are distinct, so a left join marks each index row at
         // most once and count(hit) ≡ a left-semi join count — and
         // return the UNION lazily, so the bench's single final
         // action computes all three scans as sibling stages of one

@@ -285,8 +285,8 @@ object IncrementalStream {
       }
 
   /** Streaming text-index ingest — the sparse-retrieval analog of
-    * [[vectorIngestSink]], completing the streaming face across all
-    * three index families: each micro-batch's documents append into
+    * [[vectorIngestSink]], completing the streaming face across the
+    * text, vector and band indexes: each micro-batch's documents append into
     * the persisted BM25 index under the frozen shard routing, batch id
     * = micro-batch id, exactly-once by the ledger-commit protocol.
     * Already-indexed doc ids are diffed away first, so at-least-once

@@ -22,6 +22,7 @@ class ApiConfigSpec extends AnyFunSuite {
 
   test("overrides, quote-stripping, and the file source winning over inline") {
     val f = java.nio.file.Files.createTempFile("accounts", ".json")
+    f.toFile.deleteOnExit()
     java.nio.file.Files.writeString(f,
       """[{"tenant":"tf","email":"f@x.test","password":"pf"}]""")
     val cfg = ApiConfig.fromEnv(Map(

@@ -10,7 +10,7 @@ class BatchRunnerSpec extends SparkSpec {
   private val T0 = 1704844800000L
 
   test("full E1/E2/snapshot/E3 cycle: ingest, merge, re-run, report") {
-    val wh = java.nio.file.Files.createTempDirectory("runner_wh").toString
+    val wh = tempDir("runner_wh")
     val cfg = BatchRunner.Config(wh, tenants = Seq("PK"),
       sliceMs = 1800000L, pageSize = 13)
     val now1 = T0 + 120 * 60000L
@@ -82,7 +82,7 @@ class BatchRunnerSpec extends SparkSpec {
   }
 
   test("runLoop: daemon catch-up drives the incremental batch end to end") {
-    val wh = java.nio.file.Files.createTempDirectory("runner_loop").toString
+    val wh = tempDir("runner_loop")
     val cfg = BatchRunner.Config(wh, tenants = Seq("PK"),
       sliceMs = 1800000L, pageSize = 13)
     val r = new BatchRunner(spark, new FixtureSources.Paged(T0, 120, version = 1),
@@ -114,7 +114,7 @@ class BatchRunnerSpec extends SparkSpec {
     // window, but the VN7 reporting date Ngay = dEnd + 1 is outside it.
     val dEnd = java.time.LocalDate.parse("2024-01-12")
     val t17 = T0 + 2 * 86400000L + 17 * 3600000L
-    val wh = java.nio.file.Files.createTempDirectory("runner_vn7").toString
+    val wh = tempDir("runner_vn7")
     val r = new BatchRunner(spark, new FixtureSources.Paged(t17, 60, version = 1),
       new FixtureSources.Snapshots, BatchRunner.Config(wh, tenants = Seq("PK"),
         sliceMs = 1800000L, pageSize = 13))

@@ -106,7 +106,7 @@ class BloomJoinSpec extends SparkSpec {
     // the persisted artifact freezes its geometry: bloomProbe reads
     // (m, k, salt) from the __meta sidecar, so a build/probe mismatch
     // — the silent-false-negative failure — cannot happen
-    val dir = java.nio.file.Files.createTempDirectory("bloomcells").toString
+    val dir = tempDir("bloomcells")
     BloomJoin.bloomWrite(keys, "k", 1 << 16, 3, "s", dir + "/c")
     val viaArtifact = BloomJoin.bloomProbe(spark, dir + "/c", keys, "k")
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap

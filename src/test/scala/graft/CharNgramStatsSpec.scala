@@ -109,8 +109,7 @@ class CharNgramStatsSpec extends SparkSpec {
     // banded a null body 'high' — while DuckDB's CASE folds length(NULL)
     // to total_g = 0 = 'short'. The gate fixture has no null texts, so
     // only this spec guards the divergence.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_q180b_null").toString
+    val dir = tempDir("graft_q180b_null")
     df("doc_id BIGINT, lang STRING, text STRING",
       Row(Long.box(1), "en", "the quick brown fox jumps the fence"),
       Row(Long.box(2), "en", null),

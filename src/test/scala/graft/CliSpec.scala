@@ -41,7 +41,7 @@ class CliSpec extends SparkSpec {
   }
 
   test("once mode: all jobs + reporting land through injected fixtures") {
-    val wh = java.nio.file.Files.createTempDirectory("cli_once").toString
+    val wh = tempDir("cli_once")
     val at = java.time.Instant.ofEpochMilli(T0 + 120 * 60000L)
     val code = Cli.run(Seq("--mode", "once", "--job", "all"), env(wh), spark,
       fetcher = Some(new FixtureSources.Paged(T0, 120, version = 1)),
@@ -61,7 +61,7 @@ class CliSpec extends SparkSpec {
       now = () => at) == 0)
     // Single-job surface: only the named job runs (customer ingested,
     // no call_log) in a fresh warehouse.
-    val wh2 = java.nio.file.Files.createTempDirectory("cli_job").toString
+    val wh2 = tempDir("cli_job")
     assert(Cli.run(Seq("--job", "customer"), env(wh2), spark,
       fetcher = Some(new FixtureSources.Paged(T0, 60, version = 1)),
       snapshots = Some(new FixtureSources.Snapshots),
@@ -76,7 +76,7 @@ class CliSpec extends SparkSpec {
     // staff/group slot must not re-pull the snapshot. Real wall clock
     // here: the audit log's updated_at and the slot boundary must be
     // on the same clock for the guard to be meaningful.
-    val wh = java.nio.file.Files.createTempDirectory("cli_skip").toString
+    val wh = tempDir("cli_skip")
     val calls = new java.util.concurrent.atomic.AtomicInteger(0)
     val counting = new graft.pipelines.BatchRunner.SnapshotFetcher {
       private val inner = new FixtureSources.Snapshots
@@ -98,7 +98,7 @@ class CliSpec extends SparkSpec {
   }
 
   test("daemon mode: cold start fires a catch-up tick, then sleeps between slots") {
-    val wh = java.nio.file.Files.createTempDirectory("cli_daemon").toString
+    val wh = tempDir("cli_daemon")
     val at = java.time.Instant.ofEpochMilli(T0 + 120 * 60000L)
     var polls = 0
     var slept = 0L

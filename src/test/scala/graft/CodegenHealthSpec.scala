@@ -308,7 +308,7 @@ class CodegenHealthSpec extends SparkSpec {
       org.apache.spark.sql.internal.StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES) ==
       Engine.CodegenCacheEntries)
     assert(!conf.wholeStageUseIdInClassName)
-    val wh = java.nio.file.Files.createTempDirectory("codegen_wh").toString
+    val wh = tempDir("codegen_wh")
     val t0 = 1704844800000L // 2024-01-10T00:00:00Z
     val r = new graft.pipelines.BatchRunner(spark,
       new graft.sources.FixtureSources.Paged(t0, 120, version = 1),

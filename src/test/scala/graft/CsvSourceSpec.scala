@@ -44,7 +44,7 @@ class CsvSourceSpec extends SparkSpec {
   }
 
   test("ingest: good rows returned, raw bad lines quarantined, never fails") {
-    val dir = java.nio.file.Files.createTempDirectory("csv_src").toString
+    val dir = tempDir("csv_src")
     val qdir = dir + "/quarantine"
     lines("1,a", "x,b", "3,c").select(col("line").as("value"))
       .write.mode("overwrite").text(dir + "/in")

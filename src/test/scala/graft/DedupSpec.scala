@@ -119,8 +119,7 @@ class DedupSpec extends SparkSpec {
     val all = docs.union(extra)
     val existing = all.filter(col("doc_id") <= 3)
     val incoming = all.filter(col("doc_id") > 3)
-    val dir = java.nio.file.Files
-      .createTempDirectory("bandidx").toString + "/index"
+    val dir = tempDir("bandidx") + "/index"
     Dedup.bandIndexWrite(existing, "doc_id", "text", 4, 3, 2, dir)
     val inc = Dedup.incrementalNearDupPairs(spark, dir, existing, incoming,
         "doc_id", "text", minJaccard = 0.5)
@@ -149,10 +148,8 @@ class DedupSpec extends SparkSpec {
           "doc_id", "text", minJaccard = 0.5)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     // Rebuild index over docs 1-3 vs build(1-2) + append(3): identical.
-    val pFull = java.nio.file.Files
-      .createTempDirectory("bandidx_f").toString + "/index"
-    val pInc = java.nio.file.Files
-      .createTempDirectory("bandidx_i").toString + "/index"
+    val pFull = tempDir("bandidx_f") + "/index"
+    val pInc = tempDir("bandidx_i") + "/index"
     Dedup.bandIndexWrite(existing, "doc_id", "text", 4, 3, 2, pFull)
     Dedup.bandIndexWrite(existing.filter(col("doc_id") <= 2),
       "doc_id", "text", 4, 3, 2, pInc)
@@ -163,8 +160,7 @@ class DedupSpec extends SparkSpec {
     // Torn append (bands on disk, no ledger row) is invisible; the
     // retry replaces the orphans instead of duplicating them.
     val doc3 = existing.filter(col("doc_id") === 3)
-    val pTorn = java.nio.file.Files
-      .createTempDirectory("bandidx_t").toString + "/index"
+    val pTorn = tempDir("bandidx_t") + "/index"
     Dedup.bandIndexWrite(existing.filter(col("doc_id") <= 2),
       "doc_id", "text", 4, 3, 2, pTorn)
     val before = probe(pTorn)
@@ -279,10 +275,8 @@ class DedupSpec extends SparkSpec {
       Dedup.incrementalNearDupPairs(spark, p, existing, incoming,
           "doc_id", "text", minJaccard = 0.5)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val p = java.nio.file.Files
-      .createTempDirectory("bandidx_d").toString + "/index"
-    val pRef = java.nio.file.Files
-      .createTempDirectory("bandidx_dr").toString + "/index"
+    val p = tempDir("bandidx_d") + "/index"
+    val pRef = tempDir("bandidx_dr") + "/index"
     Dedup.bandIndexWrite(existing, "doc_id", "text", 4, 3, 2, p)
     assert(probe(p).contains((4L, 1L)), "doc 1 matches before erasure")
     Dedup.bandIndexDelete(spark, p,
@@ -307,8 +301,7 @@ class DedupSpec extends SparkSpec {
     // retry replaces the orphan rows and commits
     Dedup.bandIndexDelete(spark, p,
       df("doc_id BIGINT", Row(Long.box(2))), "dX")
-    val pRef2 = java.nio.file.Files
-      .createTempDirectory("bandidx_dr2").toString + "/index"
+    val pRef2 = tempDir("bandidx_dr2") + "/index"
     Dedup.bandIndexWrite(existing.filter(col("doc_id") === 3L),
       "doc_id", "text", 4, 3, 2, pRef2)
     assert(probe(p) == probe(pRef2))
@@ -968,8 +961,7 @@ class DedupSpec extends SparkSpec {
       .filter(col("doc_id") >= 10)
       .collect().map(r => r.getLong(0) ->
         (r.getString(1), r.getInt(2), r.getInt(3), r.getInt(4))).toMap
-    val p = java.nio.file.Files
-      .createTempDirectory("winidx").toString + "/index"
+    val p = tempDir("winidx") + "/index"
     Dedup.windowIndexWrite(corpusA, "doc_id", "text", minTokens = 4, p)
     Dedup.windowIndexAppend(corpusB, "doc_id", "text", p, "b1")
     def probe() = Dedup

@@ -223,7 +223,7 @@ class HttpDocFetcherSpec extends SparkSpec {
         "API_TIMEOUT" -> "10",
         "CALLIO_ACCOUNTS_JSON" ->
           """[{"tenant":"t1","email":"u@example.test","password":"pw"}]"""))
-      val dir = java.nio.file.Files.createTempDirectory("http_stream")
+      val dir = java.nio.file.Paths.get(tempDir("http_stream"))
       import org.apache.spark.sql.functions._
       def transform(docs: org.apache.spark.sql.DataFrame) =
         docs.select(col("_id"), col("updateTime"), col("v"),
@@ -335,7 +335,7 @@ class HttpDocFetcherSpec extends SparkSpec {
     withStub(new CallioStub(soakT0, 300, tokenUses = 60,
         windowLimitMs = 20 * 60000L, flakyEvery = 7)) { stub =>
       HttpDocFetcher.clearTokenCache()
-      val wh = java.nio.file.Files.createTempDirectory("soak_wh").toString
+      val wh = tempDir("soak_wh")
       val cfg = graft.pipelines.BatchRunner.Config(wh, tenants = Seq("PK"),
         daysIfEmpty = 1, sliceMs = 1800000L, minSliceMs = 300000L,
         pageSize = 10)

@@ -6,7 +6,7 @@ import java.time.{Instant, LocalTime}
 class IncrementalSpec extends SparkSpec {
 
   test("update log buffer flushes once; checkpoint store warms from it") {
-    val dir = java.nio.file.Files.createTempDirectory("updlog").toString + "/log"
+    val dir = tempDir("updlog") + "/log"
     val buf = new UpdateLogBuffer(spark, dir)
     buf.add("t1", "customer", 10, Some(1000L), "STAGED")
     buf.add("t1", "customer", 10, Some(2000L), "MERGED")

@@ -16,7 +16,7 @@ class IvfSpec extends SparkSpec {
     Row(Long.box(6), "z", Seq(0.1f, 0.0f, 0.9f)))
 
   test("IVF build + probe-limited search finds the brute-force winner") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf").toString + "/index"
+    val dir = tempDir("ivf") + "/index"
     val cents = Similarity.centroids(vecs, "label", "embedding")
     assert(cents.count() == 3)
     Similarity.ivfWrite(vecs, "vec_id", "embedding", cents, dir)
@@ -69,7 +69,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("ivfSearchBatch matches per-query ivfSearch and never nested-loops") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf3").toString + "/index"
+    val dir = tempDir("ivf3") + "/index"
     val cents = Similarity.centroids(vecs, "label", "embedding")
     Similarity.ivfWrite(vecs, "vec_id", "embedding", cents, dir)
     val queries = vecs.filter(col("vec_id").isin(1L, 3L))
@@ -100,7 +100,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("IVF-SQ8: quantized layout shares placement and agrees with float search") {
-    val dir = java.nio.file.Files.createTempDirectory("ivfsq").toString + "/index"
+    val dir = tempDir("ivfsq") + "/index"
     val cents = Similarity.centroids(vecs, "label", "embedding")
     Similarity.ivfWriteSq8(vecs, "vec_id", "embedding", cents, dir)
     // Same cluster-partitioned layout as the float index, int8 payload.
@@ -120,7 +120,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("ivfSearchBatchSq8 matches per-query ivfSearchSq8 modulo self-exclusion") {
-    val dir = java.nio.file.Files.createTempDirectory("ivfsqb").toString + "/index"
+    val dir = tempDir("ivfsqb") + "/index"
     val cents = Similarity.centroids(vecs, "label", "embedding")
     Similarity.ivfWriteSq8(vecs, "vec_id", "embedding", cents, dir)
     val queries = vecs.filter(col("vec_id").isin(1L, 3L))
@@ -146,7 +146,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("IVF search physically prunes unprobed cluster partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf2").toString + "/index"
+    val dir = tempDir("ivf2") + "/index"
     val cents = Similarity.centroids(vecs, "label", "embedding")
     Similarity.ivfWrite(vecs, "vec_id", "embedding", cents, dir)
     val plan = Similarity.ivfSearch(spark, dir, "vec_id", "embedding",

@@ -48,7 +48,7 @@ class JsonlSourceSpec extends SparkSpec {
   }
 
   test("ingest: one pass, good rows returned, raw bad lines quarantined") {
-    val dir = java.nio.file.Files.createTempDirectory("jsonl_src").toString
+    val dir = tempDir("jsonl_src")
     val qdir = dir + "/quarantine"
     lines("""{"id":1,"name":"a"}""", """{"id":2""", """{"id":3,"name":"c"}""")
       .select(col("line").as("value"))
@@ -64,7 +64,7 @@ class JsonlSourceSpec extends SparkSpec {
   }
 
   test("100%-corrupt input returns empty, never fails") {
-    val dir = java.nio.file.Files.createTempDirectory("jsonl_bad").toString
+    val dir = tempDir("jsonl_bad")
     lines("oops", "{{{{").select(col("line").as("value"))
       .write.mode("overwrite").text(dir)
     assert(JsonlSource.ingest(spark, dir, schema).count() == 0)

@@ -1,7 +1,7 @@
 package graft
 
-import graft.operators.Similarity
-import org.apache.spark.sql.Row
+import graft.operators.{IndexCommit, Similarity}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -269,8 +269,7 @@ class SimilaritySpec extends SparkSpec {
     val cents = Similarity.centroids(
       d.selectExpr("vec_id % 2 as cluster", "embedding"),
       "cluster", "embedding")
-    val ipath = java.nio.file.Files
-      .createTempDirectory("ivfpq").toString + "/index"
+    val ipath = tempDir("ivfpq") + "/index"
     Similarity.ivfWritePq(d, "vec_id", "embedding", cents, cb,
       m = 2, subDim = 4, ipath)
     val q1 = v(1, 0, 0, 0, 0, 1, 0, 0)
@@ -336,7 +335,7 @@ class SimilaritySpec extends SparkSpec {
   // ---- incremental index ingest ---------------------------------------
 
   private def tmpIndex(tag: String): String =
-    sys.props("java.io.tmpdir") + s"/graft_spec_ivf_$tag/index"
+    tempDir(s"graft_spec_ivf_$tag") + "/index"
 
   test("ivfAppend: search-after-append == search-after-full-rebuild (float/SQ8/PQ)") {
     val e = emb.select("vec_id", "embedding")
@@ -391,10 +390,6 @@ class SimilaritySpec extends SparkSpec {
     val cbr = Similarity.pqResidualCodebook(half1, "vec_id", "embedding",
       cents, m = 16, subDim = 4).localCheckpoint(true)
     val pAppR = tmpIndex("app_r"); val pFullR = tmpIndex("full_r")
-    // the stats sidecar is APPEND-mode by design (a ledger); a reused
-    // tmp path across test runs would accumulate rows — clear it
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(pAppR + "_stats"))
     Similarity.ivfWritePqResidual(half1, "vec_id", "embedding", cents, cbr,
       16, 4, pAppR)
     Similarity.ivfAppendPqResidual(half2, "vec_id", "embedding", cents, cbr,
@@ -526,48 +521,80 @@ class SimilaritySpec extends SparkSpec {
       Similarity.signLshBuckets(half1, "embedding")
         .select(col("bucket").as("cluster"), col("embedding")),
       "cluster", "embedding").localCheckpoint(true)
+    val cb = Similarity.pqCodebook(half1, "embedding", m = 16, subDim = 4)
+      .localCheckpoint(true)
+    val cbr = Similarity.pqResidualCodebook(half1, "vec_id", "embedding",
+      cents, m = 16, subDim = 4).localCheckpoint(true)
     val q = e.filter(col("vec_id") === 3).head().getSeq[Float](1)
-    def hits(p: String) =
-      Similarity.ivfSearch(spark, p, "vec_id", "embedding", cents, q,
-        k = 20, nprobe = 2).collect().map(_.getLong(0)).toSeq
-    val p = tmpIndex("retry"); val pFull = tmpIndex("retry_full")
-    Similarity.ivfWrite(half1, "vec_id", "embedding", cents, p)
-    Similarity.ivfWrite(e, "vec_id", "embedding", cents, pFull)
-    // Simulate an append that died AFTER its vector write but BEFORE
-    // its _stats ledger commit: batch dirs on disk, no ledger row.
-    graft.operators.Similarity.assignNearest(half2, "vec_id", "embedding",
-        cents)
-      .select(col("vec_id"), col("embedding"), col("cluster"))
-      .withColumn("batch", lit("bT"))
-      .repartition(col("cluster"))
-      .write.mode("append").partitionBy("cluster", "batch").parquet(p)
-    // Uncommitted vectors are NOT "indexed" to the streaming diff:
-    // counting them would make a replay skip them and the prologue's
-    // orphan delete would then destroy the only copy.
-    assert(Similarity.ivfIndexedIds(spark, p, "vec_id").count() ==
-      half1.count())
-    // RETRY of the torn batch must not duplicate a single vector:
-    // replace-by-batch deletes the orphan dirs first.
-    Similarity.ivfAppend(half2, "vec_id", "embedding", cents, p, "bT")
-    assert(hits(p) == hits(pFull),
-      "retried batch must search identically to a clean rebuild")
-    assert(spark.read.parquet(p).count() == e.count(),
-      "retry must leave exactly one row per vector")
-    // a COMMITTED id is exactly-once
-    intercept[IllegalArgumentException] {
-      Similarity.ivfAppend(half2, "vec_id", "embedding", cents, p, "bT")
+    // One row per layout: build, append, and a search's (id, score) hits.
+    val layouts: Seq[(String, (DataFrame, String) => Unit,
+        (DataFrame, String, String) => Unit, String => Seq[Any])] = Seq(
+      ("float",
+        (v, p) => Similarity.ivfWrite(v, "vec_id", "embedding", cents, p),
+        (v, p, b) => Similarity.ivfAppend(v, "vec_id", "embedding", cents, p, b),
+        p => Similarity.ivfSearch(spark, p, "vec_id", "embedding", cents, q,
+          k = 20, nprobe = 2).collect().map(_.getLong(0)).toSeq),
+      ("sq8",
+        (v, p) => Similarity.ivfWriteSq8(v, "vec_id", "embedding", cents, p),
+        (v, p, b) => Similarity.ivfAppendSq8(v, "vec_id", "embedding", cents,
+          p, b),
+        p => Similarity.ivfSearchSq8(spark, p, "vec_id", cents, q,
+          k = 20, nprobe = 2).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq),
+      ("pq",
+        (v, p) => Similarity.ivfWritePq(v, "vec_id", "embedding", cents, cb,
+          16, 4, p),
+        (v, p, b) => Similarity.ivfAppendPq(v, "vec_id", "embedding", cents,
+          cb, 16, 4, p, b),
+        p => Similarity.ivfSearchPq(spark, p, "vec_id", cents, cb, q,
+          k = 20, nprobe = 2).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq),
+      ("pq_residual",
+        (v, p) => Similarity.ivfWritePqResidual(v, "vec_id", "embedding",
+          cents, cbr, 16, 4, p),
+        (v, p, b) => Similarity.ivfAppendPqResidual(v, "vec_id", "embedding",
+          cents, cbr, 16, 4, p, b),
+        p => Similarity.ivfSearchPqResidual(spark, p, "vec_id", cents, cbr, q,
+          k = 20, nprobe = 2).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq))
+    // An append that died AFTER its payload write but BEFORE its _stats
+    // ledger commit: run it, then remove the ledger row it added.
+    def torn(p: String)(append: => Unit): Unit = {
+      val ledger = new java.io.File(p + "_stats")
+      def files = Option(ledger.listFiles()).toSeq.flatten.map(_.getName).toSet
+      val before = files
+      append
+      if (before.isEmpty) org.apache.commons.io.FileUtils.deleteQuietly(ledger)
+      else (files -- before).foreach(f => new java.io.File(ledger, f).delete())
     }
-    // compaction garbage-collects a never-retried orphan batch
-    graft.operators.Similarity.assignNearest(
-        half2.limit(3), "vec_id", "embedding", cents)
-      .select(col("vec_id"), col("embedding"), col("cluster"))
-      .withColumn("batch", lit("bOrphan"))
-      .repartition(col("cluster"))
-      .write.mode("append").partitionBy("cluster", "batch").parquet(p)
-    Similarity.ivfCompact(spark, p)
-    assert(hits(p) == hits(pFull))
-    assert(spark.read.parquet(p).count() == e.count(),
-      "compaction must drop uncommitted orphan vectors")
+    def rows(p: String) = spark.read.parquet(p).count()
+    for ((layout, write, append, hits) <- layouts) {
+      val p = tmpIndex(s"retry_$layout"); val pFull = tmpIndex(s"retry_full_$layout")
+      write(half1, p)
+      write(e, pFull)
+      torn(p)(append(half2, p, "bT"))
+      // Uncommitted vectors are NOT "indexed" to the streaming diff:
+      // counting them would make a replay skip them and the retry's
+      // orphan delete would then destroy the only copy.
+      assert(Similarity.ivfIndexedIds(spark, p, "vec_id").count() ==
+        half1.count(), layout)
+      // RETRY of the torn batch must not duplicate a single vector:
+      // replace-by-batch deletes the orphan dirs first.
+      append(half2, p, "bT")
+      assert(hits(p) == hits(pFull),
+        s"$layout: retried batch must search identically to a clean rebuild")
+      assert(rows(p) == rows(pFull),
+        s"$layout: retry must leave exactly one copy of every vector")
+      // a COMMITTED id is exactly-once, under the type the streaming
+      // sinks catch
+      intercept[IndexCommit.AlreadyCommittedException] {
+        append(half2, p, "bT")
+      }
+      // compaction garbage-collects a never-retried orphan batch
+      torn(p)(append(half2.limit(3), p, "bOrphan"))
+      assert(rows(p) > rows(pFull), layout)
+      Similarity.ivfCompact(spark, p)
+      assert(hits(p) == hits(pFull), layout)
+      assert(rows(p) == rows(pFull),
+        s"$layout: compaction must drop uncommitted orphan vectors")
+    }
   }
 
   test("ivfCompact crash between swap renames recovers with live tombstones") {
@@ -698,7 +725,7 @@ class SimilaritySpec extends SparkSpec {
     assert(res(1L).map(_.toDouble) == rA && res(7L).map(_.toDouble) == rB)
     val cb = Similarity.pqResidualCodebook(vecs, "vec_id", "embedding",
       cents, m = 2, subDim = 4)
-    val path = sys.props("java.io.tmpdir") + "/graft_respq_spec"
+    val path = tempDir("graft_respq_spec") + "/index"
     Similarity.ivfWritePqResidual(vecs, "vec_id", "embedding", cents, cb,
       m = 2, subDim = 4, path)
     val q = v(9, 1, 1, 0, 2, 0, 0, 1)

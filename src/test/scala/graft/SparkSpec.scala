@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM via Test/fork; the
@@ -11,8 +12,27 @@ object SparkSpec {
   lazy val spark: SparkSession = Engine.local(4)
 }
 
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def spark: SparkSession = SparkSpec.spark
+
+  private val tempDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A fresh directory under `java.io.tmpdir`, deleted recursively when
+    * the suite ends — after its streaming queries have stopped, so no
+    * sink still writes into it.
+    */
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs.add(d)
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try {
+      spark.streams.active.foreach(_.stop())
+      tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d))
+    } finally super.afterAll()
   import scala.jdk.CollectionConverters._
   import org.apache.spark.sql.{DataFrame, Row}
   import org.apache.spark.sql.types.StructType

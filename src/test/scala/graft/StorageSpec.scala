@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 class StorageSpec extends SparkSpec {
 
   test("loadAppend allows field addition; readers see the union schema") {
-    val dir = java.nio.file.Files.createTempDirectory("evolve").toString + "/t"
+    val dir = tempDir("evolve") + "/t"
     Storage.loadAppend(df("a BIGINT, b STRING",
       Row(Long.box(1), "x")), dir)
     // Second batch adds column c (ALLOW_FIELD_ADDITION semantics,
@@ -22,7 +22,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("loadTruncate replaces contents even when reading its own input") {
-    val dir = java.nio.file.Files.createTempDirectory("trunc").toString + "/t"
+    val dir = tempDir("trunc") + "/t"
     Storage.loadAppend(df("a BIGINT", Row(Long.box(1)), Row(Long.box(2))), dir)
     val filtered = Storage.read(spark, dir).filter(col("a") === 2)
     Storage.loadTruncate(filtered, dir)
@@ -46,7 +46,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("compact collapses accumulated small files without changing data") {
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString + "/t"
+    val dir = tempDir("compact") + "/t"
     (1 to 5).foreach { i =>
       Storage.loadAppend(
         df("k BIGINT, d STRING", Row(Long.box(i), "2024-01-01"),
@@ -64,7 +64,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("compact recovers a crash between the two swap renames") {
-    val dir = java.nio.file.Files.createTempDirectory("cpr").toString + "/t"
+    val dir = tempDir("cpr") + "/t"
     Storage.loadAppend(
       df("k BIGINT, d STRING", Row(Long.box(1), "2024-01-01"),
         Row(Long.box(2), "2024-01-02")), dir, partitionCol = Some("d"))
@@ -83,7 +83,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("writeShards: one position-sorted file per bounded shard") {
-    val dir = java.nio.file.Files.createTempDirectory("shards").toString + "/t"
+    val dir = tempDir("shards") + "/t"
     // 100 rows in a scrambled layout; positions 0..99, 25 per shard.
     val rows = spark.range(100).toDF("pos")
       .withColumn("payload", concat(lit("doc"), col("pos")))
@@ -127,7 +127,7 @@ class StorageSpec extends SparkSpec {
     // refuse, not recursively destroy it. Absent and empty targets, and
     // prior exports (have _manifest.jsonl), overwrite fine (covered
     // above); only the dangerous case errors.
-    val dir = java.nio.file.Files.createTempDirectory("notexport").toString
+    val dir = tempDir("notexport")
     val victim = new java.io.File(dir, "precious.txt")
     java.nio.file.Files.write(victim.toPath, "do not delete".getBytes)
     val rows = spark.range(10).toDF("pos")
@@ -137,13 +137,13 @@ class StorageSpec extends SparkSpec {
     assert(e.getMessage.contains("refusing to overwrite"))
     assert(victim.exists, "the non-export target must be left untouched")
     // An EMPTY existing directory is fine.
-    val empty = java.nio.file.Files.createTempDirectory("emptytgt").toString
+    val empty = tempDir("emptytgt")
     Storage.writeShards(rows, "pos", 5, empty)
     assert(Storage.readShardManifest(spark, empty) == Seq((0L, 5L), (1L, 5L)))
   }
 
   test("readShardManifest fails loudly on an empty manifest") {
-    val dir = java.nio.file.Files.createTempDirectory("emptymani").toString
+    val dir = tempDir("emptymani")
     java.nio.file.Files.write(
       new java.io.File(dir, "_manifest.jsonl").toPath, Array.empty[Byte])
     val e = intercept[IllegalStateException] {
@@ -172,8 +172,7 @@ class StorageSpec extends SparkSpec {
       .localCheckpoint(true)
     val nKept = kept.count()
     // Order + shard + manifest.
-    val dir = java.nio.file.Files
-      .createTempDirectory("trainset").toString + "/shards"
+    val dir = tempDir("trainset") + "/shards"
     Sampling.deterministicShuffle(kept, "doc_id", "run1")
       .transform(d => { Storage.writeShards(d, "pos", 40, dir); d })
     val manifest = Storage.readShardManifest(spark, dir)
@@ -190,7 +189,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("exists requires data files, not just a directory") {
-    val dir = java.nio.file.Files.createTempDirectory("exists").toString
+    val dir = tempDir("exists")
     assert(!Storage.exists(spark, dir + "/missing"))
     assert(!Storage.exists(spark, dir)) // empty directory
     Storage.loadAppend(df("a BIGINT", Row(Long.box(1))), dir + "/t")
@@ -198,7 +197,7 @@ class StorageSpec extends SparkSpec {
   }
 
   test("exportAs(orc): round-trip exact; pruned read-back reaches the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("orc_export").toString
+    val dir = tempDir("orc_export")
     val data = df("id BIGINT, lang STRING, v BIGINT",
       (1L to 60L).map(i =>
         Row(Long.box(i), if (i % 2 == 0) "en" else "de", Long.box(i * 10))): _*)

@@ -113,7 +113,7 @@ class StreamingSpec extends SparkSpec {
 
   test("dedupIngestSink: cross-batch near-dups die against the band index") {
     implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("ingest").toString
+    val base = tempDir("ingest")
     val (corpus, index, ckpt) =
       (s"$base/corpus", s"$base/index", s"$base/ckpt")
     val mem = MemoryStream[(Long, String)]
@@ -216,7 +216,7 @@ class StreamingSpec extends SparkSpec {
 
   test("upsertSink merges micro-batches into partitioned parquet exactly-once") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("stream_upsert")
+    val dir = java.nio.file.Paths.get(tempDir("stream_upsert"))
     val tablePath = dir.resolve("table").toString
     val ckPath = dir.resolve("ck").toString
     val mem = MemoryStream[(String, String, Long)]
@@ -241,7 +241,7 @@ class StreamingSpec extends SparkSpec {
     import graft.pipelines.CallioIngest
     import graft.streaming.PagedStream
     val T0 = 1704844800000L // 2024-01-10T00:00:00Z, one doc per minute
-    val dir = java.nio.file.Files.createTempDirectory("paged_stream")
+    val dir = java.nio.file.Paths.get(tempDir("paged_stream"))
     def run(fetchEnd: Long, version: Int, cutoff: Long) =
       PagedStream.tick(spark,
         new FixtureSources.Paged(T0, 120, version = version),
@@ -292,7 +292,7 @@ class StreamingSpec extends SparkSpec {
       Similarity.signLshBuckets(allDf, "embedding")
         .select(col("bucket").as("cluster"), col("embedding")),
       "cluster", "embedding").localCheckpoint(true)
-    val dir = java.nio.file.Files.createTempDirectory("graft_vis").toString
+    val dir = tempDir("graft_vis")
     val mem = MemoryStream[(Long, Seq[Float])]
     val q = graft.streaming.IncrementalStream.vectorIngestSink(
         mem.toDF().toDF("vec_id", "embedding").writeStream,
@@ -334,7 +334,7 @@ class StreamingSpec extends SparkSpec {
     def rows(xs: Seq[(Long, String)]) = df("doc_id BIGINT, text STRING",
       xs.map { case (i, t) =>
         org.apache.spark.sql.Row(Long.box(i), t) }: _*)
-    val dir = java.nio.file.Files.createTempDirectory("graft_tis").toString
+    val dir = tempDir("graft_tis")
     // Bootstrap build freezes the shard routing; the stream grows it.
     TextIndex.write(rows(all.take(1)), "doc_id", "text", s"$dir/index",
       nShards = 4)
@@ -375,7 +375,7 @@ class StreamingSpec extends SparkSpec {
       Similarity.signLshBuckets(vecs, "embedding")
         .select(col("bucket").as("cluster"), col("embedding")),
       "cluster", "embedding").localCheckpoint(true)
-    val dir = java.nio.file.Files.createTempDirectory("graft_es").toString
+    val dir = tempDir("graft_es")
     TextIndex.write(docs, "doc_id", "text", s"$dir/text", nShards = 4)
     Dedup.bandIndexWrite(docs, "doc_id", "text", 4, 3, 2, s"$dir/band")
     Similarity.ivfWrite(vecs, "vec_id", "embedding", cents, s"$dir/ivf")
@@ -392,8 +392,7 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable()
     q.stop()
     // text: ids 2 and 3 gone, df/nDocs behave as rebuilt-without
-    val rebuilt = java.nio.file.Files
-      .createTempDirectory("graft_es_ref").toString + "/text"
+    val rebuilt = tempDir("graft_es_ref") + "/text"
     TextIndex.write(docs.filter(col("doc_id") === 1L), "doc_id", "text",
       rebuilt, nShards = 4)
     def bm(p: String) = TextIndex.searchBM25(spark, p, Seq("spark"), 10)
@@ -558,7 +557,7 @@ class StreamingSpec extends SparkSpec {
 
   test("JSONL drop-zone sink: good rows to parquet, torn lines to quarantine") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("jsonl_dropzone").toString
+    val dir = tempDir("jsonl_dropzone")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",
         org.apache.spark.sql.types.LongType)))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,7 +13,7 @@ import org.apache.spark.sql.types._
 class TablesSpec extends SparkSpec {
 
   private def writeEvents(dt: DataType, mk: Long => Any): String = {
-    val dir = Files.createTempDirectory("tables-spec").toString
+    val dir = tempDir("tables-spec")
     val rows = Seq(1577836800000L, 1577840400123L).zipWithIndex.map {
       case (ms, i) => Row(i.toLong, mk(ms))
     }
@@ -40,7 +38,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("embeddings array<double> is normalized to array<float>") {
-    val dir = Files.createTempDirectory("tables-spec").toString
+    val dir = tempDir("tables-spec")
     spark.createDataFrame(
         java.util.Arrays.asList(
           Row(0L, Seq(0.5d, -1.25d)), Row(1L, Seq(2.0d, 3.5d))),
@@ -59,7 +57,7 @@ class TablesSpec extends SparkSpec {
     // 0.1 has no exact float: silently narrowing it would make Spark
     // compute cosines on different values than the double-reading
     // oracle. The load-time assertion must raise, not round.
-    val dir = Files.createTempDirectory("tables-spec").toString
+    val dir = tempDir("tables-spec")
     spark.createDataFrame(
         java.util.Arrays.asList(Row(0L, Seq(0.5d, 0.1d))),
         StructType(Seq(

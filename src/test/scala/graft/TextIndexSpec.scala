@@ -12,13 +12,10 @@ class TextIndexSpec extends SparkSpec {
     Row(Long.box(3), "merge statements update tables"),
     Row(Long.box(4), "unrelated words only here"))
 
-  // Per-JVM suffix: two test JVMs running this suite concurrently
-  // (e.g. an interactive testOnly overlapping a background full run)
+  // A fresh dir per call: two test JVMs running this suite concurrently
   // must not collide on fixture index paths — parquet commit staging
   // inside a shared target dir fails with TASK_WRITE_FAILED.
-  private def tmp(name: String) =
-    sys.props("java.io.tmpdir") +
-      s"/graft_tidx_spec_${ProcessHandle.current().pid()}_$name"
+  private def tmp(name: String) = tempDir(s"graft_tidx_spec_$name") + "/index"
 
   test("index round-trip: BM25 from postings == direct corpus scoring") {
     val path = tmp("roundtrip")

@@ -115,7 +115,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("applyToPartitionedParquet rewrites only the touched partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert_pq").toString
+    val dir = tempDir("upsert_pq")
     val init = df("k BIGINT, v STRING, d STRING",
       Row(Long.box(1), "a", "2024-01-01"),
       Row(Long.box(2), "b", "2024-01-02"),
@@ -140,7 +140,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("applyToPartitionedParquet survives a crashed prior merge attempt") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert_crash").toString
+    val dir = tempDir("upsert_crash")
     val init = df("k BIGINT, v STRING, d STRING",
       Row(Long.box(1), "a", "2024-01-01"),
       Row(Long.box(2), "b", "2024-01-02"))
@@ -167,7 +167,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("applyToPartitionedParquet recovers a partition displaced by a mid-swap crash") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert_midswap").toString
+    val dir = tempDir("upsert_midswap")
     val init = df("k BIGINT, v STRING, d STRING",
       Row(Long.box(1), "a", "2024-01-01"),
       Row(Long.box(2), "b", "2024-01-02"),
@@ -204,7 +204,7 @@ class UpsertSpec extends SparkSpec {
     // rename (src under .merge-tmp, dst in the live table) throws once
     // for the targeted partition — from the merge code's point of view,
     // the JVM is gone mid-swap; nothing after the displace executed.
-    val dir = java.nio.file.Files.createTempDirectory("upsert_kill").toString
+    val dir = tempDir("upsert_kill")
     spark.sparkContext.hadoopConfiguration
       .set("fs.graftfault.impl", classOf[InterruptingFs].getName)
     val fdir = "graftfault://" + dir + "/t"
@@ -329,7 +329,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("a second concurrent merge fails LOUDLY and leaves the target consistent") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert_lock").toString
+    val dir = tempDir("upsert_lock")
     val init = df("k BIGINT, v STRING, d STRING",
       Row(Long.box(1), "a", "2024-01-01"),
       Row(Long.box(2), "b", "2024-01-02"))
@@ -376,7 +376,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("an expired lease is broken and taken over; a live one is waited out") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert_lease").toString
+    val dir = tempDir("upsert_lease")
     df("k BIGINT, v STRING, d STRING", Row(Long.box(1), "a", "2024-01-01"))
       .write.mode("overwrite").partitionBy("d").parquet(dir)
     val lock = new java.io.File(dir + ".merge-lock")
@@ -409,7 +409,7 @@ class UpsertSpec extends SparkSpec {
     // goes through a create-exclusive claim file with a re-read under
     // the claim, so N threads hammering one expired lock must serialize
     // perfectly: at no instant may two bodies overlap.
-    val dir = java.nio.file.Files.createTempDirectory("upsert_lockrace").toString + "/t"
+    val dir = tempDir("upsert_lockrace") + "/t"
     new java.io.File(dir).mkdirs()
     val lock = new java.io.File(dir + ".merge-lock")
     java.nio.file.Files.writeString(lock.toPath,
@@ -447,7 +447,7 @@ class UpsertSpec extends SparkSpec {
     // A long-running protected body (a 100 TB cluster split) can outrun
     // its lease; the heartbeat rewrites the lock with a fresh expiry so
     // waiters keep waiting instead of breaking in mid-write.
-    val dir = java.nio.file.Files.createTempDirectory("upsert_renew").toString + "/t"
+    val dir = tempDir("upsert_renew") + "/t"
     new java.io.File(dir).mkdirs()
     // Renewing without holding the lock is a caller bug, loudly.
     intercept[IllegalArgumentException] {
@@ -479,7 +479,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("a merge that fails mid-flight still releases its writer lock") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert_lockrel").toString
+    val dir = tempDir("upsert_lockrel")
     val init = df("k BIGINT, v STRING, d STRING",
       Row(Long.box(1), "a", "2024-01-01"))
     init.write.mode("overwrite").partitionBy("d").parquet(dir)

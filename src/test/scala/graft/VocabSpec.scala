@@ -10,7 +10,7 @@ class VocabSpec extends SparkSpec {
     df("token STRING", ws.map(Row(_)): _*)
 
   private def tmp(name: String) =
-    sys.props("java.io.tmpdir") + s"/graft_vocab_spec_$name/vocab"
+    tempDir(s"graft_vocab_spec_$name") + "/vocab"
 
   private def vocabMap(p: String) =
     Vocab.read(spark, p).collect()

@@ -74,8 +74,7 @@ class ZOrderSpec extends SparkSpec {
     val grid = spark.range(4096).select(
       (col("id") / 64).cast("long").as("x"),
       (col("id") % 64).cast("long").as("y"))
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_spec_zskip_${System.nanoTime()}"
+    val base = tempDir("graft_spec_zskip")
     ZOrder.cluster(grid, Seq("x", "y"), numPartitions = 16)
       .write.parquet(s"$base/z")
     grid.repartitionByRange(16, col("x")).sortWithinPartitions("x", "y")
