@@ -106,9 +106,10 @@ object Engine {
     *    (reference runner.py:171, api.py:109-127) are permissive.
     *  - AQE on: runtime coalescing + skew-join splitting is the 100 TB
     *    answer to skewed keys (SURVEY.md §4).
-    *  - dynamic partition overwrite: the MERGE rewrite path
-    *    ([[operators.Upsert.applyToPartitionedParquet]]) must replace only
-    *    the partitions it touched.
+    *  - dynamic partition overwrite: a partitioned overwrite replaces
+    *    only the partitions it writes. Writers that mean a snapshot (the
+    *    index builds, the merge's staging dir in
+    *    [[operators.Upsert.rewritePartitions]]) opt out per write.
     *  - nanosAsLong: the fixture `events` table carries parquet
     *    TIMESTAMP(NANOS), which Spark's reader otherwise rejects
     *    (PARQUET_TYPE_ILLEGAL); we read the raw int64 and convert in

@@ -146,19 +146,17 @@ object ColumnLib {
   /** Run an independent blocking subtree off-thread (guide §2.6:
     * "actions are only sequential because your driver code calls them
     * sequentially"). Returns a handle; calling it awaits the result.
-    * The gate spark.graft.concurrentSubtrees=false degrades to eager
-    * in-order evaluation so a same-JVM A/B can isolate exactly the
-    * overlap. Exceptions surface at the await, as with any action.
+    * Exceptions surface at the await, as with any action. Measured
+    * against eager in-order evaluation in a same-JVM A/B over the
+    * fork-heavy gates: 0.770 of the total time on 4 cpus, 0.706 on 8
+    * (OPTIMIZATION_r16.md).
     */
-  def fork[T](s: org.apache.spark.sql.SparkSession)(f: => T): () => T =
-    if (!s.conf.get("spark.graft.concurrentSubtrees", "true").toBoolean) {
-      val v = f; () => v
-    } else {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fut = Future(f); () => Await.result(fut, Duration.Inf)
-    }
+  def fork[T](f: => T): () => T = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val fut = Future(f); () => Await.result(fut, Duration.Inf)
+  }
 
   /** Join every [[fork]] handle, THEN rethrow the first failure in
     * argument order (later ones ride along as suppressed). Awaiting
@@ -209,8 +207,4 @@ object ColumnLib {
   /** Order-insensitive exact sum of a double column, returned as double. */
   def exactSum(c: Column): Column =
     sum(c.cast(DecimalType(28, 6))).cast(DoubleType)
-
-  /** Order-insensitive average (exact sum / count), returned as double. */
-  def exactAvg(c: Column): Column =
-    (sum(c.cast(DecimalType(28, 6))) / count(c)).cast(DoubleType)
 }

@@ -1,7 +1,11 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
 
@@ -71,13 +75,23 @@ private[graft] object IndexCommit {
     def sum(column: String): Long = rows.map(_.getAs[Long](column)).sum
   }
 
+  /** The ledger, read with the declared [[Index.schema]]: no
+    * schema-inference job. A declared-schema read would fill a column
+    * that a file's footer lacks with nulls, so every file's footer is
+    * read first (directly, not in a Spark job), and a ledger that lacks
+    * a declared column or types it differently fails loudly.
+    */
   def readLedger(spark: SparkSession, ix: Index): Ledger = {
     val rows =
       if (ix.implicitBuild && !fs(spark, ix.ledger).exists(new Path(ix.ledger)))
         Array.empty[Row]
       else
-        try spark.read.parquet(ix.ledger).collect()
-        catch { case e: org.apache.spark.sql.AnalysisException
+        try {
+          val declared = StructType.fromDDL(ix.schema)
+          val ledger = spark.read.schema(declared).parquet(ix.ledger)
+          requireFooters(spark, ix, declared)
+          ledger.collect()
+        } catch { case e: org.apache.spark.sql.AnalysisException
             if ix.rebuildWith.isDefined =>
           // A legacy layout without a ledger cannot be probed or
           // appended: its geometry is not recoverable from bare payload
@@ -281,6 +295,23 @@ private[graft] object IndexCommit {
       case null => ()
       case orphans => orphans.foreach(o => f.delete(o.getPath, true))
     }
+  }
+
+  private def requireFooters(spark: SparkSession, ix: Index,
+      declared: StructType): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    val toSpark = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    fs(spark, ix.ledger).listStatus(new Path(ix.ledger))
+      .filter(_.getPath.getName.endsWith(".parquet")).foreach { f =>
+        val found = toSpark.convert(ParquetFileReader.readFooter(
+          HadoopInputFile.fromStatus(f, conf), NO_FILTER).getFileMetaData.getSchema)
+        for (c <- declared; got = found.find(_.name == c.name)
+             if !got.exists(_.dataType == c.dataType))
+          throw new IllegalStateException(s"${ix.kind} ledger file ${f.getPath} " +
+            got.fold(s"lacks column ${c.name}")(g => s"types ${c.name} as " +
+              g.dataType.simpleString) + s", but the ledger schema " +
+            s"declares ${c.name} ${c.dataType.simpleString} (${ix.ledger}).")
+      }
   }
 
   private def fs(spark: SparkSession, path: String) =

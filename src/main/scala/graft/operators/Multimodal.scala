@@ -458,29 +458,6 @@ object Multimodal {
     bytes
   }
 
-  /** Media-table scrub: payloads rewritten without their metadata
-    * chunks, plus the audit columns a privacy run reports. Same
-    * iterator-to-iterator partition-local shape as [[imageDims]] —
-    * one pass, no shuffle, per-row cost linear in payload size.
-    */
-  def scrubPngMetadata(media: DataFrame): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("payload", BinaryType),
-      StructField("n_removed", IntegerType),
-      StructField("removed_bytes", IntegerType)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    media.select(col("media_id").cast(LongType), col("payload"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val (scrubbed, n, nb) = stripPngMeta(r.getAs[Array[Byte]](1))
-          org.apache.spark.sql.Row(
-            if (r.isNullAt(0)) null else Long.box(r.getLong(0)),
-            scrubbed, Int.box(n), Int.box(nb))
-        }
-      }(enc)
-  }
-
   /** "Resize": deterministic stub for the image-resize verb — keeps
     * every `factor`-th byte of the payload and rewrites the metadata
     * dims accordingly. The real pipeline swaps the byte transform for a

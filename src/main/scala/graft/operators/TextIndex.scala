@@ -211,7 +211,7 @@ object TextIndex {
 
   /** Tokenize once, then the postings and doclen sidecar writes as
     * independent sinks over the shared stream, overlapped (guide §2.6,
-    * gated fork). Both finish before this returns, even when one fails:
+    * [[graft.functions.ColumnLib.fork]]). Both finish before this returns, even when one fails:
     * the ledger row stays LAST, and a retry must not meet a still-running
     * sibling write.
     */
@@ -219,9 +219,9 @@ object TextIndex {
       path: String, batch: String, nShards: Int,
       overwrite: Boolean): Seq[Any] = {
     val (postings, doclens, stats) = tokenize(docs, id, body)
-    val cF = graft.functions.ColumnLib.fork(docs.sparkSession)(
+    val cF = graft.functions.ColumnLib.fork(
       writePostings(postings, batch, nShards, path, overwrite))
-    val dF = graft.functions.ColumnLib.fork(docs.sparkSession)(
+    val dF = graft.functions.ColumnLib.fork(
       writeDoclens(doclens, batch, path, overwrite))
     graft.functions.ColumnLib.awaitAll(cF, dF)
     ledgerRow(cF(), stats, nShards)

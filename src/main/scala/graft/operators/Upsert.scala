@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   * keys, so both sides arrive co-partitioned by key and AQE handles skew;
   * when the deduped source is small (an incremental batch usually is) a
   * broadcast of the source side makes the merge a single pass over the
-  * pruned target. The physical write is dynamic-partition overwrite of
-  * only the pruned partitions (see [[applyToPartitionedParquet]]).
+  * pruned target. The physical write replaces only the pruned
+  * partitions (see [[rewritePartitions]]).
   *
   * Update/insert conditions are SQL expression strings over the aliases
   * `t` (target) and `s` (source), mirroring MERGE syntax.
@@ -74,7 +74,7 @@ object Upsert {
     *
     * The lock is released on BOTH success and failure: the merge is
     * idempotent and crash-repairable (see recovery block in
-    * [[applyToPartitionedParquet]]), so only LIVE concurrency needs
+    * [[rewritePartitions]]), so only LIVE concurrency needs
     * excluding.
     */
   private[graft] def withWriterLock[T](
@@ -82,8 +82,23 @@ object Upsert {
     withWriterLock(spark, path,
       waitMs = sys.props.get("graft.lockWaitMs").map(_.toLong)
         .getOrElse(60000L),
-      leaseMs = sys.props.get("graft.lockLeaseMs").map(_.toLong)
-        .getOrElse(15L * 60 * 1000))(body)
+      leaseMs = defaultLeaseMs)(body)
+
+  private def defaultLeaseMs: Long =
+    sys.props.get("graft.lockLeaseMs").map(_.toLong).getOrElse(15L * 60 * 1000)
+
+  private def isLocal(fs: org.apache.hadoop.fs.FileSystem): Boolean =
+    fs.getUri.getScheme == null || fs.getUri.getScheme == "file"
+
+  /** A lock or claim file's content, trimmed. */
+  private def readLockFile(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): String =
+    try {
+      val in = fs.open(p)
+      try new String(in.readAllBytes(),
+        java.nio.charset.StandardCharsets.UTF_8).trim
+      finally in.close()
+    } catch { case _: Throwable => "<unreadable>" }
 
   /** Lock-file content, single-sourced: `leaseRe` in [[withWriterLock]]
     * parses it and [[renewWriterLease]] matches ownership on its
@@ -119,9 +134,8 @@ object Upsert {
     // (O_CREAT|O_EXCL — kernel-atomic); the Hadoop branch keeps serving
     // genuinely-atomic DFS creates. Content is written at create time, so
     // a lock never exists in an empty half-created state.
-    val isLocalFs = fs.getUri.getScheme == null || fs.getUri.getScheme == "file"
     def createExclusive(p: org.apache.hadoop.fs.Path, content: String): Boolean =
-      if (isLocalFs) {
+      if (isLocal(fs)) {
         try {
           java.nio.file.Files.write(
             java.nio.file.Paths.get(p.toUri.getPath),
@@ -150,15 +164,7 @@ object Upsert {
         }
       }
 
-    def readFile(p: org.apache.hadoop.fs.Path): String =
-      try {
-        val in = fs.open(p)
-        try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        finally in.close()
-      } catch { case _: Throwable => "<unreadable>" }
-
-    def holderInfo(): String = readFile(hLock)
+    def holderInfo(): String = readLockFile(fs, hLock)
 
     // Break an expired lease SAFELY. A blind fs.delete(hLock) here has a
     // TOCTOU hole: between this waiter reading the expired content and
@@ -188,7 +194,7 @@ object Upsert {
       if (claimed) {
         try {
           if (holderInfo() == sawContent &&
-              readFile(hClaim).contains(s"claim=$uuid")) {
+              readLockFile(fs, hClaim).contains(s"claim=$uuid")) {
             try fs.delete(hLock, false) catch { case _: Throwable => () }
           }
         } finally {
@@ -197,7 +203,7 @@ object Upsert {
       } else {
         // Another waiter holds the claim. If ITS lease expired (it died
         // between claim-create and claim-delete), clear it; else yield.
-        val cInfo = readFile(hClaim)
+        val cInfo = readLockFile(fs, hClaim)
         val cExpired = leaseRe.findFirstMatchIn(cInfo)
           .exists(_.group(1).toLong < System.currentTimeMillis())
         if (cExpired) { try fs.delete(hClaim, false) catch { case _: Throwable => () } }
@@ -261,8 +267,7 @@ object Upsert {
     */
   private[graft] def renewWriterLease(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      leaseMs: Long = sys.props.get("graft.lockLeaseMs").map(_.toLong)
-        .getOrElse(15L * 60 * 1000)): Unit = {
+      leaseMs: Long = defaultLeaseMs): Unit = {
     val hLock = new org.apache.hadoop.fs.Path(path + ".merge-lock")
     val fs = hLock.getFileSystem(spark.sessionState.newHadoopConf())
     require(fs.exists(hLock),
@@ -272,13 +277,7 @@ object Upsert {
     // NEW holder — overwriting it would re-admit the overtaken writer
     // and run two writers concurrently (exactly what the lock exists to
     // prevent). Fail loudly instead: the overtaken body must abort.
-    val current =
-      try {
-        val in = fs.open(hLock)
-        try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        finally in.close()
-      } catch { case _: Throwable => "<unreadable>" }
+    val current = readLockFile(fs, hLock)
     if (!current.startsWith(lockOwnerTag(spark)))
       throw new ConcurrentWriterException(
         s"renewWriterLease($path): the lock is now held by [$current], " +
@@ -287,7 +286,7 @@ object Upsert {
           "would run two writers into one target.")
     val content = lockContent(spark, leaseMs)
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    if (fs.getUri.getScheme == null || fs.getUri.getScheme == "file")
+    if (isLocal(fs))
       java.nio.file.Files.write(
         java.nio.file.Paths.get(hLock.toUri.getPath), content,
         java.nio.file.StandardOpenOption.TRUNCATE_EXISTING,
@@ -486,11 +485,10 @@ object Upsert {
   }
 
   /** Physical MERGE into a date-partitioned parquet table: read-prune the
-    * affected partition range, merge, and rewrite ONLY those partitions
-    * via dynamic partition overwrite — never the whole table. This is the
-    * 100 TB-safe equivalent of the reference's partition-scoped MERGE
-    * (runner.py:174-176). Caller must set
-    * `spark.sql.sources.partitionOverwriteMode=dynamic`.
+    * affected partition range, merge, and rewrite ONLY those partitions —
+    * never the whole table. This is the 100 TB-safe equivalent of the
+    * reference's partition-scoped MERGE (runner.py:174-176), and the
+    * one-source call of [[rewritePartitions]].
     */
   def applyToPartitionedParquet(
       spark: org.apache.spark.sql.SparkSession,
@@ -501,10 +499,42 @@ object Upsert {
       sourceOrder: Seq[Column] = Nil,
       updateCond: Option[String] = None,
       updateExprs: Map[String, String] = Map.empty): Unit =
-    // The lock wraps recovery + bootstrap + merge + swap: every one of
-    // those phases mutates the target root, so a second writer must be
-    // excluded from ALL of them, not just the swap.
+    rewritePartitions(spark, path, Seq(source), partitionCol) { (target, srcs) =>
+      upsert(target, srcs.head, keys, sourceOrder, updateCond, updateExprs)
+    }
+
+  /** One physical rewrite of a date-partitioned parquet table by an
+    * in-memory `merge` of one or more sources: writer lock → recovery →
+    * each source materialized once → the target read pruned to the union
+    * of the sources' partition ranges → `merge(target, sources)` → one
+    * temp write → one per-partition displace/install swap.
+    *
+    * Target rows outside the ranges are neither matched nor rewritten
+    * (the reference's MERGE-ON range predicate). When `partitionCol` is
+    * a merge key, as in the fact refresh, a target partition outside one
+    * source's range can match none of that source's rows, so merging
+    * the sources in sequence over the union of their ranges equals
+    * running the merges one by one, each over its own range — and
+    * rewrites each partition once. A missing table reads as an empty
+    * frame of the first source's schema, so the first write takes the
+    * same path. A source without partition values adds no range; when
+    * none has any, nothing is written.
+    */
+  def rewritePartitions(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      sources: Seq[DataFrame],
+      partitionCol: String)(
+      merge: (DataFrame, Seq[DataFrame]) => DataFrame): Unit =
+    // The lock wraps recovery + merge + swap: every one of those phases
+    // mutates the target root, so a second writer must be excluded from
+    // ALL of them, not just the swap.
     withWriterLock(spark, path) {
+    val hPath = new org.apache.hadoop.fs.Path(path)
+    val hBak = new org.apache.hadoop.fs.Path(path + ".merge-bak")
+    val tmp = path + ".merge-tmp"
+    val hTmp = new org.apache.hadoop.fs.Path(tmp)
+    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
     // RECOVERY first, before anything reads (or existence-probes) the
     // target: a previous attempt may have died between displacing an old
     // partition into the backup dir and installing its replacement,
@@ -513,103 +543,73 @@ object Upsert {
     // staging dirs — the idempotent merge below recomputes the rest.
     // (Without this, a crash mid-swap followed by a retry would delete
     // the backup — the only surviving copy — as stale staging state.)
-    val hBak = new org.apache.hadoop.fs.Path(path + ".merge-bak")
-    locally {
-      val fs = hBak.getFileSystem(spark.sessionState.newHadoopConf())
-      if (fs.exists(hBak)) {
-        fs.listStatus(hBak).foreach { st =>
-          val dest = new org.apache.hadoop.fs.Path(
-            new org.apache.hadoop.fs.Path(path), st.getPath.getName)
-          // A failed restore must ABORT with the backup intact — deleting
-          // hBak below would destroy the only copy of the partition.
-          if (!fs.exists(dest) && !fs.rename(st.getPath, dest))
-            throw new java.io.IOException(
-              s"merge recovery: cannot restore displaced partition to $dest")
-        }
-        fs.delete(hBak, true)
+    if (fs.exists(hBak)) {
+      fs.listStatus(hBak).foreach { st =>
+        val dest = new org.apache.hadoop.fs.Path(hPath, st.getPath.getName)
+        // A failed restore must ABORT with the backup intact — deleting
+        // hBak below would destroy the only copy of the partition.
+        if (!fs.exists(dest) && !fs.rename(st.getPath, dest))
+          throw new java.io.IOException(
+            s"merge recovery: cannot restore displaced partition to $dest")
       }
+      fs.delete(hBak, true)
     }
-    // First-write bootstrap: a missing (or file-less) target means the
-    // deduped source IS the initial table — partitioned parquet has no
-    // separate DDL step, the first partitioned write declares the layout.
-    if (!graft.sources.Storage.exists(spark, path)) {
-      val init =
-        if (sourceOrder.isEmpty) source
-        else graft.functions.ColumnLib.latestWins(source, keys, sourceOrder)
-      init.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
-    } else mergeInto(spark, path, source, keys, partitionCol, sourceOrder,
-      updateCond, updateExprs)
-  }
-
-  /** The merge + swap phases of [[applyToPartitionedParquet]], split out
-    * so the lock-wrapped public face stays `return`-free (a non-local
-    * return from inside the lock closure would ride an exception).
-    */
-  private def mergeInto(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      source: DataFrame,
-      keys: Seq[String],
-      partitionCol: String,
-      sourceOrder: Seq[Column],
-      updateCond: Option[String],
-      updateExprs: Map[String, String]): Unit = {
-    val hBak = new org.apache.hadoop.fs.Path(path + ".merge-bak")
-    val target = spark.read.parquet(path)
-    // The source is read twice, for its partition range and by the
+    // Each source is read twice, for its partition range and by the
     // merge. Materialized once, its lineage (for the fact refresh: the
     // FactStaffDaily joins and aggregations) runs once, and the range
-    // and the merge see the same rows.
-    val src = source.localCheckpoint(eager = true)
-    val range = src.agg(
-      min(col(partitionCol)).as("lo"), max(col(partitionCol)).as("hi")).head()
-    if (range.isNullAt(0)) return // empty source: nothing to merge
-    val prune = col(partitionCol).between(lit(range.get(0)), lit(range.get(1)))
-    val merged = upsert(target.filter(prune), src, keys,
-      sourceOrder, updateCond, updateExprs, targetPrune = None)
-    // Write-to-temp + per-partition swap (same staging pattern as
-    // [[graft.sources.Storage.compact]]): the merge streams from the
-    // ORIGINAL files into a sibling temp dir, then each affected
-    // partition is swapped in by DISPLACING the old directory into the
-    // backup dir and renaming the new one into place — never
-    // delete-then-rename, so at every instant each partition has a live
-    // copy in exactly one of {table, backup}. Unlike a localCheckpoint
-    // + in-place overwrite, this (a) never pins the merged partitions
-    // in executor memory/disk, and (b) is failure-safe: a crash during
-    // the write leaves the table untouched, a crash mid-swap is healed
-    // by the recovery block above, and a crash between installs leaves
-    // whole partitions either old or new — all repaired by re-running
-    // the (idempotent) merge. Rename results are CHECKED: a false
-    // return keeps the old copy in the backup for recovery and aborts.
-    // Single-writer assumption as everywhere else.
-    val tmp = path + ".merge-tmp"
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val hTmp = new org.apache.hadoop.fs.Path(tmp)
-    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    // Clear any staging output from a crashed prior attempt BEFORE
-    // writing: under the session's dynamic partition-overwrite mode, an
-    // overwrite of tmp would only replace partitions present in THIS
-    // merge, and a stale partition left by an older crashed merge would
-    // otherwise survive and be swapped into the live table below.
-    fs.delete(hTmp, true)
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "static")
-      .partitionBy(partitionCol).parquet(tmp)
-    fs.mkdirs(hBak)
-    fs.listStatus(hTmp).iterator
-      .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-      .foreach { st =>
-        val name = st.getPath.getName
-        val dest = new org.apache.hadoop.fs.Path(hPath, name)
-        if (fs.exists(dest) &&
-            !fs.rename(dest, new org.apache.hadoop.fs.Path(hBak, name)))
-          throw new java.io.IOException(
-            s"merge swap: cannot displace existing partition $dest")
-        if (!fs.rename(st.getPath, dest))
-          throw new java.io.IOException(
-            s"merge swap: cannot install partition $dest (old copy preserved in $hBak)")
-      }
-    fs.delete(hBak, true)
-    fs.delete(hTmp, true)
+    // and the merge see the same rows. All ranges come from one job.
+    val srcs = sources.map(_.localCheckpoint(eager = true))
+    val prunes = srcs.zipWithIndex
+      .map { case (s, i) => s.select(lit(i).as("src"), col(partitionCol).as("p")) }
+      .reduce(_ union _)
+      .groupBy("src").agg(min("p"), max("p")).collect()
+      .filterNot(_.isNullAt(1))
+      .map(r => col(partitionCol).between(lit(r.get(1)), lit(r.get(2))))
+    if (prunes.nonEmpty) {
+      val target =
+        if (graft.sources.Storage.exists(spark, path)) spark.read.parquet(path)
+        else spark.createDataFrame(
+          java.util.List.of[org.apache.spark.sql.Row](), srcs.head.schema)
+      val merged = merge(target.filter(prunes.reduce(_ || _)), srcs)
+      // Write-to-temp + per-partition swap (same staging pattern as
+      // [[graft.sources.Storage.compact]]): the merge streams from the
+      // ORIGINAL files into a sibling temp dir, then each affected
+      // partition is swapped in by DISPLACING the old directory into the
+      // backup dir and renaming the new one into place — never
+      // delete-then-rename, so at every instant each partition has a live
+      // copy in exactly one of {table, backup}. Unlike a localCheckpoint
+      // + in-place overwrite, this (a) never pins the merged partitions
+      // in executor memory/disk, and (b) is failure-safe: a crash during
+      // the write leaves the table untouched, a crash mid-swap is healed
+      // by the recovery block above, and a crash between installs leaves
+      // whole partitions either old or new — all repaired by re-running
+      // the (idempotent) merge. Rename results are CHECKED: a false
+      // return keeps the old copy in the backup for recovery and aborts.
+      // Single-writer assumption as everywhere else.
+      //
+      // Clear any staging output from a crashed prior attempt BEFORE
+      // writing: a stale partition left by an older crashed merge would
+      // otherwise survive and be swapped into the live table below.
+      fs.delete(hTmp, true)
+      merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "static")
+        .partitionBy(partitionCol).parquet(tmp)
+      fs.mkdirs(hBak)
+      fs.listStatus(hTmp).iterator
+        .filter(st => st.isDirectory && st.getPath.getName.contains("="))
+        .foreach { st =>
+          val name = st.getPath.getName
+          val dest = new org.apache.hadoop.fs.Path(hPath, name)
+          if (fs.exists(dest) &&
+              !fs.rename(dest, new org.apache.hadoop.fs.Path(hBak, name)))
+            throw new java.io.IOException(
+              s"merge swap: cannot displace existing partition $dest")
+          if (!fs.rename(st.getPath, dest))
+            throw new java.io.IOException(
+              s"merge swap: cannot install partition $dest (old copy preserved in $hBak)")
+        }
+      fs.delete(hBak, true)
+      fs.delete(hTmp, true)
+    }
   }
 }

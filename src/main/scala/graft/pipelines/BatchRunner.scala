@@ -1,6 +1,5 @@
 package graft.pipelines
 
-import graft.functions.ColumnLib._
 import graft.incremental.{CheckpointStore, Scheduler, UpdateLogBuffer}
 import graft.operators.Upsert
 import graft.sources.{PagedSource, Storage}
@@ -208,13 +207,13 @@ final class BatchRunner(
       val rows = Storage.loadAppend(staff, p("stg_staff"))
       audit.add("ALL", "staff", rows, None, "STAGED")
       val staged = Storage.read(spark, p("stg_staff"))
-      val merged =
-        if (Storage.exists(spark, p("staff")))
-          Upsert.upsertAuto(Storage.read(spark, p("staff")), staged,
-            keys = Seq("tenant", "name"))
-        else latestWins(staged, Seq("tenant", "name"),
-          Seq(expr("try_cast(updateTime as long)").desc_nulls_last))
-      Storage.loadTruncate(merged, p("staff"))
+      // A missing staff table merges as an empty one: the first snapshot
+      // takes the same latest-wins path as every later one.
+      val current =
+        if (Storage.exists(spark, p("staff"))) Storage.read(spark, p("staff"))
+        else staged.limit(0)
+      Storage.loadTruncate(
+        Upsert.upsertAuto(current, staged, keys = Seq("tenant", "name")), p("staff"))
       // staging dropped after merge (reference runner.py:491)
       Storage.loadTruncate(staged.limit(0), p("stg_staff"))
       audit.add("ALL", "staff", rows, None, "MERGED")
@@ -230,28 +229,21 @@ final class BatchRunner(
     audit.flush()
   }
 
-  /** E3: the two physical MERGEs into the date-partitioned fact table
-    * over a trailing window ending today-VN7 (reference runner.py:589-595).
+  /** E3: the MERGE A → MERGE B pair into the date-partitioned fact
+    * table over a trailing window ending today-VN7 (reference
+    * runner.py:589-595), as ONE physical rewrite: the target is pruned
+    * to the union of the two sources' `Ngay` ranges, and each partition
+    * is written once (DEVIATIONS.md 7 and 14).
     */
   def refreshReporting(dEnd: java.time.LocalDate,
       windowDays: Int = 7, tenant: String = "PK"): Unit = {
     val lo = to_date(lit(dEnd.minusDays(windowDays.toLong).toString))
     val hi = to_date(lit(dEnd.toString))
-    val callLog = Storage.read(spark, p("call_log"))
-    val customer = Storage.read(spark, p("customer"))
     val group = Storage.read(spark, p("group")).select("group_id", "name")
-    val srcA = conformTo(
-      FactStaffDaily.mergeASource(callLog, customer, group, lo, hi, tenant),
-      FactStaffDaily.factTemplate)
-    Upsert.applyToPartitionedParquet(spark, p("fact_staff_daily"), srcA,
-      keys = Seq("Ngay", "MaNV_id"), partitionCol = "Ngay",
-      updateExprs = FactStaffDaily.mergeAUpdates)
-    val srcB = conformTo(
-      FactStaffDaily.mergeBSource(callLog, customer, group, lo, hi, tenant),
-      FactStaffDaily.factTemplate)
-    Upsert.applyToPartitionedParquet(spark, p("fact_staff_daily"), srcB,
-      keys = Seq("Ngay", "MaNV_id"), partitionCol = "Ngay",
-      updateExprs = FactStaffDaily.mergeBUpdates(tenant))
+    val sources = FactStaffDaily.sources(Storage.read(spark, p("call_log")),
+      Storage.read(spark, p("customer")), group, lo, hi, tenant)
+    Upsert.rewritePartitions(spark, p("fact_staff_daily"), sources, "Ngay")(
+      FactStaffDaily.mergePair(_, _, pruneA = None, tenant))
   }
 }
 

@@ -28,13 +28,11 @@ import org.apache.spark.sql.types._
   */
 object FactStaffDaily {
 
-  /** The reporting layer derives `Ngay` from epoch millis in UTC+7
+  /** `calls` CTE (runner.py:608-637): call metrics per (Ngay, MaNV_id).
+    * The reporting layer derives `Ngay` from epoch millis in UTC+7
     * (reference runner.py:610, 641) — deliberately different from the
     * ingest layer's UTC dates (X-date duality, SURVEY.md §2.7 ⚠).
     */
-  private def ngayVn7(ms: Column): Column = civilDateVn7(ms)
-
-  /** `calls` CTE (runner.py:608-637): call metrics per (Ngay, MaNV_id). */
   def callsAgg(callLog: DataFrame, group: DataFrame,
       dStart: Column, dEnd: Column, tenant: String = "PK"): DataFrame = {
     val ringSeconds =
@@ -48,7 +46,7 @@ object FactStaffDaily {
       .join(broadcast(group),
         col("fromGroup__id").cast(StringType) === col("group_id").cast(StringType),
         "left")
-      .groupBy(ngayVn7(col("createTime")).as("Ngay"),
+      .groupBy(civilDateVn7(col("createTime")).as("Ngay"),
         col("fromUser__id").cast(StringType).as("MaNV_id"))
       .agg(
         first(col("fromUser__name").cast(StringType), ignoreNulls = true).as("MaNV"),
@@ -80,8 +78,8 @@ object FactStaffDaily {
       dStart: Column, dEnd: Column, tenant: String = "PK"): DataFrame = {
     val assigned = customerInRange(customer, dStart, dEnd)
       .filter(col("tenant") === tenant && col("assignedTime").isNotNull &&
-        ngayVn7(col("assignedTime")).between(dStart, dEnd))
-      .groupBy(ngayVn7(col("assignedTime")).as("Ngay"),
+        civilDateVn7(col("assignedTime")).between(dStart, dEnd))
+      .groupBy(civilDateVn7(col("assignedTime")).as("Ngay"),
         col("user_id").cast(StringType).as("MaNV_id"))
       .agg(
         first(col("user_name").cast(StringType), ignoreNulls = true).as("MaNV"),
@@ -217,8 +215,7 @@ object FactStaffDaily {
     StructField("SoSDT_TuChoi", LongType), StructField("SoSDT_KhongNgheMay", LongType)))
 
   /** MERGE A's WHEN MATCHED update list: every metric column is
-    * overwritten from the source row. Shared by [[refresh]] and the
-    * physical refresh in `BatchRunner.refreshReporting`.
+    * overwritten from the source row.
     */
   val mergeAUpdates: Map[String, String] =
     Seq("Tenant", "Team", "MaNV", "TongCuoc", "SoSDT_Unique",
@@ -238,24 +235,31 @@ object FactStaffDaily {
     "SoSDT_TuChoi" -> "s.SoSDT_TuChoi",
     "SoSDT_KhongNgheMay" -> "s.SoSDT_KhongNgheMay")
 
-  /** The two sequential MERGEs (runner.py:589-874) against an in-memory
-    * target. MERGE A upserts the full metric row; MERGE B updates only
-    * the four status counters, preserving existing Team/MaNV via
-    * IFNULL(T.x, S.x) (runner.py:856-863). Both are range-pruned on
-    * `Ngay` in [dStart, dEnd].
+  /** MERGE A's and MERGE B's sources, in that order, conformed to
+    * [[factTemplate]].
     */
-  def refresh(target: DataFrame, callLog: DataFrame, customer: DataFrame,
-      group: DataFrame, dStart: Column, dEnd: Column,
-      tenant: String = "PK"): DataFrame = {
-    val srcA = conformTo(
-      mergeASource(callLog, customer, group, dStart, dEnd, tenant), factTemplate)
-    val afterA = Upsert.upsert(
-      conformTo(target, factTemplate), srcA, keys = Seq("Ngay", "MaNV_id"),
-      updateExprs = mergeAUpdates,
-      targetPrune = Some(col("Ngay").between(dStart, dEnd)))
+  def sources(callLog: DataFrame, customer: DataFrame, group: DataFrame,
+      dStart: Column, dEnd: Column, tenant: String = "PK"): Seq[DataFrame] =
+    Seq(mergeASource(callLog, customer, group, dStart, dEnd, tenant),
+      mergeBSource(callLog, customer, group, dStart, dEnd, tenant))
+      .map(conformTo(_, factTemplate))
 
-    val srcB = conformTo(
-      mergeBSource(callLog, customer, group, dStart, dEnd, tenant), factTemplate)
+  /** The two sequential MERGEs (runner.py:589-874) of [[sources]] into
+    * `target`, both keyed on (Ngay, MaNV_id). MERGE A upserts the full
+    * metric row; MERGE B updates only the four status counters,
+    * preserving existing Team/MaNV via IFNULL(T.x, S.x)
+    * (runner.py:856-863). `pruneA` is MERGE A's target range: the
+    * in-memory [[refresh]] passes `[dStart, dEnd]`, as the reference
+    * does; the physical refresh (`BatchRunner.refreshReporting`) passes
+    * none, because `Upsert.rewritePartitions` has already pruned the
+    * target to the sources' own `Ngay` ranges (DEVIATIONS.md 14).
+    */
+  def mergePair(target: DataFrame, sources: Seq[DataFrame],
+      pruneA: Option[Column], tenant: String): DataFrame = {
+    val Seq(srcA, srcB) = sources
+    val keys = Seq("Ngay", "MaNV_id")
+    val afterA = Upsert.upsert(target, srcA, keys,
+      updateExprs = mergeAUpdates, targetPrune = pruneA)
     // NO targetPrune on MERGE B, deliberately: `Ngay` is a merge KEY and
     // every srcB row's Ngay lies inside [dStart, dEnd] by construction
     // (mergeBSource derives it from the range-filtered NgayTao), so an
@@ -267,7 +271,16 @@ object FactStaffDaily {
     // its prune: srcA's VN7-derived Ngay CAN fall outside the window, and
     // the reference's range predicate makes such rows insert rather than
     // update an out-of-range target row — observable semantics.)
-    Upsert.upsert(afterA, srcB, keys = Seq("Ngay", "MaNV_id"),
-      updateExprs = mergeBUpdates(tenant))
+    Upsert.upsert(afterA, srcB, keys, updateExprs = mergeBUpdates(tenant))
   }
+
+  /** The in-memory refresh with the reference's semantics: [[mergePair]]
+    * with MERGE A range-pruned on `Ngay` in [dStart, dEnd].
+    */
+  def refresh(target: DataFrame, callLog: DataFrame, customer: DataFrame,
+      group: DataFrame, dStart: Column, dEnd: Column,
+      tenant: String = "PK"): DataFrame =
+    mergePair(conformTo(target, factTemplate),
+      sources(callLog, customer, group, dStart, dEnd, tenant),
+      Some(col("Ngay").between(dStart, dEnd)), tenant)
 }

@@ -464,9 +464,9 @@ object PipelineOps {
         // their jobs concurrently at every phase boundary (Spark
         // sessions accept jobs from multiple threads; this is the
         // driver-side analog of the fixed-N widening). Routed through
-        // the gated fork so the concurrentSubtrees A/B covers it.
+        // ColumnLib.fork, whose A/B measured the overlap.
         def par[T](xs: (() => T)*): Seq[T] = {
-          val hs = xs.map(f => graft.functions.ColumnLib.fork(s)(f()))
+          val hs = xs.map(f => graft.functions.ColumnLib.fork(f()))
           graft.functions.ColumnLib.awaitAll(hs: _*)
           hs.map(_())
         }

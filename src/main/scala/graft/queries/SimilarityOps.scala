@@ -1425,7 +1425,7 @@ object SimilarityOps {
         // paying the full decimal scan per branch — and the build and
         // the yardstick are independent, so overlap them (guide §2.6).
         import graft.functions.ColumnLib.fork
-        val exF = fork(s)(decimalRerankTop10(e, e.select("vec_id"))
+        val exF = fork(decimalRerankTop10(e, e.select("vec_id"))
           .select("vec_id").localCheckpoint(true))
         Similarity.ivfWrite(embNarrow(s, dir), "vec_id", "embedding",
           cents, path)
@@ -1733,14 +1733,14 @@ object SimilarityOps {
         // Both builds read the BARE scan (q58's rationale); the
         // decimal recall yardstick keeps the widened e. The two builds
         // (own paths) and the exact yardstick are independent — overlap
-        // them (guide §2.6, gated fork).
+        // them (guide §2.6).
         import graft.functions.ColumnLib.fork
         val eN = embNarrow(s, dir)
-        val bF = fork(s)(
+        val bF = fork(
           Similarity.ivfWrite(eN, "vec_id", "embedding", cents, s"$base/float"))
-        val b8F = fork(s)(Similarity.ivfWriteSq8(eN.select("vec_id", "embedding"),
+        val b8F = fork(Similarity.ivfWriteSq8(eN.select("vec_id", "embedding"),
           "vec_id", "embedding", cents, s"$base/sq8"))
-        val exF = fork(s)(decimalRerankTop10(e, e.select("vec_id"))
+        val exF = fork(decimalRerankTop10(e, e.select("vec_id"))
           .select("vec_id").localCheckpoint(true))
         graft.functions.ColumnLib.awaitAll(bF, b8F, exF)
         val exact = exF()
@@ -1961,7 +1961,7 @@ object SimilarityOps {
         // whole ADC chain, so its blocking materialization runs
         // CONCURRENTLY with the PQ training below (guide §2.6; the
         // q171/q205 posture).
-        val exF = graft.functions.ColumnLib.fork(s)(
+        val exF = graft.functions.ColumnLib.fork(
           exactDotTop10(ex, q).localCheckpoint(true))
         // Stage 1: ADC shortlist k' = 4k from the probed clusters
         // (k' rows; read twice below — once for the ADC-only cut,
@@ -2215,18 +2215,18 @@ object SimilarityOps {
         // The raw PQ training does not read the coarse parts at all —
         // start it FIRST so it overlaps the coarse stage's two blocking
         // cuts as well as everything below (guide §2.6).
-        val rawF = fork(s)(pqParts(s, dir))
+        val rawF = fork(pqParts(s, dir))
         val parts = coarseParts(s, dir, cut = true)
         // The yardstick and the residual training are independent
         // subtrees over the shared (already-cut) coarse parts, each a
         // chain of blocking materializations that underfills the
         // cluster — build them concurrently (the q205 posture).
-        val candidatesF = fork(s)(
+        val candidatesF = fork(
           parts.assign
             .join(broadcast(parts.probes), Seq("cluster"), "left_semi")
             .select("vec_id")
             .localCheckpoint(true)) // shared by yardstick + both variants
-        val resF = fork(s)(pqResidualParts(s, dir, parts))
+        val resF = fork(pqResidualParts(s, dir, parts))
         val candidates = candidatesF()
         val q = queryElems(parts.ex)
         // Yardstick: exact top-10 WITHIN the probed candidates — both
@@ -2479,11 +2479,11 @@ object SimilarityOps {
         // overlap them, and overlap the exact yardstick with whatever
         // of the rotated chain is still running (guide §2.6; the
         // q171/q205 posture).
-        val rawF = fork(s)(pqPartsFromVec(e, "embedding"))
-        val rotF = fork(s)(pqPartsFromVec(
+        val rawF = fork(pqPartsFromVec(e, "embedding"))
+        val rotF = fork(pqPartsFromVec(
           Similarity.srhtRotate(e, "vec_id", "embedding", "srht7"), "rotated"))
         val raw = rawF()
-        val exF = fork(s)(exactDotTop10(raw.ex, raw.q)
+        val exF = fork(exactDotTop10(raw.ex, raw.q)
           .localCheckpoint(true)) // read by both recall rows
         val rot = rotF()
         val exactTop = exF()
@@ -2579,11 +2579,10 @@ object SimilarityOps {
         val qvec = queryVec(e)
         val vpath = ivfPath("q206", dir)
         // The two index builds are independent (own paths) and each
-        // underfills the cluster — submit their jobs concurrently
-        // (routed through the gated fork so the A/B covers it).
-        val bT = fork(s)(TextIndex.write(graft.Tables.table(s, dir, "documents")
+        // underfills the cluster — submit their jobs concurrently.
+        val bT = fork(TextIndex.write(graft.Tables.table(s, dir, "documents")
           .select(col("doc_id"), col("text")), "doc_id", "text", tpath))
-        val bV = fork(s)(Similarity.ivfWrite(e, "vec_id", "embedding", cents,
+        val bV = fork(Similarity.ivfWrite(e, "vec_id", "embedding", cents,
           vpath))
         graft.functions.ColumnLib.awaitAll(bT, bV)
         val textTop = TextIndex.searchBM25(s, tpath, terms, k = 20)

@@ -3038,8 +3038,8 @@ object TextOps {
       (s, dir) => {
         // The three per-query eval subtrees are independent and each
         // contains a blocking grade-table cut — build them concurrently
-        // (guide §2.6; the q171/q205 posture, gated fork).
-        val perQuery = evalQueries.map { q => graft.functions.ColumnLib.fork(s) {
+        // (guide §2.6; the q171/q205 posture).
+        val perQuery = evalQueries.map { q => graft.functions.ColumnLib.fork {
           val terms = q.split(' ').toSeq
           val graded = bm25Scan(s, dir, terms)
             .withColumn("grade", terms.indices.map(i =>
@@ -3077,8 +3077,8 @@ object TextOps {
         graft.operators.TextIndex.write(docs(s, dir), "doc_id", "text", path)
         // The three per-query eval subtrees are independent and each
         // contains a blocking grade-table cut — build them concurrently
-        // (guide §2.6; the q171/q205 posture, gated fork).
-        val perQuery = evalQueries.map { q => graft.functions.ColumnLib.fork(s) {
+        // (guide §2.6; the q171/q205 posture).
+        val perQuery = evalQueries.map { q => graft.functions.ColumnLib.fork {
           val terms = q.split(' ').toSeq
           val served = graft.operators.TextIndex
             .searchBM25(s, path, terms, k = 10)

@@ -23,7 +23,7 @@ import org.apache.spark.sql.Row
   *
   * Scale notes: state for dropDuplicates is bounded by the watermark
   * horizon; the foreachBatch upsert only rewrites partitions the batch
-  * touches (dynamic partition overwrite), so steady-state cost tracks
+  * touches (a per-partition swap), so steady-state cost tracks
   * batch size, not table size.
   */
 object IncrementalStream {

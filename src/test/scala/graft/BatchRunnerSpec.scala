@@ -1,13 +1,67 @@
 package graft
 
-import graft.pipelines.BatchRunner
+import graft.operators.Upsert
+import graft.pipelines.{BatchRunner, FactStaffDaily}
 import graft.sources.FixtureSources
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 class BatchRunnerSpec extends SparkSpec {
 
   // Anchor: 2024-01-10T00:00:00Z; 120 docs → one every minute, 2 hours.
   private val T0 = 1704844800000L
+  private val Day = 86400000L
+
+  private def runner(wh: String, t: Long, n: Int, version: Int) =
+    new BatchRunner(spark, new FixtureSources.Paged(t, n, version),
+      new FixtureSources.Snapshots, BatchRunner.Config(wh, tenants = Seq("PK"),
+        sliceMs = 1800000L, pageSize = 13))
+
+  /** One ingest slot of `n` one-a-minute docs from `t`. */
+  private def ingest(wh: String, t: Long, n: Int, version: Int): Unit = {
+    val r = runner(wh, t, n, version)
+    r.bootstrap()
+    r.runCustomer(t + n * 60000L)
+    r.runCall(t + n * 60000L)
+  }
+
+  /** A warehouse with calls and customers on 2024-01-10 and -11 (UTC)
+    * and the group snapshot, but no fact table yet.
+    */
+  private def twoDayWarehouse(prefix: String): String = {
+    val wh = tempDir(prefix)
+    ingest(wh, T0, 60, 1)
+    runner(wh, T0, 60, 1).runStaffGroup()
+    ingest(wh, T0 + Day, 60, 2)
+    wh
+  }
+
+  /** Adds calls at 17:00–18:00 UTC on 2024-01-12: `NgayTao` is -12, the
+    * VN7 reporting date `Ngay` is -13 (DEVIATIONS.md 14).
+    */
+  private def lateCalls(wh: String): Unit =
+    ingest(wh, T0 + 2 * Day + 17 * 3600000L, 60, 3)
+
+  /** MERGE A's and MERGE B's sources for a refresh ending `dEnd`. */
+  private def factSources(wh: String, dEnd: String): Seq[DataFrame] = {
+    val d = java.time.LocalDate.parse(dEnd)
+    FactStaffDaily.sources(spark.read.parquet(s"$wh/call_log"),
+      spark.read.parquet(s"$wh/customer"),
+      spark.read.parquet(s"$wh/group").select("group_id", "name"),
+      to_date(lit(d.minusDays(7).toString)), to_date(lit(d.toString)))
+  }
+
+  private def ngayRange(src: DataFrame): (java.sql.Date, java.sql.Date) = {
+    val r = src.agg(min("Ngay"), max("Ngay")).head()
+    (r.getDate(0), r.getDate(1))
+  }
+
+  private def factRows(fact: DataFrame): Seq[String] =
+    fact.select(FactStaffDaily.factTemplate.fieldNames.toSeq.map(col): _*)
+      .collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  private def table(wh: String): Seq[String] =
+    factRows(spark.read.parquet(s"$wh/fact_staff_daily"))
 
   test("full E1/E2/snapshot/E3 cycle: ingest, merge, re-run, report") {
     val wh = tempDir("runner_wh")
@@ -152,5 +206,88 @@ class BatchRunnerSpec extends SparkSpec {
       once, callLog, customer, group, lo, hi)
     assert(lateRows(once) == perStaff)
     assert(lateRows(twice) == (perStaff ++ perStaff).sorted)
+  }
+
+  test("a refresh sequence equals MERGE A then MERGE B, each pruned to its source's Ngay range") {
+    // The model is the pair of physical MERGEs the refresh used to run:
+    // each source merged into the table pruned to its own Ngay range.
+    val wh = twoDayWarehouse("runner_model")
+    var model = spark.createDataFrame(java.util.List.of[Row](),
+      FactStaffDaily.factTemplate)
+    def step(dEnd: String): Unit = {
+      val Seq(srcA, srcB) = factSources(wh, dEnd)
+      def prune(src: DataFrame) = {
+        val (lo, hi) = ngayRange(src)
+        Some(col("Ngay").between(lit(lo), lit(hi)))
+      }
+      val afterA = Upsert.upsert(model, srcA, Seq("Ngay", "MaNV_id"),
+        updateExprs = FactStaffDaily.mergeAUpdates, targetPrune = prune(srcA))
+      model = Upsert.upsert(afterA, srcB, Seq("Ngay", "MaNV_id"),
+        updateExprs = FactStaffDaily.mergeBUpdates("PK"),
+        targetPrune = prune(srcB)).localCheckpoint()
+      runner(wh, T0, 60, 1).refreshReporting(java.time.LocalDate.parse(dEnd))
+      assert(table(wh) == factRows(model), s"after the refresh ending $dEnd")
+    }
+    step("2024-01-12") // first refresh: the fact table does not exist yet
+    assert(table(wh).nonEmpty)
+    step("2024-01-12") // repeated dEnd
+    step("2024-01-11") // alternating dEnd
+    step("2024-01-12")
+    lateCalls(wh)
+    step("2024-01-12") // 17:00–24:00 UTC calls land on Ngay = dEnd + 1
+    step("2024-01-12")
+    val late = spark.read.parquet(s"$wh/fact_staff_daily")
+      .filter(col("Ngay") === lit(java.sql.Date.valueOf("2024-01-13")))
+    assert(late.count() == 5 && late.select("MaNV_id").distinct().count() == 5)
+  }
+
+  test("one refresh rewrites the union of the sources' Ngay ranges, each partition once, under one lock") {
+    val wh = twoDayWarehouse("runner_swap")
+    runner(wh, T0, 60, 1).refreshReporting(java.time.LocalDate.parse("2024-01-12"))
+    lateCalls(wh)
+    val Seq(srcA, srcB) = factSources(wh, "2024-01-12")
+    val ranges = Seq(ngayRange(srcA), ngayRange(srcB))
+    assert(ranges(0) != ranges(1), "the late calls give MERGE A a wider range")
+    val expected = spark.read.parquet(s"$wh/fact_staff_daily").select("Ngay")
+      .union(srcA.select("Ngay")).union(srcB.select("Ngay")).distinct()
+      .collect().map(_.getDate(0))
+      .filter(d => ranges.exists { case (lo, hi) => !d.before(lo) && !d.after(hi) })
+      .map(d => s"Ngay=$d").toSeq.sorted
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftfault.impl", classOf[InterruptingFs].getName)
+    InterruptingFs.installs.clear()
+    InterruptingFs.lockReleases.set(0)
+    runner("graftfault://" + wh, T0, 60, 1)
+      .refreshReporting(java.time.LocalDate.parse("2024-01-12"))
+    val installs = InterruptingFs.installs.toArray.toSeq.map(_.toString)
+    assert(installs.sorted == expected)
+    assert(InterruptingFs.lockReleases.get() == 1)
+  }
+
+  test("a refresh killed mid-swap, then re-run, equals the no-fault table") {
+    val wh = twoDayWarehouse("runner_kill")
+    runner(wh, T0, 60, 1).refreshReporting(java.time.LocalDate.parse("2024-01-12"))
+    lateCalls(wh)
+    val clean = tempDir("runner_nofault")
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(wh), new java.io.File(clean))
+    runner(clean, T0, 60, 1).refreshReporting(java.time.LocalDate.parse("2024-01-12"))
+
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftfault.impl", classOf[InterruptingFs].getName)
+    val faulty = runner("graftfault://" + wh, T0, 60, 1)
+    InterruptingFs.failInstallOf = "Ngay=2024-01-11"
+    val ex = intercept[RuntimeException] {
+      faulty.refreshReporting(java.time.LocalDate.parse("2024-01-12"))
+    }
+    assert(ex.getMessage.contains("simulated"))
+    assert(InterruptingFs.failInstallOf == null, "the fault must have fired")
+    // Killed between displace and install: the old copy sits in the backup.
+    assert(!new java.io.File(s"$wh/fact_staff_daily/Ngay=2024-01-11").exists() &&
+      new java.io.File(s"$wh/fact_staff_daily.merge-bak/Ngay=2024-01-11").exists())
+    faulty.refreshReporting(java.time.LocalDate.parse("2024-01-12"))
+    assert(table(wh) == table(clean))
+    assert(!new java.io.File(s"$wh/fact_staff_daily.merge-tmp").exists() &&
+      !new java.io.File(s"$wh/fact_staff_daily.merge-bak").exists())
   }
 }

@@ -103,8 +103,8 @@ class ColumnLibSpec extends SparkSpec {
 
   test("awaitAll joins a slow forked sibling before rethrowing the first failure") {
     val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val failing = fork[Int](spark)(throw new IllegalStateException("sink failed"))
-    val slow = fork(spark) { Thread.sleep(400); done.set(true); 7 }
+    val failing = fork[Int](throw new IllegalStateException("sink failed"))
+    val slow = fork { Thread.sleep(400); done.set(true); 7 }
     val e = intercept[IllegalStateException](awaitAll(failing, slow))
     assert(e.getMessage == "sink failed")
     assert(done.get, "the sibling must have finished before the failure surfaced")

@@ -503,23 +503,34 @@ class UpsertSpec extends SparkSpec {
   * from the one rename whose source is merge staging output and whose
   * destination is the live table — the install step — when armed for
   * that partition, simulating a process death between the displace and
-  * install renames. Everything else delegates to the local filesystem.
+  * install renames. It also records each install (by partition name)
+  * and each writer-lock release. Everything else delegates to the local
+  * filesystem.
   */
 class InterruptingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "graftfault"
   override def getUri: java.net.URI = java.net.URI.create("graftfault:///")
   override def rename(src: org.apache.hadoop.fs.Path,
       dst: org.apache.hadoop.fs.Path): Boolean = {
+    val install = src.toString.contains(".merge-tmp") &&
+      !dst.toString.contains(".merge-tmp")
     val armed = InterruptingFs.failInstallOf
-    if (armed != null && src.toString.contains(".merge-tmp") &&
-        !dst.toString.contains(".merge-tmp") && dst.getName == armed) {
+    if (install && armed != null && dst.getName == armed) {
       InterruptingFs.failInstallOf = null
       throw new RuntimeException(s"simulated JVM kill installing $armed")
     }
-    super.rename(src, dst)
+    val done = super.rename(src, dst)
+    if (install && done) InterruptingFs.installs.add(dst.getName)
+    done
+  }
+  override def delete(p: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean = {
+    if (p.getName.endsWith(".merge-lock")) InterruptingFs.lockReleases.incrementAndGet()
+    super.delete(p, recursive)
   }
 }
 
 object InterruptingFs {
   @volatile var failInstallOf: String = null
+  val installs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val lockReleases = new java.util.concurrent.atomic.AtomicInteger()
 }
