@@ -77,9 +77,13 @@ private[graft] object IndexCommit {
 
   /** The ledger, read with the declared [[Index.schema]]: no
     * schema-inference job. A declared-schema read would fill a column
-    * that a file's footer lacks with nulls, so every file's footer is
-    * read first (directly, not in a Spark job), and a ledger that lacks
-    * a declared column or types it differently fails loudly.
+    * that the files lack with nulls, so one file's footer is read first
+    * (directly, not in a Spark job), and a ledger that lacks a declared
+    * column or types it differently fails loudly. One footer stands for
+    * the ledger, as it did for schema inference: every ledger file is
+    * written by [[writeRow]] with the declared schema, and the ledger
+    * grows by one file per append or delete, which a check of every
+    * footer would re-read on every read.
     */
   def readLedger(spark: SparkSession, ix: Index): Ledger = {
     val rows =
@@ -89,7 +93,7 @@ private[graft] object IndexCommit {
         try {
           val declared = StructType.fromDDL(ix.schema)
           val ledger = spark.read.schema(declared).parquet(ix.ledger)
-          requireFooters(spark, ix, declared)
+          requireFooter(spark, ix, declared)
           ledger.collect()
         } catch { case e: org.apache.spark.sql.AnalysisException
             if ix.rebuildWith.isDefined =>
@@ -297,14 +301,13 @@ private[graft] object IndexCommit {
     }
   }
 
-  private def requireFooters(spark: SparkSession, ix: Index,
-      declared: StructType): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val toSpark = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+  private def requireFooter(spark: SparkSession, ix: Index,
+      declared: StructType): Unit =
     fs(spark, ix.ledger).listStatus(new Path(ix.ledger))
-      .filter(_.getPath.getName.endsWith(".parquet")).foreach { f =>
-        val found = toSpark.convert(ParquetFileReader.readFooter(
-          HadoopInputFile.fromStatus(f, conf), NO_FILTER).getFileMetaData.getSchema)
+      .find(_.getPath.getName.endsWith(".parquet")).foreach { f =>
+        val found = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+          .convert(ParquetFileReader.readFooter(HadoopInputFile.fromStatus(f,
+            spark.sessionState.newHadoopConf()), NO_FILTER).getFileMetaData.getSchema)
         for (c <- declared; got = found.find(_.name == c.name)
              if !got.exists(_.dataType == c.dataType))
           throw new IllegalStateException(s"${ix.kind} ledger file ${f.getPath} " +
@@ -312,7 +315,6 @@ private[graft] object IndexCommit {
               g.dataType.simpleString) + s", but the ledger schema " +
             s"declares ${c.name} ${c.dataType.simpleString} (${ix.ledger}).")
       }
-  }
 
   private def fs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())

@@ -507,7 +507,9 @@ object Upsert {
     * in-memory `merge` of one or more sources: writer lock → recovery →
     * each source materialized once → the target read pruned to the union
     * of the sources' partition ranges → `merge(target, sources)` → one
-    * temp write → one per-partition displace/install swap.
+    * temp write → one per-partition displace/install swap. The swap
+    * creates the table root first, so each install is a rename into an
+    * existing directory, as HDFS requires.
     *
     * Target rows outside the ranges are neither matched nor rewritten
     * (the reference's MERGE-ON range predicate). When `partitionCol` is
@@ -516,9 +518,11 @@ object Upsert {
     * the sources in sequence over the union of their ranges equals
     * running the merges one by one, each over its own range — and
     * rewrites each partition once. A missing table reads as an empty
-    * frame of the first source's schema, so the first write takes the
-    * same path. A source without partition values adds no range; when
-    * none has any, nothing is written.
+    * frame of the first source's schema and needs no range, so its
+    * sources are not materialized, and the first write takes the same
+    * merge, temp write and swap. A source without partition values
+    * adds no range; when none has any, an existing table is left as it
+    * is.
     */
   def rewritePartitions(
       spark: org.apache.spark.sql.SparkSession,
@@ -554,23 +558,31 @@ object Upsert {
       }
       fs.delete(hBak, true)
     }
-    // Each source is read twice, for its partition range and by the
-    // merge. Materialized once, its lineage (for the fact refresh: the
-    // FactStaffDaily joins and aggregations) runs once, and the range
-    // and the merge see the same rows. All ranges come from one job.
-    val srcs = sources.map(_.localCheckpoint(eager = true))
-    val prunes = srcs.zipWithIndex
-      .map { case (s, i) => s.select(lit(i).as("src"), col(partitionCol).as("p")) }
-      .reduce(_ union _)
-      .groupBy("src").agg(min("p"), max("p")).collect()
-      .filterNot(_.isNullAt(1))
-      .map(r => col(partitionCol).between(lit(r.get(1)), lit(r.get(2))))
-    if (prunes.nonEmpty) {
-      val target =
-        if (graft.sources.Storage.exists(spark, path)) spark.read.parquet(path)
-        else spark.createDataFrame(
-          java.util.List.of[org.apache.spark.sql.Row](), srcs.head.schema)
-      val merged = merge(target.filter(prunes.reduce(_ || _)), srcs)
+    // A missing table reads as an empty frame and each source is read
+    // once, by the merge. An existing table is read pruned to the union
+    // of the sources' partition ranges, so each source is read twice,
+    // for its range and by the merge. Materialized once, its lineage
+    // (for the fact refresh: the FactStaffDaily joins and aggregations)
+    // runs once, and the range and the merge see the same rows. The
+    // ranges are one global aggregate per source, collected in one
+    // action (a grouped aggregate over the tagged union cost the slot
+    // merge more CPU, mostly JIT). When no source has a partition value
+    // there is nothing to merge.
+    val exists = graft.sources.Storage.exists(spark, path)
+    val srcs =
+      if (exists) sources.map(_.localCheckpoint(eager = true)) else sources
+    val target =
+      if (!exists) Some(spark.createDataFrame(
+        java.util.List.of[org.apache.spark.sql.Row](), srcs.head.schema))
+      else srcs
+        .map(_.agg(min(col(partitionCol)), max(col(partitionCol))))
+        .reduce(_ union _).collect()
+        .filterNot(_.isNullAt(0))
+        .map(r => col(partitionCol).between(lit(r.get(0)), lit(r.get(1))))
+        .reduceOption(_ || _)
+        .map(spark.read.parquet(path).filter(_))
+    target.foreach { t =>
+      val merged = merge(t, srcs)
       // Write-to-temp + per-partition swap (same staging pattern as
       // [[graft.sources.Storage.compact]]): the merge streams from the
       // ORIGINAL files into a sibling temp dir, then each affected
@@ -594,6 +606,9 @@ object Upsert {
       merged.write.mode("overwrite")
         .option("partitionOverwriteMode", "static")
         .partitionBy(partitionCol).parquet(tmp)
+      // The first write installs into a root that does not exist yet: a
+      // rename into a missing parent fails on HDFS.
+      fs.mkdirs(hPath)
       fs.mkdirs(hBak)
       fs.listStatus(hTmp).iterator
         .filter(st => st.isDirectory && st.getPath.getName.contains("="))

@@ -242,6 +242,28 @@ class UpsertSpec extends SparkSpec {
     assert(!bak.exists() && !new java.io.File(dir + "/t.merge-tmp").exists())
   }
 
+  test("a first write into a missing table installs its partitions by rename") {
+    // `graftfault://` refuses a rename into a missing parent, as HDFS
+    // does, where the local filesystem would copy instead.
+    val dir = tempDir("upsert_first")
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftfault.impl", classOf[InterruptingFs].getName)
+    val fdir = "graftfault://" + dir + "/t"
+    InterruptingFs.installs.clear()
+    Upsert.applyToPartitionedParquet(spark, fdir, df("k BIGINT, v STRING, d STRING",
+      Row(Long.box(1), "a", "2024-01-01"),
+      Row(Long.box(1), "a2", "2024-01-01"),
+      Row(Long.box(2), "b", "2024-01-02")), Seq("k"), "d",
+      sourceOrder = Seq(col("v").desc))
+    assert(InterruptingFs.installs.toArray.toSeq.map(_.toString).sorted ==
+      Seq("d=2024-01-01", "d=2024-01-02"))
+    val rows = spark.read.parquet(fdir)
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(rows == Map(1L -> "a2", 2L -> "b"))
+    assert(!new java.io.File(dir + "/t.merge-bak").exists() &&
+      !new java.io.File(dir + "/t.merge-tmp").exists())
+  }
+
   test("scd2FromChangeLog: runs collapse null-safely, intervals chain, tiebreak holds") {
     def r(k: Long, id: Long, v: String, t: Long) =
       Row(Long.box(k), Long.box(id), v, Long.box(t))
@@ -503,8 +525,10 @@ class UpsertSpec extends SparkSpec {
   * from the one rename whose source is merge staging output and whose
   * destination is the live table — the install step — when armed for
   * that partition, simulating a process death between the displace and
-  * install renames. It also records each install (by partition name)
-  * and each writer-lock release. Everything else delegates to the local
+  * install renames. A rename into a missing parent directory returns
+  * false, as on HDFS (the local filesystem would fall back to a copy).
+  * It also records each install (by partition name) and each
+  * writer-lock release. Everything else delegates to the local
   * filesystem.
   */
 class InterruptingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
@@ -519,7 +543,7 @@ class InterruptingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
       InterruptingFs.failInstallOf = null
       throw new RuntimeException(s"simulated JVM kill installing $armed")
     }
-    val done = super.rename(src, dst)
+    val done = exists(dst.getParent) && super.rename(src, dst)
     if (install && done) InterruptingFs.installs.add(dst.getName)
     done
   }
