@@ -3,8 +3,8 @@ package graft
 /** Dev tool: print the physical plan of any registered query.
   * Usage: runMain graft.Explain <name> [sfDir] [k=v ...]
   * Trailing k=v args are applied with spark.conf.set before the query
-  * is built — lets a gated optimization (e.g.
-  * spark.graft.pqNarrowCkpt) dump its before/after plans.
+  * is built — lets a session setting (e.g.
+  * spark.sql.autoBroadcastJoinThreshold=-1) dump its before/after plans.
   */
 object Explain {
   def main(args: Array[String]): Unit = {

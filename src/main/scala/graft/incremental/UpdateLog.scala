@@ -67,7 +67,7 @@ final class CheckpointStore(spark: SparkSession, path: String) {
   /** Load the cache from the audit log (checkpoints.py:60-77). */
   def warm(): Unit = {
     if (!graft.sources.Storage.exists(spark, path)) return
-    spark.read.parquet(path)
+    graft.sources.Storage.read(spark, path, UpdateLog.schema)
       .groupBy(lower(col("table_name")).as("t"), col("tenant"))
       .agg(max(col("max_updateTime")).as("ck"), max(col("updated_at")).as("lr"))
       .collect().foreach { r =>

@@ -1,11 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
 
@@ -77,13 +73,10 @@ private[graft] object IndexCommit {
 
   /** The ledger, read with the declared [[Index.schema]]: no
     * schema-inference job. A declared-schema read would fill a column
-    * that the files lack with nulls, so one file's footer is read first
-    * (directly, not in a Spark job), and a ledger that lacks a declared
-    * column or types it differently fails loudly. One footer stands for
-    * the ledger, as it did for schema inference: every ledger file is
-    * written by [[writeRow]] with the declared schema, and the ledger
-    * grows by one file per append or delete, which a check of every
-    * footer would re-read on every read.
+    * that the files lack with nulls, so one file's footer is checked
+    * first ([[graft.sources.Storage.checkFooter]]), and a ledger that
+    * lacks a declared column or types it differently fails loudly. Every
+    * ledger file is written by [[writeRow]] with the declared schema.
     */
   def readLedger(spark: SparkSession, ix: Index): Ledger = {
     val rows =
@@ -93,7 +86,9 @@ private[graft] object IndexCommit {
         try {
           val declared = StructType.fromDDL(ix.schema)
           val ledger = spark.read.schema(declared).parquet(ix.ledger)
-          requireFooter(spark, ix, declared)
+          graft.sources.Storage.checkFooter(ledger, declared)
+            .foreach(c => throw new IllegalStateException(s"${ix.kind} ledger " +
+              s"${ix.ledger} lacks column $c, which the ledger schema declares."))
           ledger.collect()
         } catch { case e: org.apache.spark.sql.AnalysisException
             if ix.rebuildWith.isDefined =>
@@ -300,21 +295,6 @@ private[graft] object IndexCommit {
       case orphans => orphans.foreach(o => f.delete(o.getPath, true))
     }
   }
-
-  private def requireFooter(spark: SparkSession, ix: Index,
-      declared: StructType): Unit =
-    fs(spark, ix.ledger).listStatus(new Path(ix.ledger))
-      .find(_.getPath.getName.endsWith(".parquet")).foreach { f =>
-        val found = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-          .convert(ParquetFileReader.readFooter(HadoopInputFile.fromStatus(f,
-            spark.sessionState.newHadoopConf()), NO_FILTER).getFileMetaData.getSchema)
-        for (c <- declared; got = found.find(_.name == c.name)
-             if !got.exists(_.dataType == c.dataType))
-          throw new IllegalStateException(s"${ix.kind} ledger file ${f.getPath} " +
-            got.fold(s"lacks column ${c.name}")(g => s"types ${c.name} as " +
-              g.dataType.simpleString) + s", but the ledger schema " +
-            s"declares ${c.name} ${c.dataType.simpleString} (${ix.ledger}).")
-      }
 
   private def fs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())

@@ -517,12 +517,12 @@ object Upsert {
     * source's range can match none of that source's rows, so merging
     * the sources in sequence over the union of their ranges equals
     * running the merges one by one, each over its own range — and
-    * rewrites each partition once. A missing table reads as an empty
-    * frame of the first source's schema and needs no range, so its
-    * sources are not materialized, and the first write takes the same
-    * merge, temp write and swap. A source without partition values
-    * adds no range; when none has any, an existing table is left as it
-    * is.
+    * rewrites each partition once. The target is read in the first
+    * source's schema. A missing table reads as an empty frame of that
+    * schema and needs no range, so its sources are not materialized,
+    * and the first write takes the same merge, temp write and swap. A
+    * source without partition values adds no range; when none has any,
+    * an existing table is left as it is.
     */
   def rewritePartitions(
       spark: org.apache.spark.sql.SparkSession,
@@ -558,16 +558,17 @@ object Upsert {
       }
       fs.delete(hBak, true)
     }
-    // A missing table reads as an empty frame and each source is read
-    // once, by the merge. An existing table is read pruned to the union
-    // of the sources' partition ranges, so each source is read twice,
-    // for its range and by the merge. Materialized once, its lineage
-    // (for the fact refresh: the FactStaffDaily joins and aggregations)
-    // runs once, and the range and the merge see the same rows. The
-    // ranges are one global aggregate per source, collected in one
-    // action (a grouped aggregate over the tagged union cost the slot
-    // merge more CPU, mostly JIT). When no source has a partition value
-    // there is nothing to merge.
+    // The target is read in the first source's schema, the one every
+    // write of it declares. A missing table reads as an empty frame and
+    // each source is read once, by the merge. An existing table is read
+    // pruned to the union of the sources' partition ranges, so each
+    // source is read twice, for its range and by the merge. Materialized
+    // once, its lineage (for the fact refresh: the FactStaffDaily joins
+    // and aggregations) runs once, and the range and the merge see the
+    // same rows. The ranges are one global aggregate per source,
+    // collected in one action (a grouped aggregate over the tagged union
+    // cost the slot merge more CPU, mostly JIT). When no source has a
+    // partition value there is nothing to merge.
     val exists = graft.sources.Storage.exists(spark, path)
     val srcs =
       if (exists) sources.map(_.localCheckpoint(eager = true)) else sources
@@ -580,7 +581,7 @@ object Upsert {
         .filterNot(_.isNullAt(0))
         .map(r => col(partitionCol).between(lit(r.get(0)), lit(r.get(1))))
         .reduceOption(_ || _)
-        .map(spark.read.parquet(path).filter(_))
+        .map(graft.sources.Storage.read(spark, path, srcs.head.schema).filter(_))
     target.foreach { t =>
       val merged = merge(t, srcs)
       // Write-to-temp + per-partition swap (same staging pattern as

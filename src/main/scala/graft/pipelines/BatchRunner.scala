@@ -5,6 +5,7 @@ import graft.operators.Upsert
 import graft.sources.{PagedSource, Storage}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** End-to-end batch orchestration — the reference's job runners
   * re-expressed over the engine's own layers (SURVEY.md §3 E1/E2 and
@@ -31,6 +32,10 @@ final class BatchRunner(
 
   private def p(table: String) = s"${cfg.warehouseDir}/$table"
 
+  /** A warehouse table, read in the schema its writer declares. */
+  private def read(table: String, schema: StructType) =
+    Storage.read(spark, p(table), schema)
+
   val audit = new UpdateLogBuffer(spark, p("update_log"))
   val checkpoints = new CheckpointStore(spark, p("update_log"))
 
@@ -47,8 +52,8 @@ final class BatchRunner(
       val ck = checkpoints.getCheckpoint("customer", tenant)
       val cutoff = Scheduler.cutoffMs(ck, nowMs, cfg.overlapMs, cfg.daysIfEmpty)
       val res = PagedSource.fetchDescUntil(spark, fetcher, "customer", tenant,
-        "updateTime", cutoff, nowMs, cfg.sliceMs, cfg.minSliceMs,
-        cfg.pageSize, cfg.limitRecords)
+        "updateTime", CallioIngest.customerFeed, cutoff, nowMs, cfg.sliceMs,
+        cfg.minSliceMs, cfg.pageSize, cfg.limitRecords)
       // The result-window flag means a refused slice may have been
       // dropped — an auditable data-loss signal (reference logs a
       // warning at runner.py:95-104), never silently swallowed.
@@ -92,7 +97,7 @@ final class BatchRunner(
     * staging.
     */
   private def mergeCustomerWindow(lo: java.sql.Date, hi: java.sql.Date): Unit = {
-    val staging = Storage.read(spark, p("stg_customer"))
+    val staging = read("stg_customer", CallioIngest.customerTemplate)
     val window = staging.filter(col("NgayUpdate").between(lit(lo), lit(hi)))
     Upsert.applyToPartitionedParquet(spark, p("customer"), window,
       keys = Seq("tenant", "_id"), partitionCol = "NgayUpdate",
@@ -117,8 +122,8 @@ final class BatchRunner(
       val ck = checkpoints.getCheckpoint("call_log", tenant)
       val cutoff = Scheduler.cutoffMs(ck, nowMs, overlapMs = 0L, cfg.daysIfEmpty)
       val res = PagedSource.fetchDescUntil(spark, fetcher, "call", tenant,
-        "createTime", cutoff, nowMs, cfg.sliceMs, cfg.minSliceMs,
-        cfg.pageSize, cfg.limitRecords)
+        "createTime", CallioIngest.callFeed, cutoff, nowMs, cfg.sliceMs,
+        cfg.minSliceMs, cfg.pageSize, cfg.limitRecords)
       if (res.hitResultWindowLimit)
         audit.add(tenant, "call_log", 0, None, "RESULT_WINDOW_LIMIT")
       if (res.docs.isEmpty) audit.add(tenant, "call_log", 0, None, "NOOP")
@@ -206,11 +211,11 @@ final class BatchRunner(
     if (!staff.isEmpty) {
       val rows = Storage.loadAppend(staff, p("stg_staff"))
       audit.add("ALL", "staff", rows, None, "STAGED")
-      val staged = Storage.read(spark, p("stg_staff"))
+      val staged = read("stg_staff", CallioIngest.staffTemplate)
       // A missing staff table merges as an empty one: the first snapshot
       // takes the same latest-wins path as every later one.
       val current =
-        if (Storage.exists(spark, p("staff"))) Storage.read(spark, p("staff"))
+        if (Storage.exists(spark, p("staff"))) read("staff", CallioIngest.staffTemplate)
         else staged.limit(0)
       Storage.loadTruncate(
         Upsert.upsertAuto(current, staged, keys = Seq("tenant", "name")), p("staff"))
@@ -239,9 +244,9 @@ final class BatchRunner(
       windowDays: Int = 7, tenant: String = "PK"): Unit = {
     val lo = to_date(lit(dEnd.minusDays(windowDays.toLong).toString))
     val hi = to_date(lit(dEnd.toString))
-    val group = Storage.read(spark, p("group")).select("group_id", "name")
-    val sources = FactStaffDaily.sources(Storage.read(spark, p("call_log")),
-      Storage.read(spark, p("customer")), group, lo, hi, tenant)
+    val group = read("group", CallioIngest.groupTemplate).select("group_id", "name")
+    val sources = FactStaffDaily.sources(read("call_log", CallioIngest.callLogTemplate),
+      read("customer", CallioIngest.customerTemplate), group, lo, hi, tenant)
     Upsert.rewritePartitions(spark, p("fact_staff_daily"), sources, "Ngay")(
       FactStaffDaily.mergePair(_, _, pruneA = None, tenant))
   }

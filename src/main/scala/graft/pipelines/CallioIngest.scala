@@ -10,11 +10,12 @@ import org.apache.spark.sql.types._
   * re-expressed as pure `DataFrame => DataFrame` stages
   * (SURVEY.md §3 E1/E2; reference runner.py:106-146, 260-352).
   *
-  * Input contract: a batch of raw API docs as a DataFrame whose columns
-  * are whatever the JSON had (object fields arrive as JSON strings).
-  * Missing columns are tolerated everywhere — the reference conjures
-  * absent columns as nulls (`df.get(col, None)`), which here is
-  * [[graft.functions.ColumnLib.conformTo]].
+  * Input contract: a batch of raw API docs as a DataFrame. The paged
+  * feeds parse with [[customerFeed]]/[[callFeed]], so object fields
+  * arrive as JSON strings; a frame that `spark.read.json` inferred may
+  * carry them as structs. Missing columns are tolerated everywhere —
+  * the reference conjures absent columns as nulls (`df.get(col,
+  * None)`), which here is [[graft.functions.ColumnLib.conformTo]].
   *
   * Scale notes: every stage is a narrow projection (no shuffle); the
   * only wide operation is call_log's in-batch dedup, a hash aggregate on
@@ -61,6 +62,38 @@ object CallioIngest {
     StructField("tenant", StringType),
     StructField("row_hash", StringType)))
 
+  /** Staff schema (reference bigquery_service.py:145-164). */
+  val staffTemplate: StructType = StructType(Seq(
+    StructField("_id", StringType), StructField("email", StringType),
+    StructField("name", StringType), StructField("updateTime", LongType),
+    StructField("createTime", LongType), StructField("group_id", StringType),
+    StructField("tenant", StringType), StructField("row_hash", StringType)))
+
+  /** Group schema (reference bigquery_service.py:166-181). */
+  val groupTemplate: StructType = StructType(Seq(
+    StructField("group_id", StringType), StructField("name", StringType),
+    StructField("tenant", StringType), StructField("row_hash", StringType)))
+
+  /** The raw customer-feed fields [[customerTransform]] reads, for the
+    * paged source's parse. Declared STRING: every JSON token (number,
+    * object, Python-repr string) parses to its text, which the
+    * template's casts and the payload extractors accept.
+    * `customField_0_val` is not declared: a declared field is a column
+    * of every batch, and cf0 is derived only when the batch has none.
+    */
+  val customerFeed: StructType = strings("_id", "assignedTime", "createTime",
+    "updateTime", "name", "phone", "user", "customFields")
+
+  /** The raw call-feed fields [[callLogTransform]] reads, declared as
+    * [[customerFeed]] is.
+    */
+  val callFeed: StructType = strings("_id", "chargeTime", "createTime",
+    "direction", "fromNumber", "toNumber", "startTime", "endTime", "duration",
+    "billDuration", "hangupCause", "answerTime", "fromUser", "fromGroup")
+
+  private def strings(names: String*) =
+    StructType(names.map(StructField(_, StringType)))
+
   private def has(df: DataFrame, c: String) = df.columns.contains(c)
 
   /** Payload columns arrive as JSON strings (the REST layer) or as
@@ -99,7 +132,15 @@ object CallioIngest {
     * fromGroup flatten, UTC NgayTao, tenant, row hash.
     */
   def callLogTransform(raw: DataFrame, tenant: String): DataFrame = {
-    val deduped = if (has(raw, "_id")) raw.dropDuplicates("_id") else raw
+    // A null `_id` identifies nothing, so its rows are never collapsed,
+    // as in a batch whose docs carry no `_id` field at all.
+    val deduped =
+      if (has(raw, "_id")) {
+        val k = freeColumn(raw, "_k")
+        raw.withColumn(k, coalesce(col("_id"),
+            concat(lit("\u0000"), monotonically_increasing_id().cast(StringType))))
+          .dropDuplicates(k).drop(k)
+      } else raw
     val flat = deduped
       .withColumn("fromUser__id",
         if (has(raw, "fromUser")) JsonExtract.objField(asJsonString(deduped, "fromUser"), "_id")
@@ -121,16 +162,11 @@ object CallioIngest {
     * (runner.py:374-375) applies at union time via [[staffNameFilter]].
     */
   def staffTransform(raw: DataFrame, tenant: String): DataFrame = {
-    val template = StructType(Seq(
-      StructField("_id", StringType), StructField("email", StringType),
-      StructField("name", StringType), StructField("updateTime", LongType),
-      StructField("createTime", LongType), StructField("group_id", StringType),
-      StructField("tenant", StringType), StructField("row_hash", StringType)))
     val withGroup =
       if (has(raw, "group"))
         raw.withColumn("group_id", JsonExtract.objField(asJsonString(raw, "group"), "_id"))
       else raw
-    val conformed = conformTo(withGroup, template)
+    val conformed = conformTo(withGroup, staffTemplate)
       .withColumn("tenant", lit(tenant))
     conformed.withColumn("row_hash", rowHash(conformed))
   }
@@ -140,17 +176,14 @@ object CallioIngest {
     df.filter(col("name").isNotNull && trim(col("name")) =!= "")
 
   /** Group snapshot flow (reference runner.py:338-352): `group_id` =
-    * `_id` else `id` cast to string, name, tenant, row hash.
+    * `_id` else `id` cast to string, name, tenant, row hash — the
+    * columns of [[groupTemplate]].
     */
   def groupTransform(raw: DataFrame, tenant: String): DataFrame = {
-    val gid =
-      (if (has(raw, "_id")) col("_id").cast(StringType)
-       else if (has(raw, "id")) col("id").cast(StringType)
-       else lit(null).cast(StringType)).as("group_id")
-    val base = raw.select(
-      gid,
-      (if (has(raw, "name")) col("name") else lit(null).cast(StringType)).as("name"),
-      lit(tenant).as("tenant"))
-    base.withColumn("row_hash", rowHash(base))
+    val id = Seq("_id", "id").find(has(raw, _)).map(col).getOrElse(lit(null))
+    val conformed = conformTo(raw.withColumn("group_id", id), groupTemplate)
+      .withColumn("tenant", lit(tenant))
+    conformed.withColumn("row_hash", rowHash(conformed))
   }
+
 }

@@ -1002,8 +1002,6 @@ object SimilarityOps {
 
   private def pqPartsFromVec(vecs: DataFrame, vecCol: String): PqExParts = {
     val m = PqM; val w = PqW
-    val narrowCkpt = vecs.sparkSession.conf
-      .get("spark.graft.pqNarrowCkpt", "true").toBoolean
     val b = (j: Int, i: Int) => element_at(col(vecCol), j * w + i)
     val bkArr = array((0 until m).map { j =>
       concat(
@@ -1011,11 +1009,10 @@ object SimilarityOps {
         when(b(j, 2) > b(j, 4), "1").otherwise("0"))
     }: _*)
     // src feeds BOTH the exploded training stream and the map-side code
-    // assignment below. Default (narrowCkpt): materialize the packed
-    // (vec_id, array) frame ONCE — ~6x fewer bytes than the exploded
-    // 6-column form the old checkpoint carried (the 64 elements stay
-    // one array cell instead of 64 rows of (id, pos, v, sub, lpos,
-    // cluster)), and the residual/rotated callers' join/rotation
+    // assignment below: materialize the packed (vec_id, array) frame
+    // ONCE — ~6x fewer bytes than the exploded 6-column form (the 64
+    // elements stay one array cell instead of 64 rows of (id, pos, v,
+    // sub, lpos, cluster)), and the residual/rotated callers' join/rotation
     // lineage is cut here instead of being re-executed by the code-
     // assignment pass (guide §2.3 materialize fewer bytes, §1.2 don't
     // compute twice). widenMaterialized then re-spreads the buffer when
@@ -1025,25 +1022,20 @@ object SimilarityOps {
     // downstream explode+decimal work is CPU-heavy per byte. The
     // repartition is lazy (it runs inside the consumers' jobs), so
     // only the lineage cut is materialized here. At production scale
-    // the buffer is already wide → no-op.
-    // Old path (gate false, kept for the same-JVM A/B): checkpoint the
-    // exploded frame and derive codes from the raw input.
-    val src =
-      if (narrowCkpt)
-        graft.functions.ColumnLib.widenMaterialized(
-          vecs.select(col("vec_id"), col(vecCol)).localCheckpoint(true))
-      else vecs
-    val exPlan = src.select(col("vec_id"), bkArr.as("__bk"),
+    // the buffer is already wide → no-op. Checkpointing the exploded
+    // frame instead measured slower over the seven PQ gates in an
+    // order-corrected same-JVM A/B (OPTIMIZATION_r16.md C1, CHANGES.md).
+    val src = graft.functions.ColumnLib.widenMaterialized(
+      vecs.select(col("vec_id"), col(vecCol)).localCheckpoint(true))
+    val ex = src.select(col("vec_id"), bkArr.as("__bk"),
         posexplode(col(vecCol)).as(Seq("pos", "__vf")))
       .withColumn("v", col("__vf").cast(DoubleType))
       .withColumn("sub", floor(col("pos") / w).cast(IntegerType))
       .withColumn("lpos", col("pos") - col("sub") * w)
       .withColumn("cluster", element_at(col("__bk"), col("sub") + 1))
       .select("vec_id", "pos", "v", "sub", "lpos", "cluster")
-    // read by codebook, query AND yardstick — narrowCkpt consumers
-    // re-derive the explode from the packed buffer (cheap, wide map
-    // work); the old path materializes the exploded rows themselves.
-    val ex = if (narrowCkpt) exPlan else exPlan.localCheckpoint(true)
+    // read by codebook, query AND yardstick, each re-deriving the
+    // explode from the packed buffer (cheap, wide map work)
     val cb = ex.groupBy("sub", "cluster", "lpos")
       .agg((round(sum(col("v").cast(D)).cast(DoubleType) /
         count(lit(1)).cast(DoubleType), 9)).cast(FloatType).as("c"))

@@ -34,13 +34,8 @@ object ApiConfig {
     /** The production fetcher for `tenant`: HTTP transport + token
       * cache + 401 refresh-once retry ([[HttpDocFetcher.retrying]]).
       */
-    def fetcherFor(tenant: String): PagedSource.DocFetcher = {
-      val acc = findAccount(tenant).getOrElse(throw new RuntimeException(
-        s"no account configured for tenant '$tenant'"))
-      HttpDocFetcher.retrying(
-        HttpDocFetcher.Config(baseUrl, acc.email, acc.password, timeoutSec),
-        tenant)
-    }
+    def fetcherFor(tenant: String): PagedSource.DocFetcher =
+      HttpDocFetcher.retrying(httpConfigFor(tenant), tenant)
 
     /** The per-tenant transport config (credentials + endpoint), for
       * the snapshot client and other single-request faces.

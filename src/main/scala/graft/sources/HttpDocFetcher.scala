@@ -7,7 +7,9 @@ import java.nio.charset.StandardCharsets
 import java.time.Duration
 import java.util.concurrent.ConcurrentHashMap
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import graft.sources.PagedSource.{AuthExpired, DocFetcher, Page, ResultWindowTooLarge}
 
@@ -85,6 +87,13 @@ object HttpDocFetcher {
     new PagedSource.RetryingFetcher(
       new HttpDocFetcher(cfg),
       () => invalidate(cfg.baseUrl, tenant))
+
+  /** The elements of a JSON array, one compact JSON string per doc; a
+    * missing node or a non-array is no docs.
+    */
+  private[sources] def docStrings(mapper: ObjectMapper, docs: JsonNode): Seq[String] =
+    if (docs == null || !docs.isArray) Nil
+    else docs.elements().asScala.map(mapper.writeValueAsString).toSeq
 }
 
 final class HttpDocFetcher(cfg: HttpDocFetcher.Config,
@@ -198,13 +207,7 @@ final class HttpDocFetcher(cfg: HttpDocFetcher.Config,
       case _ => ()
     }
     val payload = mapper.readTree(res.body())
-    val docsNode = payload.path("docs")
-    val docs = if (docsNode.isArray) {
-      val it = docsNode.elements()
-      val buf = Seq.newBuilder[String]
-      while (it.hasNext) buf += mapper.writeValueAsString(it.next())
-      buf.result()
-    } else Seq.empty[String]
-    Page(docs, payload.path("hasNextPage").asBoolean(false))
+    Page(HttpDocFetcher.docStrings(mapper, payload.path("docs")),
+      payload.path("hasNextPage").asBoolean(false))
   }
 }

@@ -5,7 +5,7 @@ import java.net.http.HttpRequest
 import java.time.Duration
 
 import graft.pipelines.BatchRunner
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 
 /** Production HTTP transport for the full-snapshot staff/group
   * endpoints (reference api.py:326-385) — the
@@ -24,9 +24,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    else empty (api.py:349-352, 377-385).
   *
   * The docs land as one JSON string per row and parse with
-  * `spark.read.json`, giving the same nested-struct shape the paged
-  * feeds produce — [[graft.pipelines.CallioIngest.staffTransform]]'s
-  * `asJsonString` handles struct-or-string `group` fields either way.
+  * `spark.read.json`: the snapshots stay schema-adaptive, as the staff
+  * merge (`Upsert.upsertAuto`) is, so `group` may arrive as a struct —
+  * [[graft.pipelines.CallioIngest.staffTransform]]'s `asJsonString`
+  * handles struct-or-string `group` fields either way.
   * Driver-side by design: snapshots are bounded (a tenant's staff
   * list), unlike the sliced incremental feeds.
   */
@@ -59,21 +60,10 @@ final class HttpSnapshotFetcher(cfgFor: String => HttpDocFetcher.Config)
           s"${cfg.baseUrl}/$path")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val payload = mapper.readTree(res.body())
-    val docsNode =
-      if (payload == null) mapper.createArrayNode()
-      else if (payload.path("docs").isArray) payload.path("docs")
-      else if (payload.isArray) payload
-      else mapper.createArrayNode()
-    val docs = {
-      val it = docsNode.elements()
-      val buf = Seq.newBuilder[String]
-      while (it.hasNext) buf += mapper.writeValueAsString(it.next())
-      buf.result()
-    }
+    val docs = HttpDocFetcher.docStrings(mapper,
+      if (payload != null && payload.path("docs").isArray) payload.path("docs")
+      else payload)
     if (docs.isEmpty) spark.emptyDataFrame
-    else {
-      import spark.implicits._
-      spark.read.json(spark.createDataset(docs))
-    }
+    else spark.read.json(spark.createDataset(docs)(Encoders.STRING))
   }
 }

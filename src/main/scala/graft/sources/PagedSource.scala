@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructType}
 
 /** Adaptive paged incremental source (SURVEY.md §2.1 S3-S6; reference
   * api.py:86-324). The reference fetches descending-time pages from a
@@ -29,7 +30,13 @@ import org.apache.spark.sql.functions._
   *    (api.py:231-257) — newest slice wins, preserved by ordering on
   *    (slice, page, position);
   *  - global sort by the time field descending + head-N
-  *    (api.py:311-313), which Spark executes as top-k.
+  *    (api.py:311-313), which Spark executes as top-k; the sort is
+  *    numeric whatever type the feed declares the field.
+  *
+  * The docs parse with the feed schema the caller declares (for the
+  * Callio feeds, `CallioIngest.customerFeed`/`callFeed`): no job infers
+  * a schema from the fetched docs, and a field the declaration does not
+  * name is not read (DEVIATIONS.md §15).
   */
 object PagedSource {
 
@@ -173,10 +180,12 @@ object PagedSource {
   }
 
   /** The full incremental fetch: slice plan → parallel slice tasks →
-    * first-wins `_id` dedup → JSON parse → desc sort + limit.
+    * first-wins `_id` dedup → JSON parse with the `feed` schema → desc
+    * sort + limit.
     */
   def fetchDescUntil(spark: SparkSession, fetcher: DocFetcher, entity: String,
-      tenant: String, timeField: String, cutoffMs: Long, nowMs: Long,
+      tenant: String, timeField: String, feed: StructType,
+      cutoffMs: Long, nowMs: Long,
       sliceMs: Long = 86400000L, minSliceMs: Long = 3600000L,
       pageSize: Int = 500, limitRecords: Option[Int] = None,
       maxPagesPerSlice: Int = 10000): FetchResult = {
@@ -195,7 +204,7 @@ object PagedSource {
           docs.map { case (pg, pos, d) => (FetchedDoc(idx, pg, pos, d), hit) }
       }
     // Materialize ONCE and cut lineage: every fetchPage call is a live
-    // network request, so downstream actions (schema inference, dedup,
+    // network request, so downstream actions (the flag, dedup, the
     // caller's own) must never re-trigger the fetch. localCheckpoint
     // blocks are released by the ContextCleaner when unreferenced —
     // unlike cache(), repeated daemon-style runs don't accumulate.
@@ -213,11 +222,8 @@ object PagedSource {
       keys = Seq("_dedup_key"),
       ordering = Seq(col("sliceIdx").asc, col("page").asc, col("pos").asc))
 
-    val parsed = spark.read.json(first.select("doc").as[String])
-    val sorted =
-      if (parsed.columns.contains(timeField))
-        parsed.orderBy(col(timeField).desc_nulls_last)
-      else parsed
+    val sorted = spark.read.schema(feed).json(first.select("doc").as[String])
+      .orderBy(col(timeField).cast(DoubleType).desc_nulls_last)
     val limited = limitRecords.map(sorted.limit).getOrElse(sorted)
     FetchResult(limited, hitLimit)
   }

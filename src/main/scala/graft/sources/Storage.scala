@@ -1,29 +1,39 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table storage layer (SURVEY.md §2.1 S9-S11): the engine's
   * load/DDL surface over date-partitioned parquet directories.
   *
-  *  - [[loadAppend]] ⇔ WRITE_APPEND with ALLOW_FIELD_ADDITION/
-  *    RELAXATION + autodetect (reference bigquery_service.py:265-300):
-  *    parquet append with `mergeSchema` on read gives the same
-  *    fixed-with-evolution schema model (SURVEY.md §1.1.3).
+  *  - [[read]] ⇔ reading a table whose schema is declared in its DDL
+  *    (reference bigquery_service.py:110-260): every read states the
+  *    schema its writer declared, so no read discovers one. A declared
+  *    column that older files lack reads as null (the reference's
+  *    ALLOW_FIELD_ADDITION); a file that types a declared column
+  *    differently fails loudly (DEVIATIONS.md §15).
+  *  - [[loadAppend]] ⇔ WRITE_APPEND (reference
+  *    bigquery_service.py:265-300): parquet append in the frame's own
+  *    schema, which the engine's transforms fix to their templates.
   *  - [[loadTruncate]] ⇔ WRITE_TRUNCATE (bigquery_service.py:302-309).
-  *  - [[ensureTable]] ⇔ the idempotent DDL bootstrap
-  *    (bigquery_service.py:97-260): DAY partitioning becomes
-  *    `partitionBy(dateCol)`, clustering fields become
-  *    `sortWithinPartitions` on write — at 100 TB this is what makes
-  *    per-day pruning + within-file key locality (min/max row-group
-  *    skipping) work.
+  *  - the idempotent DDL bootstrap (bigquery_service.py:97-260) has
+  *    no step of its own: the first write declares the layout. DAY
+  *    partitioning becomes `partitionBy(dateCol)`, clustering fields
+  *    become `sortWithinPartitions` on write — at 100 TB this is what
+  *    makes per-day pruning + within-file key locality (min/max
+  *    row-group skipping) work.
   */
 object Storage {
 
-  /** Append with schema evolution: new columns are simply written; the
-    * union schema surfaces on [[read]] via mergeSchema. The row count is
-    * observed DURING the write (one pass) — a separate count() would
-    * evaluate the whole upstream transform pipeline twice.
+  /** Append in the frame's own schema. The row count is observed
+    * DURING the write (one pass) — a separate count() would evaluate
+    * the whole upstream transform pipeline twice.
     */
   def loadAppend(df: DataFrame, path: String,
       partitionCol: Option[String] = None,
@@ -52,7 +62,7 @@ object Storage {
   /** Full overwrite (snapshot semantics). The input is materialized
     * first, so a caller may overwrite the table it reads from; the row
     * count is observed on the write of that materialized copy, so the
-    * input (often a mergeSchema staging read plus a filter) is evaluated
+    * input (often a staging read plus a filter) is evaluated
     * once, not once for a count() and again for the checkpoint.
     */
   def loadTruncate(df: DataFrame, path: String): Long =
@@ -71,9 +81,39 @@ object Storage {
     (m("n").asInstanceOf[Long], m - "n")
   }
 
-  /** Evolution-aware read: union schema across files. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
+  /** The parquet table read: `schema` is the one its writer declared,
+    * so the read runs no schema-discovery job. A declared column that a
+    * file lacks reads as null; [[checkFooter]] fails a file that types
+    * one differently. Columns that no declaration names are not read.
+    */
+  def read(spark: SparkSession, path: String, schema: StructType): DataFrame = {
+    val df = spark.read.schema(schema).parquet(path)
+    checkFooter(df, schema)
+    df
+  }
+
+  /** Checks `declared` against the footer of one of `table`'s files,
+    * read directly (not in a Spark job): a column that the footer types
+    * differently fails loudly, naming the file. Returns the declared
+    * columns the footer lacks. Partition columns live in directory
+    * names, not in footers, and are skipped. One footer stands for the
+    * table: every file of a table is written in its writer's declared
+    * schema, and the file count grows with every append, which a check
+    * of every footer would re-read on every read.
+    */
+  private[graft] def checkFooter(table: DataFrame, declared: StructType): Seq[String] =
+    table.inputFiles.headOption.toSeq.flatMap { file =>
+      val spark = table.sparkSession
+      val found = new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(
+        ParquetFileReader.readFooter(HadoopInputFile.fromPath(new Path(file),
+          spark.sessionState.newHadoopConf()), NO_FILTER).getFileMetaData.getSchema)
+      val dirs = file.split('/')
+      val stored = declared.filterNot(c => dirs.exists(_.startsWith(c.name + "=")))
+      for (c <- stored; g <- found.find(_.name == c.name) if g.dataType != c.dataType)
+        throw new IllegalStateException(s"$file types ${c.name} as " +
+          s"${g.dataType.simpleString}, but ${c.name} is declared ${c.dataType.simpleString}")
+      stored.map(_.name).filterNot(found.fieldNames.contains)
+    }
 
   /** Small-file compaction: rewrite a (partitioned) parquet table so
     * each partition holds few large files instead of the many small
@@ -82,7 +122,7 @@ object Storage {
     * so periodic compaction is part of the table lifecycle. One shuffle
     * on the partition key; data is byte-identical afterwards.
     */
-  def compact(spark: SparkSession, path: String,
+  def compact(spark: SparkSession, path: String, schema: StructType,
       partitionCols: Seq[String] = Nil,
       maxRecordsPerFile: Long = 5000000L): Unit =
     // Write-to-temp + swap: the rewrite streams from the ORIGINAL files
@@ -91,7 +131,7 @@ object Storage {
     // the source before the rewrite is durable. Single-writer
     // assumption as everywhere else in this warehouse.
     rewriteInPlace(spark, path) { tmp =>
-      val df = read(spark, path)
+      val df = read(spark, path, schema)
       val w =
         if (partitionCols.nonEmpty)
           df.repartition(partitionCols.map(col): _*)
@@ -290,8 +330,8 @@ object Storage {
     partitionCol.fold(w)(c => w.partitionBy(c)).save(path)
   }
 
-  /** Read back an [[exportAs]] table. Same mergeSchema posture as
-    * [[read]]: the union schema of all files surfaces.
+  /** Read back an [[exportAs]] table: the union schema of all files
+    * surfaces (`mergeSchema`).
     */
   def readAs(spark: SparkSession, path: String, format: String): DataFrame = {
     require(columnarFormats(format),

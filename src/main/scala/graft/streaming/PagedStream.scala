@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.sources.{PagedSource, Storage}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Streaming face of the paged incremental source (SURVEY.md §2.1 S3's
   * "custom MicroBatchStream" option, resolved per the survey's own
@@ -35,6 +36,8 @@ object PagedStream {
 
   /** One slot tick: fetch → spool → drain-available-now → merge.
     *
+    * @param feed         the raw docs' declared schema, for the parse
+    *                     (e.g. [[graft.pipelines.CallioIngest.customerFeed]])
     * @param transform    raw-doc DataFrame → table rows (e.g.
     *                     [[graft.pipelines.CallioIngest.customerTransform]]);
     *                     must yield a stable schema across ticks
@@ -45,13 +48,13 @@ object PagedStream {
   def tick(spark: SparkSession, fetcher: PagedSource.DocFetcher,
       entity: String, tenant: String, timeField: String,
       cutoffMs: Long, nowMs: Long,
-      transform: DataFrame => DataFrame,
+      feed: StructType, transform: DataFrame => DataFrame,
       spoolDir: String, targetPath: String, keys: Seq[String],
       partitionCol: String, checkpointDir: String,
       sliceMs: Long = 86400000L, minSliceMs: Long = 3600000L,
       pageSize: Int = 500, limitRecords: Option[Int] = None): TickResult = {
     val res = PagedSource.fetchDescUntil(spark, fetcher, entity, tenant,
-      timeField, cutoffMs, nowMs, sliceMs, minSliceMs, pageSize, limitRecords)
+      timeField, feed, cutoffMs, nowMs, sliceMs, minSliceMs, pageSize, limitRecords)
     val staged =
       if (res.docs.isEmpty) 0L
       else Storage.loadAppend(transform(res.docs), spoolDir)

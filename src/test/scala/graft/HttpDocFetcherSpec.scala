@@ -10,6 +10,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import graft.sources.{HttpDocFetcher, PagedSource}
 import graft.sources.PagedSource.{AuthExpired, ResultWindowTooLarge}
+import org.apache.spark.sql.types.StructType
 
 /** Local stub of the reference REST backend (api.py protocol): login
   * issues sequential tokens, pages serve a fixed one-doc-per-minute
@@ -134,6 +135,7 @@ class CallioStub(t0: Long, nDocs: Int,
 class HttpDocFetcherSpec extends SparkSpec {
 
   private val T0 = 1700000000000L
+  private val feed = StructType.fromDDL("_id STRING, updateTime BIGINT, v BIGINT")
 
   private def withStub[A](stub: CallioStub)(f: CallioStub => A): A =
     try f(stub)
@@ -147,7 +149,7 @@ class HttpDocFetcherSpec extends SparkSpec {
       HttpDocFetcher.clearTokenCache()
       val fetcher = HttpDocFetcher.retrying(cfgFor(stub), "t1")
       val res = PagedSource.fetchDescUntil(spark, fetcher, "customer", "t1",
-        "updateTime", cutoffMs = T0 - 1, nowMs = T0 + 120 * 60000L,
+        "updateTime", feed, cutoffMs = T0 - 1, nowMs = T0 + 120 * 60000L,
         sliceMs = 3600000L, pageSize = 7)
       val rows = res.docs.collect()
       assert(rows.length == 120)
@@ -204,7 +206,7 @@ class HttpDocFetcherSpec extends SparkSpec {
       }
       val fetcher = HttpDocFetcher.retrying(cfgFor(stub), "t1")
       val res = PagedSource.fetchDescUntil(spark, fetcher, "customer", "t1",
-        "updateTime", cutoffMs = T0 - 1, nowMs = T0 + 120 * 60000L,
+        "updateTime", feed, cutoffMs = T0 - 1, nowMs = T0 + 120 * 60000L,
         sliceMs = 3600000L, minSliceMs = 600000L, pageSize = 50)
       assert(res.docs.count() == 120, "split recovery must still fetch everything")
       assert(res.hitResultWindowLimit, "the limit flag must surface")
@@ -232,7 +234,7 @@ class HttpDocFetcherSpec extends SparkSpec {
       val r = graft.streaming.PagedStream.tick(spark,
         cfg.fetcherFor("t1"),
         entity = "customer", tenant = "t1", timeField = "updateTime",
-        cutoffMs = T0 - 1, nowMs = T0 + 60 * 60000L,
+        cutoffMs = T0 - 1, nowMs = T0 + 60 * 60000L, feed = feed,
         transform = transform,
         spoolDir = dir.resolve("spool").toString,
         targetPath = dir.resolve("customer").toString,

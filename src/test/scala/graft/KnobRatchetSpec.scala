@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class KnobRatchetSpec extends AnyFunSuite {
 
-  private val MaxKnobReads = 1
+  private val MaxKnobReads = 0
 
   test("src/main reads no more spark.graft.* knobs than the ratchet allows") {
     val root = Paths.get("src/main")

@@ -2,6 +2,7 @@ package graft
 
 import graft.sources.PagedSource
 import graft.sources.PagedSource.{DocFetcher, Page, ResultWindowTooLarge}
+import org.apache.spark.sql.types.StructType
 
 /** Fixture fetcher over a fixed doc universe: one doc per minute in
   * [t0, t0+n). Serves descending pages within [from, to). Optionally
@@ -48,6 +49,7 @@ class PoisonFetcher(t0: Long) extends DocFetcher {
 class PagedSourceSpec extends SparkSpec {
 
   private val T0 = 1700000000000L // arbitrary epoch anchor
+  private val feed = StructType.fromDDL("_id STRING, updateTime BIGINT, v BIGINT")
 
   test("slice planner splits [cutoff, now) newest-first") {
     val slices = PagedSource.planSlices(0L, 10L, 4L)
@@ -58,7 +60,7 @@ class PagedSourceSpec extends SparkSpec {
   test("fetch returns all docs in the window, sorted desc, paged") {
     val f = new FixtureFetcher(T0, 120) // 2 hours of docs
     val res = PagedSource.fetchDescUntil(spark, f, "customer", "t1",
-      "updateTime", cutoffMs = T0 - 1, nowMs = T0 + 120 * 60000L,
+      "updateTime", feed, cutoffMs = T0 - 1, nowMs = T0 + 120 * 60000L,
       sliceMs = 3600000L, pageSize = 7)
     val rows = res.docs.collect()
     assert(rows.length == 120)
@@ -70,7 +72,7 @@ class PagedSourceSpec extends SparkSpec {
   test("cutoff bounds the fetch; limit takes newest N") {
     val f = new FixtureFetcher(T0, 120)
     val res = PagedSource.fetchDescUntil(spark, f, "customer", "t1",
-      "updateTime", cutoffMs = T0 + 60 * 60000L - 1, nowMs = T0 + 120 * 60000L,
+      "updateTime", feed, cutoffMs = T0 + 60 * 60000L - 1, nowMs = T0 + 120 * 60000L,
       sliceMs = 3600000L, pageSize = 10, limitRecords = Some(10))
     val times = res.docs.collect().map(_.getAs[Long]("updateTime"))
     assert(times.length == 10)
@@ -82,7 +84,7 @@ class PagedSourceSpec extends SparkSpec {
     // be split once before it serves.
     val f = new FixtureFetcher(T0, 60, windowLimitMs = 1800000L)
     val res = PagedSource.fetchDescUntil(spark, f, "customer", "t1",
-      "updateTime", cutoffMs = T0 - 1, nowMs = T0 + 60 * 60000L,
+      "updateTime", feed, cutoffMs = T0 - 1, nowMs = T0 + 60 * 60000L,
       sliceMs = 3600000L, minSliceMs = 600000L, pageSize = 50)
     assert(res.docs.count() == 60)
     assert(res.hitResultWindowLimit)
@@ -92,7 +94,7 @@ class PagedSourceSpec extends SparkSpec {
     // Refuse everything (limit 0): slices split down to minSliceMs then drop.
     val f = new FixtureFetcher(T0, 10, windowLimitMs = 0L)
     val res = PagedSource.fetchDescUntil(spark, f, "customer", "t1",
-      "updateTime", cutoffMs = T0 - 1, nowMs = T0 + 10 * 60000L,
+      "updateTime", feed, cutoffMs = T0 - 1, nowMs = T0 + 10 * 60000L,
       sliceMs = 600000L, minSliceMs = 300000L, pageSize = 10)
     assert(res.docs.isEmpty)
     assert(res.hitResultWindowLimit)
@@ -100,7 +102,7 @@ class PagedSourceSpec extends SparkSpec {
 
   test("persistent refusal after partial progress terminates, keeps fetched docs") {
     val res = PagedSource.fetchDescUntil(spark, new PoisonFetcher(T0),
-      "customer", "t1", "updateTime",
+      "customer", "t1", "updateTime", feed,
       cutoffMs = T0 - 1, nowMs = T0 + 600000L,
       sliceMs = 600000L, minSliceMs = 150000L, pageSize = 2)
     assert(res.hitResultWindowLimit)
@@ -110,7 +112,7 @@ class PagedSourceSpec extends SparkSpec {
   test("duplicate _ids collapse first-occurrence-wins (newest slice)") {
     val f = new FixtureFetcher(T0, 100, duplicateEvery = 10) // ids 0,10,…,90 share "dup"
     val res = PagedSource.fetchDescUntil(spark, f, "customer", "t1",
-      "updateTime", cutoffMs = T0 - 1, nowMs = T0 + 100 * 60000L,
+      "updateTime", feed, cutoffMs = T0 - 1, nowMs = T0 + 100 * 60000L,
       sliceMs = 1200000L, pageSize = 9)
     val rows = res.docs.collect()
     assert(rows.length == 91) // 90 unique + 1 winning "dup"

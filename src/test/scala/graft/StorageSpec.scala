@@ -3,10 +3,13 @@ package graft
 import graft.sources.Storage
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 class StorageSpec extends SparkSpec {
 
-  test("loadAppend allows field addition; readers see the union schema") {
+  private val kd = StructType.fromDDL("k BIGINT, d STRING")
+
+  test("loadAppend allows field addition; older rows read it as null") {
     val dir = tempDir("evolve") + "/t"
     Storage.loadAppend(df("a BIGINT, b STRING",
       Row(Long.box(1), "x")), dir)
@@ -14,19 +17,40 @@ class StorageSpec extends SparkSpec {
     // reference bigquery_service.py:276-284).
     Storage.loadAppend(df("a BIGINT, b STRING, c DOUBLE",
       Row(Long.box(2), "y", Double.box(2.5))), dir)
-    val out = Storage.read(spark, dir)
-    assert(out.columns.toSet == Set("a", "b", "c"))
+    val out = Storage.read(spark, dir, StructType.fromDDL("a BIGINT, b STRING, c DOUBLE"))
+    assert(out.columns.toSeq == Seq("a", "b", "c"))
     val byA = out.collect().map(r => r.getLong(0) ->
       (if (r.isNullAt(2)) null else r.getDouble(2))).toMap
     assert(byA == Map(1L -> null, 2L -> 2.5), "old rows surface the new column as null")
+    // A reader that does not declare c does not see it.
+    assert(Storage.read(spark, dir, StructType.fromDDL("a BIGINT, b STRING"))
+      .columns.toSeq == Seq("a", "b"))
+  }
+
+  test("a declared read fails, naming the file, on a retyped column") {
+    val dir = tempDir("retyped") + "/t"
+    Storage.loadAppend(df("k BIGINT, v STRING, d STRING",
+      Row(Long.box(1), "x", "2024-01-01")), dir, partitionCol = Some("d"))
+    // The partition column lives in directory names, not in the footer:
+    // declaring it is no mismatch.
+    val ok = Storage.read(spark, dir, StructType.fromDDL("k BIGINT, v STRING, d DATE"))
+    assert(ok.collect().map(_.getDate(2).toString).toSeq == Seq("2024-01-01"))
+    val e = intercept[IllegalStateException] {
+      Storage.read(spark, dir, StructType.fromDDL("k INT, v STRING, d DATE"))
+    }
+    val file = new java.io.File(dir + "/d=2024-01-01").listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    assert(e.getMessage.contains(file.getPath) && e.getMessage.contains("types k as bigint"),
+      e.getMessage)
   }
 
   test("loadTruncate replaces contents even when reading its own input") {
     val dir = tempDir("trunc") + "/t"
     Storage.loadAppend(df("a BIGINT", Row(Long.box(1)), Row(Long.box(2))), dir)
-    val filtered = Storage.read(spark, dir).filter(col("a") === 2)
+    val a = StructType.fromDDL("a BIGINT")
+    val filtered = Storage.read(spark, dir, a).filter(col("a") === 2)
     Storage.loadTruncate(filtered, dir)
-    assert(Storage.read(spark, dir).collect().map(_.getLong(0)).toSeq == Seq(2L))
+    assert(Storage.read(spark, dir, a).collect().map(_.getLong(0)).toSeq == Seq(2L))
   }
 
   test("bucketed tables join without any exchange") {
@@ -57,10 +81,10 @@ class StorageSpec extends SparkSpec {
       .count(_.getName.endsWith(".parquet"))
     val before = files(s"$dir/d=2024-01-01")
     assert(before >= 5, s"expected many small files, got $before")
-    val data = rowSet(Storage.read(spark, dir))
-    Storage.compact(spark, dir, Seq("d"))
+    val data = rowSet(Storage.read(spark, dir, kd))
+    Storage.compact(spark, dir, kd, Seq("d"))
     assert(files(s"$dir/d=2024-01-01") < before)
-    assert(rowSet(Storage.read(spark, dir)) == data, "compaction must not change data")
+    assert(rowSet(Storage.read(spark, dir, kd)) == data, "compaction must not change data")
   }
 
   test("compact recovers a crash between the two swap renames") {
@@ -68,7 +92,7 @@ class StorageSpec extends SparkSpec {
     Storage.loadAppend(
       df("k BIGINT, d STRING", Row(Long.box(1), "2024-01-01"),
         Row(Long.box(2), "2024-01-02")), dir, partitionCol = Some("d"))
-    val data = rowSet(Storage.read(spark, dir))
+    val data = rowSet(Storage.read(spark, dir, kd))
     // Simulate the crash position: live table parked at .compact-old,
     // a half-written tmp left behind, no live table at `dir`.
     val f = new java.io.File(dir)
@@ -76,8 +100,8 @@ class StorageSpec extends SparkSpec {
     new java.io.File(dir + ".compact-tmp").mkdirs()
     // Next compact must restore the parked table, discard the stale
     // tmp, and complete normally.
-    Storage.compact(spark, dir, Seq("d"))
-    assert(rowSet(Storage.read(spark, dir)) == data)
+    Storage.compact(spark, dir, kd, Seq("d"))
+    assert(rowSet(Storage.read(spark, dir, kd)) == data)
     assert(!new java.io.File(dir + ".compact-old").exists())
     assert(!new java.io.File(dir + ".compact-tmp").exists())
   }

@@ -246,7 +246,7 @@ class StreamingSpec extends SparkSpec {
       PagedStream.tick(spark,
         new FixtureSources.Paged(T0, 120, version = version),
         entity = "customer", tenant = "PK", timeField = "updateTime",
-        cutoffMs = cutoff, nowMs = fetchEnd,
+        cutoffMs = cutoff, nowMs = fetchEnd, feed = CallioIngest.customerFeed,
         transform = CallioIngest.customerTransform(_, "PK"),
         spoolDir = dir.resolve("spool").toString,
         targetPath = dir.resolve("customer").toString,
