@@ -505,15 +505,17 @@ object Upsert {
 
   /** One physical rewrite of a date-partitioned parquet table by an
     * in-memory `merge` of one or more sources: writer lock → recovery →
-    * each source materialized once → the target read pruned to the union
-    * of the sources' partition ranges → `merge(target, sources)` → one
-    * temp write → one per-partition displace/install swap. The swap
-    * creates the table root first, so each install is a rename into an
-    * existing directory, as HDFS requires.
+    * each source materialized once, its partition range observed on that
+    * same job → the target read pruned to the union of the ranges →
+    * `merge(target, sources)` → one temp write → one per-partition
+    * displace/install swap. The swap creates the table root first, so
+    * each install is a rename into an existing directory, as HDFS
+    * requires.
     *
     * Target rows outside the ranges are neither matched nor rewritten
-    * (the reference's MERGE-ON range predicate). When `partitionCol` is
-    * a merge key, as in the fact refresh, a target partition outside one
+    * (the reference's MERGE-ON range predicate, runner.py:174-176), and
+    * no job runs only to find a range. When `partitionCol` is a merge
+    * key, as in the fact refresh, a target partition outside one
     * source's range can match none of that source's rows, so merging
     * the sources in sequence over the union of their ranges equals
     * running the merges one by one, each over its own range — and
@@ -560,26 +562,26 @@ object Upsert {
     }
     // The target is read in the first source's schema, the one every
     // write of it declares. A missing table reads as an empty frame and
-    // each source is read once, by the merge. An existing table is read
-    // pruned to the union of the sources' partition ranges, so each
-    // source is read twice, for its range and by the merge. Materialized
-    // once, its lineage (for the fact refresh: the FactStaffDaily joins
-    // and aggregations) runs once, and the range and the merge see the
-    // same rows. The ranges are one global aggregate per source,
-    // collected in one action (a grouped aggregate over the tagged union
-    // cost the slot merge more CPU, mostly JIT). When no source has a
-    // partition value there is nothing to merge.
+    // each source is read once, by the merge. For an existing table each
+    // source is materialized once, so its lineage (for the fact refresh:
+    // the FactStaffDaily joins and aggregations) runs once, and its
+    // partition range is an Observation on that same job: the target is
+    // read pruned to the union of the ranges, and the range and the
+    // merge see the same rows. When no source has a partition value
+    // there is nothing to merge.
     val exists = graft.sources.Storage.exists(spark, path)
+    val ranges = sources.map(_ => org.apache.spark.sql.Observation())
     val srcs =
-      if (exists) sources.map(_.localCheckpoint(eager = true)) else sources
+      if (!exists) sources
+      else sources.zip(ranges).map { case (s, range) =>
+        s.observe(range, min(col(partitionCol)).as("lo"),
+          max(col(partitionCol)).as("hi")).localCheckpoint(eager = true)
+      }
     val target =
       if (!exists) Some(spark.createDataFrame(
         java.util.List.of[org.apache.spark.sql.Row](), srcs.head.schema))
-      else srcs
-        .map(_.agg(min(col(partitionCol)), max(col(partitionCol))))
-        .reduce(_ union _).collect()
-        .filterNot(_.isNullAt(0))
-        .map(r => col(partitionCol).between(lit(r.get(0)), lit(r.get(1))))
+      else ranges.map(_.get).filter(_("lo") != null)
+        .map(r => col(partitionCol).between(lit(r("lo")), lit(r("hi"))))
         .reduceOption(_ || _)
         .map(graft.sources.Storage.read(spark, path, srcs.head.schema).filter(_))
     target.foreach { t =>

@@ -59,7 +59,8 @@ final class BatchRunner(
       // warning at runner.py:95-104), never silently swallowed.
       if (res.hitResultWindowLimit)
         audit.add(tenant, "customer", 0, None, "RESULT_WINDOW_LIMIT")
-      if (res.docs.isEmpty) {
+      // The fetch job counted the docs: the NOOP decision runs no job.
+      if (res.fetched == 0) {
         audit.add(tenant, "customer", 0, None, "NOOP"); None
       } else {
         val out = CallioIngest.customerTransform(res.docs, tenant)
@@ -126,7 +127,7 @@ final class BatchRunner(
         cfg.minSliceMs, cfg.pageSize, cfg.limitRecords)
       if (res.hitResultWindowLimit)
         audit.add(tenant, "call_log", 0, None, "RESULT_WINDOW_LIMIT")
-      if (res.docs.isEmpty) audit.add(tenant, "call_log", 0, None, "NOOP")
+      if (res.fetched == 0) audit.add(tenant, "call_log", 0, None, "NOOP")
       else {
         val out = CallioIngest.callLogTransform(res.docs, tenant)
         val (rows, stats) = Storage.loadAppendObserving(out, p("call_log"),

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructType}
 
@@ -33,10 +33,15 @@ import org.apache.spark.sql.types.{DoubleType, StructType}
   *    (api.py:311-313), which Spark executes as top-k; the sort is
   *    numeric whatever type the feed declares the field.
   *
-  * The docs parse with the feed schema the caller declares (for the
-  * Callio feeds, `CallioIngest.customerFeed`/`callFeed`): no job infers
-  * a schema from the fetched docs, and a field the declaration does not
-  * name is not read (DEVIATIONS.md §15).
+  * A fetch is one Spark job, the slice tasks' own: each task also adds
+  * its `hit_result_window_limit` flag and its doc count to accumulators,
+  * as the reference's loop returns its docs and its flag together
+  * (api.py:230-313). The dedup, the parse and the sort run inside the
+  * caller's action. The docs parse with `from_json` and the feed schema
+  * the caller declares (for the Callio feeds,
+  * `CallioIngest.customerFeed`/`callFeed`): no job infers a schema from
+  * the fetched docs, and a field the declaration does not name is not
+  * read (DEVIATIONS.md §15).
   */
 object PagedSource {
 
@@ -93,7 +98,12 @@ object PagedSource {
 
   final case class FetchedDoc(sliceIdx: Int, page: Int, pos: Int, doc: String)
 
-  final case class FetchResult(docs: DataFrame, hitResultWindowLimit: Boolean)
+  /** `fetched` counts the docs the slice tasks kept, before the `_id`
+    * dedup, so it is 0 exactly when `docs` is empty. A retried task adds
+    * its docs again: read it as `> 0`, not as a row count.
+    */
+  final case class FetchResult(docs: DataFrame, fetched: Long,
+      hitResultWindowLimit: Boolean)
 
   /** Plan [cutoff, now) into newest-first slices (api.py:219-230). */
   def planSlices(cutoffMs: Long, nowMs: Long, sliceMs: Long): Seq[(Long, Long)] = {
@@ -113,6 +123,10 @@ object PagedSource {
       maxPagesPerSlice: Int): (Seq[(Int, Int, String)], Boolean) = {
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String)]
     var hitLimit = false
+    // A doc's time for the cutoff check is its `"<timeField>": <millis>`;
+    // a doc without one reads as 0, at or below any cutoff.
+    val tsPattern = java.util.regex.Pattern.compile(
+      "\"" + java.util.regex.Pattern.quote(timeField) + "\"\\s*:\\s*(\\d+)")
     // Work stack of pending sub-slices (newest-first), mutated by the
     // result-window recovery strategy.
     val stack = scala.collection.mutable.Stack[(Long, Long)](slice)
@@ -127,14 +141,15 @@ object PagedSource {
           val res = fetcher.fetchPage(entity, tenant, timeField, from, to, page, pageSize)
           // Docs at-or-below the cutoff are excluded, not just a stop
           // signal (api.py:190-196 skips them before breaking).
+          var reachedCutoff = false
           res.docs.zipWithIndex.foreach { case (d, i) =>
-            val ts = extractTs(d, timeField)
+            val m = tsPattern.matcher(d)
+            val ts = if (m.find()) m.group(1).toLong else 0L
             if (ts > cutoffMs) {
               out += ((pageCounter, i, d))
               if (ts < oldestSeen) oldestSeen = ts
-            }
+            } else reachedCutoff = true
           }
-          val reachedCutoff = res.docs.exists(d => extractTs(d, timeField) <= cutoffMs)
           done = !res.hasNextPage || reachedCutoff || res.docs.isEmpty
           page += 1
           pageCounter += 1
@@ -169,16 +184,6 @@ object PagedSource {
     (out.toSeq, hitLimit)
   }
 
-  /** Best-effort time extraction from a raw doc for the cutoff check —
-    * matches `"<timeField>": <millis>`.
-    */
-  private def extractTs(doc: String, timeField: String): Long = {
-    val m = java.util.regex.Pattern
-      .compile("\"" + java.util.regex.Pattern.quote(timeField) + "\"\\s*:\\s*(\\d+)")
-      .matcher(doc)
-    if (m.find()) m.group(1).toLong else 0L
-  }
-
   /** The full incremental fetch: slice plan → parallel slice tasks →
     * first-wins `_id` dedup → JSON parse with the `feed` schema → desc
     * sort + limit.
@@ -191,29 +196,31 @@ object PagedSource {
       maxPagesPerSlice: Int = 10000): FetchResult = {
     import spark.implicits._
     val slices = planSlices(cutoffMs, nowMs, sliceMs).zipWithIndex
-    // Each slice task emits its docs plus one marker row (page = -1)
-    // carrying the result-window flag, so a fully-dropped slice still
-    // reports that it hit the limit.
-    val fetched: Dataset[(FetchedDoc, Boolean)] = spark
-      .createDataset(slices)
-      .repartition(math.max(1, slices.size))
+    val sc = spark.sparkContext
+    // The slice tasks report the result-window flag and their doc count
+    // on the fetch job itself, so a slice dropped whole still reports
+    // the flag and no second job inspects the docs. A retried task adds
+    // twice; both are read only as > 0.
+    val refused = sc.longAccumulator
+    val kept = sc.longAccumulator
+    val fetched = sc.parallelize(slices, math.max(1, slices.size))
       .flatMap { case ((from, to), idx) =>
         val (docs, hit) = fetchSlice(fetcher, entity, tenant, timeField,
           cutoffMs, (from, to), minSliceMs, pageSize, maxPagesPerSlice)
-        (FetchedDoc(idx, -1, -1, null), hit) +:
-          docs.map { case (pg, pos, d) => (FetchedDoc(idx, pg, pos, d), hit) }
+        if (hit) refused.add(1)
+        kept.add(docs.size)
+        docs.map { case (pg, pos, d) => FetchedDoc(idx, pg, pos, d) }
       }
     // Materialize ONCE and cut lineage: every fetchPage call is a live
-    // network request, so downstream actions (the flag, dedup, the
-    // caller's own) must never re-trigger the fetch. localCheckpoint
-    // blocks are released by the ContextCleaner when unreferenced —
-    // unlike cache(), repeated daemon-style runs don't accumulate.
-    val materialized = fetched.localCheckpoint(true)
-    val hitLimit = materialized.filter(_._2).limit(1).count() > 0
+    // network request, so downstream actions (dedup, the caller's own)
+    // must never re-trigger the fetch. localCheckpoint blocks are
+    // released by the ContextCleaner when unreferenced — unlike
+    // cache(), repeated daemon-style runs don't accumulate.
+    val materialized = spark.createDataset(fetched).localCheckpoint(true)
 
     // First-occurrence-wins dedup (api.py:238-257): newest slice first,
     // then page order. Fallback dedup key mirrors `f"{ts}:{len}"`.
-    val tagged = materialized.filter(_._1.page >= 0).map(_._1).toDF()
+    val tagged = materialized.toDF()
       .withColumn("_dedup_key", coalesce(
         get_json_object(col("doc"), "$._id"),
         concat_ws(":", get_json_object(col("doc"), s"$$.$timeField"),
@@ -222,9 +229,9 @@ object PagedSource {
       keys = Seq("_dedup_key"),
       ordering = Seq(col("sliceIdx").asc, col("page").asc, col("pos").asc))
 
-    val sorted = spark.read.schema(feed).json(first.select("doc").as[String])
+    val sorted = first.select(from_json(col("doc"), feed).as("d")).select("d.*")
       .orderBy(col(timeField).cast(DoubleType).desc_nulls_last)
     val limited = limitRecords.map(sorted.limit).getOrElse(sorted)
-    FetchResult(limited, hitLimit)
+    FetchResult(limited, kept.sum, refused.sum > 0)
   }
 }

@@ -55,15 +55,15 @@ object PagedStream {
       pageSize: Int = 500, limitRecords: Option[Int] = None): TickResult = {
     val res = PagedSource.fetchDescUntil(spark, fetcher, entity, tenant,
       timeField, feed, cutoffMs, nowMs, sliceMs, minSliceMs, pageSize, limitRecords)
-    val staged =
-      if (res.docs.isEmpty) 0L
-      else Storage.loadAppend(transform(res.docs), spoolDir)
+    val rows = transform(res.docs)
+    val staged = if (res.fetched == 0) 0L else Storage.loadAppend(rows, spoolDir)
     if (Storage.exists(spark, spoolDir)) {
-      // Schema from the spool itself (not this tick's frame): the
-      // stream may also be draining files a crashed prior tick left
-      // behind, and an empty fetch still drains the backlog.
+      // The spool schema is the transform's analyzed one (the feed is
+      // declared, so no job runs): it is the same every tick, so it also
+      // reads files a crashed prior tick left behind, and an empty fetch
+      // still drains the backlog.
       val stream = spark.readStream
-        .schema(spark.read.parquet(spoolDir).schema)
+        .schema(rows.schema)
         // Native spool hygiene: files are deleted once their micro-batch
         // commits (async cleaner), so the spool holds only unprocessed
         // backlog instead of growing forever. Crash-safe: an uncommitted

@@ -135,6 +135,29 @@ class BatchRunnerSpec extends SparkSpec {
     assert(noops.count() >= 1, "empty call fetch must audit NOOP")
   }
 
+  test("a slot and a refresh run a pinned number of Spark jobs") {
+    // Every job does work: the fetch is one job that also carries the
+    // result-window flag and the doc count, and the merge range rides
+    // the source's materialization.
+    val wh = tempDir("runner_jobs")
+    val r1 = runner(wh, T0, 60, 1)
+    r1.bootstrap()
+    val now1 = T0 + 60 * 60000L
+    val (_, customerCold) = jobsOf(r1.runCustomer(now1))
+    val (_, call) = jobsOf(r1.runCall(now1))
+    r1.runStaffGroup()
+    val r2 = runner(wh, T0, 120, 2)
+    r2.bootstrap()
+    val now2 = T0 + 120 * 60000L
+    val (_, customer) = jobsOf(r2.runCustomer(now2))
+    val (_, callAgain) = jobsOf(r2.runCall(now2))
+    val dEnd = java.time.LocalDate.parse("2024-01-12")
+    val (_, refreshFirst) = jobsOf(r2.refreshReporting(dEnd))
+    val (_, refresh) = jobsOf(r2.refreshReporting(dEnd))
+    assert(Seq(customerCold, customer, call, callAgain, refreshFirst, refresh) ==
+      Seq(10, 12, 7, 7, 12, 18))
+  }
+
   test("runLoop: daemon catch-up drives the incremental batch end to end") {
     val wh = tempDir("runner_loop")
     val cfg = BatchRunner.Config(wh, tenants = Seq("PK"),

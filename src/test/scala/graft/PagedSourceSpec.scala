@@ -46,6 +46,26 @@ class PoisonFetcher(t0: Long) extends DocFetcher {
   }
 }
 
+/** Records every page request of `inner` under `key`. The log lives in
+  * the companion object: the slice tasks run on deserialized copies of
+  * the fetcher, in this JVM.
+  */
+class CountingFetcher(key: String, inner: DocFetcher) extends DocFetcher {
+  override def fetchPage(entity: String, tenant: String, timeField: String,
+      fromMs: Long, toMs: Long, page: Int, pageSize: Int): Page = {
+    CountingFetcher.requests.add(s"$key $fromMs $toMs $page")
+    inner.fetchPage(entity, tenant, timeField, fromMs, toMs, page, pageSize)
+  }
+}
+
+object CountingFetcher {
+  val requests = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  def of(key: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    requests.asScala.filter(_.startsWith(key + " ")).toSeq
+  }
+}
+
 class PagedSourceSpec extends SparkSpec {
 
   private val T0 = 1700000000000L // arbitrary epoch anchor
@@ -120,6 +140,36 @@ class PagedSourceSpec extends SparkSpec {
     assert(dup.length == 1)
     assert(dup.head.getAs[Long]("v") == 90L,
       "newest duplicate (first occurrence in desc order) must win")
+  }
+
+  test("a fetch is one Spark job, and reports its flag and doc count on it") {
+    val (res, jobs) = jobsOf(PagedSource.fetchDescUntil(spark,
+      new FixtureFetcher(T0, 60, windowLimitMs = 1800000L), "customer", "t1",
+      "updateTime", feed, cutoffMs = T0 - 1, nowMs = T0 + 60 * 60000L,
+      sliceMs = 3600000L, minSliceMs = 600000L, pageSize = 50))
+    assert(jobs == 1)
+    assert(res.hitResultWindowLimit && res.fetched == 60)
+    // The only slice is refused and cannot split: it is dropped, and the
+    // one job still reports the flag.
+    val (dropped, dropJobs) = jobsOf(PagedSource.fetchDescUntil(spark,
+      new FixtureFetcher(T0, 10, windowLimitMs = 0L), "customer", "t1",
+      "updateTime", feed, cutoffMs = T0 - 1, nowMs = T0 + 10 * 60000L,
+      sliceMs = 600000L, minSliceMs = 600000L, pageSize = 10))
+    assert(dropJobs == 1)
+    assert(dropped.hitResultWindowLimit && dropped.fetched == 0)
+    assert(dropped.docs.collect().isEmpty)
+  }
+
+  test("each page is requested once per fetch, whatever the actions on its docs") {
+    val f = new CountingFetcher("once", new FixtureFetcher(T0, 120))
+    val res = PagedSource.fetchDescUntil(spark, f, "customer", "t1",
+      "updateTime", feed, cutoffMs = T0 - 1, nowMs = T0 + 120 * 60000L,
+      sliceMs = 3600000L, pageSize = 7)
+    assert(res.docs.count() == 120 && res.docs.collect().length == 120)
+    val requests = CountingFetcher.of("once")
+    // Two one-hour slices of 60 docs, 9 pages of 7 each, and the empty
+    // slice [cutoff, T0), one page.
+    assert(requests.size == 19 && requests.distinct.size == 19)
   }
 
   test("RetryingFetcher: 401 triggers one refresh + same-page retry; dead auth propagates") {

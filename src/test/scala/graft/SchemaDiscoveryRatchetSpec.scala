@@ -44,7 +44,8 @@ class SchemaDiscoveryRatchetSpec extends AnyFunSuite {
     assert(Files.isDirectory(main), s"run from the project root: $main missing")
     val scope: Seq[(Path, Seq[(String, Int)])] =
       (scalaFiles(main.resolve("pipelines")) ++ scalaFiles(main.resolve("incremental")) :+
-        main.resolve("sources/PagedSource.scala")).map(f => f -> lines(f)) ++ Seq(
+        main.resolve("sources/PagedSource.scala") :+
+        main.resolve("streaming/PagedStream.scala")).map(f => f -> lines(f)) ++ Seq(
         main.resolve("sources/Storage.scala") -> member(main.resolve("sources/Storage.scala"), "read"),
         main.resolve("operators/Upsert.scala") ->
           member(main.resolve("operators/Upsert.scala"), "rewritePartitions"))

@@ -41,6 +41,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def df(ddl: String, rows: Row*): DataFrame =
     spark.createDataFrame(rows.asJava, StructType.fromDDL(ddl))
 
+  /** `body`'s result and the number of Spark jobs it started. The
+    * listener bus is drained before the listener is added and before it
+    * is read, so no other action's job is counted and none of `body`'s
+    * is missed.
+    */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.graft.ListenerBusDrain(sc)
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Rows as a set of per-column Seq (order-insensitive compare). */
   def rowSet(d: DataFrame): Set[Seq[Any]] =
     d.collect().map(_.toSeq).toSet

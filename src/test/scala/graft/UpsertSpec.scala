@@ -519,6 +519,23 @@ class UpsertSpec extends SparkSpec {
     assert(spark.read.parquet(dir).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap == Map(1L -> "a2"))
   }
+
+  test("sources without partition values leave an existing table as it is") {
+    val dir = tempDir("upsert_empty") + "/t"
+    val init = df("k BIGINT, v STRING, d STRING",
+      Row(Long.box(1), "a", "2024-01-01"))
+    Upsert.applyToPartitionedParquet(spark, dir, init, Seq("k"), "d")
+    val files = new java.io.File(s"$dir/d=2024-01-01").list().toSet
+    // An empty relation, a filter that keeps nothing, and rows whose
+    // partition value is null: each observes no range, so no write runs.
+    Seq(init.limit(0), init.filter(col("k") > 5),
+        init.withColumn("d", lit(null).cast("string"))).foreach { src =>
+      val (_, jobs) = jobsOf(Upsert.applyToPartitionedParquet(spark, dir, src, Seq("k"), "d"))
+      assert(jobs <= 1, "the source's materialization is the only job")
+    }
+    assert(spark.read.parquet(dir).count() == 1)
+    assert(new java.io.File(s"$dir/d=2024-01-01").list().toSet == files)
+  }
 }
 
 /** Test-only fault-injecting local FileSystem (`graftfault://`): throws
