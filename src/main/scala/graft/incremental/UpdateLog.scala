@@ -7,10 +7,13 @@ import org.apache.spark.sql.types._
 /** Run-audit log — the engine's `update_log` table (reference
   * checkpoints.py:13-50, bigquery_service.py:240-260): one row per stage
   * outcome, modes NOOP/STAGED/MERGED/APPEND/TRUNCATE/ERROR_LOGIN
-  * (SURVEY.md §2.9 I5). Entries are buffered in memory and appended in
-  * one micro-batch per flush (UpdateLogBuffer.flush,
-  * checkpoints.py:41-50) — at scale this keeps the audit write path to
-  * one small file per run instead of one per stage.
+  * (SURVEY.md §2.9 I5). STAGED counts the fetched rows a merge took;
+  * there is no staging table, so it is logged only once the merge has
+  * succeeded, next to MERGED (DEVIATIONS.md 16). Entries are buffered
+  * in memory and appended in one micro-batch per flush
+  * (UpdateLogBuffer.flush, checkpoints.py:41-50) — at scale this keeps
+  * the audit write path to one small file per run instead of one per
+  * stage.
   */
 object UpdateLog {
 

@@ -3,7 +3,7 @@ package graft.pipelines
 import graft.incremental.{CheckpointStore, Scheduler, UpdateLogBuffer}
 import graft.operators.Upsert
 import graft.sources.{PagedSource, Storage}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -14,8 +14,9 @@ import org.apache.spark.sql.types.StructType
   *
   * Wiring per run:
   *   checkpoint → cutoff arithmetic → [[PagedSource]] fetch →
-  *   [[CallioIngest]] transform → stage/append ([[Storage]]) →
-  *   window merge ([[Upsert]]) → checkpoint commit → audit rows.
+  *   [[CallioIngest]] transform → window merge of the fetched batch
+  *   ([[Upsert]]) or append ([[Storage]]) → checkpoint commit → audit
+  *   rows.
   *
   * Commit ordering follows the reference exactly (SURVEY.md §2.9 I4):
   * the customer checkpoint advances only after the MERGE succeeds
@@ -45,10 +46,12 @@ final class BatchRunner(
   def bootstrap(): Unit = checkpoints.warm()
 
   /** E1: incremental customer pull + windowed MERGE for all tenants
-    * (reference runner.py:523-563 + 55-146 + 148-210).
+    * (reference runner.py:523-563 + 55-146 + 148-210). The merge takes
+    * the fetched batch itself: the reference stages it only because a
+    * BigQuery MERGE needs a table as its source (DEVIATIONS.md 16).
     */
   def runCustomer(nowMs: Long): Unit = {
-    val staged = cfg.tenants.flatMap { tenant =>
+    val fetched = cfg.tenants.flatMap { tenant =>
       val ck = checkpoints.getCheckpoint("customer", tenant)
       val cutoff = Scheduler.cutoffMs(ck, nowMs, cfg.overlapMs, cfg.daysIfEmpty)
       val res = PagedSource.fetchDescUntil(spark, fetcher, "customer", tenant,
@@ -63,56 +66,37 @@ final class BatchRunner(
       if (res.fetched == 0) {
         audit.add(tenant, "customer", 0, None, "NOOP"); None
       } else {
-        val out = CallioIngest.customerTransform(res.docs, tenant)
-        // The watermark and the merge window ride the append's own job:
-        // a separate out.agg(...) would re-run parse, dedup and transform.
-        val (rows, stats) = Storage.loadAppendObserving(out, p("stg_customer"),
-          Seq(max(col("updateTime")).as("maxUpdate"),
-            min(col("NgayUpdate")).as("lo"), max(col("NgayUpdate")).as("hi")))
-        val maxUpdate = Option(stats("maxUpdate")).map(_.asInstanceOf[Long])
-        val window =
-          for (lo <- Option(stats("lo")); hi <- Option(stats("hi")))
-            yield (lo.asInstanceOf[java.sql.Date], hi.asInstanceOf[java.sql.Date])
-        audit.add(tenant, "customer", rows, None, "STAGED")
-        Some((tenant, rows, maxUpdate, window))
+        // The row count and the watermark ride the merge's own jobs.
+        val stats = Observation()
+        Some((tenant, stats, CallioIngest.customerTransform(res.docs, tenant)
+          .observe(stats, count(lit(1)).as("rows"), max(col("updateTime")).as("maxUpdate"))))
       }
     }
-    val windows = staged.flatMap(_._4)
-    if (windows.nonEmpty) {
-      val lo = windows.map(_._1).minBy(_.getTime)
-      val hi = windows.map(_._2).maxBy(_.getTime)
-      mergeCustomerWindow(lo, hi)
-      staged.foreach { case (tenant, rows, maxUpdate, _) =>
-        maxUpdate.foreach { mu =>
+    if (fetched.nonEmpty) {
+      // One source keeps the target range at the hull of every tenant's
+      // NgayUpdate, the reference's single global window
+      // (runner.py:540-542); rows without a NgayUpdate lie in no window.
+      val batch = fetched.map(_._3).reduce(_.unionByName(_))
+        .filter(col("NgayUpdate").isNotNull)
+      Upsert.applyToPartitionedParquet(spark, p("customer"), batch,
+        keys = Seq("tenant", "_id"), partitionCol = "NgayUpdate",
+        sourceOrder = Seq(expr("try_cast(updateTime as long)").desc_nulls_last),
+        // Guard replicated literally from the customer MERGE
+        // (runner.py:177-181) — OR-joined, unlike the staff merge's
+        // AND-joined guard in upsertAuto (runner.py:450-455).
+        updateCond = Some("t.row_hash IS NULL OR t.row_hash != s.row_hash OR " +
+          "try_cast(s.updateTime as long) >= try_cast(t.updateTime as long) OR " +
+          "t.updateTime IS NULL"))
+      fetched.foreach { case (tenant, stats, _) =>
+        val rows = stats.get("rows").asInstanceOf[Long]
+        audit.add(tenant, "customer", rows, None, "STAGED")
+        Option(stats.get("maxUpdate")).map(_.asInstanceOf[Long]).foreach { mu =>
           checkpoints.setCheckpoint("customer", tenant, mu)
           audit.add(tenant, "customer", rows, Some(mu), "MERGED")
         }
       }
     }
     audit.flush()
-  }
-
-  /** M1 (reference runner.py:148-210): staged window rows, deduped
-    * latest-wins per (tenant,_id), hash/recency-guarded MERGE into the
-    * partition-pruned target, then the merged window is deleted from
-    * staging.
-    */
-  private def mergeCustomerWindow(lo: java.sql.Date, hi: java.sql.Date): Unit = {
-    val staging = read("stg_customer", CallioIngest.customerTemplate)
-    val window = staging.filter(col("NgayUpdate").between(lit(lo), lit(hi)))
-    Upsert.applyToPartitionedParquet(spark, p("customer"), window,
-      keys = Seq("tenant", "_id"), partitionCol = "NgayUpdate",
-      sourceOrder = Seq(expr("try_cast(updateTime as long)").desc_nulls_last),
-      // Guard replicated literally from the customer MERGE
-      // (runner.py:177-181) — OR-joined, unlike the staff merge's
-      // AND-joined guard in upsertAuto (runner.py:450-455).
-      updateCond = Some("t.row_hash IS NULL OR t.row_hash != s.row_hash OR " +
-        "try_cast(s.updateTime as long) >= try_cast(t.updateTime as long) OR " +
-        "t.updateTime IS NULL"))
-    Storage.loadTruncate(
-      staging.filter(!col("NgayUpdate").between(lit(lo), lit(hi)) ||
-        col("NgayUpdate").isNull),
-      p("stg_customer"))
   }
 
   /** E2: append-only call_log pull (reference runner.py:215-313) — no
@@ -200,8 +184,8 @@ final class BatchRunner(
       })._2
   }
 
-  /** Staff + group snapshots (reference runner.py:355-415): staff
-    * staged then schema-adaptively merged on (tenant, name); group is a
+  /** Staff + group snapshots (reference runner.py:355-415): the staff
+    * snapshot is schema-adaptively merged on (tenant, name); group is a
     * truncate-replace snapshot.
     */
   def runStaffGroup(): Unit = {
@@ -210,18 +194,17 @@ final class BatchRunner(
       .reduce(_.unionByName(_, allowMissingColumns = true))
     val staff = CallioIngest.staffNameFilter(staffAll)
     if (!staff.isEmpty) {
-      val rows = Storage.loadAppend(staff, p("stg_staff"))
-      audit.add("ALL", "staff", rows, None, "STAGED")
-      val staged = read("stg_staff", CallioIngest.staffTemplate)
       // A missing staff table merges as an empty one: the first snapshot
       // takes the same latest-wins path as every later one.
       val current =
         if (Storage.exists(spark, p("staff"))) read("staff", CallioIngest.staffTemplate)
-        else staged.limit(0)
-      Storage.loadTruncate(
-        Upsert.upsertAuto(current, staged, keys = Seq("tenant", "name")), p("staff"))
-      // staging dropped after merge (reference runner.py:491)
-      Storage.loadTruncate(staged.limit(0), p("stg_staff"))
+        else staff.limit(0)
+      val stats = Observation()
+      Storage.loadTruncate(Upsert.upsertAuto(current,
+        staff.observe(stats, count(lit(1)).as("rows")), keys = Seq("tenant", "name")),
+        p("staff"))
+      val rows = stats.get("rows").asInstanceOf[Long]
+      audit.add("ALL", "staff", rows, None, "STAGED")
       audit.add("ALL", "staff", rows, None, "MERGED")
     } else audit.add("ALL", "staff", 0, None, "NOOP")
 

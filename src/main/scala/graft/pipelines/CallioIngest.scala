@@ -24,7 +24,9 @@ import org.apache.spark.sql.types._
   */
 object CallioIngest {
 
-  /** Customer staging schema (reference bigquery_service.py:183-212). */
+  /** Customer schema (reference bigquery_service.py:183-212): the
+    * transformed batch and the `customer` table it merges into.
+    */
   val customerTemplate: StructType = StructType(Seq(
     StructField("_id", StringType),
     StructField("assignedTime", LongType),

@@ -62,8 +62,9 @@ object Storage {
   /** Full overwrite (snapshot semantics). The input is materialized
     * first, so a caller may overwrite the table it reads from; the row
     * count is observed on the write of that materialized copy, so the
-    * input (often a staging read plus a filter) is evaluated
-    * once, not once for a count() and again for the checkpoint.
+    * input (such as a snapshot merged with the table it replaces) is
+    * evaluated once, not once for a count() and again for the
+    * checkpoint.
     */
   def loadTruncate(df: DataFrame, path: String): Long =
     writeObserved(df.localCheckpoint(eager = true), Nil) {

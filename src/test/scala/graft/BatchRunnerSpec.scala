@@ -137,25 +137,133 @@ class BatchRunnerSpec extends SparkSpec {
 
   test("a slot and a refresh run a pinned number of Spark jobs") {
     // Every job does work: the fetch is one job that also carries the
-    // result-window flag and the doc count, and the merge range rides
-    // the source's materialization.
+    // result-window flag and the doc count, the customer merge takes the
+    // fetched batch, and the merge range rides the source's
+    // materialization.
     val wh = tempDir("runner_jobs")
     val r1 = runner(wh, T0, 60, 1)
     r1.bootstrap()
     val now1 = T0 + 60 * 60000L
     val (_, customerCold) = jobsOf(r1.runCustomer(now1))
     val (_, call) = jobsOf(r1.runCall(now1))
-    r1.runStaffGroup()
+    val (_, staffFirst) = jobsOf(r1.runStaffGroup())
     val r2 = runner(wh, T0, 120, 2)
     r2.bootstrap()
     val now2 = T0 + 120 * 60000L
     val (_, customer) = jobsOf(r2.runCustomer(now2))
     val (_, callAgain) = jobsOf(r2.runCall(now2))
+    val (_, staff) = jobsOf(r2.runStaffGroup())
     val dEnd = java.time.LocalDate.parse("2024-01-12")
     val (_, refreshFirst) = jobsOf(r2.refreshReporting(dEnd))
     val (_, refresh) = jobsOf(r2.refreshReporting(dEnd))
-    assert(Seq(customerCold, customer, call, callAgain, refreshFirst, refresh) ==
-      Seq(10, 12, 7, 7, 12, 18))
+    assert(Seq(customerCold, customer, call, callAgain, staffFirst, staff,
+      refreshFirst, refresh) == Seq(7, 9, 7, 7, 6, 7, 12, 18))
+  }
+
+  /** Customer rows with their hash, each as one string, sorted. */
+  private def customerRows(wh: String): Seq[String] =
+    spark.read.parquet(s"$wh/customer")
+      .select(graft.pipelines.CallioIngest.customerTemplate.fieldNames.toSeq.map(col): _*)
+      .collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  private def partitions(dir: String): Seq[String] =
+    Option(new java.io.File(dir).list()).toSeq.flatten.filter(_.contains("=")).sorted
+
+  test("a customer merge killed mid-swap, then the next slot of a restarted runner, equals the no-fault run") {
+    // Slots of one doc a minute from 23:00 UTC on 2024-01-09: slot 1
+    // fills NgayUpdate=2024-01-09, slot 2 re-serves its last minutes in
+    // v2 and spans both days.
+    val t = T0 - 3600000L
+    def slotRunner(wh: String, version: Int) =
+      new BatchRunner(spark, new FixtureSources.Paged(t, 180, version),
+        new FixtureSources.Snapshots, BatchRunner.Config(wh, tenants = Seq("PK"),
+          sliceMs = 1800000L, pageSize = 13))
+    def slot(r: BatchRunner, k: Int): Unit = {
+      r.bootstrap()
+      r.runCustomer(t + k * 3600000L)
+    }
+    val wh = tempDir("runner_crash")
+    val clean = tempDir("runner_crash_nofault")
+    Seq(wh, clean).foreach(w => slot(slotRunner(w, 1), 1))
+    slot(slotRunner(clean, 2), 2)
+    slot(slotRunner(clean, 2), 3)
+
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftfault.impl", classOf[InterruptingFs].getName)
+    val faulty = slotRunner("graftfault://" + wh, 2)
+    InterruptingFs.failInstallOf = "NgayUpdate=2024-01-09"
+    val ex = intercept[RuntimeException](slot(faulty, 2))
+    assert(ex.getMessage.contains("simulated"))
+    assert(InterruptingFs.failInstallOf == null, "the fault must have fired")
+    assert(new java.io.File(s"$wh/customer.merge-bak/NgayUpdate=2024-01-09").exists())
+    // Nothing committed: the checkpoint stays at slot 1's last doc and
+    // the log holds slot 1's MERGED row only.
+    val slot1Mark = Some(t + 59 * 60000L)
+    assert(faulty.checkpoints.getCheckpoint("customer", "PK") == slot1Mark)
+    assert(spark.read.parquet(s"$wh/update_log")
+      .filter(col("mode") === "MERGED").count() == 1)
+
+    // The restarted runner re-fetches from slot 1's checkpoint.
+    slot(slotRunner("graftfault://" + wh, 2), 3)
+    assert(customerRows(wh) == customerRows(clean))
+    assert(customerRows(wh).size == 180)
+    assert(partitions(s"$wh/customer") == partitions(s"$clean/customer"))
+    def mark(w: String) = {
+      val r = slotRunner(w, 2)
+      r.bootstrap()
+      r.checkpoints.getCheckpoint("customer", "PK")
+    }
+    assert(mark(wh) == mark(clean) && mark(wh).contains(t + 179 * 60000L))
+    assert(!new java.io.File(s"$wh/customer.merge-tmp").exists() &&
+      !new java.io.File(s"$wh/customer.merge-bak").exists())
+  }
+
+  test("two tenants merge as one window: a row in the gap between their ranges moves, not duplicates") {
+    val h = 3600000L
+    def at(day: Int, hour: Int) = T0 + (day - 10) * Day + hour * h
+    // Slot 1: PK's doc on 2024-01-11; QN's b1 and b2 on -13, b3 on -15.
+    val v1 = Map(
+      "PK" -> Seq(("a1", at(11, 10), "a1 v1")),
+      "QN" -> Seq(("b1", at(13, 10), "b1 v1"), ("b2", at(13, 11), "b2 v1"),
+        ("b3", at(15, 9), "b3 v1")))
+    // Slot 2: PK's range is -11 (a1 re-read in the overlap, a2 new), QN's
+    // is -15 (b3 re-read, b1 updated): b1's old copy sits on -13, between
+    // the two ranges, where b2 stays.
+    val v2 = Map(
+      "PK" -> Seq(("a1", at(11, 10), "a1 v1"), ("a2", at(11, 12), "a2 v1")),
+      "QN" -> Seq(("b1", at(15, 12), "b1 v2"), ("b2", at(13, 11), "b2 v1"),
+        ("b3", at(15, 9), "b3 v1")))
+    val wh = tempDir("runner_tenants")
+    def slot(docs: Map[String, Seq[(String, Long, String)]], now: Long) = {
+      val r = new BatchRunner(spark, TenantDocs(docs), new FixtureSources.Snapshots,
+        BatchRunner.Config(wh, tenants = Seq("PK", "QN")))
+      r.bootstrap()
+      r.runCustomer(now)
+      r
+    }
+    slot(v1, at(16, 0))
+    val r = slot(v2, at(17, 0))
+    val rows = spark.read.parquet(s"$wh/customer")
+      .select("tenant", "_id", "name", "updateTime", "NgayUpdate", "row_hash")
+      .collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    assert(rows == Seq(
+      "PK|a1|a1 v1|1704967200000|2024-01-11|c5f6aca6c68790a26ce50e151b5dface",
+      "PK|a2|a2 v1|1704974400000|2024-01-11|724086deca0d802a385bc353c895b7c1",
+      "QN|b1|b1 v2|1705320000000|2024-01-15|6ea7e40710d60781bc165d85fa6b784a",
+      "QN|b2|b2 v1|1705143600000|2024-01-13|7da4afc1c292092af3a1458b3cb2cb2f",
+      "QN|b3|b3 v1|1705309200000|2024-01-15|ca119cbb988dd26df2523e965f6d90bd"))
+    assert(partitions(s"$wh/customer") ==
+      Seq("NgayUpdate=2024-01-11", "NgayUpdate=2024-01-13", "NgayUpdate=2024-01-15"))
+    assert(Seq("PK", "QN").map(r.checkpoints.getCheckpoint("customer", _)) ==
+      Seq(Some(at(11, 12)), Some(at(15, 12))))
+    val log = spark.read.parquet(s"$wh/update_log")
+      .select("tenant", "table_name", "mode", "rows_loaded", "max_updateTime")
+      .collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    assert(log == Seq(
+      "PK|customer|MERGED|1|1704967200000", "PK|customer|MERGED|2|1704974400000",
+      "PK|customer|STAGED|1|null", "PK|customer|STAGED|2|null",
+      "QN|customer|MERGED|2|1705320000000", "QN|customer|MERGED|3|1705309200000",
+      "QN|customer|STAGED|2|null", "QN|customer|STAGED|3|null"))
   }
 
   test("runLoop: daemon catch-up drives the incremental batch end to end") {
@@ -312,5 +420,26 @@ class BatchRunnerSpec extends SparkSpec {
     assert(table(wh) == table(clean))
     assert(!new java.io.File(s"$wh/fact_staff_daily.merge-tmp").exists() &&
       !new java.io.File(s"$wh/fact_staff_daily.merge-bak").exists())
+  }
+}
+
+/** A customer feed of given `(_id, updateTime, name)` docs per tenant,
+  * paged newest first like the Callio API; the call feed is empty.
+  */
+final case class TenantDocs(docs: Map[String, Seq[(String, Long, String)]])
+    extends graft.sources.PagedSource.DocFetcher {
+  override def fetchPage(entity: String, tenant: String, timeField: String,
+      fromMs: Long, toMs: Long, page: Int,
+      pageSize: Int): graft.sources.PagedSource.Page = {
+    val window = (if (entity == "customer") docs.getOrElse(tenant, Nil) else Nil)
+      .filter { case (_, ts, _) => ts >= fromMs && ts < toMs }
+      .sortBy(-_._2)
+      .map { case (id, ts, name) =>
+        s"""{"_id":"$id","updateTime":$ts,"name":"$name",""" +
+          s""""user":{"_id":"u1","name":"NV1","group":{"_id":"g1"}},"assignedTime":$ts}"""
+      }
+    val start = (page - 1) * pageSize
+    graft.sources.PagedSource.Page(window.slice(start, start + pageSize),
+      hasNextPage = start + pageSize < window.size)
   }
 }

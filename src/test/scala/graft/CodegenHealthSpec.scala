@@ -332,4 +332,29 @@ class CodegenHealthSpec extends SparkSpec {
     assert(compiles.getCount - before == 0,
       s"${compiles.getCount - before} classes recompiled by an identical refresh")
   }
+
+  test("a later schedule slot compiles no new classes") {
+    val wh = tempDir("codegen_slots")
+    val t0 = 1704844800000L // 2024-01-10T00:00:00Z
+    val r = new graft.pipelines.BatchRunner(spark,
+      new graft.sources.FixtureSources.Paged(t0, 240, version = 1),
+      new graft.sources.FixtureSources.Snapshots,
+      graft.pipelines.BatchRunner.Config(wh, tenants = Seq("PK"),
+        sliceMs = 1800000L, pageSize = 13))
+    r.bootstrap()
+    def slot(hour: Int): Unit = {
+      r.runCustomer(t0 + hour * 3600000L)
+      r.runCall(t0 + hour * 3600000L)
+    }
+    // The cold start creates the tables; the first slot into existing
+    // ones plans each merge the way every later slot does.
+    slot(1)
+    slot(2)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    slot(3)
+    assert(compiles.getCount - before == 0,
+      s"${compiles.getCount - before} classes compiled by a later slot")
+  }
 }
