@@ -35,16 +35,8 @@ object ColumnLib {
     to_date(from_utc_timestamp(ts, "Asia/Ho_Chi_Minh"))
 
   // ---------------------------------------------------------------------
-  // Permissive casts (reference api.py:109-127 `_to_int_timestamp`,
-  // GoogleSQL SAFE_CAST runner.py:171,179,454,802).
+  // Permissive arithmetic (GoogleSQL SAFE_DIVIDE, runner.py:625).
   // ---------------------------------------------------------------------
-
-  /** Any value → epoch-millis long; unparseable → 0 (api.py:109-127).
-    * The engine runs with `spark.sql.ansi.enabled=false` (reference
-    * semantics are permissive), so a failed string→double cast is null.
-    */
-  def toIntTimestamp(c: Column): Column =
-    coalesce(trim(c.cast(StringType)).cast(DoubleType).cast(LongType), lit(0L))
 
   /** SAFE_DIVIDE(x, y): null on zero/null divisor (runner.py:625). */
   def safeDivide(x: Column, y: Column): Column = try_divide(x, y)
@@ -90,17 +82,6 @@ object ColumnLib {
       if (have.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }.toIndexedSeq: _*)
-  }
-
-  /** Suffix duplicate column names `c, c__1, c__2, …` (utils.py:29-43). */
-  def ensureUniqueColumns(df: DataFrame): DataFrame = {
-    val seen = scala.collection.mutable.Map.empty[String, Int]
-    val renamed = df.columns.map { c =>
-      val n = seen.getOrElse(c, 0)
-      seen(c) = n + 1
-      if (n == 0) c else s"${c}__$n"
-    }
-    df.toDF(renamed.toIndexedSeq: _*)
   }
 
   // ---------------------------------------------------------------------

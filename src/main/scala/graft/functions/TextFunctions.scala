@@ -23,28 +23,6 @@ object TextFunctions {
   def tokenCountBpe(text: Column): Column =
     regexp_count(text, lit("[a-z]+|[A-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"))
 
-  /** Ordered word n-grams ("shingles") of width `n` (1-based positions,
-    * empty when the doc has fewer than n words). Guarded so short docs
-    * yield an empty array instead of a negative `sequence` range (which
-    * would also trip ANSI-mode element_at bounds checks).
-    */
-  def wordShingles(text: Column, n: Int): Column = {
-    val w = words(text)
-    when(size(w) >= n,
-      transform(
-        sequence(lit(1), size(w) - lit(n - 1)),
-        i => concat_ws(" ", (0 until n).map(k => element_at(w, i + lit(k))): _*)))
-      .otherwise(array().cast("array<string>"))
-  }
-
-  /** One MinHash value: the minimum over shingles of a seeded md5, kept as
-    * a 16-hex-char string (lexicographic min of fixed-width hex ==
-    * numeric min, which keeps the whole signature engine-portable).
-    */
-  def minhash(shingles: Column, seed: Int): Column =
-    array_min(transform(shingles,
-      g => substring(md5(concat(lit(s"$seed:"), g)), 1, 16)))
-
   /** Normalized fingerprint text: lowercase, strip non-alphanumerics,
     * collapse whitespace (document fingerprinting pre-pass).
     */
@@ -55,14 +33,6 @@ object TextFunctions {
   def wordHits(text: Column, set: Seq[String]): Column =
     size(filter(words(text), w => w.isin(set.map(x => x: Any): _*)))
 
-  /** One-pass native n-gram statistics:
-    * `struct<n_tokens, n_grams, n_distinct>` over word n-grams
-    * ([[graft.functions.expressions.NgramStats]], registered by
-    * [[graft.Engine.extensions]]). Value-identical to the
-    * [[wordShingles]]/`array_distinct` composition, but a single
-    * codegen'd loop instead of interpreted lambdas re-evaluated per
-    * reference — the form every repetition/quality scan wants.
-    */
   // ---- Unicode hygiene (data-poisoning surface) ------------------------
   // Invisible characters survive copy-paste and human review: zero-width
   // spaces/joiners break tokenization and dedup keys (two "identical"
@@ -92,6 +62,14 @@ object TextFunctions {
   def bidiCount(text: Column): Column =
     (length(text) - length(regexp_replace(text, BidiClass, ""))).cast("long")
 
+  /** One-pass native n-gram statistics:
+    * `struct<n_tokens, n_grams, n_distinct>` over word n-grams
+    * ([[graft.functions.expressions.NgramStats]], registered by
+    * [[graft.Engine.extensions]]). Value-identical to the
+    * word-shingle-array/`array_distinct` composition, but a single
+    * codegen'd loop instead of interpreted lambdas re-evaluated per
+    * reference — the form every repetition/quality scan wants.
+    */
   def ngramStats(text: Column, n: Int): Column =
     call_function("ngram_stats", words(text), lit(n))
 }

@@ -66,12 +66,4 @@ object MaterializedAgg {
         sumCols.tail.map(c => sum(col(c)).as(c)): _*)
       .filter(col("n_rows") =!= 0)
   }
-
-  /** Read-time view: state plus derived per-measure averages
-    * (sum/n as double, null for retracted-empty groups).
-    */
-  def withAverages(state: DataFrame, measures: Seq[String]): DataFrame =
-    measures.foldLeft(state)((d, m) =>
-      d.withColumn(s"avg_$m",
-        (col(s"sum_$m") / col("n_rows")).cast("double")))
 }

@@ -1,29 +1,21 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Byte-pair-encoding tokenizer training over a distributed corpus —
+/** The distributed stage of byte-pair-encoding tokenizer training —
   * the "train your own tokenizer on the cleaned corpus" step of an
   * LLM data pipeline.
   *
   * Formulated the way Sennrich's reference trainer is: the corpus
   * collapses ONCE to a (word, count) vocabulary — the only stage that
-  * touches corpus-scale data (one shuffle, map-side combined). At
-  * 100 TB that table is millions of rows, not corpus-sized, so
-  * [[train]] collects it once and runs the merge loop (weighted
-  * adjacent-pair counts → argmax → greedy rewrite) driver-local:
-  * O(1) Spark jobs for any `nMerges`, where a job-per-merge loop is
-  * 32k scheduler round-trips for a production vocabulary.
-  * [[trainDistributed]] keeps the fully-distributed per-round
-  * formulation for vocabularies too large to collect; BpeSpec pins
-  * the two byte-identical. The merge list (the trained artifact) is
-  * O(nMerges) either way.
+  * touches corpus-scale data (one shuffle, map-side combined) — and
+  * one merge round counts adjacent symbol pairs weighted by word
+  * count. The merge loop itself (argmax → greedy rewrite → repeat)
+  * runs over the collapsed vocabulary, which is bounded by DISTINCT
+  * words, not corpus size.
   */
 object Bpe {
-
-  final case class Merge(rank: Int, left: String, right: String,
-      merged: String, cnt: Long)
 
   /** Corpus → (sym, n): whitespace words counted, symbols = the word's
     * characters joined by single spaces (the classic BPE working
@@ -45,209 +37,4 @@ object Bpe {
         slice(col("cs"), lit(2), size(col("cs")) - 1),
         (a, b) => concat(a, lit(" "), b))).as("pair"))
       .groupBy("pair").agg(sum(col("n")).as("cnt"))
-
-  /** Greedy left-to-right application of one merge to a symbol string:
-    * fold the symbol array, fusing `left right` adjacencies into
-    * `merged` (a fused symbol does not re-pair with the element it
-    * consumed — standard non-overlapping BPE semantics).
-    */
-  private[graft] def applyMerge(sym: Column, left: String,
-      right: String, merged: String): Column =
-    concat_ws(" ", aggregate(
-      split(sym, " "),
-      array().cast("array<string>"),
-      (acc, x) => when(
-        size(acc) > 0 && element_at(acc, -1) === left && x === lit(right),
-        concat(slice(acc, lit(1), size(acc) - 1), array(lit(merged))))
-        .otherwise(concat(acc, array(x)))))
-
-  /** Learn `nMerges` merges. Ties break on the pair string (UTF-8
-    * byte order, Spark's string sort order), so the merge list is
-    * deterministic across runs and partitionings.
-    *
-    * ONE Spark job, not one per merge: after the corpus-scale vocab
-    * collapse the (sym, n) table is bounded by DISTINCT words — the
-    * thing that fits a trainer's memory at any corpus size (the
-    * standard BPE-trainer posture; a 100 TB corpus has millions of
-    * distinct words, not billions) — so it is collected once and the
-    * merge-argmax loop runs driver-local. The alternative, a Spark
-    * job per merge ([[trainDistributed]]), is 32k scheduler
-    * round-trips for a production vocabulary. For a vocab that
-    * genuinely cannot fit the driver, use [[trainDistributed]];
-    * BpeSpec pins the two byte-identical.
-    */
-  def train(df: DataFrame, textCol: String, nMerges: Int): Seq[Merge] = {
-    require(nMerges > 0, "need at least one merge")
-    val counts = vocab(df, textCol)
-      .select(split(col("sym"), " ").as("cs"), col("n"))
-      .collect()
-      .map(r => (r.getSeq[String](0).toArray, r.getLong(1)))
-    trainFromCounts(counts, nMerges)
-  }
-
-  /** Spark's string ordering is UTF8String binary order — UTF-8 bytes
-    * compared unsigned — which differs from Java's UTF-16
-    * `compareTo` for supplementary characters. The local argmax must
-    * tie-break exactly like the distributed `orderBy(pair asc)`.
-    */
-  private def utf8Less(a: String, b: String): Boolean = {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var i = 0
-    while (i < x.length && i < y.length) {
-      val d = (x(i) & 0xff) - (y(i) & 0xff)
-      if (d != 0) return d < 0
-      i += 1
-    }
-    x.length < y.length
-  }
-
-  /** The driver-local merge loop over collected (symbols, count)
-    * rows: weighted adjacent-pair counts, argmax with the
-    * (cnt desc, pair asc) tie-break, greedy left-to-right rewrite —
-    * the exact semantics of the distributed round, minus the
-    * scheduler. Exposed for spec parity tests.
-    */
-  private[graft] def trainFromCounts(vocab0: Array[(Array[String], Long)],
-      nMerges: Int): Seq[Merge] = {
-    var v = vocab0
-    val out = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    var exhausted = false
-    for (r <- 1 to nMerges if !exhausted) {
-      val counts = scala.collection.mutable.HashMap.empty[String, Long]
-      v.foreach { case (cs, n) =>
-        var i = 0
-        while (i < cs.length - 1) {
-          val k = cs(i) + " " + cs(i + 1)
-          counts.update(k, counts.getOrElse(k, 0L) + n)
-          i += 1
-        }
-      }
-      if (counts.isEmpty) exhausted = true
-      else {
-        var bestPair: String = null
-        var bestCnt = 0L
-        counts.foreach { case (p, c) =>
-          if (bestPair == null || c > bestCnt ||
-              (c == bestCnt && utf8Less(p, bestPair))) {
-            bestPair = p; bestCnt = c
-          }
-        }
-        val Array(a, b) = bestPair.split(" ", 2)
-        val m = Merge(r, a, b, a + b, bestCnt)
-        out += m
-        v = v.map { case (cs, n) => (applyMergeLocal(cs, a, b, m.merged), n) }
-      }
-    }
-    out.toSeq
-  }
-
-  /** Greedy left-to-right non-overlapping rewrite of one symbol
-    * array — the SINGLE imperative counterpart of the [[applyMerge]]
-    * column expression, shared by the driver-local trainer and
-    * [[encodeIter]]'s per-word loop so the non-overlap semantics
-    * cannot drift between them.
-    */
-  private def applyMergeLocal(cs: Array[String], left: String,
-      right: String, merged: String): Array[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    cs.foreach { x =>
-      if (out.nonEmpty && out.last == left && x == right) {
-        out.remove(out.size - 1); out += merged
-      } else out += x
-    }
-    out.toArray
-  }
-
-  /** The fully-distributed merge loop: one Spark round (pair counts +
-    * 1-row argmax + vocab rewrite) per merge. Correct at any vocab
-    * size — including one too large to collect — but each merge is a
-    * scheduler round-trip, so [[train]]'s collected loop is the
-    * default. BpeSpec pins both paths byte-identical.
-    */
-  def trainDistributed(df: DataFrame, textCol: String,
-      nMerges: Int): Seq[Merge] = {
-    require(nMerges > 0, "need at least one merge")
-    var v = vocab(df, textCol).localCheckpoint(true)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    var exhausted = false
-    for (r <- 1 to nMerges if !exhausted) {
-      val top = pairCounts(v)
-        .orderBy(col("cnt").desc, col("pair").asc).limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val Array(a, b) = top(0).getString(0).split(" ", 2)
-        val m = Merge(r, a, b, a + b, top(0).getLong(1))
-        out += m
-        val next = v
-          .select(applyMerge(col("sym"), m.left, m.right, m.merged).as("sym"),
-            col("n"))
-          .localCheckpoint(true)
-        Dedup.release(v)
-        v = next
-      }
-    }
-    Dedup.release(v)
-    out.toSeq
-  }
-
-  /** Tokenize a text column with a learned merge list: per-word symbol
-    * arrays rewritten by each merge in rank order — a pure map-side
-    * projection (the merge list is compiled into the expression, the
-    * way the trained artifact ships to the cluster).
-    */
-  def encode(df: DataFrame, textCol: String, merges: Seq[Merge],
-      out: String = "tokens"): DataFrame = {
-    // The output contract names two columns; refusing a collision
-    // loudly beats Spark's silent duplicate-on-rename.
-    require(!df.columns.contains("word") && !df.columns.contains(out),
-      s"input already has a 'word' or '$out' column; rename it first")
-    val word = graft.functions.ColumnLib.freeColumn(df, "__w")
-    val sym = merges.foldLeft(
-      concat_ws(" ", split(col(word), "")): Column) { (c, m) =>
-      applyMerge(c, m.left, m.right, m.merged)
-    }
-    df.withColumn(word, explode(split(col(textCol), " ")))
-      .filter(length(col(word)) > 0)
-      .withColumn(out, split(sym, " ").cast("array<string>"))
-      .withColumnRenamed(word, "word")
-  }
-
-  /** Tokenize with a LARGE merge list. [[encode]] compiles the merges
-    * into an expression tree — ideal for Catalyst up to tens of merges,
-    * but a real 32k-merge vocabulary would exceed codegen size limits.
-    * This variant is the sanctioned tier-(d) escape hatch (SURVEY.md
-    * §7.3): one broadcast of the merge table, a per-partition
-    * imperative loop applying merges in rank order with the same
-    * greedy left-to-right semantics as [[applyMerge]] (spec-pinned
-    * equivalent in BpeSpec). Output is one (word, tokens) row per
-    * word occurrence.
-    */
-  def encodeIter(df: DataFrame, textCol: String,
-      merges: Seq[Merge]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val table = merges.sortBy(_.rank).map(m => (m.left, m.right, m.merged))
-    val bc = spark.sparkContext.broadcast(table)
-    val words = df.select(explode(split(col(textCol), " ")).as("word"))
-      .filter(length(col("word")) > 0)
-    // Tokenize DISTINCT words, then join back to occurrences — the
-    // same vocab-collapse trick train() leads with: the |merges|-pass
-    // rewrite runs once per distinct word, not once per occurrence
-    // (common words repeat billions of times at corpus scale).
-    val tokenized = words.distinct().as[String]
-      .mapPartitions { it =>
-        val ms = bc.value
-        it.map { w =>
-          var sym: Array[String] = w.split("")
-          ms.foreach { case (a, b, m) =>
-            sym = applyMergeLocal(sym, a, b, m)
-          }
-          (w, sym.toSeq)
-        }
-      }
-      .toDF("word", "tokens")
-    words.join(tokenized, "word")
-  }
-
 }

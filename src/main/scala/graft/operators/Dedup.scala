@@ -326,8 +326,8 @@ object Dedup {
     }
 
   /** Distinct ids with at least one COMMITTED band in the index — the
-    * "what is already indexed" face a streaming ingest diffs its
-    * corpus against ([[graft.streaming.IncrementalStream.dedupIngestSink]]).
+    * "what is already indexed" face an incremental ingest diffs its
+    * corpus against.
     * Orphan bands from torn appends are excluded on purpose: those
     * docs must be re-healed, not considered done.
     */

@@ -31,18 +31,8 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Canonicalize an arbitrary edge list to distinct undirected edges
-    * (a < b, self-loops dropped, nulls dropped).
-    */
-  def canonicalEdges(edges: DataFrame, src: String, dst: String): DataFrame =
-    edges.filter(col(src).isNotNull && col(dst).isNotNull &&
-        col(src) =!= col(dst))
-      .select(least(col(src), col(dst)).as("a"),
-        greatest(col(src), col(dst)).as("b"))
-      .distinct()
-
   /** Per-vertex triangle counts over an undirected graph given as
-    * canonical edges (a < b, distinct — see [[canonicalEdges]]).
+    * canonical edges (a < b, distinct, no self-loops or nulls).
     * Returns (v, n_tri); vertices in no triangle are absent. Every
     * triangle contributes exactly 1 to each of its three corners: the
     * degree-oriented enumeration produces each triangle once, with its
@@ -80,7 +70,7 @@ object Graph {
     * initialized to the vertex id. Deterministic update: each vertex
     * adopts the neighbor label with the highest count, ties to the
     * smallest label; a vertex with no neighbors keeps its label
-    * (cannot happen over [[canonicalEdges]] output, where every vertex
+    * (cannot happen over a canonical edge list, where every vertex
     * has degree ≥ 1). Returns (v, label).
     */
   def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {

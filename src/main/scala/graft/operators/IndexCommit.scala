@@ -30,8 +30,8 @@ private[graft] object IndexCommit {
 
   /** Thrown when a batch id already has a ledger row. Subtype of
     * IllegalArgumentException so contract-level callers/specs that
-    * treat it as a plain argument error keep working; streaming
-    * replay handlers catch THIS type.
+    * treat it as a plain argument error keep working; replay handlers
+    * catch THIS type.
     */
   final class AlreadyCommittedException(msg: String)
     extends IllegalArgumentException(msg)

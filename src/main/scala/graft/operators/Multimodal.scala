@@ -6,9 +6,9 @@ import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing: image/audio/video payloads travel as
   * opaque `binary` columns next to a typed metadata struct; decode /
-  * feature-extract / frame-sample run as partition-local batch transforms.
+  * feature-extract run as partition-local batch transforms.
   *
-  * IMAGE decoding is REAL: [[imageDims]] parses PNG/JPEG/GIF/BMP
+  * IMAGE decoding is REAL: [[decodeDims]] parses PNG/JPEG/GIF/BMP
   * headers and [[ImageHistogramDecoder]] extracts pixel-derived
   * grayscale-histogram features, both through the JDK's
   * dependency-free `javax.imageio` (no codec libraries needed).
@@ -31,20 +31,6 @@ import org.apache.spark.sql.types._
   * not row count, is the parallelism lever for media tables.
   */
 object Multimodal {
-
-  /** Typed metadata carried beside every media payload. */
-  val mediaMetaSchema: StructType = StructType(Seq(
-    StructField("kind", StringType, nullable = false),     // image|audio|video
-    StructField("mime", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("sample_rate", IntegerType),
-    StructField("duration_ms", LongType),
-    StructField("n_bytes", LongType, nullable = false)))
-
-  /** Feature schema produced by decoders. */
-  val featureSchema: StructType = StructType(Seq(
-    StructField("feature", ArrayType(FloatType), nullable = false)))
 
   /** Batch decoder contract: one call per partition, iterator-to-iterator
     * (never materializes a partition), mirroring the Pandas-UDF /
@@ -350,32 +336,6 @@ object Multimodal {
     } catch { case _: Exception => None }
   }
 
-  /** Partition-local header scan: media table → (media_id, width,
-    * height), NULL dims for payloads no installed reader understands.
-    * Same iterator-to-iterator batch shape as [[decodeFeatures]];
-    * callers join the result back to overwrite the metadata struct's
-    * declared dims with measured ones.
-    */
-  def imageDims(media: DataFrame): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    media.select(col("media_id").cast(LongType), col("payload"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val dims = decodeDims(r.getAs[Array[Byte]](1))
-          // NULL ids ride through like corrupt payloads do — one bad
-          // row must never fail a 100 TB backfill batch.
-          org.apache.spark.sql.Row(
-            if (r.isNullAt(0)) null else Long.box(r.getLong(0)),
-            dims.map(d => Int.box(d._1)).orNull,
-            dims.map(d => Int.box(d._2)).orNull)
-        }
-      }(enc)
-  }
-
   // ---- PNG metadata scrub (multimodal privacy screen) ------------------
   // Text comments, EXIF blobs, and timestamps embedded in PNG ancillary
   // chunks travel with the image through every copy — camera serials,
@@ -458,51 +418,8 @@ object Multimodal {
     bytes
   }
 
-  /** "Resize": deterministic stub for the image-resize verb — keeps
-    * every `factor`-th byte of the payload and rewrites the metadata
-    * dims accordingly. The real pipeline swaps the byte transform for a
-    * codec call; the engine-side contract (binary in/out, metadata
-    * rewrite, pure projection — no shuffle) is what's exercised here.
-    */
-  def resizeStub(media: DataFrame, factor: Int): DataFrame = {
-    require(factor >= 1)
-    val n = length(col("payload"))
-    val idxs = sequence(lit(1), greatest((n / factor).cast(IntegerType), lit(1)))
-    // Byte-safe AND linear: each kept byte goes through hex (2 chars),
-    // one array_join builds the string, one unhex restores the bytes.
-    // (A binary fold-concat would copy the growing accumulator per
-    // step — quadratic in payload size.)
-    val resized = unhex(array_join(transform(idxs,
-      i => hex(col("payload").substr((i - 1) * factor + 1, lit(1)))), ""))
-    media
-      .withColumn("payload", resized)
-      .withColumn("meta", struct(
-        col("meta.kind"), col("meta.mime"),
-        (col("meta.width") / factor).cast(IntegerType).as("width"),
-        (col("meta.height") / factor).cast(IntegerType).as("height"),
-        col("meta.sample_rate"), col("meta.duration_ms"),
-        length(col("payload")).cast(LongType).as("n_bytes")))
-  }
-
-  /** Frame sampling: slice the payload into fixed-size "frames" at a
-    * stride, as an array<binary> column — pure built-ins (substring on
-    * binary), no UDF, codegen-friendly.
-    */
-  def frameSample(media: DataFrame, frameBytes: Int, stride: Int,
-      maxFrames: Int): DataFrame = {
-    val nFrames = least(
-      greatest(ceil((length(col("payload")) - lit(frameBytes) + 1)
-        .cast(DoubleType) / stride).cast(IntegerType), lit(0)),
-      lit(maxFrames))
-    media.withColumn("frames",
-      when(nFrames > 0,
-        transform(sequence(lit(0), nFrames - 1),
-          i => col("payload").substr(i * lit(stride) + 1, lit(frameBytes))))
-        .otherwise(array().cast(ArrayType(BinaryType))))
-  }
-
   // ------------------------------------------------------------------
-  // VIDEO metadata — header-only, dependency-free (the imageDims
+  // VIDEO metadata — header-only, dependency-free (the decodeDims
   // posture). No JDK video codec exists, so FRAME decode stays a
   // [[StubDecoder]]; but a video file's dims/duration/codec live in
   // its container header (ISO-BMFF `moov` boxes for MP4, EBML
@@ -683,7 +600,7 @@ object Multimodal {
   /** Partition-local header scan: media table → (media_id, container,
     * codec, width, height, duration_ms), NULLs for payloads neither
     * container parser understands. Same iterator-to-iterator batch
-    * shape as [[imageDims]] — one pass, no shuffle, per-row cost is
+    * shape as [[decodeFeatures]] — one pass, no shuffle, per-row cost is
     * header bytes regardless of payload size.
     */
   def videoMeta(media: DataFrame): DataFrame = {

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * passes (lag → gap flag → running sum = session index). No state
   * store, no cross-key data movement; a hot key costs a local sort,
   * which is the floor for any order-dependent computation. (The
-  * Structured Streaming face of the same semantics is
-  * `session_window()` — see graft.streaming.)
+  * Structured Streaming face of the same semantics is Spark's
+  * `session_window()`.)
   */
 object Sessionize {
 

@@ -971,9 +971,8 @@ object Similarity {
       .partitionBy("cluster", "batch").parquet(path)
 
   /** Distinct ids whose vectors belong to a COMMITTED batch — the
-    * "already indexed" face a streaming ingest diffs its arrivals
-    * against ([[graft.streaming.IncrementalStream.vectorIngestSink]];
-    * the [[Dedup.bandIndexedIds]] convention). Orphan vectors from
+    * "already indexed" face an incremental ingest diffs its arrivals
+    * against (the [[Dedup.bandIndexedIds]] convention). Orphan vectors from
     * torn appends are excluded ON PURPOSE: a torn batch must be
     * re-ingested whole (replace-by-batch deletes its orphan dirs), so
     * counting its ids as "indexed" would make the replay skip them and
@@ -1406,7 +1405,7 @@ object Similarity {
     * torn-visibility window [[ivfAppend]] documents for appends — and a
     * REPLAY of the same split is the recovery: it finishes the source
     * delete and returns the updated centroids (idempotent, the
-    * streaming-sink convention). The returned means can differ at ulp level between
+    * index-commit replay convention). The returned means can differ at ulp level between
     * a fresh run and a replay (float avg over shuffle order); IVF
     * probe selection tolerates ulp wiggle by construction.
     */

@@ -321,9 +321,8 @@ object TextIndex {
     }
 
   /** Distinct doc ids whose postings belong to a COMMITTED batch — the
-    * "already indexed" face a streaming ingest diffs its arrivals
-    * against ([[graft.streaming.IncrementalStream.textIngestSink]];
-    * the [[Similarity.ivfIndexedIds]] convention). Orphan postings
+    * "already indexed" face an incremental ingest diffs its arrivals
+    * against (the [[Similarity.ivfIndexedIds]] convention). Orphan postings
     * from torn appends are excluded ON PURPOSE: a torn batch must be
     * re-ingested whole. Tombstoned ids still count as indexed —
     * erased identities are retired, a replay must not re-ingest them.

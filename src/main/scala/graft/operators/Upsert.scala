@@ -52,8 +52,9 @@ object Upsert {
     * acquire via NIO `CREATE_NEW` (kernel O_EXCL) instead — see
     * `createExclusive` below.
     *
-    * Concurrency contract (the streaming sinks and any double-scheduled
-    * batch ingest are the consumers):
+    * Concurrency contract (the consumers are [[rewritePartitions]],
+    * which a double-scheduled batch slot can enter twice, and the index
+    * commits and compactions of [[IndexCommit]]):
     *  - a second writer WAITS (polling) up to `waitMs` for the holder
     *    to release, then proceeds — two interleaved appends serialize
     *    instead of one dying;
@@ -587,7 +588,7 @@ object Upsert {
     target.foreach { t =>
       val merged = merge(t, srcs)
       // Write-to-temp + per-partition swap (same staging pattern as
-      // [[graft.sources.Storage.compact]]): the merge streams from the
+      // [[graft.sources.Storage.rewriteInPlace]]): the merge streams from the
       // ORIGINAL files into a sibling temp dir, then each affected
       // partition is swapped in by DISPLACING the old directory into the
       // backup dir and renaming the new one into place — never

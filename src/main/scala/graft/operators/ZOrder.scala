@@ -13,10 +13,9 @@ import org.apache.spark.sql.functions._
   *
   * All of it is plain column arithmetic (bucket normalize → shift/and/
   * or interleave), fully inside whole-stage codegen and restatable in
-  * any SQL engine — no UDF, no driver loop. The write path is the
-  * standard range-repartition on the z-value: the sampling-based range
-  * exchange balances output files even when the z-space is unevenly
-  * populated.
+  * any SQL engine — no UDF, no driver loop. A writer range-repartitions
+  * on the z-value ([[withZValue]]): the sampling-based range exchange
+  * balances output files even when the z-space is unevenly populated.
   */
 object ZOrder {
 
@@ -66,19 +65,5 @@ object ZOrder {
     df.crossJoin(broadcast(bounds))
       .withColumn(zCol, z)
       .drop(cols.flatMap(c => Seq(s"__mn_$c", s"__mx_$c")): _*)
-  }
-
-  /** Cluster `df` by z-order over `cols`: range-repartition on the
-    * z-value into `numPartitions`, sort within partitions, drop the
-    * helper column. Writing the result produces files whose per-file
-    * min/max stats are tight in every clustered dimension.
-    */
-  def cluster(df: DataFrame, cols: Seq[String], numPartitions: Int,
-      bits: Int = 8): DataFrame = {
-    val zCol = graft.functions.ColumnLib.freeColumn(df, "__z")
-    withZValue(df, cols, bits, zCol)
-      .repartitionByRange(numPartitions, col(zCol))
-      .sortWithinPartitions(zCol)
-      .drop(zCol)
   }
 }

@@ -34,7 +34,7 @@ object FactStaffDaily {
     * ingest layer's UTC dates (X-date duality, SURVEY.md §2.7 ⚠).
     */
   def callsAgg(callLog: DataFrame, group: DataFrame,
-      dStart: Column, dEnd: Column, tenant: String = "PK"): DataFrame = {
+      dStart: Column, dEnd: Column, tenant: String): DataFrame = {
     val ringSeconds =
       greatest(
         safeDivide((col("endTime") - col("startTime")).cast(DoubleType), lit(1000.0))
@@ -75,7 +75,7 @@ object FactStaffDaily {
 
   /** `assigned` + `agg_assigned` CTEs (runner.py:639-669). */
   def assignedAgg(customer: DataFrame, group: DataFrame,
-      dStart: Column, dEnd: Column, tenant: String = "PK"): DataFrame = {
+      dStart: Column, dEnd: Column, tenant: String): DataFrame = {
     val assigned = customerInRange(customer, dStart, dEnd)
       .filter(col("tenant") === tenant && col("assignedTime").isNotNull &&
         civilDateVn7(col("assignedTime")).between(dStart, dEnd))
@@ -102,7 +102,7 @@ object FactStaffDaily {
     * both-side coalesce and zero-defaulted metrics.
     */
   def mergeASource(callLog: DataFrame, customer: DataFrame, group: DataFrame,
-      dStart: Column, dEnd: Column, tenant: String = "PK"): DataFrame = {
+      dStart: Column, dEnd: Column, tenant: String): DataFrame = {
     val c = callsAgg(callLog, group, dStart, dEnd, tenant).alias("c")
     val a = assignedAgg(customer, group, dStart, dEnd, tenant).alias("a")
     c.join(a, col("c.Ngay") === col("a.Ngay") &&
@@ -132,7 +132,7 @@ object FactStaffDaily {
     * preserved (runner.py:745, 757 vs runner.py:610).
     */
   def staffDims(callLog: DataFrame, customer: DataFrame, group: DataFrame,
-      dStart: Column, dEnd: Column, tenant: String = "PK"): DataFrame = {
+      dStart: Column, dEnd: Column, tenant: String): DataFrame = {
     val fromCalls = callLog
       .filter(col("tenant") === tenant && col("NgayTao").between(dStart, dEnd))
       .groupBy(col("NgayTao").as("Ngay"),
@@ -162,7 +162,7 @@ object FactStaffDaily {
     * status strings on phone number, classified into the four counters.
     */
   def statusPivot(callLog: DataFrame, customer: DataFrame,
-      dStart: Column, dEnd: Column, tenant: String = "PK"): DataFrame = {
+      dStart: Column, dEnd: Column, tenant: String): DataFrame = {
     val callsAll = callLog
       .filter(col("tenant") === tenant && col("NgayTao").between(dStart, dEnd))
       .select(col("NgayTao").as("Ngay"),
@@ -186,7 +186,7 @@ object FactStaffDaily {
 
   /** MERGE B source `S` (runner.py:835-849). */
   def mergeBSource(callLog: DataFrame, customer: DataFrame, group: DataFrame,
-      dStart: Column, dEnd: Column, tenant: String = "PK"): DataFrame = {
+      dStart: Column, dEnd: Column, tenant: String): DataFrame = {
     val p = statusPivot(callLog, customer, dStart, dEnd, tenant).alias("p")
     val e = staffDims(callLog, customer, group, dStart, dEnd, tenant).alias("e")
     p.join(e, col("p.Ngay") === col("e.Ngay") &&
@@ -239,7 +239,7 @@ object FactStaffDaily {
     * [[factTemplate]].
     */
   def sources(callLog: DataFrame, customer: DataFrame, group: DataFrame,
-      dStart: Column, dEnd: Column, tenant: String = "PK"): Seq[DataFrame] =
+      dStart: Column, dEnd: Column, tenant: String): Seq[DataFrame] =
     Seq(mergeASource(callLog, customer, group, dStart, dEnd, tenant),
       mergeBSource(callLog, customer, group, dStart, dEnd, tenant))
       .map(conformTo(_, factTemplate))
@@ -279,7 +279,7 @@ object FactStaffDaily {
     */
   def refresh(target: DataFrame, callLog: DataFrame, customer: DataFrame,
       group: DataFrame, dStart: Column, dEnd: Column,
-      tenant: String = "PK"): DataFrame =
+      tenant: String): DataFrame =
     mergePair(conformTo(target, factTemplate),
       sources(callLog, customer, group, dStart, dEnd, tenant),
       Some(col("Ngay").between(dStart, dEnd)), tenant)

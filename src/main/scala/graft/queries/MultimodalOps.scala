@@ -196,7 +196,7 @@ object MultimodalOps {
     // codec, no dependency). DuckDB regenerates every field from the
     // id arithmetic and never sees a container byte. Frame DECODE
     // remains stubbed (no JDK video codec); dims/duration/codec are
-    // now measured, not declared — the imageDims posture.
+    // now measured, not declared — the decodeDims posture.
     QueryDef("q177_video_meta",
       (s, dir) => {
         val ids = Tables.table(s, dir, "documents").select("doc_id")

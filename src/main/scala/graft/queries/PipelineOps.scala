@@ -171,7 +171,7 @@ object PipelineOps {
           java.util.Collections.emptyList[Row](), FactStaffDaily.factTemplate)
         FactStaffDaily.refresh(empty,
             callLogAnalog(s, dir), customerAnalog(s, dir), groupAnalog(s, dir),
-            to_date(lit("2024-01-10")), to_date(lit("2024-01-17")))
+            to_date(lit("2024-01-10")), to_date(lit("2024-01-17")), "PK")
           .orderBy("Ngay", "MaNV_id")
       },
       Some(s"""

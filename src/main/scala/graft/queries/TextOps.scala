@@ -1564,10 +1564,8 @@ object TextOps {
     // One merge round of BPE training (operators/Bpe.scala): the corpus
     // collapses to a (word, count) vocab — the only corpus-scale shuffle
     // — and adjacent-symbol pairs are counted weighted by word count.
-    // The iterated trainer (argmax → greedy rewrite → repeat) is
-    // spec-gated in BpeSpec, same posture as the Lloyd loop: the
-    // per-round rewrite fold is not ANSI-SQL-expressible, the
-    // distributed stage is, so the oracle pins exactly that stage.
+    // This distributed stage is what the engine ships and the oracle
+    // pins; the merge loop over the collapsed vocab is not part of it.
     QueryDef("q85_bpe_pairs",
       (s, dir) => {
         graft.operators.Bpe.pairCounts(

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
@@ -48,26 +48,4 @@ object CsvSource {
       .withColumn("quarantined",
         col("quarantined") || trim(col(lineCol)) === "")
   }
-
-  /** Ingest a CSV directory (no header; pass `options("header")` and
-    * pre-filter if needed): parseable rows returned, quarantined raw
-    * lines appended to `quarantineDir` as text. One pass; the same
-    * never-fails posture as [[JsonlSource.ingest]].
-    */
-  def ingest(spark: SparkSession, path: String, schema: StructType,
-      quarantineDir: Option[String] = None,
-      options: Map[String, String] = Map.empty): DataFrame =
-    JsonlSource.ingestLines(spark, path, quarantineDir,
-      lines => parseWithQuarantine(lines, "line", schema, options))
-
-  /** Streaming drop-zone ingest, CSV flavor — the same at-least-once
-    * foreachBatch sink contract as [[JsonlSource.ingestStream]]
-    * (caller supplies checkpointLocation + start()).
-    */
-  def ingestStream(lines: DataFrame, schema: StructType,
-      goodDir: String, quarantineDir: String,
-      options: Map[String, String] = Map.empty)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    JsonlSource.streamSink(lines, goodDir, quarantineDir,
-      batch => parseWithQuarantine(batch, "line", schema, options))
 }

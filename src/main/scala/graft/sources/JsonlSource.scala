@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
@@ -61,68 +61,5 @@ object JsonlSource {
     val opts = Map("mode" -> "PERMISSIVE",
       "columnNameOfCorruptRecord" -> CorruptCol)
     flagQuarantine(lines, schema, from_json(col(lineCol), withCorrupt, opts))
-  }
-
-  /** Ingest a JSONL directory: returns the parseable rows (schema
-    * fields + the raw `line`), appending quarantined raw lines to
-    * `quarantineDir` as text for offline triage. One pass over the
-    * input; the quarantine write sees only the (presumed-rare) bad
-    * rows. A 100%-corrupt input still returns an empty frame rather
-    * than failing — corrupt media is data, not an error, at corpus
-    * scale.
-    */
-  /** Streaming drop-zone ingest: a `readStream` of raw lines (file
-    * source or otherwise, column `line`) parsed per micro-batch, good
-    * rows appended to `goodDir` as parquet, torn raw lines to
-    * `quarantineDir` as text. Both writes ride `foreachBatch`, so a
-    * retried batch can re-append (at-least-once, like the audit-log
-    * posture); the returned writer still needs `.option("checkpointLocation",
-    * ...)` and `.start()` from the caller. Downstream exactly-once
-    * comes from the id/content dedup streams or a digest-keyed merge —
-    * the same recovery contract as the batch path's idempotent re-run.
-    */
-  def ingestStream(lines: DataFrame, schema: StructType,
-      goodDir: String, quarantineDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    streamSink(lines, goodDir, quarantineDir,
-      batch => parseWithQuarantine(batch, "line", schema))
-
-  /** Shared drop-zone sink skeleton ([[JsonlSource]]/[[CsvSource]]). */
-  private[sources] def streamSink(lines: DataFrame, goodDir: String,
-      quarantineDir: String, parse: DataFrame => DataFrame)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    lines.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        val parsed = parse(batch)
-          .localCheckpoint(false) // both sinks read the parse once
-        parsed.filter(col("quarantined")).select(col("line"))
-          .write.mode("append").text(quarantineDir)
-        parsed.filter(!col("quarantined")).drop("quarantined")
-          .write.mode("append").parquet(goodDir)
-    }
-
-  def ingest(spark: SparkSession, path: String, schema: StructType,
-      quarantineDir: Option[String] = None): DataFrame =
-    ingestLines(spark, path, quarantineDir,
-      lines => parseWithQuarantine(lines, "line", schema))
-
-  /** Shared ingest skeleton ([[JsonlSource]]/[[CsvSource]]): text scan
-    * → `parse` → quarantined raw lines appended as text, good rows
-    * returned.
-    */
-  private[sources] def ingestLines(spark: SparkSession, path: String,
-      quarantineDir: Option[String],
-      parse: DataFrame => DataFrame): DataFrame = {
-    val raw = parse(
-      spark.read.text(path).withColumnRenamed("value", "line"))
-    // With a quarantine sink, two actions read the parse: cut the
-    // lineage once so the text scan + parse run once, not twice.
-    val parsed =
-      if (quarantineDir.isDefined) raw.localCheckpoint(false) else raw
-    quarantineDir.foreach { q =>
-      parsed.filter(col("quarantined")).select(col("line"))
-        .write.mode("append").text(q)
-    }
-    parsed.filter(!col("quarantined")).drop("quarantined")
   }
 }

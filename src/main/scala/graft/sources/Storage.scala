@@ -116,36 +116,10 @@ object Storage {
       stored.map(_.name).filterNot(found.fieldNames.contains)
     }
 
-  /** Small-file compaction: rewrite a (partitioned) parquet table so
-    * each partition holds few large files instead of the many small
-    * ones an incremental/streaming sink accumulates. At scale, scan
-    * cost is dominated by file count (footer reads, task scheduling),
-    * so periodic compaction is part of the table lifecycle. One shuffle
-    * on the partition key; data is byte-identical afterwards.
-    */
-  def compact(spark: SparkSession, path: String, schema: StructType,
-      partitionCols: Seq[String] = Nil,
-      maxRecordsPerFile: Long = 5000000L): Unit =
-    // Write-to-temp + swap: the rewrite streams from the ORIGINAL files
-    // (no in-memory snapshot of the table), and a crash mid-write
-    // leaves the original intact — an in-place overwrite would delete
-    // the source before the rewrite is durable. Single-writer
-    // assumption as everywhere else in this warehouse.
-    rewriteInPlace(spark, path) { tmp =>
-      val df = read(spark, path, schema)
-      val w =
-        if (partitionCols.nonEmpty)
-          df.repartition(partitionCols.map(col): _*)
-            .write.mode("overwrite").partitionBy(partitionCols: _*)
-        else
-          df.coalesce(math.max(1, spark.sparkContext.defaultParallelism / 4))
-            .write.mode("overwrite")
-      w.option("maxRecordsPerFile", maxRecordsPerFile).parquet(tmp)
-    }
-
-  /** Rewrite-and-swap skeleton shared by [[compact]] and the index
-    * compactions: `write(tmpPath)` produces the replacement table, then
-    * the live dir is swapped via PARK-then-replace, NOT
+  /** Rewrite-and-swap skeleton of the index compactions
+    * ([[graft.operators.IndexCommit.compact]]): `write(tmpPath)`
+    * produces the replacement table, then the live dir is swapped via
+    * PARK-then-replace, NOT
     * delete-then-rename — a crash between a delete and a rename would
     * leave NO live table with the data stranded in tmp. Here the
     * no-table window is one rename wide and every crash position is
@@ -169,105 +143,6 @@ object Storage {
     fs.rename(pPath, pOld)
     fs.rename(pTmp, pPath)
     fs.delete(pOld, true)
-  }
-
-  /** Training-shard export — the final step of a corpus build (clean →
-    * pack → order → SHARD): rows carrying a global position column
-    * (e.g. [[graft.operators.Sampling.deterministicShuffle]]'s `pos`)
-    * are written as size-bounded, order-preserving parquet shards.
-    * Shard k holds exactly the positions [k*rowsPerShard,
-    * (k+1)*rowsPerShard): a data loader that walks `shard=k` dirs in
-    * key order and reads rows in file order replays the corpus in
-    * training order, and any shard range can be re-read or re-exported
-    * independently (the resumable-loader contract).
-    *
-    * One shuffle, keyed on the derived shard id, so each shard lands
-    * WHOLE in one task and therefore one file — file count is
-    * nShards, not nShards x tasks. Sorting within partitions is
-    * shard-major then position, which keeps every shard file
-    * internally position-sorted.
-    */
-  def writeShards(df: DataFrame, posCol: String, rowsPerShard: Long,
-      path: String): Unit = {
-    require(rowsPerShard > 0, "need a positive shard size")
-    val spark = df.sparkSession
-    // A shard export is a SNAPSHOT, not an incremental table: under the
-    // engine's dynamic partitionOverwriteMode a re-export that produces
-    // FEWER shards would leave the previous export's tail directories
-    // in place, and a loader walking shard dirs would replay stale
-    // rows. Delete the whole target first (the input must not read
-    // from `path`; shard exports never do) — but ONLY a target that is
-    // absent, empty, or a prior shard export (has _manifest.jsonl).
-    // An unconditional recursive delete would let one mistyped path
-    // irreversibly destroy arbitrary data.
-    val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(target)) {
-      val isPriorExport =
-        fs.exists(new org.apache.hadoop.fs.Path(target, "_manifest.jsonl"))
-      val isEmpty = !isPriorExport && fs.listStatus(target).isEmpty
-      require(isPriorExport || isEmpty,
-        s"refusing to overwrite '$path': it exists, is non-empty, and has " +
-          "no _manifest.jsonl - not a prior shard export. Delete it " +
-          "explicitly if this is intended.")
-      fs.delete(target, true)
-    }
-    val shardC = graft.functions.ColumnLib.freeColumn(df, "shard")
-    val sharded = df.withColumn(shardC,
-        org.apache.spark.sql.functions.expr(s"`$posCol` DIV $rowsPerShard"))
-      .localCheckpoint(true) // read twice: data write + manifest counts
-    sharded
-      .repartition(col(shardC))
-      .sortWithinPartitions(col(shardC), col(posCol))
-      .write.mode("overwrite").partitionBy(shardC).parquet(path)
-    // Manifest: one line per shard (id, row count) + a totals line —
-    // the loader-side contract that lets a consumer verify a complete,
-    // gap-free export (and size its readers) WITHOUT listing/opening
-    // shard files. Written last: a manifest's existence implies the
-    // data it describes is fully on disk.
-    import org.apache.spark.sql.functions.{col => c}
-    val counts = sharded.groupBy(c(shardC).as("shard"))
-      .agg(org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n_rows"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val manifest =
-      (counts.map { case (s0, n) => s"""{"shard":$s0,"n_rows":$n}""" } :+
-        s"""{"total_shards":${counts.length},"total_rows":${counts.map(_._2).sum}}""")
-        .mkString("", "\n", "\n")
-    val out = fs.create(new org.apache.hadoop.fs.Path(path, "_manifest.jsonl"))
-    try out.write(manifest.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** Parse a [[writeShards]] manifest back: (shard, n_rows) rows in
-    * shard order. The totals line is verified against the per-shard
-    * lines, so a truncated manifest fails loudly instead of
-    * under-reading.
-    */
-  def readShardManifest(spark: SparkSession, path: String): Seq[(Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(path, "_manifest.jsonl")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.linesIterator.filter(_.nonEmpty).toSeq
-    if (lines.isEmpty)
-      throw new IllegalStateException(
-        s"empty shard manifest at $p: the export did not complete " +
-          "(a manifest is written only after all shard data is on disk)")
-    val shardRe = """\{"shard":(\d+),"n_rows":(\d+)\}""".r
-    val totalRe = """\{"total_shards":(\d+),"total_rows":(\d+)\}""".r
-    val shards = lines.init.map {
-      case shardRe(s0, n) => (s0.toLong, n.toLong)
-      case l => throw new IllegalStateException(s"bad manifest line: $l")
-    }
-    lines.last match {
-      case totalRe(ts, tr) =>
-        require(ts.toInt == shards.length && tr.toLong == shards.map(_._2).sum,
-          "manifest totals disagree with per-shard lines")
-      case l => throw new IllegalStateException(s"bad manifest totals: $l")
-    }
-    shards
   }
 
   /** Bucketed managed table: pre-shuffled layout on the join/agg key.

@@ -48,7 +48,7 @@ class BatchRunnerSpec extends SparkSpec {
     FactStaffDaily.sources(spark.read.parquet(s"$wh/call_log"),
       spark.read.parquet(s"$wh/customer"),
       spark.read.parquet(s"$wh/group").select("group_id", "name"),
-      to_date(lit(d.minusDays(7).toString)), to_date(lit(d.toString)))
+      to_date(lit(d.minusDays(7).toString)), to_date(lit(d.toString)), "PK")
   }
 
   private def ngayRange(src: DataFrame): (java.sql.Date, java.sql.Date) = {
@@ -332,9 +332,9 @@ class BatchRunnerSpec extends SparkSpec {
       java.util.List.of[org.apache.spark.sql.Row](),
       graft.pipelines.FactStaffDaily.factTemplate)
     val once = graft.pipelines.FactStaffDaily.refresh(
-      empty, callLog, customer, group, lo, hi).localCheckpoint()
+      empty, callLog, customer, group, lo, hi, "PK").localCheckpoint()
     val twice = graft.pipelines.FactStaffDaily.refresh(
-      once, callLog, customer, group, lo, hi)
+      once, callLog, customer, group, lo, hi, "PK")
     assert(lateRows(once) == perStaff)
     assert(lateRows(twice) == (perStaff ++ perStaff).sorted)
   }

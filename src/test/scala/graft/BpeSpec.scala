@@ -2,88 +2,26 @@ package graft
 
 import graft.operators.Bpe
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 
 class BpeSpec extends SparkSpec {
 
   // The classic BPE teaching corpus: hug x10, pug x5, pun x12, bun x4,
-  // hugs x5 — merge ranks are hand-computable.
+  // hugs x5 — pair counts are hand-computable.
   private def corpus = df("text STRING",
     Row((List.fill(10)("hug") ++ List.fill(5)("pug") ++
       List.fill(12)("pun") ++ List.fill(4)("bun") ++
       List.fill(5)("hugs")).mkString(" ")))
 
-  test("train learns the hand-computed merges in order, with counts") {
-    val merges = Bpe.train(corpus, "text", 3)
-    assert(merges.map(m => (m.left, m.right, m.merged, m.cnt)) == Seq(
-      ("u", "g", "ug", 20L),   // hug(10) + pug(5) + hugs(5)
-      ("u", "n", "un", 16L),   // pun(12) + bun(4)
-      ("h", "ug", "hug", 15L)  // hug(10) + hugs(5), post-merge-1 symbols
-    ), s"got $merges")
-  }
-
-  test("encode applies merges in rank order, map-side") {
-    val merges = Bpe.train(corpus, "text", 3)
-    val out = Bpe.encode(df("text STRING", Row("hugs bun")), "text", merges)
-      .select("word", "tokens").collect()
-      .map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
-    assert(out == Map(
-      "hugs" -> List("hug", "s"),
-      "bun" -> List("b", "un")))
-    // Tokens always reassemble the word (no characters lost or invented).
-    val all = Bpe.encode(corpus, "text", merges)
-    assert(all.filter(concat_ws("", col("tokens")) =!= col("word")).count() == 0)
-  }
-
-  test("merge application is greedy left-to-right, non-overlapping") {
-    val got = df("s STRING", Row("b b b"))
-      .select(Bpe.applyMerge(col("s"), "b", "b", "bb")).head().getString(0)
-    assert(got == "bb b", "a fused symbol must not re-pair with its consumer")
-  }
-
-  test("encodeIter (large-vocab path) tokenizes identically to the expression encoder") {
-    val big = Tables.table(spark, "/root/testdata/sf0.001", "documents")
-    val merges = Bpe.train(big, "text", 12)
-    def canon(rows: Array[org.apache.spark.sql.Row]) =
-      rows.map(r => r.getString(0) -> r.getSeq[String](1).toList)
-        .sortBy(_.toString).toList
-    val viaExpr = canon(Bpe.encode(big, "text", merges)
-      .select("word", "tokens").collect())
-    val viaIter = canon(Bpe.encodeIter(big, "text", merges).collect())
-    assert(viaExpr == viaIter,
-      "the mapPartitions encoder must match the compiled-expression encoder")
-  }
-
-  test("training is deterministic across physical layouts") {
-    val big = Tables.table(spark, "/root/testdata/sf0.001", "documents")
-    val a = Bpe.train(big, "text", 4)
-    val b = Bpe.train(big.repartition(13), "text", 4)
-    assert(a == b, "merge list must not depend on partitioning")
-  }
-
-  test("local trainer is byte-identical to the distributed loop") {
-    val big = Tables.table(spark, "/root/testdata/sf0.001", "documents")
-    val local = Bpe.train(big, "text", 12)
-    val dist = Bpe.trainDistributed(big, "text", 12)
-    assert(local == dist,
-      "collected-vocab training must reproduce the per-round Spark loop exactly")
-  }
-
-  test("train launches O(1) Spark jobs regardless of merge count") {
-    // The contract that makes a 32k-merge vocabulary trainable: only
-    // the vocab collapse touches Spark; the merge loop is driver-local.
-    // Job counts are compared across merge counts rather than pinned
-    // to a constant (AQE decides how many jobs one collect becomes).
-    def jobsFor(n: Int): Int = {
-      val group = s"bpe-jobcount-$n"
-      spark.sparkContext.setJobGroup(group, "count jobs", false)
-      try Bpe.train(corpus, "text", n)
-      finally spark.sparkContext.clearJobGroup()
-      spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-    }
-    val few = jobsFor(2)
-    val many = jobsFor(40)
-    assert(many == few,
-      s"job count must not scale with nMerges (got $few jobs for 2 merges, $many for 40)")
+  test("pairCounts weights each adjacent symbol pair by its word's count") {
+    val got = Bpe.pairCounts(Bpe.vocab(corpus, "text"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got == Map(
+      "h u" -> 15L,  // hug(10) + hugs(5)
+      "u g" -> 20L,  // hug(10) + pug(5) + hugs(5)
+      "p u" -> 17L,  // pug(5) + pun(12)
+      "u n" -> 16L,  // pun(12) + bun(4)
+      "b u" -> 4L,   // bun(4)
+      "g s" -> 5L    // hugs(5)
+    ), s"got $got")
   }
 }

@@ -21,13 +21,6 @@ class ColumnLibSpec extends SparkSpec {
     assert(d(msAt) == ("2024-03-10", "2024-03-11"))
   }
 
-  test("toIntTimestamp coerces strings/floats and zeroes the unparseable") {
-    val out = df("v STRING", Row("1710090000000"), Row(" 1710090000000.7 "),
-        Row("garbage"), Row(null))
-      .select(toIntTimestamp(col("v")).as("ms")).collect().map(_.getLong(0))
-    assert(out.toSeq == Seq(1710090000000L, 1710090000000L, 0L, 0L))
-  }
-
   test("rowHash ignores volatile columns and is stable") {
     val base = df("id BIGINT, name STRING, updateTime BIGINT",
       Row(Long.box(1), "ann", Long.box(100)))
@@ -54,12 +47,6 @@ class ColumnLibSpec extends SparkSpec {
     assert(out.schema.map(f => (f.name, f.dataType)) ==
       Seq("a" -> LongType, "missing" -> DoubleType, "b" -> StringType))
     assert(out.head().toSeq == Seq(7L, null, "x"))
-  }
-
-  test("ensureUniqueColumns suffixes duplicates") {
-    val in = df("a BIGINT, b BIGINT", Row(Long.box(1), Long.box(2)))
-      .toDF("c", "c")
-    assert(ensureUniqueColumns(in).columns.toSeq == Seq("c", "c__1"))
   }
 
   test("latestWins keeps exactly the top row per key") {

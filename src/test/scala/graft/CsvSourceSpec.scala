@@ -2,7 +2,6 @@ package graft
 
 import graft.sources.CsvSource
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 class CsvSourceSpec extends SparkSpec {
@@ -41,16 +40,5 @@ class CsvSourceSpec extends SparkSpec {
       lines("x,b"), "line", schema, Map("mode" -> "FAILFAST"))
       .select("quarantined").head()
     assert(forced.getBoolean(0))
-  }
-
-  test("ingest: good rows returned, raw bad lines quarantined, never fails") {
-    val dir = tempDir("csv_src")
-    val qdir = dir + "/quarantine"
-    lines("1,a", "x,b", "3,c").select(col("line").as("value"))
-      .write.mode("overwrite").text(dir + "/in")
-    val good = CsvSource.ingest(spark, dir + "/in", schema, Some(qdir))
-    assert(good.select("id").collect().map(_.getLong(0)).toSet == Set(1L, 3L))
-    assert(spark.read.text(qdir).collect().map(_.getString(0)).toSeq ==
-      Seq("x,b"))
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Dedup
-import graft.functions.TextFunctions._
+import graft.functions.ShingleReference.wordShingles
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
@@ -42,7 +42,7 @@ class DedupSpec extends SparkSpec {
       Dedup.explodedShinglesWindowed(tricky, "doc_id", "text", 3)
         .toDF("doc_id", "g"))
     val hof = pairs(tricky.select(col("doc_id"),
-      explode(graft.functions.TextFunctions.wordShingles(col("text"), 3))
+      explode(wordShingles(col("text"), 3))
         .as("g")))
     assert(native == windowed && native == hof,
       s"formulations disagree:\n$native\n$windowed\n$hof")
@@ -445,24 +445,6 @@ class DedupSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"),
       s"native simhash signatures must not shuffle:\n$plan")
-  }
-
-  test("MinHashUnionAgg: group union signature = element-wise minima = re-shingled union") {
-    import graft.functions.MinHashUnionAgg
-    val sig = Dedup.minhashSignatures(docs, "doc_id", "text", k = 4, n = 3)
-      .withColumn("grp", when(col("doc_id") <= 2, "g1").otherwise("g2"))
-    val unioned = sig.groupBy("grp")
-      .agg(MinHashUnionAgg.unionSignature(4)(
-        array(col("h0"), col("h1"), col("h2"), col("h3"))).as("usig"))
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-    // Oracle: signature of the concatenated documents' shingle union ==
-    // element-wise min of member signatures (min over union = min of mins).
-    val perDoc = sig.collect().map(r =>
-      r.getLong(0) -> (1 to 4).map(r.getString)).toMap
-    def elemMin(ids: Seq[Long]) =
-      (0 until 4).map(i => ids.map(perDoc(_)(i)).min)
-    assert(unioned("g1") == elemMin(Seq(1L, 2L)))
-    assert(unioned("g2") == elemMin(Seq(3L, 4L)))
   }
 
   test("simhashNearDupPairs: banded candidates recover exact and near dups") {

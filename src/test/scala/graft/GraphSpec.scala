@@ -10,16 +10,6 @@ class GraphSpec extends SparkSpec {
     df("a BIGINT, b BIGINT",
       pairs.map(p => Row(Long.box(p._1), Long.box(p._2))): _*)
 
-  test("canonicalEdges: dedups, orients a<b, drops loops and nulls") {
-    val raw = df("a BIGINT, b BIGINT",
-      Row(Long.box(2), Long.box(1)), Row(Long.box(1), Long.box(2)),
-      Row(Long.box(3), Long.box(3)), Row(null, Long.box(4)),
-      Row(Long.box(4), Long.box(5)))
-    val got = Graph.canonicalEdges(raw, "a", "b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == Set((1L, 2L), (4L, 5L)))
-  }
-
   test("triangleCounts: K4, square, pendant — matches brute force") {
     // K4 on {1,2,3,4}: C(4,3)=4 triangles, every vertex in 3.
     // Square {5,6,7,8} (no diagonal): zero triangles.

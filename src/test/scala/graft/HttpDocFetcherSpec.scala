@@ -213,38 +213,30 @@ class HttpDocFetcherSpec extends SparkSpec {
     }
   }
 
-  test("production wiring end-to-end: env config → HTTP client → PagedStream tick → merged table") {
-    // The full deployable chain, network-free: ApiConfig wires tenant
-    // credentials from the (injected) env into the retrying HTTP
-    // client, PagedStream.tick fetches over real HTTP from the stub,
-    // spools, and drains through AvailableNow into the upsert target.
+  test("production wiring end-to-end: env config → HTTP client → BatchRunner slot → merged table") {
+    // The full deployable chain as `Cli` wires it, network-free:
+    // ApiConfig reads tenant credentials from the (injected) env, its
+    // dispatching fetcher routes to the retrying HTTP client, and one
+    // customer slot fetches over real HTTP from the stub and merges
+    // into the warehouse's customer table.
     withStub(new CallioStub(T0, 60)) { stub =>
       HttpDocFetcher.clearTokenCache()
-      val cfg = graft.sources.ApiConfig.fromEnv(Map(
+      val env = Map(
         "CALLIO_API_BASE_URL" -> stub.baseUrl,
         "API_TIMEOUT" -> "10",
         "CALLIO_ACCOUNTS_JSON" ->
-          """[{"tenant":"t1","email":"u@example.test","password":"pw"}]"""))
-      val dir = java.nio.file.Paths.get(tempDir("http_stream"))
-      import org.apache.spark.sql.functions._
-      def transform(docs: org.apache.spark.sql.DataFrame) =
-        docs.select(col("_id"), col("updateTime"), col("v"),
-          date_format((col("updateTime") / 1000).cast("timestamp"),
-            "yyyy-MM-dd").as("d"))
-      val r = graft.streaming.PagedStream.tick(spark,
-        cfg.fetcherFor("t1"),
-        entity = "customer", tenant = "t1", timeField = "updateTime",
-        cutoffMs = T0 - 1, nowMs = T0 + 60 * 60000L, feed = feed,
-        transform = transform,
-        spoolDir = dir.resolve("spool").toString,
-        targetPath = dir.resolve("customer").toString,
-        keys = Seq("_id"), partitionCol = "d",
-        checkpointDir = dir.resolve("ck").toString,
-        sliceMs = 1800000L, pageSize = cfg.pageSize)
-      assert(r.stagedRows == 60 && !r.hitResultWindowLimit)
-      val t = spark.read.parquet(dir.resolve("customer").toString)
-      assert(t.count() == 60, "all fetched docs must land in the target")
-      assert(stub.loginCount.get() == 1, "one login for the whole tick")
+          """[{"tenant":"t1","email":"u@example.test","password":"pw"}]""",
+        "GRAFT_WAREHOUSE_DIR" -> tempDir("http_wiring"),
+        "DAYS_TO_FETCH_IF_EMPTY" -> "1")
+      val api = graft.sources.ApiConfig.fromEnv(env)
+      val cfg = Cli.runnerConfig(env, api)
+      val runner = new graft.pipelines.BatchRunner(spark, api.dispatchingFetcher,
+        new graft.sources.HttpSnapshotFetcher(api.httpConfigFor), cfg)
+      runner.bootstrap()
+      runner.runCustomer(T0 + 60 * 60000L)
+      val t = spark.read.parquet(s"${cfg.warehouseDir}/customer")
+      assert(t.count() == 60, "all fetched docs must land in the customer table")
+      assert(stub.loginCount.get() == 1, "one login for the whole slot")
     }
   }
 

@@ -47,27 +47,10 @@ class JsonlSourceSpec extends SparkSpec {
     assert(!out("""{"id":9,"name":"ok"}"""))
   }
 
-  test("ingest: one pass, good rows returned, raw bad lines quarantined") {
-    val dir = tempDir("jsonl_src")
-    val qdir = dir + "/quarantine"
-    lines("""{"id":1,"name":"a"}""", """{"id":2""", """{"id":3,"name":"c"}""")
-      .select(col("line").as("value"))
-      .write.mode("overwrite").text(dir + "/in")
-    val good = JsonlSource.ingest(spark, dir + "/in", schema, Some(qdir))
-    assert(good.select("id").collect().map(_.getLong(0)).toSet == Set(1L, 3L))
-    // quarantine holds the raw torn line byte-for-byte
-    val q = spark.read.text(qdir).collect().map(_.getString(0)).toSeq
-    assert(q == Seq("""{"id":2"""))
-    // a second ingest APPENDS to the quarantine (triage log, not state)
-    JsonlSource.ingest(spark, dir + "/in", schema, Some(qdir))
-    assert(spark.read.text(qdir).count() == 2)
-  }
-
   test("100%-corrupt input returns empty, never fails") {
-    val dir = tempDir("jsonl_bad")
-    lines("oops", "{{{{").select(col("line").as("value"))
-      .write.mode("overwrite").text(dir)
-    assert(JsonlSource.ingest(spark, dir, schema).count() == 0)
+    val out = JsonlSource.parseWithQuarantine(lines("oops", "{{{{"), "line", schema)
+    assert(out.filter(!col("quarantined")).count() == 0)
+    assert(out.count() == 2, "every corrupt line stays, flagged")
     // declaring the corrupt column in the caller schema is a loud error
     intercept[IllegalArgumentException] {
       JsonlSource.parseWithQuarantine(lines("x"), "line",

@@ -54,12 +54,4 @@ class MaterializedAggSpec extends SparkSpec {
         Seq("k"), Seq("x"))
     }
   }
-
-  test("withAverages derives sum/n") {
-    val s = MaterializedAgg.aggregate(facts((1L, 10.0), (1L, 20.0)),
-      Seq("k"), Seq("x"))
-    val avg = MaterializedAgg.withAverages(s, Seq("x"))
-      .head().getAs[Double]("avg_x")
-    assert(avg == 15.0)
-  }
 }

@@ -32,42 +32,19 @@ class MultimodalSpec extends SparkSpec {
     assert(f1.values.flatten.forall(v => v >= 0.0f && v <= 1.0f))
   }
 
-  test("resizeStub subsamples bytes and rewrites metadata dims") {
-    val m = Multimodal.asMediaTable(base, "id", "payload", "image")
-    val out = Multimodal.resizeStub(m, factor = 2)
-      .filter(col("media_id") === 1).head()
-    assert(new String(out.getAs[Array[Byte]](1)) == "acegi") // every 2nd byte
-    val meta = out.getStruct(2)
-    assert(meta.getAs[Long]("n_bytes") == 5L)
-    assert(meta.getAs[Int]("width") == 21) // 42 / 2
-  }
-
-  test("imageDims reads real PNG headers; garbage payloads yield NULL dims") {
+  test("decodeDims reads real PNG headers; garbage payloads yield no dims") {
     // A REAL 2x2 PNG, generated with the same JDK surface the reader
-    // uses — this is the de-stubbed path: measured dims, not the
-    // asMediaTable placeholder arithmetic.
+    // uses: measured dims, not the asMediaTable placeholder arithmetic.
     val img = new java.awt.image.BufferedImage(
       2, 2, java.awt.image.BufferedImage.TYPE_INT_RGB)
     img.setRGB(0, 0, 0xff0000); img.setRGB(1, 1, 0x0000ff)
     val bos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "png", bos)
-    val png = bos.toByteArray
-    val rows = spark.createDataFrame(
-      java.util.Arrays.asList(
-        Row(Long.box(1), png),
-        Row(Long.box(2), "not an image".getBytes("UTF-8"))),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("media_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("payload",
-          org.apache.spark.sql.types.BinaryType))))
-    val dims = Multimodal.imageDims(rows)
-      .collect().map(r => r.getLong(0) ->
-        (Option(r.get(1)), Option(r.get(2)))).toMap
-    assert(dims(1L) == (Some(2), Some(2)),
+    assert(Multimodal.decodeDims(bos.toByteArray) == Some((2, 2)),
       "a real PNG header must yield measured dims")
-    assert(dims(2L) == (None, None),
-      "undecodable payloads must yield NULL dims, not fail the batch")
+    assert(Multimodal.decodeDims("not an image".getBytes("UTF-8")) == None,
+      "undecodable payloads must yield no dims, not throw")
+    assert(Multimodal.decodeDims(null) == None)
   }
 
   test("ImageHistogramDecoder extracts real pixel histograms; fallback for garbage") {
@@ -156,15 +133,6 @@ class MultimodalSpec extends SparkSpec {
       assert(dec == Seq(n.toFloat, mean.toFloat, meanAbs.toFloat, zc.toFloat,
         s.min.toFloat, s.max.toFloat, meanSq.toFloat, 16000f), s"id $id")
     }
-  }
-
-  test("frameSample slices payload at stride with cap; short payload yields none") {
-    val m = Multimodal.asMediaTable(base, "id", "payload", "video")
-    val out = Multimodal.frameSample(m, frameBytes = 4, stride = 2, maxFrames = 3)
-      .collect().map(r => r.getLong(0) ->
-        r.getSeq[Array[Byte]](3).map(new String(_))).toMap
-    assert(out(1L) == Seq("abcd", "cdef", "efgh")) // capped at 3 frames
-    assert(out(2L) == Seq.empty)                    // 2 bytes < frame size
   }
 
   test("stripPngMeta: removes metadata chunks byte-exactly; guards torn input") {

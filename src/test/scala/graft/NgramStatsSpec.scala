@@ -15,7 +15,7 @@ class NgramStatsSpec extends SparkSpec {
 
   /** The reference formulation the native expression replaces. */
   private def hofStats(n: Int) = {
-    val grams = TextFunctions.wordShingles(col("text"), n)
+    val grams = graft.functions.ShingleReference.wordShingles(col("text"), n)
     struct(
       TextFunctions.tokenCountWs(col("text")).as("n_tokens"),
       size(grams).as("n_grams"),

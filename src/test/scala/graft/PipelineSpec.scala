@@ -99,7 +99,7 @@ class PipelineSpec extends SparkSpec {
         java.sql.Date.valueOf("2024-01-10"), java.sql.Date.valueOf("2024-01-10"), "PK"))
     val group = df("group_id STRING, name STRING", Row("0", "TeamZero"))
     val out = FactStaffDaily.refresh(seeded, callLog, customer, group,
-      to_date(lit("2024-01-08")), to_date(lit("2024-01-14")))
+      to_date(lit("2024-01-08")), to_date(lit("2024-01-14")), "PK")
     val r = out.filter(col("Ngay") === "2024-01-10" && col("MaNV_id") === "1").head()
     // MERGE A rewrote the metric columns (full update)
     assert(r.getAs[Long]("TongCuoc") == 1L)
@@ -116,8 +116,8 @@ class PipelineSpec extends SparkSpec {
     val customer = graft.queries.PipelineOps.customerAnalog(spark, "/root/testdata/sf0.001")
     val group = graft.queries.PipelineOps.groupAnalog(spark, "/root/testdata/sf0.001")
     val lo = to_date(lit("2024-01-10")); val hi = to_date(lit("2024-01-17"))
-    val once = FactStaffDaily.refresh(empty, callLog, customer, group, lo, hi)
-    val twice = FactStaffDaily.refresh(once, callLog, customer, group, lo, hi)
+    val once = FactStaffDaily.refresh(empty, callLog, customer, group, lo, hi, "PK")
+    val twice = FactStaffDaily.refresh(once, callLog, customer, group, lo, hi, "PK")
     assert(rowSet(once) == rowSet(twice))
   }
 }

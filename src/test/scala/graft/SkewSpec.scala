@@ -142,7 +142,7 @@ class SkewSpec extends SparkSpec {
       Row("PK", java.sql.Date.valueOf("2024-01-11"), "0902", "KH từ chối"))
     val d0 = lit(java.sql.Date.valueOf("2024-01-01"))
     val d1 = lit(java.sql.Date.valueOf("2024-01-31"))
-    val routed = FactStaffDaily.statusPivot(callLog, customer, d0, d1)
+    val routed = FactStaffDaily.statusPivot(callLog, customer, d0, d1, "PK")
     // Plain-join restatement of the same pivot.
     val aggs = Classifiers.statusPivotAggs(col("TrangThaiXuLi"))
     val plain = callLog

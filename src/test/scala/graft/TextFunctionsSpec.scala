@@ -48,15 +48,6 @@ class TextFunctionsSpec extends SparkSpec {
     assert(out == 3)
   }
 
-  test("minhash is the minimum seeded digest over shingles and varies by seed") {
-    val d = df("t STRING", Row("a b c d e"))
-    val r = d.select(
-      minhash(wordShingles(col("t"), 3), 0).as("h0"),
-      minhash(wordShingles(col("t"), 3), 1).as("h1")).head()
-    val (h0, h1) = (r.getString(0), r.getString(1))
-    assert(h0.length == 16 && h1.length == 16 && h0 != h1)
-  }
-
   test("packTwoPass offsets equal the single-window formulation") {
     import org.apache.spark.sql.expressions.Window
     val d = Tables.table(spark, "/root/testdata/sf0.001", "documents")

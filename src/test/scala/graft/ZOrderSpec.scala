@@ -40,28 +40,6 @@ class ZOrderSpec extends SparkSpec {
     assert(got === Seq(0L, 255L, 127L, 0L, 0L))
   }
 
-  test("cluster: tight per-partition ranges in BOTH dims; rows preserved") {
-    // 32x32 grid; 16 partitions. A z-ordered split bounds each
-    // partition to a sub-rectangle; a linear sort on x leaves y
-    // spanning the full 0..31 in every partition.
-    val grid = spark.range(1024).select(
-      (col("id") / 32).cast("long").as("x"),
-      (col("id") % 32).cast("long").as("y"))
-    val clustered = ZOrder.cluster(grid, Seq("x", "y"), numPartitions = 16)
-    assert(clustered.count() === 1024)
-    assert(clustered.columns.toSeq === Seq("x", "y"))
-    val spans = clustered
-      .withColumn("pid", spark_partition_id())
-      .groupBy("pid")
-      .agg((max("x") - min("x")).as("sx"), (max("y") - min("y")).as("sy"))
-      .collect()
-    val avgSy = spans.map(_.getLong(2)).sum.toDouble / spans.length
-    val avgSx = spans.map(_.getLong(1)).sum.toDouble / spans.length
-    // Sub-rectangles: both dims bounded well under the full span of 31.
-    assert(avgSx <= 16.0, s"x spans too wide: avg $avgSx")
-    assert(avgSy <= 16.0, s"y spans too wide: avg $avgSy")
-  }
-
   test("file skipping: z-order write prunes files on the NON-leading dim; linear cannot") {
     // The layout claim made concrete at the FILE level, the unit every
     // stats-based scan planner (parquet row groups, lakehouse file
@@ -75,7 +53,8 @@ class ZOrderSpec extends SparkSpec {
       (col("id") / 64).cast("long").as("x"),
       (col("id") % 64).cast("long").as("y"))
     val base = tempDir("graft_spec_zskip")
-    ZOrder.cluster(grid, Seq("x", "y"), numPartitions = 16)
+    ZOrder.withZValue(grid, Seq("x", "y"), bits = 8, zCol = "z")
+      .repartitionByRange(16, col("z")).sortWithinPartitions("z").drop("z")
       .write.parquet(s"$base/z")
     grid.repartitionByRange(16, col("x")).sortWithinPartitions("x", "y")
       .write.parquet(s"$base/linear")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 /** Deterministic offline sources — a Callio-shaped document universe
   * served through the same [[PagedSource.DocFetcher]] /
   * [[BatchRunner.SnapshotFetcher]] contracts the HTTP transport uses.
-  * Used by [[graft.Demo]] and the test suite; also the template for
+  * Used by the test suite; also the template for
   * wiring a real REST transport (replace the doc generators with
   * `java.net.http` calls + the token cache).
   */
