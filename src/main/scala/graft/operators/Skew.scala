@@ -72,7 +72,7 @@ object Skew {
   /** Key-distribution profiler — the "should I salt this join?" number.
     * For each requested column, the top-k values by row count with
     * their fraction of all rows. NULL is a value (and on real fact
-    * tables often THE hot key — see [[nullSafeLeftJoin]]).
+    * tables often THE hot key).
     *
     * ONE scan for all profiled columns: each row explodes into
     * (key_col, value) pairs — column count is a small constant, so the
@@ -137,21 +137,6 @@ object Skew {
         round(col("n_b").cast("double") / col("__tb"), 9).as("share_b"),
         round(abs(col("n_a").cast("double") / col("__ta") -
           col("n_b").cast("double") / col("__tb")), 9).as("share_diff"))
-  }
-
-  /** Null-key short-circuit: rows whose join key is null can never
-    * match an equi-join — route them around the shuffle entirely and
-    * union them back (left-join semantics preserved). On a fact table
-    * where 30% of keys are null this removes 30% of the shuffle.
-    */
-  def nullSafeLeftJoin(left: DataFrame, right: DataFrame, key: String): DataFrame = {
-    val matchable = left.filter(col(key).isNotNull)
-      .join(right, Seq(key), "left")
-    val nulls = left.filter(col(key).isNull)
-    val rightOnlyCols = right.columns.filterNot(_ == key)
-    val nullsPadded = rightOnlyCols.foldLeft(nulls)((df, c) =>
-      df.withColumn(c, lit(null)))
-    matchable.unionByName(nullsPadded.select(matchable.columns.map(col): _*))
   }
 
   /** Sketch-based corpus profile — the 100 TB shape of "how many

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructField
 
 /** Generic conditional upsert (Delta-less MERGE) — the Spark-first
   * re-expression of the reference's three MERGE statements
@@ -489,7 +491,8 @@ object Upsert {
     * affected partition range, merge, and rewrite ONLY those partitions —
     * never the whole table. This is the 100 TB-safe equivalent of the
     * reference's partition-scoped MERGE (runner.py:174-176), and the
-    * one-source call of [[rewritePartitions]].
+    * one-source call of [[rewritePartitions]], pruned to the source's
+    * own partition range.
     */
   def applyToPartitionedParquet(
       spark: org.apache.spark.sql.SparkSession,
@@ -500,47 +503,62 @@ object Upsert {
       sourceOrder: Seq[Column] = Nil,
       updateCond: Option[String] = None,
       updateExprs: Map[String, String] = Map.empty): Unit =
-    rewritePartitions(spark, path, Seq(source), partitionCol) { (target, srcs) =>
-      upsert(target, srcs.head, keys, sourceOrder, updateCond, updateExprs)
-    }
+    rewritePartitions(spark, path, Seq(source), partitionCol) { srcs =>
+      // The source is materialized once, with the min and max of its
+      // partition column observed on that same job, so the range and the
+      // merge see the same rows. Without partition values it has no range
+      // and nothing to merge.
+      val range = Observation()
+      val src = srcs.head.observe(range, min(col(partitionCol)).as("lo"),
+        max(col(partitionCol)).as("hi")).localCheckpoint(eager = true)
+      Option(range.get("lo")).map(Scope(Seq(src), _, range.get("hi")))
+    } { (target, srcs) => upsert(target, srcs.head, keys, sourceOrder, updateCond, updateExprs) }
 
-  /** One physical rewrite of a date-partitioned parquet table by an
-    * in-memory `merge` of one or more sources: writer lock → recovery →
-    * each source materialized once, its partition range observed on that
-    * same job → the target read pruned to the union of the ranges →
-    * `merge(target, sources)` → one temp write → one per-partition
-    * displace/install swap. The swap creates the table root first, so
-    * each install is a rename into an existing directory, as HDFS
-    * requires.
+  /** The sources of a rewrite, and the inclusive range of partition
+    * values, in the partition column's type, that their merge can change.
+    */
+  final case class Scope(sources: Seq[DataFrame], lo: Any, hi: Any)
+
+  /** One physical rewrite of a partitioned parquet table by an in-memory
+    * `merge` of one or more sources: writer lock → recovery → the
+    * caller's prune → target read pruned to it → `merge(target, sources)`
+    * → one temp write → one per-partition displace/install swap. The
+    * swap creates the table root first, so each install is a rename into
+    * an existing directory, as HDFS requires.
     *
-    * Target rows outside the ranges are neither matched nor rewritten
-    * (the reference's MERGE-ON range predicate, runner.py:174-176), and
-    * no job runs only to find a range. When `partitionCol` is a merge
-    * key, as in the fact refresh, a target partition outside one
-    * source's range can match none of that source's rows, so merging
-    * the sources in sequence over the union of their ranges equals
-    * running the merges one by one, each over its own range — and
-    * rewrites each partition once. The target is read in the first
-    * source's schema. A missing table reads as an empty frame of that
-    * schema and needs no range, so its sources are not materialized,
-    * and the first write takes the same merge, temp write and swap. A
-    * source without partition values adds no range; when none has any,
-    * an existing table is left as it is.
+    * The caller supplies the prune. `prune` runs inside the lock, after
+    * recovery, and only for an existing table: it returns the sources to
+    * merge and the range of partitions their merge can change, or None
+    * when there is nothing to merge. [[applyToPartitionedParquet]]
+    * observes its source's range; the fact refresh states its window
+    * (DEVIATIONS.md 14), so its sources are read once, by the write.
+    * Target rows outside the prune are neither read nor rewritten (the
+    * reference's MERGE-ON range predicate, runner.py:174-176). The target
+    * is read in the first source's schema; a missing table reads as an
+    * empty frame of that schema and takes the same merge and swap.
+    *
+    * Every target partition directory within the prune was read, so one
+    * that the merge leaves empty is installed as an empty directory: the
+    * swap displaces the old copy, and a row that moved out of it is not
+    * left behind (DEVIATIONS.md 7). When no source row reaches the write
+    * (row counts observed on the write itself), the table is left as it
+    * is.
     */
   def rewritePartitions(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String,
       sources: Seq[DataFrame],
       partitionCol: String)(
+      prune: Seq[DataFrame] => Option[Scope])(
       merge: (DataFrame, Seq[DataFrame]) => DataFrame): Unit =
     // The lock wraps recovery + merge + swap: every one of those phases
     // mutates the target root, so a second writer must be excluded from
     // ALL of them, not just the swap.
     withWriterLock(spark, path) {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val hBak = new org.apache.hadoop.fs.Path(path + ".merge-bak")
+    val hPath = new Path(path)
+    val hBak = new Path(path + ".merge-bak")
     val tmp = path + ".merge-tmp"
-    val hTmp = new org.apache.hadoop.fs.Path(tmp)
+    val hTmp = new Path(tmp)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
     // RECOVERY first, before anything reads (or existence-probes) the
     // target: a previous attempt may have died between displacing an old
@@ -552,7 +570,7 @@ object Upsert {
     // the backup — the only surviving copy — as stale staging state.)
     if (fs.exists(hBak)) {
       fs.listStatus(hBak).foreach { st =>
-        val dest = new org.apache.hadoop.fs.Path(hPath, st.getPath.getName)
+        val dest = new Path(hPath, st.getPath.getName)
         // A failed restore must ABORT with the backup intact — deleting
         // hBak below would destroy the only copy of the partition.
         if (!fs.exists(dest) && !fs.rename(st.getPath, dest))
@@ -561,32 +579,17 @@ object Upsert {
       }
       fs.delete(hBak, true)
     }
-    // The target is read in the first source's schema, the one every
-    // write of it declares. A missing table reads as an empty frame and
-    // each source is read once, by the merge. For an existing table each
-    // source is materialized once, so its lineage (for the fact refresh:
-    // the FactStaffDaily joins and aggregations) runs once, and its
-    // partition range is an Observation on that same job: the target is
-    // read pruned to the union of the ranges, and the range and the
-    // merge see the same rows. When no source has a partition value
-    // there is nothing to merge.
     val exists = graft.sources.Storage.exists(spark, path)
-    val ranges = sources.map(_ => org.apache.spark.sql.Observation())
-    val srcs =
-      if (!exists) sources
-      else sources.zip(ranges).map { case (s, range) =>
-        s.observe(range, min(col(partitionCol)).as("lo"),
-          max(col(partitionCol)).as("hi")).localCheckpoint(eager = true)
-      }
-    val target =
-      if (!exists) Some(spark.createDataFrame(
-        java.util.List.of[org.apache.spark.sql.Row](), srcs.head.schema))
-      else ranges.map(_.get).filter(_("lo") != null)
-        .map(r => col(partitionCol).between(lit(r("lo")), lit(r("hi"))))
-        .reduceOption(_ || _)
-        .map(graft.sources.Storage.read(spark, path, srcs.head.schema).filter(_))
-    target.foreach { t =>
-      val merged = merge(t, srcs)
+    (if (exists) prune(sources) else Some(Scope(sources, null, null))).foreach { scope =>
+      val schema = scope.sources.head.schema
+      val target =
+        if (!exists) spark.createDataFrame(java.util.List.of[Row](), schema)
+        else graft.sources.Storage.read(spark, path, schema)
+          .filter(col(partitionCol).between(lit(scope.lo), lit(scope.hi)))
+      val read = if (exists) partitionsWithin(spark, fs, hPath, schema(partitionCol), scope) else Nil
+      val rows = scope.sources.map(_ => Observation())
+      val merged = merge(target, scope.sources.zip(rows).map { case (s, o) =>
+        s.observe(o, count(lit(1)).as("rows")) })
       // Write-to-temp + per-partition swap (same staging pattern as
       // [[graft.sources.Storage.rewriteInPlace]]): the merge streams from the
       // ORIGINAL files into a sibling temp dir, then each affected
@@ -610,25 +613,52 @@ object Upsert {
       merged.write.mode("overwrite")
         .option("partitionOverwriteMode", "static")
         .partitionBy(partitionCol).parquet(tmp)
-      // The first write installs into a root that does not exist yet: a
-      // rename into a missing parent fails on HDFS.
-      fs.mkdirs(hPath)
-      fs.mkdirs(hBak)
-      fs.listStatus(hTmp).iterator
-        .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-        .foreach { st =>
-          val name = st.getPath.getName
-          val dest = new org.apache.hadoop.fs.Path(hPath, name)
-          if (fs.exists(dest) &&
-              !fs.rename(dest, new org.apache.hadoop.fs.Path(hBak, name)))
-            throw new java.io.IOException(
-              s"merge swap: cannot displace existing partition $dest")
-          if (!fs.rename(st.getPath, dest))
-            throw new java.io.IOException(
-              s"merge swap: cannot install partition $dest (old copy preserved in $hBak)")
-        }
-      fs.delete(hBak, true)
+      // A source whose branch the plan dropped as empty reports no count.
+      if (rows.exists(_.get.getOrElse("rows", 0L) != 0L)) {
+        // A partition read and not written is installed empty. Recovery
+        // restores only a displaced partition whose destination is
+        // absent, so after a crash each partition is still old or new.
+        val emptied = read.filterNot(n => fs.exists(new Path(hTmp, n)))
+        emptied.foreach(n => fs.mkdirs(new Path(hTmp, n)))
+        // The first write installs into a root that does not exist yet: a
+        // rename into a missing parent fails on HDFS.
+        fs.mkdirs(hPath)
+        fs.mkdirs(hBak)
+        fs.listStatus(hTmp).iterator
+          .filter(st => st.isDirectory && st.getPath.getName.contains("="))
+          .foreach { st =>
+            val name = st.getPath.getName
+            val dest = new Path(hPath, name)
+            if (fs.exists(dest) && !fs.rename(dest, new Path(hBak, name)))
+              throw new java.io.IOException(
+                s"merge swap: cannot displace existing partition $dest")
+            if (!fs.rename(st.getPath, dest))
+              throw new java.io.IOException(
+                s"merge swap: cannot install partition $dest (old copy preserved in $hBak)")
+          }
+        fs.delete(hBak, true)
+        // Non-recursive: only a directory that is still empty goes.
+        emptied.foreach(n => fs.delete(new Path(hPath, n), false))
+      }
       fs.delete(hTmp, true)
+    }
+  }
+
+  /** The partition directories of `table` within `scope`'s range. Each
+    * directory's value is cast to the column's type as a read of the
+    * table casts it, and compared on the Spark driver: no query, no job.
+    */
+  private def partitionsWithin(spark: SparkSession, fs: FileSystem, table: Path,
+      partitionCol: StructField, scope: Scope): Seq[String] = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils._
+    import org.apache.spark.sql.catalyst.expressions._
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    fs.listStatus(table).toSeq.map(_.getPath.getName).filter { name =>
+      val raw = name.stripPrefix(partitionCol.name + "=")
+      val v = Cast(Literal(if (raw == DEFAULT_PARTITION_NAME) null else unescapePathName(raw)),
+        partitionCol.dataType, tz)
+      raw != name && And(GreaterThanOrEqual(v, Literal(scope.lo)),
+        LessThanOrEqual(v, Literal(scope.hi))).eval() == true
     }
   }
 }

@@ -220,18 +220,20 @@ final class BatchRunner(
 
   /** E3: the MERGE A → MERGE B pair into the date-partitioned fact
     * table over a trailing window ending today-VN7 (reference
-    * runner.py:589-595), as ONE physical rewrite: the target is pruned
-    * to the union of the two sources' `Ngay` ranges, and each partition
-    * is written once (DEVIATIONS.md 7 and 14).
+    * runner.py:589-595), as ONE Spark query from the table scans to the
+    * temp write and one swap. The target is pruned to the stated window
+    * `[dStart, dEnd + 1]`, which holds every source row's `Ngay`, and
+    * each partition is written once (DEVIATIONS.md 7 and 14).
     */
   def refreshReporting(dEnd: java.time.LocalDate,
       windowDays: Int = 7, tenant: String = "PK"): Unit = {
-    val lo = to_date(lit(dEnd.minusDays(windowDays.toLong).toString))
-    val hi = to_date(lit(dEnd.toString))
+    val dStart = dEnd.minusDays(windowDays.toLong)
+    val (lo, hi) = (to_date(lit(dStart.toString)), to_date(lit(dEnd.toString)))
     val group = read("group", CallioIngest.groupTemplate).select("group_id", "name")
     val sources = FactStaffDaily.sources(read("call_log", CallioIngest.callLogTemplate),
       read("customer", CallioIngest.customerTemplate), group, lo, hi, tenant)
     Upsert.rewritePartitions(spark, p("fact_staff_daily"), sources, "Ngay")(
+      srcs => Some(Upsert.Scope(srcs, dStart, dEnd.plusDays(1))))(
       FactStaffDaily.mergePair(_, _, pruneA = None, tenant))
   }
 }

@@ -18,15 +18,26 @@ import org.apache.spark.sql.types._
   *    user_name, user_group_id, NgayUpdate, NgayAssign, tenant)
   *  - group(group_id, name)
   *
-  * Scale design: `group` is a tiny dimension → always broadcast (J1, J2,
-  * J4). The two fact aggregations shuffle once on (Ngay, MaNV_id); the
-  * full-outer metric join (J3) reuses that key. The phone join (J5) is
-  * the only potentially skewed fact-to-fact join — null phones are
-  * pre-filtered out of nothing (LEFT join must keep them) but AQE skew
-  * splitting handles hot numbers. Every scan carries the trailing-window
-  * date predicate, which prunes date-partitioned storage.
+  * Scale design: `group` is a tiny dimension → always broadcast, and
+  * the three group joins (J1, J2, J4) share one broadcast. The two MERGE
+  * A aggregations shuffle once each on (Ngay, MaNV_id); the full-outer
+  * metric join (J3) reuses that key. Their distinct counts are
+  * `size(collect_set(..))`, which, like `countDistinct`, ignores nulls
+  * but plans no `Expand` and so no second exchange. MERGE B is one
+  * aggregate on (Ngay, MaNV_id), so one exchange. The phone join (J5)
+  * is the only potentially skewed fact-to-fact join: one plain LEFT
+  * join, since a null phone left-joins to nulls either way, and AQE's
+  * skew split covers hot numbers and a hot null partition. Every scan
+  * carries the trailing-window date predicate, which prunes
+  * date-partitioned storage.
   */
 object FactStaffDaily {
+
+  /** The group dimension as `(g_gid, g_name)`, broadcast. The three
+    * group joins take this one projection, so they share one broadcast.
+    */
+  private def groupNames(group: DataFrame): DataFrame =
+    broadcast(group.select(col("group_id").cast(StringType).as("g_gid"), col("name").as("g_name")))
 
   /** `calls` CTE (runner.py:608-637): call metrics per (Ngay, MaNV_id).
     * The reporting layer derives `Ngay` from epoch millis in UTC+7
@@ -43,16 +54,14 @@ object FactStaffDaily {
     callLog
       .filter(col("tenant") === tenant && col("createTime").isNotNull &&
         col("NgayTao").between(dStart, dEnd))
-      .join(broadcast(group),
-        col("fromGroup__id").cast(StringType) === col("group_id").cast(StringType),
-        "left")
+      .join(groupNames(group), col("fromGroup__id").cast(StringType) === col("g_gid"), "left")
       .groupBy(civilDateVn7(col("createTime")).as("Ngay"),
         col("fromUser__id").cast(StringType).as("MaNV_id"))
       .agg(
         first(col("fromUser__name").cast(StringType), ignoreNulls = true).as("MaNV"),
-        first(coalesce(col("name"), lit("Unassigned")), ignoreNulls = true).as("Team"),
+        first(coalesce(col("g_name"), lit("Unassigned")), ignoreNulls = true).as("Team"),
         count(lit(1)).as("TongCuoc"),
-        countDistinct(col("toNumber")).as("SoSDT_Unique"),
+        size(collect_set(col("toNumber"))).cast(LongType).as("SoSDT_Unique"),
         count_if(col("billDuration") > 0).as("SoCuoc_NoiMay"),
         count_if(col("billDuration") === 0).as("SoCuoc_KhongNoiMay"),
         exactSum(when(col("billDuration") > 0, col("billDuration").cast(DoubleType))
@@ -84,12 +93,10 @@ object FactStaffDaily {
       .agg(
         first(col("user_name").cast(StringType), ignoreNulls = true).as("MaNV"),
         first(col("user_group_id").cast(StringType), ignoreNulls = true).as("group_id"),
-        countDistinct(col("_id")).as("SoDataNhan"),
+        size(collect_set(col("_id"))).cast(LongType).as("SoDataNhan"),
         max(col("assignedTime")).as("max_assigned_ms"))
     assigned
-      .join(broadcast(group.select(col("group_id").cast(StringType).as("g_gid"),
-        col("name").as("g_name"))),
-        col("group_id") === col("g_gid"), "left")
+      .join(groupNames(group), col("group_id") === col("g_gid"), "left")
       .groupBy("Ngay", "MaNV_id")
       .agg(
         first(col("MaNV"), ignoreNulls = true).as("MaNV"),
@@ -125,76 +132,49 @@ object FactStaffDaily {
         coalesce(col("a.max_assigned_ms"), lit(0L)).as("max_assigned_ms"))
   }
 
-  /** MERGE B staff dims (runner.py:743-787): per-(Ngay, MaNV_id) staff
-    * attributes from calls ∪ customers, group-enriched. NOTE: here `Ngay`
-    * deliberately reuses the ingest-layer UTC dates (`NgayTao`,
-    * `NgayAssign`/`NgayUpdate`) — the reference's X-date inconsistency,
-    * preserved (runner.py:745, 757 vs runner.py:610).
+  /** MERGE B source `S` (runner.py:743-849): per (Ngay, MaNV_id) of the
+    * window's calls, the four status counters (runner.py:789-833: calls
+    * joined to customer status strings on phone number and classified)
+    * and the staff attributes (runner.py:743-787: the first name and
+    * group of calls ∪ customers, group-enriched). One aggregate over the
+    * phone-joined calls ∪ the window's customers computes both: a
+    * customer row has a null status, so it adds to no counter, and a key
+    * that no call has is dropped, as the reference's LEFT JOIN from the
+    * pivot drops it. A null `MaNV_id` matched no staff row in that join,
+    * so its Team and MaNV stay null. NOTE: here `Ngay` deliberately
+    * reuses the ingest-layer UTC dates (`NgayTao`, `NgayAssign`/
+    * `NgayUpdate`) — the reference's X-date inconsistency, preserved
+    * (runner.py:745, 757 vs runner.py:610).
     */
-  def staffDims(callLog: DataFrame, customer: DataFrame, group: DataFrame,
-      dStart: Column, dEnd: Column, tenant: String): DataFrame = {
-    val fromCalls = callLog
-      .filter(col("tenant") === tenant && col("NgayTao").between(dStart, dEnd))
-      .groupBy(col("NgayTao").as("Ngay"),
-        col("fromUser__id").cast(StringType).as("MaNV_id"))
-      .agg(first(col("fromUser__name").cast(StringType), ignoreNulls = true).as("MaNV"),
-        first(col("fromGroup__id").cast(StringType), ignoreNulls = true).as("group_id"))
-    val fromCus = customer
-      .filter(col("tenant") === tenant &&
-        (col("NgayAssign").between(dStart, dEnd) ||
-          col("NgayUpdate").between(dStart, dEnd)))
-      .groupBy(coalesce(col("NgayAssign"), col("NgayUpdate")).as("Ngay"),
-        col("user_id").cast(StringType).as("MaNV_id"))
-      .agg(first(col("user_name").cast(StringType), ignoreNulls = true).as("MaNV"),
-        first(col("user_group_id").cast(StringType), ignoreNulls = true).as("group_id"))
-    val one = fromCalls.unionByName(fromCus)
-      .groupBy("Ngay", "MaNV_id")
-      .agg(first(col("MaNV"), ignoreNulls = true).as("MaNV"),
-        first(col("group_id"), ignoreNulls = true).as("group_id"))
-    one.join(broadcast(group.select(col("group_id").cast(StringType).as("g_gid"),
-        col("name").as("g_name"))),
-        col("group_id") === col("g_gid"), "left")
-      .select(col("Ngay"), col("MaNV_id"), col("MaNV"),
-        coalesce(col("g_name"), lit("Unassigned")).as("Team"))
-  }
-
-  /** MERGE B status pivot (runner.py:789-833): calls joined to customer
-    * status strings on phone number, classified into the four counters.
-    */
-  def statusPivot(callLog: DataFrame, customer: DataFrame,
-      dStart: Column, dEnd: Column, tenant: String): DataFrame = {
-    val callsAll = callLog
-      .filter(col("tenant") === tenant && col("NgayTao").between(dStart, dEnd))
-      .select(col("NgayTao").as("Ngay"),
-        col("fromUser__id").cast(StringType).as("MaNV_id"),
-        col("toNumber").as("SDTKhach"))
-    val customersRaw = customer
-      .filter(col("tenant") === tenant && col("NgayUpdate").between(dStart, dEnd))
-      .select(col("phone"),
-        nullif(trim(col("customField_0_val").cast(StringType)), lit(""))
-          .as("TrangThaiXuLi"))
-    val aggs = Classifiers.statusPivotAggs(col("TrangThaiXuLi"))
-    // Null-phone fact rows (a large share of call logs) can never match
-    // the equi-join; route them around the shuffle instead of hashing
-    // them all to one reducer (output identical — a null key left-joins
-    // to all-null right columns either way).
-    graft.operators.Skew.nullSafeLeftJoin(callsAll,
-        customersRaw.withColumnRenamed("phone", "SDTKhach"), "SDTKhach")
-      .groupBy("Ngay", "MaNV_id")
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** MERGE B source `S` (runner.py:835-849). */
   def mergeBSource(callLog: DataFrame, customer: DataFrame, group: DataFrame,
       dStart: Column, dEnd: Column, tenant: String): DataFrame = {
-    val p = statusPivot(callLog, customer, dStart, dEnd, tenant).alias("p")
-    val e = staffDims(callLog, customer, group, dStart, dEnd, tenant).alias("e")
-    p.join(e, col("p.Ngay") === col("e.Ngay") &&
-        col("p.MaNV_id") === col("e.MaNV_id"), "left")
-      .select(col("p.Ngay").as("Ngay"), lit(tenant).as("Tenant"),
-        col("e.Team").as("Team"), col("p.MaNV_id").as("MaNV_id"),
-        col("e.MaNV").as("MaNV"),
-        col("SoSDT_KetBanZalo"), col("SoSDT_CoNhuCau"),
+    val statuses = customer
+      .filter(col("tenant") === tenant && col("NgayUpdate").between(dStart, dEnd))
+      .select(col("phone").as("toNumber"),
+        nullif(trim(col("customField_0_val").cast(StringType)), lit("")).as("TrangThaiXuLi"))
+    val calls = callLog
+      .filter(col("tenant") === tenant && col("NgayTao").between(dStart, dEnd))
+      .join(statuses, Seq("toNumber"), "left")
+      .select(col("NgayTao").as("Ngay"), col("fromUser__id").cast(StringType).as("MaNV_id"),
+        col("TrangThaiXuLi"), col("fromUser__name").cast(StringType).as("MaNV"),
+        col("fromGroup__id").cast(StringType).as("group_id"), lit(true).as("call"))
+    val staff = customer
+      .filter(col("tenant") === tenant &&
+        (col("NgayAssign").between(dStart, dEnd) || col("NgayUpdate").between(dStart, dEnd)))
+      .select(coalesce(col("NgayAssign"), col("NgayUpdate")).as("Ngay"),
+        col("user_id").cast(StringType).as("MaNV_id"), lit(null).cast(StringType).as("TrangThaiXuLi"),
+        col("user_name").cast(StringType).as("MaNV"),
+        col("user_group_id").cast(StringType).as("group_id"), lit(null).cast(BooleanType).as("call"))
+    val aggs = Classifiers.statusPivotAggs(col("TrangThaiXuLi")) ++ Seq(
+      first(col("MaNV"), ignoreNulls = true).as("MaNV"),
+      first(col("group_id"), ignoreNulls = true).as("group_id"), max(col("call")).as("call"))
+    val known = col("MaNV_id").isNotNull
+    calls.unionByName(staff).groupBy("Ngay", "MaNV_id").agg(aggs.head, aggs.tail: _*)
+      .filter(col("call"))
+      .join(groupNames(group), col("group_id") === col("g_gid"), "left")
+      .select(col("Ngay"), lit(tenant).as("Tenant"),
+        when(known, coalesce(col("g_name"), lit("Unassigned"))).as("Team"), col("MaNV_id"),
+        when(known, col("MaNV")).as("MaNV"), col("SoSDT_KetBanZalo"), col("SoSDT_CoNhuCau"),
         col("SoSDT_TuChoi"), col("SoSDT_KhongNgheMay"))
   }
 
@@ -252,7 +232,7 @@ object FactStaffDaily {
     * in-memory [[refresh]] passes `[dStart, dEnd]`, as the reference
     * does; the physical refresh (`BatchRunner.refreshReporting`) passes
     * none, because `Upsert.rewritePartitions` has already pruned the
-    * target to the sources' own `Ngay` ranges (DEVIATIONS.md 14).
+    * target to the stated window `[dStart, dEnd + 1]` (DEVIATIONS.md 14).
     */
   def mergePair(target: DataFrame, sources: Seq[DataFrame],
       pruneA: Option[Column], tenant: String): DataFrame = {

@@ -4,9 +4,12 @@ import graft.operators.Upsert
 import graft.pipelines.{BatchRunner, FactStaffDaily}
 import graft.sources.FixtureSources
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
-class BatchRunnerSpec extends SparkSpec {
+class BatchRunnerSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   // Anchor: 2024-01-10T00:00:00Z; 120 docs → one every minute, 2 hours.
   private val T0 = 1704844800000L
@@ -138,8 +141,8 @@ class BatchRunnerSpec extends SparkSpec {
   test("a slot and a refresh run a pinned number of Spark jobs") {
     // Every job does work: the fetch is one job that also carries the
     // result-window flag and the doc count, the customer merge takes the
-    // fetched batch, and the merge range rides the source's
-    // materialization.
+    // fetched batch, the merge range rides the source's materialization,
+    // and a refresh is one query from the table scans to the write.
     val wh = tempDir("runner_jobs")
     val r1 = runner(wh, T0, 60, 1)
     r1.bootstrap()
@@ -157,7 +160,42 @@ class BatchRunnerSpec extends SparkSpec {
     val (_, refreshFirst) = jobsOf(r2.refreshReporting(dEnd))
     val (_, refresh) = jobsOf(r2.refreshReporting(dEnd))
     assert(Seq(customerCold, customer, call, callAgain, staffFirst, staff,
-      refreshFirst, refresh) == Seq(7, 9, 7, 7, 6, 7, 12, 18))
+      refreshFirst, refresh) == Seq(7, 9, 7, 7, 6, 7, 7, 9))
+  }
+
+  /** The queries `body` ran, each with the name of the action that ran
+    * it, in the order they finished.
+    */
+  private def queriesOf(body: => Unit): Seq[(String, QueryExecution)] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add((action, qe))
+      override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add((action, qe))
+    }
+    org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    seen.toArray(Array.empty[(String, QueryExecution)]).toSeq
+  }
+
+  test("a later refresh is one write query with a pinned number of exchanges and scans") {
+    val wh = twoDayWarehouse("runner_plan")
+    val dEnd = java.time.LocalDate.parse("2024-01-12")
+    runner(wh, T0, 60, 1).refreshReporting(dEnd)
+    val queries = queriesOf(runner(wh, T0, 60, 1).refreshReporting(dEnd))
+    // One write and nothing else: no `localCheckpoint`, no range query.
+    assert(queries.map(_._1) == Seq("command"))
+    val nodes = collectWithSubqueries(queries.head._2.executedPlan) { case n => n }
+    val exchanges = nodes.count(_.isInstanceOf[ShuffleExchangeExec])
+    val scans = nodes.collect { case s: FileSourceScanExec =>
+      s.relation.location.rootPaths.head.getName }.groupBy(identity).map { case (t, s) => t -> s.size }
+    assert(exchanges <= 6, s"$exchanges shuffle exchanges")
+    assert(scans("call_log") <= 2 && scans("customer") <= 3, s"scans per table: $scans")
   }
 
   /** Customer rows with their hash, each as one string, sorted. */
@@ -266,6 +304,32 @@ class BatchRunnerSpec extends SparkSpec {
       "QN|customer|STAGED|2|null", "QN|customer|STAGED|3|null"))
   }
 
+  test("a row that moves out of the only row's partition leaves no stale copy") {
+    val h = 3600000L
+    def at(day: Int, hour: Int) = T0 + (day - 10) * Day + hour * h
+    // The two-tenant slots without b2: b1 is alone on 2024-01-13, and
+    // slot 2 moves it to -15, inside the hull of both tenants' ranges.
+    val v1 = Map(
+      "PK" -> Seq(("a1", at(11, 10), "a1 v1")),
+      "QN" -> Seq(("b1", at(13, 10), "b1 v1"), ("b3", at(15, 9), "b3 v1")))
+    val v2 = Map(
+      "PK" -> Seq(("a1", at(11, 10), "a1 v1"), ("a2", at(11, 12), "a2 v1")),
+      "QN" -> Seq(("b1", at(15, 12), "b1 v2"), ("b3", at(15, 9), "b3 v1")))
+    val wh = tempDir("runner_moved")
+    Seq((v1, at(16, 0)), (v2, at(17, 0))).foreach { case (docs, now) =>
+      val r = new BatchRunner(spark, TenantDocs(docs), new FixtureSources.Snapshots,
+        BatchRunner.Config(wh, tenants = Seq("PK", "QN")))
+      r.bootstrap()
+      r.runCustomer(now)
+    }
+    val rows = spark.read.parquet(s"$wh/customer")
+      .select("tenant", "_id", "name", "NgayUpdate")
+      .collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    assert(rows == Seq("PK|a1|a1 v1|2024-01-11", "PK|a2|a2 v1|2024-01-11",
+      "QN|b1|b1 v2|2024-01-15", "QN|b3|b3 v1|2024-01-15"))
+    assert(partitions(s"$wh/customer") == Seq("NgayUpdate=2024-01-11", "NgayUpdate=2024-01-15"))
+  }
+
   test("runLoop: daemon catch-up drives the incremental batch end to end") {
     val wh = tempDir("runner_loop")
     val cfg = BatchRunner.Config(wh, tenants = Seq("PK"),
@@ -372,17 +436,20 @@ class BatchRunnerSpec extends SparkSpec {
     assert(late.count() == 5 && late.select("MaNV_id").distinct().count() == 5)
   }
 
-  test("one refresh rewrites the union of the sources' Ngay ranges, each partition once, under one lock") {
+  test("one refresh rewrites its stated window, each partition once, under one lock") {
     val wh = twoDayWarehouse("runner_swap")
     runner(wh, T0, 60, 1).refreshReporting(java.time.LocalDate.parse("2024-01-12"))
     lateCalls(wh)
     val Seq(srcA, srcB) = factSources(wh, "2024-01-12")
     val ranges = Seq(ngayRange(srcA), ngayRange(srcB))
     assert(ranges(0) != ranges(1), "the late calls give MERGE A a wider range")
+    // The window [dEnd - 7, dEnd + 1] holds both sources' Ngay ranges.
+    val (lo, hi) = (java.sql.Date.valueOf("2024-01-05"), java.sql.Date.valueOf("2024-01-13"))
+    assert(ranges.forall { case (a, b) => !a.before(lo) && !b.after(hi) })
     val expected = spark.read.parquet(s"$wh/fact_staff_daily").select("Ngay")
       .union(srcA.select("Ngay")).union(srcB.select("Ngay")).distinct()
       .collect().map(_.getDate(0))
-      .filter(d => ranges.exists { case (lo, hi) => !d.before(lo) && !d.after(hi) })
+      .filter(d => !d.before(lo) && !d.after(hi))
       .map(d => s"Ngay=$d").toSeq.sorted
     spark.sparkContext.hadoopConfiguration
       .set("fs.graftfault.impl", classOf[InterruptingFs].getName)
@@ -393,6 +460,23 @@ class BatchRunnerSpec extends SparkSpec {
     val installs = InterruptingFs.installs.toArray.toSeq.map(_.toString)
     assert(installs.sorted == expected)
     assert(InterruptingFs.lockReleases.get() == 1)
+  }
+
+  test("a refresh whose window has no calls and no customers leaves fact_staff_daily's files untouched") {
+    val wh = twoDayWarehouse("runner_quiet")
+    val dEnd = java.time.LocalDate.parse("2024-01-12")
+    runner(wh, T0, 60, 1).refreshReporting(dEnd)
+    def files = org.apache.commons.io.FileUtils
+      .listFiles(new java.io.File(s"$wh/fact_staff_daily"), null, true)
+      .toArray.map(_.toString).toSeq.sorted
+    val before = (files, table(wh))
+    assert(before._1.exists(_.endsWith(".parquet")))
+    // The window holds every partition of the table, but tenant QN has
+    // no call and no customer: nothing reaches the write, so nothing is
+    // swapped.
+    runner(wh, T0, 60, 1).refreshReporting(dEnd, tenant = "QN")
+    assert((files, table(wh)) == before)
+    assert(!new java.io.File(s"$wh/fact_staff_daily.merge-tmp").exists())
   }
 
   test("a refresh killed mid-swap, then re-run, equals the no-fault table") {

@@ -26,12 +26,6 @@ class SkewSpec extends SparkSpec {
     assert(out.filter(col("v") === 5).head().isNullAt(2)) // null key row kept
   }
 
-  test("nullSafeLeftJoin routes null keys around the shuffle, same result") {
-    val plain = facts.join(dim, Seq("k"), "left")
-    val routed = Skew.nullSafeLeftJoin(facts, dim, "k")
-    assert(rowSet(routed) == rowSet(plain))
-  }
-
   test("KMV sketch: exact below k, merge == direct sketch, sane estimate") {
     val k = 32
     // 3 groups: tiny (12 distinct, below k), two larger ones that
@@ -127,22 +121,25 @@ class SkewSpec extends SparkSpec {
     assert(out.values.map(_._3).sum == 1.0 && out.values.map(_._4).sum == 1.0)
   }
 
-  test("statusPivot with null-routed phone join matches the plain left join") {
+  test("MERGE B's status counters match the plain left-join restatement, null phones and staff included") {
     import graft.pipelines.FactStaffDaily
     import graft.functions.Classifiers
-    val callLog = df(
-      "tenant STRING, NgayTao DATE, fromUser__id STRING, toNumber STRING",
-      Row("PK", java.sql.Date.valueOf("2024-01-10"), "u1", "0901"),
-      Row("PK", java.sql.Date.valueOf("2024-01-10"), "u1", null), // null phone
-      Row("PK", java.sql.Date.valueOf("2024-01-11"), "u2", null), // null phone
-      Row("PK", java.sql.Date.valueOf("2024-01-11"), "u2", "0902"))
-    val customer = df(
-      "tenant STRING, NgayUpdate DATE, phone STRING, customField_0_val STRING",
-      Row("PK", java.sql.Date.valueOf("2024-01-10"), "0901", "OK - kết bạn zalo"),
-      Row("PK", java.sql.Date.valueOf("2024-01-11"), "0902", "KH từ chối"))
-    val d0 = lit(java.sql.Date.valueOf("2024-01-01"))
-    val d1 = lit(java.sql.Date.valueOf("2024-01-31"))
-    val routed = FactStaffDaily.statusPivot(callLog, customer, d0, d1, "PK")
+    def d(s: String) = java.sql.Date.valueOf(s)
+    val callLog = df("tenant STRING, NgayTao DATE, fromUser__id STRING, " +
+        "fromUser__name STRING, fromGroup__id STRING, toNumber STRING",
+      Row("PK", d("2024-01-10"), "u1", "NV1", "g1", "0901"),
+      Row("PK", d("2024-01-10"), "u1", "NV1", "g1", null), // null phone
+      Row("PK", d("2024-01-11"), "u2", "NV2", "g2", null), // null phone
+      Row("PK", d("2024-01-11"), "u2", "NV2", "g2", "0902"),
+      Row("PK", d("2024-01-11"), null, "NV9", "g1", "0902")) // null staff id
+    val customer = df("tenant STRING, NgayUpdate DATE, NgayAssign DATE, phone STRING, " +
+        "customField_0_val STRING, user_id STRING, user_name STRING, user_group_id STRING",
+      Row("PK", d("2024-01-10"), null, "0901", "OK - kết bạn zalo", "u1", "NV1", "g1"),
+      Row("PK", d("2024-01-11"), null, "0902", "KH từ chối", "u3", "NV3", "g1"))
+    val group = df("group_id STRING, name STRING", Row("g1", "Team 1"))
+    val d0 = lit(d("2024-01-01"))
+    val d1 = lit(d("2024-01-31"))
+    val b = FactStaffDaily.mergeBSource(callLog, customer, group, d0, d1, "PK")
     // Plain-join restatement of the same pivot.
     val aggs = Classifiers.statusPivotAggs(col("TrangThaiXuLi"))
     val plain = callLog
@@ -153,8 +150,11 @@ class SkewSpec extends SparkSpec {
         col("SDTKhach") === col("phone"), "left")
       .groupBy("Ngay", "MaNV_id")
       .agg(aggs.head, aggs.tail: _*)
-    assert(rowSet(routed) == rowSet(plain))
-    assert(routed.count() == 2)
+    assert(rowSet(b.select(plain.columns.map(col).toIndexedSeq: _*)) == rowSet(plain))
+    // u3 has a customer and no call: no row. A null staff id matches no
+    // staff attributes.
+    assert(rowSet(b.select("MaNV_id", "MaNV", "Team")) == Set(
+      Seq("u1", "NV1", "Team 1"), Seq("u2", "NV2", "Unassigned"), Seq(null, null, null)))
   }
 
   test("sketchProfile: HLL within rsd bound, small-group median exact") {

@@ -264,6 +264,47 @@ class UpsertSpec extends SparkSpec {
       !new java.io.File(dir + "/t.merge-tmp").exists())
   }
 
+  test("a merge that moves every row out of a partition it read leaves no stale copy") {
+    // Written through `graftfault://` so that the second run can be
+    // killed while it installs the emptied partition.
+    val dir = tempDir("upsert_moved")
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftfault.impl", classOf[InterruptingFs].getName)
+    val fdir = "graftfault://" + dir + "/t"
+    val init = df("k BIGINT, v STRING, d STRING",
+      Row(Long.box(1), "a", "2024-01-01"),
+      Row(Long.box(2), "b", "2024-01-02"),
+      Row(Long.box(3), "c", "2024-01-03"))
+    val source = df("k BIGINT, v STRING, d STRING",
+      Row(Long.box(1), "A", "2024-01-01"),
+      Row(Long.box(2), "B", "2024-01-03"))
+    def rows(path: String) = spark.read.parquet(path).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.get(2).toString)).toSeq.sorted
+    val expected = Seq((1L, "A", "2024-01-01"), (2L, "B", "2024-01-03"),
+      (3L, "c", "2024-01-03"))
+    def partitions = new java.io.File(dir, "t").list().filter(_.contains("=")).toSeq.sorted
+
+    init.write.mode("overwrite").partitionBy("d").parquet(dir + "/plain")
+    Upsert.applyToPartitionedParquet(spark, dir + "/plain", source, Seq("k"), "d")
+    assert(rows(dir + "/plain") == expected, "k=2 exists once, in d=2024-01-03")
+
+    // Killed between displacing d=2024-01-02 and installing it empty:
+    // the old copy is restored, and the re-run removes it again.
+    init.write.mode("overwrite").partitionBy("d").parquet(fdir)
+    InterruptingFs.failInstallOf = "d=2024-01-02"
+    val ex = intercept[RuntimeException] {
+      Upsert.applyToPartitionedParquet(spark, fdir, source, Seq("k"), "d")
+    }
+    assert(ex.getMessage.contains("simulated"))
+    assert(InterruptingFs.failInstallOf == null, "the fault must have fired")
+    Upsert.applyToPartitionedParquet(spark, fdir, source, Seq("k"), "d")
+    assert(rows(fdir) == expected)
+    assert(partitions == Seq("d=2024-01-01", "d=2024-01-03"),
+      "the emptied partition's directory is gone")
+    assert(!new java.io.File(dir + "/t.merge-bak").exists() &&
+      !new java.io.File(dir + "/t.merge-tmp").exists())
+  }
+
   test("scd2FromChangeLog: runs collapse null-safely, intervals chain, tiebreak holds") {
     def r(k: Long, id: Long, v: String, t: Long) =
       Row(Long.box(k), Long.box(id), v, Long.box(t))
