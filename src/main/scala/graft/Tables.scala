@@ -10,10 +10,6 @@ object Tables {
   import org.apache.spark.sql.functions._
   import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, TimestampNTZType, TimestampType}
 
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")
     // events.ts is parquet TIMESTAMP(NANOS); with

@@ -325,18 +325,6 @@ object Dedup {
         m("n_shards"), m("k"), m("n"), m("band_width"))
     }
 
-  /** Distinct ids with at least one COMMITTED band in the index — the
-    * "what is already indexed" face an incremental ingest diffs its
-    * corpus against.
-    * Orphan bands from torn appends are excluded on purpose: those
-    * docs must be re-healed, not considered done.
-    */
-  def bandIndexedIds(spark: org.apache.spark.sql.SparkSession,
-      path: String, id: String): DataFrame =
-    IndexCommit.committedRows(spark, path,
-      IndexCommit.readLedger(spark, bandIndex(path)).committed)
-      .select(col(id)).distinct()
-
   /** Tombstone-delete doc ids from a band index — the erasure face of
     * the dedup-candidate artifact ([[graft.operators.TextIndex.delete]]'s
     * protocol, [[IndexCommit.delete]]): erased documents
@@ -1266,6 +1254,12 @@ object Dedup {
     Seq(path -> "shard=*/"))(frozen = Seq("n_shards", "min_tokens"),
     rebuildWith = Some("windowIndexWrite"))
 
+  /** The window index's data columns; `shard` and `batch` are partition
+    * directories.
+    */
+  private val windowPayload =
+    Some(org.apache.spark.sql.types.StructType.fromDDL("dig STRING"))
+
   private def writeWindowRows(docs: DataFrame, id: String, body: String,
       minTokens: Int, nShards: Int, path: String, batch: String,
       overwrite: Boolean): Long = {
@@ -1314,22 +1308,6 @@ object Dedup {
         path, batch, overwrite = false), m("n_shards"), m("min_tokens"))
     }
 
-  /** Compact an append-heavy window index: fold COMMITTED batches into
-    * one file per shard under `batch=build`, dropping orphan digests
-    * from crashed appends (compaction is the garbage collector — a
-    * dropped batch id can be retried afterwards) and collapsing
-    * digests re-appended by several batches to ONE row (the probe is
-    * a semi-join, so multiplicity never mattered; the fold just
-    * shrinks the index). Ledger untouched — the committed set and the
-    * frozen geometry are what probes read, and keeping the rows
-    * preserves the exactly-once guard. Probe results identical
-    * afterwards (DedupSpec pins it).
-    */
-  def windowIndexCompact(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit =
-    IndexCommit.compact(spark, windowIndex(path), "shard",
-      shape = _.select(col("dig"), col("shard")).distinct())
-
   /** Exact substring dedup of an INCOMING batch against the indexed
     * corpus + itself — byte-identical to running
     * [[exactSubstringDedup]] over (corpus ∪ incoming) and keeping the
@@ -1358,7 +1336,7 @@ object Dedup {
     val probeShards = inc
       .select(pmod(xxhash64(col("dig")), lit(meta("n_shards"))).as("s"))
       .distinct().collect().map(r => Long.box(r.getLong(0))).toSeq
-    val idx = IndexCommit.committedRows(spark, path, meta.committed)
+    val idx = IndexCommit.committedRows(spark, path, meta.committed, windowPayload)
       .filter(col("shard").isin(probeShards: _*))
       .select(col("dig"))
     val corpusHit = inc.join(idx, Seq("dig"), "left_semi")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
 
 /** The batch-ledger commit protocol of every ledgered index family —
-  * text postings ([[TextIndex]]), the four IVF vector layouts
+  * text postings ([[TextIndex]]), the float and SQ8 IVF vector layouts
   * ([[Similarity]]), LSH bands and window digests ([[Dedup]]), and the
   * stable vocabulary ([[Vocab]]); DEVIATIONS.md §11/§13. Implemented
   * once, here:
@@ -139,14 +139,56 @@ private[graft] object IndexCommit {
     writeRow(spark, ix, "build", write, overwrite = true)
   }
 
-  /** Rows of `root` whose `batch` is committed. `batch` is a partition
-    * directory, so the filter is partition pruning: orphan dirs are
-    * never listed into the scan.
+  /** Rows of `root` whose `batch` is committed, read as [[payload]]
+    * reads them. `batch` is a partition directory, so the filter is
+    * partition pruning: orphan dirs are never listed into the scan.
     */
   def committedRows(spark: SparkSession, root: String,
-      committed: Set[String]): DataFrame =
-    spark.read.parquet(root)
+      committed: Set[String], declared: Option[StructType] = None): DataFrame =
+    payload(spark, root, declared)
       .filter(col("batch").cast("string").isin(committed.toSeq: _*))
+
+  /** All rows of `root`, read without a schema-inference job. A family
+    * with a fixed payload layout passes its `declared` data columns,
+    * checked against one file's footer ([[graft.sources.Storage.checkFooter]]):
+    * a declared column that the files lack or type differently fails
+    * loudly. A family whose columns depend on the caller (an id
+    * column's name and type, IVF `metaCols`) passes None and is read
+    * with the data columns of one payload file's footer, read on the
+    * driver. Either way the partition columns (`batch`, `cluster`,
+    * `shard`, ...) are left out of the schema, so Spark still discovers
+    * and types them from the directory names.
+    */
+  def payload(spark: SparkSession, root: String,
+      declared: Option[StructType] = None): DataFrame =
+    declared match {
+      case None => spark.read.schema(footerSchema(spark, root)).parquet(root)
+      case Some(s) =>
+        val rows = spark.read.schema(s).parquet(root)
+        graft.sources.Storage.checkFooter(rows, s).foreach(c => throw new IllegalStateException(
+          s"payload at $root lacks column $c, which its index family declares."))
+        rows
+    }
+
+  /** The data columns of one payload file under `root`, from its
+    * footer ([[graft.sources.Storage.footerSchema]]). Files and
+    * directories whose names start with `_` or `.` are not payload.
+    * Empty when `root` is missing or holds no payload file, so the read
+    * fails (or is empty) as an inferring read would.
+    */
+  private def footerSchema(spark: SparkSession, root: String): StructType = {
+    val f = fs(spark, root)
+    val base = new Path(root)
+    if (!f.exists(base)) return new StructType()
+    val prefix = f.makeQualified(base).toString.stripSuffix("/") + "/"
+    val files = f.listFiles(base, true)
+    Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+      .find { p =>
+        p.getName.endsWith(".parquet") && p.toString.stripPrefix(prefix).split('/')
+          .forall(n => !n.startsWith("_") && !n.startsWith("."))
+      }
+      .fold(new StructType())(graft.sources.Storage.footerSchema(spark, _))
+  }
 
   /** Append one batch: writer lock → sane id → not-committed check →
     * orphan-dir drop → `write` (payload, given the ledger read under

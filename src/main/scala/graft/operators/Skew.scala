@@ -211,11 +211,6 @@ object Skew {
   final case class CmsSketch(cells: DataFrame, depth: Int, width: Int,
       salt: String)
 
-  def countMinSketch(df: DataFrame, keyCol: String, depth: Int, width: Int,
-      salt: String): CmsSketch =
-    CmsSketch(countMinCells(df, keyCol, depth, width, salt,
-      lit(1L)), depth, width, salt)
-
   def countMinSketchWeighted(df: DataFrame, keyCol: String, depth: Int,
       width: Int, salt: String, weight: Column): CmsSketch =
     CmsSketch(countMinCells(df, keyCol, depth, width, salt, weight),

@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   * column a build-time cache that appends cannot go stale against.
   * Corpus constants live in `path + "__meta"` as an APPEND-ONLY
   * ledger — one row per batch `(batch, n_docs, sum_dl, n_postings,
-  * n_tokens, n_shards)`, the [[Similarity.ivfStats]] convention —
-  * and serving sums them; no read-modify-write on any sidecar.
+  * n_tokens, n_shards)`, the IVF `_stats` ledger convention — and
+  * serving sums them; no read-modify-write on any sidecar.
   *
   * Atomicity ([[IndexCommit]]'s protocol, shared by every ledgered
   * index): the LEDGER ROW IS THE COMMIT POINT. Serving reads only
@@ -52,7 +52,7 @@ import org.apache.spark.sql.functions._
   * What appending CANNOT freeze: avgdl. BM25's length normalization
   * is calibrated to the corpus mean document length, so a drifting
   * batch shifts every score slightly — the ledger's per-batch
-  * `sum_dl/n_docs` vs the build row ([[indexStats]]) is the rebuild
+  * `sum_dl/n_docs` vs the build row is the rebuild
   * trigger, the text analog of the IVF assignment-tightness drift.
   */
 object TextIndex {
@@ -147,8 +147,7 @@ object TextIndex {
   /** Write a batch's (doc, dl) rows doc-hash-bucketed. The sidecar is
     * the index's doc-keyed access path: erasure reads ONLY the victim
     * ids' buckets (partition pruning) instead of scanning postings for
-    * victim stats, and [[indexedIds]] reads one row per doc instead of
-    * one per posting.
+    * victim stats.
     */
   private def writeDoclens(doclens: DataFrame, batch: String, path: String,
       overwrite: Boolean): Unit =
@@ -320,25 +319,6 @@ object TextIndex {
         Seq[Any](-st.getLong(0), -st.getLong(1), 0L, 0L, meta("n_shards")))
     }
 
-  /** Distinct doc ids whose postings belong to a COMMITTED batch — the
-    * "already indexed" face an incremental ingest diffs its arrivals
-    * against (the [[Similarity.ivfIndexedIds]] convention). Orphan postings
-    * from torn appends are excluded ON PURPOSE: a torn batch must be
-    * re-ingested whole. Tombstoned ids still count as indexed —
-    * erased identities are retired, a replay must not re-ingest them.
-    */
-  def indexedIds(spark: SparkSession, path: String): DataFrame = {
-    val meta = IndexCommit.readLedger(spark, index(path))
-    // One row per doc from the doclens sidecar beats one per posting;
-    // pre-sidecar (or partially covered) indexes fall back to the
-    // postings scan.
-    if (doclensCover(spark, path, meta))
-      IndexCommit.committedRows(spark, doclenPath(path), meta.committed)
-        .select(col("doc")).distinct()
-    else
-      committedPostings(spark, path, meta).select(col("doc")).distinct()
-  }
-
   /** Compact an append-heavy index: every [[append]] leaves one file
     * per touched shard, and probe cost at scale is file-count-
     * dominated (footer reads + task scheduling), so compaction is
@@ -376,30 +356,6 @@ object TextIndex {
   private def committedPostings(spark: SparkSession, path: String,
       meta: IndexCommit.Ledger): DataFrame =
     IndexCommit.committedRows(spark, path, meta.committed)
-
-  /** Per-batch ledger with `avgdl_drift` = batch mean doc length −
-    * build mean doc length (the quantity BM25's b-normalization is
-    * calibrated against) and `new_dl_frac`, the batch's share of all
-    * indexed tokens. The ledger is one row per batch — broadcast.
-    */
-  def indexStats(spark: SparkSession, path: String): DataFrame = {
-    val s = spark.read.parquet(index(path).ledger)
-      .withColumn("avgdl",
-        col("sum_dl").cast("double") / col("n_docs").cast("double"))
-    val base = s.filter(col("batch") === "build")
-      .select(col("avgdl").as("__build_avgdl"))
-    // 1-row totals broadcast (the stats-broadcast idiom) — an
-    // unpartitioned window would funnel the ledger into one partition
-    // and warn; the ledger is tiny but the plan shape should still be
-    // the one that scales.
-    val total = s.agg(sum(col("sum_dl")).cast("double").as("__total_dl"))
-    s.join(broadcast(base), lit(true), "left")
-      .join(broadcast(total), lit(true), "left")
-      .withColumn("avgdl_drift", col("avgdl") - col("__build_avgdl"))
-      .withColumn("new_dl_frac",
-        col("sum_dl").cast("double") / col("__total_dl"))
-      .drop("__build_avgdl", "__total_dl")
-  }
 
   /** Okapi BM25 top-k for `terms` (k1=1.2, b=0.75, q136's exact
     * formula and 1e-9 idf snapping). Only documents containing at

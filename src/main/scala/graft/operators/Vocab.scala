@@ -34,6 +34,9 @@ object Vocab {
   private def index(path: String) = IndexCommit.Index("vocab", path,
     "batch STRING, n_tokens LONG, max_id LONG", Seq(path -> ""))()
 
+  /** The payload's data columns; `batch` is the partition directory. */
+  private val payload = StructType.fromDDL("token STRING, id LONG")
+
   /** (token, id) from a token-occurrence stream (one row per
     * occurrence; counting is internal). Overwrites any existing vocab
     * at `path` and resets the ledger.
@@ -57,7 +60,7 @@ object Vocab {
       batch: String): Unit =
     IndexCommit.append(toks.sparkSession, index(path), batch) { ledger =>
       val existing = IndexCommit.committedRows(toks.sparkSession, path,
-        ledger.committed).select("token")
+        ledger.committed, Some(payload)).select("token")
       val fresh = counts(toks, tokenCol)
         .join(existing, Seq("token"), "left_anti")
       val ids = assignIds(fresh, startId = maxId(ledger) + 1)
@@ -71,18 +74,8 @@ object Vocab {
   /** The committed vocabulary: (token, id), torn appends invisible. */
   def read(spark: SparkSession, path: String): DataFrame =
     IndexCommit.committedRows(spark, path,
-      IndexCommit.readLedger(spark, index(path)).committed)
+      IndexCommit.readLedger(spark, index(path)).committed, Some(payload))
       .select("token", "id")
-
-  /** Map a token column to its stable id (left join: out-of-vocabulary
-    * tokens get a null id — the caller decides between dropping and
-    * an UNK id). Adds `idCol` to `df`.
-    */
-  def encode(df: DataFrame, tokenCol: String, idCol: String,
-      spark: SparkSession, path: String): DataFrame =
-    df.join(read(spark, path)
-        .select(col("token").as(tokenCol), col("id").as(idCol)),
-      Seq(tokenCol), "left")
 
   private def counts(toks: DataFrame, tokenCol: String): DataFrame =
     toks.filter(col(tokenCol).isNotNull)
@@ -96,11 +89,10 @@ object Vocab {
   private def assignIds(cnt: DataFrame, startId: Long): DataFrame = {
     val spark = cnt.sparkSession
     val sorted = cnt.orderBy(col("__c").desc, col("token").asc)
-    val schema = StructType.fromDDL("token STRING, id LONG")
     spark.createDataFrame(
       sorted.select("token").rdd.zipWithIndex().map {
         case (r, i) => Row(r.getString(0), startId + i)
-      }, schema)
+      }, payload)
   }
 
   private def maxId(ledger: IndexCommit.Ledger): Long =

@@ -986,7 +986,7 @@ object DedupOps {
     // is least-like-centroid-first. Oracle restates the whole chain —
     // sign buckets, decimal-grid float centroids, 1e-9-rounded decimal
     // cosines, the dominance drop — declaratively. Survivors only.
-    // finePairs (256 clusters): cluster count is the quadratic-stage
+    // 8 sign bits (256 clusters): cluster count is the quadratic-stage
     // knob and must GROW with the corpus — the 16-bucket variant was
     // the slowest query in the suite at sf0.1 (9.2 s, ~780k pairs).
     QueryDef("q114_semdedup",

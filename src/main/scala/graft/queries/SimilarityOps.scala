@@ -387,10 +387,10 @@ object SimilarityOps {
     * is the recall lever at fixed code size (16 subs × 2 bits = 4 B,
     * still 64×; measured 2× the recall of 4 subs × 16 dims on this
     * corpus — more, narrower codebooks approximate an unstructured
-    * vector far better than few wide ones). The production float path
-    * is [[Similarity.pqCodebook]]/pqEncode/pqAdcTopK (SimilaritySpec);
-    * this is its portable restatement, same pattern as the q54/q59
-    * IVF gates.
+    * vector far better than few wide ones). This decimal DataFrame
+    * pipeline is the one PQ formulation the program runs, against the
+    * DuckDB `pqChainSql` oracle — same pattern as the q54/q59 IVF
+    * gates.
     */
 
   /** Subspace geometry shared by every PQ stage: 16 subspaces of
@@ -1216,7 +1216,7 @@ object SimilarityOps {
 
     // ---- batch top-k, EXACT baseline (all-pairs) ------------------------
     // Every query × every vector: the recall yardstick the bucketed
-    // retrieval path (q48, Similarity.batchAnnTopK) is measured
+    // retrieval path (q48) is measured
     // against — NOT the production shape. O(|V|·|Q|·d) compute; run it
     // on samples, never on the corpus. The per-query cut still runs on
     // the bounded-heap plan ([[graft.operators.TopK.perGroup]]) so the
@@ -1240,11 +1240,9 @@ object SimilarityOps {
     // Same query set and ranking contract as q47, but candidates come
     // from a sign-LSH bucket EQUALITY join instead of all-pairs: a
     // broadcast hash join on the bucket key (≈ |V|·|Q|/B pairs scored,
-    // never a nested loop), then the bounded-heap per-query cut. This
-    // is the oracle-facing decimal-exact restatement of
-    // [[graft.operators.Similarity.batchAnnTopK]] (whose hot path
-    // scores in codegen double); SimilaritySpec pins the two to the
-    // same plan shape and neighbor sets. Approximate by construction —
+    // never a nested loop), then the bounded-heap per-query cut
+    // (SimilaritySpec pins the plan shape and that every neighbor
+    // shares its query's bucket). Approximate by construction —
     // a neighbor outside the query's bucket is unseen — which the
     // oracle mirrors exactly, so the gate checks the retrieval
     // semantics, not brute force.
@@ -1845,11 +1843,8 @@ object SimilarityOps {
     // tiebreak); search = ADC, the query dotted against each vector's
     // RECONSTRUCTION — decimal accumulation over all 64 positions, so
     // the classic per-subspace LUT sum happens inside one exact sum
-    // with no cross-engine float-ordering hazard. The production float
-    // path ([[Similarity.pqCodebook]]/pqEncode/pqAdcTopK) is
-    // spec-pinned in SimilaritySpec; this gate walks the same
-    // trajectory on the portable decimal grid, exactly like the
-    // q54/q59 IVF gates. Every stage is joins + hash aggregates —
+    // with no cross-engine float-ordering hazard. The gate runs on the
+    // portable decimal grid, exactly like the q54/q59 IVF gates. Every stage is joins + hash aggregates —
     // codebook and codes broadcast (m·4 rows and m rows/vector); at
     // corpus scale the only O(corpus) stages are the two map-side
     // passes (encode, ADC join).
@@ -2040,8 +2035,8 @@ object SimilarityOps {
     // norm-preserving, so only the direction distribution moves). The
     // gate proves the statistic separates them: build drift 0, b1
     // drift ~0, b2 drift visibly positive. The sidecar plumbing
-    // (Observation on the written rows, ivfStats ledger) is pinned in
-    // SimilaritySpec.
+    // (Observation on the written rows, the `_stats` ledger) is pinned
+    // in SimilaritySpec.
     QueryDef("q131_ivf_drift",
       (s, dir) => {
         def dot(a: Column, b: Column) = call_function("dot_exact", a, b)
@@ -2706,9 +2701,8 @@ object SimilarityOps {
     // approximate-kNN margin mining deployments run. Corpora are the
     // even/odd vec_id halves (deterministic synthetic bilingual split).
     // Output: each source's best target by margin with the mutual-best
-    // flag — the high-precision subset a pair harvest keeps. Production
-    // float path: [[Similarity.bitextMine]] (spec-pinned in
-    // SimilaritySpec); this gate takes the portable decimal-exact path.
+    // flag — the high-precision subset a pair harvest keeps, on the
+    // portable decimal-exact path.
     QueryDef("q213_bitext_margin",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window

@@ -104,10 +104,7 @@ object Storage {
     */
   private[graft] def checkFooter(table: DataFrame, declared: StructType): Seq[String] =
     table.inputFiles.headOption.toSeq.flatMap { file =>
-      val spark = table.sparkSession
-      val found = new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(
-        ParquetFileReader.readFooter(HadoopInputFile.fromPath(new Path(file),
-          spark.sessionState.newHadoopConf()), NO_FILTER).getFileMetaData.getSchema)
+      val found = footerSchema(table.sparkSession, new Path(file))
       val dirs = file.split('/')
       val stored = declared.filterNot(c => dirs.exists(_.startsWith(c.name + "=")))
       for (c <- stored; g <- found.find(_.name == c.name) if g.dataType != c.dataType)
@@ -115,6 +112,15 @@ object Storage {
           s"${g.dataType.simpleString}, but ${c.name} is declared ${c.dataType.simpleString}")
       stored.map(_.name).filterNot(found.fieldNames.contains)
     }
+
+  /** The columns of one parquet file, read from its footer on the
+    * driver (not in a Spark job) and converted as Spark's reader
+    * converts them.
+    */
+  private[graft] def footerSchema(spark: SparkSession, file: Path): StructType =
+    new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(
+      ParquetFileReader.readFooter(HadoopInputFile.fromPath(file,
+        spark.sessionState.newHadoopConf()), NO_FILTER).getFileMetaData.getSchema)
 
   /** Rewrite-and-swap skeleton of the index compactions
     * ([[graft.operators.IndexCommit.compact]]): `write(tmpPath)`

@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * appender and fail on any codegen-error WARN, which is the only
   * externally visible signal.
   *
-  * Round-7 regression pinned here: `annTopK` over a LocalRelation
-  * filtered on `bucket = signBucket(<literal query array>)`.
+  * Round-7 regression pinned here: `signLshBuckets` over a
+  * LocalRelation filtered on `bucket = signBucket(<literal query
+  * array>)`, then ranked by `bruteForceTopK`.
   * `ConvertToLocalRelation` compiles Filter predicates BEFORE constant
   * folding, and Spark's own `element_at` over a foldable
   * `CreateArray` mis-generates in that context (nullable computes
@@ -66,11 +67,14 @@ class CodegenHealthSpec extends SparkSpec {
     Row(Long.box(3), Seq(1.0f, 1.0f, 0.0f, 0.0f)),
     Row(Long.box(4), Seq(-1.0f, 0.0f, 0.0f, 0.0f)))
 
-  test("annTopK over a LocalRelation compiles its bucket predicate (r7 regression)") {
+  test("a signLshBuckets filter over a LocalRelation compiles its bucket predicate (r7 regression)") {
     val q = array(lit(1.0f), lit(0.0f), lit(0.0f), lit(0.0f))
+    val pairs = Seq((1, 2), (3, 4))
     val warnings = capturedWarnings {
-      val out = Similarity.annTopK(vecs, "vec_id", "embedding", q, 10,
-        Seq((1, 2), (3, 4))).collect()
+      val inBucket = Similarity.signLshBuckets(vecs, "embedding", pairs)
+        .filter(col("bucket") === Similarity.signBucket(q, pairs)).drop("bucket")
+      val out = Similarity.bruteForceTopK(inBucket, "vec_id", "embedding", q, 10)
+        .collect()
       assert(out.nonEmpty)
     }
     assertNoCodegenFallback(warnings)
@@ -133,7 +137,7 @@ class CodegenHealthSpec extends SparkSpec {
     val warnings = capturedWarnings {
       assert(vecs.filter(Similarity.cosineNative(col("embedding"), q) > 0.5)
         .count() == 2)
-      assert(vecs.filter(Similarity.dotNative(col("embedding"), q) > 0.5)
+      assert(vecs.filter(call_function("dot_product", col("embedding"), q) > 0.5)
         .count() == 2)
     }
     assertNoCodegenFallback(warnings)

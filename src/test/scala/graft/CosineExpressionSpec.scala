@@ -31,7 +31,7 @@ class CosineExpressionSpec extends SparkSpec {
 
   test("dot_product native matches the HOF fold; zero vectors are valid") {
     val out = vecs.select(col("vec_id"),
-        Similarity.dotNative(col("a"), col("b")).as("native"),
+        call_function("dot_product", col("a"), col("b")).as("native"),
         Similarity.dot(col("a"), col("b")).as("hof"))
       .collect()
     out.foreach { r =>

@@ -5,11 +5,13 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Ratchet on schema discovery in the ingest and reporting path: every
-  * read there states the schema its writer declared, so a `mergeSchema`
-  * option or a schema-less `read.json(`/`read.parquet(` is a read that
-  * runs a job to find a schema the code already knows. The count may
-  * only go down; it is 0.
+/** Ratchet on schema discovery in the ingest and reporting path and in
+  * the payload reads of the ledgered index families: every read there
+  * states the schema its writer declared (or, for an index whose columns
+  * the caller chose, reads it from one footer on the driver), so a
+  * `mergeSchema` option or a schema-less `read.json(`/`read.parquet(`
+  * is a read that runs a job to find a schema the code already knows.
+  * The count may only go down; it is 0.
   */
 class SchemaDiscoveryRatchetSpec extends AnyFunSuite {
 
@@ -47,7 +49,11 @@ class SchemaDiscoveryRatchetSpec extends AnyFunSuite {
         main.resolve("sources/PagedSource.scala")).map(f => f -> lines(f)) ++ Seq(
         main.resolve("sources/Storage.scala") -> member(main.resolve("sources/Storage.scala"), "read"),
         main.resolve("operators/Upsert.scala") ->
-          member(main.resolve("operators/Upsert.scala"), "rewritePartitions"))
+          member(main.resolve("operators/Upsert.scala"), "rewritePartitions"),
+        main.resolve("operators/IndexCommit.scala") ->
+          member(main.resolve("operators/IndexCommit.scala"), "committedRows"),
+        main.resolve("operators/IndexCommit.scala") ->
+          member(main.resolve("operators/IndexCommit.scala"), "payload"))
     val found = scope.flatMap { case (f, ls) =>
       ls.collect { case (l, i) if Seq("mergeSchema", "read.json(", "read.parquet(")
           .exists(l.contains) => s"$f:${i + 1}" }

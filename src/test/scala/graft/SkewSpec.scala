@@ -210,13 +210,15 @@ class SkewSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // Wide sketch: 10 keys into 4x1024 cells — collision-free with
     // this fixed salt, so estimates are EXACT.
-    val wide = Skew.countMinSketch(d, "k", depth = 4, width = 1024, salt = "t")
+    val wide = Skew.countMinSketchWeighted(d, "k", depth = 4, width = 1024, salt = "t",
+      weight = lit(1L))
     val estWide = Skew.cmsEstimate(wide, d.select("k").distinct(), "k")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(estWide == exact, s"wide sketch should be exact:\n$estWide\n$exact")
     // Tiny sketch: 10 keys into 2x4 cells — collisions guaranteed;
     // estimates never undercount.
-    val tiny = Skew.countMinSketch(d, "k", depth = 2, width = 4, salt = "t")
+    val tiny = Skew.countMinSketchWeighted(d, "k", depth = 2, width = 4, salt = "t",
+      weight = lit(1L))
     val estTiny = Skew.cmsEstimate(tiny, d.select("k").distinct(), "k")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     exact.foreach { case (k, n) =>

@@ -111,19 +111,19 @@ class TextIndexSpec extends SparkSpec {
     assert(legacyRow.getLong(1) == -1L && legacyRow.getLong(2) == -dl2,
       "postings-scan fallback must produce the same victim stats")
     // Compact folds the sidecar: tombstoned docs' rows physically gone,
-    // everything under batch=build, indexedIds unchanged.
-    val idsBefore = TextIndex.indexedIds(spark, path)
-      .collect().map(_.getLong(0)).toSet
+    // everything under batch=build, the other docs unchanged.
+    def sidecarDocs() = spark.read.parquet(path + "__doclens")
+      .select("doc").distinct().collect().map(_.getLong(0)).toSet
+    val idsBefore = sidecarDocs()
     TextIndex.compact(spark, path)
     val folded = spark.read.parquet(path + "__doclens")
     assert(folded.filter(col("doc") === 2L).count() == 0,
       "compact must drop tombstoned docs from the doclens sidecar")
     assert(folded.select("batch").distinct().collect()
       .map(_.getString(0)).toSeq == Seq("build"))
-    // Post-compact the erased id leaves indexedIds (retired-identity
+    // Post-compact the erased id leaves the sidecar (retired-identity
     // window ends at compact, same as postings) — remaining ids agree.
-    assert(TextIndex.indexedIds(spark, path).collect()
-      .map(_.getLong(0)).toSet == idsBefore - 2L)
+    assert(sidecarDocs() == idsBefore - 2L)
   }
 
   test("compact crash between swap renames recovers with live tombstones") {
@@ -222,14 +222,12 @@ class TextIndexSpec extends SparkSpec {
     // A long-document batch: mean dl well above the build's.
     TextIndex.append(df("doc_id BIGINT, text STRING",
       Row(Long.box(8), ("long " * 20).trim)), "doc_id", "text", path, "b1")
-    val stats = TextIndex.indexStats(spark, path)
-      .collect().map(r => r.getAs[String]("batch") -> r).toMap
-    assert(stats.keySet == Set("build", "b1"))
-    assert(stats("build").getAs[Double]("avgdl_drift") == 0.0)
-    assert(stats("b1").getAs[Double]("avgdl_drift") > 10.0,
+    val avgdl = spark.read.parquet(path + "__meta").collect()
+      .map(r => r.getAs[String]("batch") ->
+        r.getAs[Long]("sum_dl").toDouble / r.getAs[Long]("n_docs")).toMap
+    assert(avgdl.keySet == Set("build", "b1"))
+    assert(avgdl("b1") - avgdl("build") > 10.0,
       "a long-doc batch must surface as positive avgdl drift")
-    val fracs = stats.values.map(_.getAs[Double]("new_dl_frac")).sum
-    assert(math.abs(fracs - 1.0) < 1e-9)
     // 'build' is reserved; a mismatched shard layout cannot happen
     // because append reads n_shards from the ledger itself.
     intercept[IllegalArgumentException] {
@@ -257,13 +255,14 @@ class TextIndexSpec extends SparkSpec {
     // decisively — a retry of an already-FOLDED batch id is still
     // rejected (a timeout retry whose first attempt succeeded must
     // not re-ingest and double-count)
-    assert(TextIndex.indexStats(spark, path).count() == 3) // build+b1+b2
+    def ledgerRows() = spark.read.parquet(path + "__meta").count()
+    assert(ledgerRows() == 3) // build+b1+b2
     intercept[IllegalArgumentException] {
       TextIndex.append(appendCorpus, "doc_id", "text", path, "b1")
     }
     TextIndex.append(df("doc_id BIGINT, text STRING",
       Row(Long.box(10), "merge again")), "doc_id", "text", path, "b3")
-    assert(TextIndex.indexStats(spark, path).count() == 4) // + b3
+    assert(ledgerRows() == 4) // + b3
   }
 
   test("torn append is invisible; retrying the batch never duplicates") {
@@ -422,7 +421,7 @@ class TextIndexSpec extends SparkSpec {
     // Regression: coverage used to be judged against the LEDGER's batch
     // set, which keeps folded append ids forever — so compacting an
     // index that ever had appends failed the subsetOf check for good
-    // and silently demoted delete()/indexedIds() to the O(index)
+    // and silently demoted delete() to the O(index)
     // postings scan. Coverage is now judged against the postings' own
     // on-disk batch dirs, which compact folds in lockstep with the
     // sidecar.

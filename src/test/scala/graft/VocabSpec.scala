@@ -39,7 +39,7 @@ class VocabSpec extends SparkSpec {
     assert(vocabMap(p)("h") == 6L)
   }
 
-  test("torn append is invisible; retry replaces; encode leaves OOV null") {
+  test("torn append is invisible; retry replaces the orphan ids") {
     val p = tmp("torn")
     Vocab.build(toks("x", "y"), "token", p)
     val before = vocabMap(p)
@@ -51,12 +51,7 @@ class VocabSpec extends SparkSpec {
     // the retry drops the orphan rows and mints the REAL next id
     Vocab.append(toks("z"), "token", p, "bX")
     assert(vocabMap(p)("z") == 2L, "retry must replace the orphan id 99")
-    // encode: known tokens get their id, OOV stays null
-    val enc = Vocab.encode(
-        df("w STRING", Row("x"), Row("nope")), "w", "wid", spark, p)
-      .collect().map(r => r.getString(0) ->
-        (if (r.isNullAt(1)) null else Long.box(r.getLong(1)))).toMap
-    assert(enc("x") == Long.box(before("x")) && enc("nope") == null)
+    assert(vocabMap(p) == before + ("z" -> 2L))
   }
 
   test("append respects the writer lock (colliding ids excluded)") {
